@@ -60,10 +60,6 @@ object Staging {
     Files.deleteIfExists(p): Unit
   }
 
-  /** Materialize `df` once into a temp parquet dir; return a reader
-    * over it. All columns come back nullable (parquet round-trip) —
-    * same as any staged table read, and invisible to value semantics.
-    */
   /** Staging root: `GRAFT_STAGE_DIR` (env) when set, else the JVM temp
     * dir. local[*] is fine with the default; a MULTI-NODE deployment
     * must point this at storage every executor and the driver share
@@ -85,12 +81,34 @@ object Staging {
       java.nio.file.Files.createTempDirectory(s"graft-stage-$tag-")
   }
 
-  def checkpoint(df: DataFrame, tag: String): DataFrame = {
+  /** The one staging round trip: make a tracked temp dir, write `df`
+    * into it and return the dir with a reader over it. A failed write
+    * releases its dir at once.
+    */
+  private def stageDir(df: DataFrame, tag: String)
+      : (java.nio.file.Path, DataFrame) = {
     val dir = mkStageDir(tag)
     tracked.add(dir)
-    df.write.mode("overwrite").parquet(dir.toString)
-    df.sparkSession.read.parquet(dir.toString)
+    try {
+      df.write.mode("overwrite").parquet(dir.toString)
+      (dir, df.sparkSession.read.parquet(dir.toString))
+    } catch { case e: Throwable => release(dir); throw e }
   }
+
+  /** Delete a staged dir now. Untracked only after a SUCCESSFUL delete
+    * — if the delete throws (fs hiccup, concurrent reader), the dir
+    * stays registered so the JVM-exit hook retries instead of
+    * orphaning the files.
+    */
+  private def release(dir: java.nio.file.Path): Unit =
+    try { deleteRecursively(dir); tracked.remove(dir): Unit }
+    catch { case _: Throwable => }
+
+  /** Materialize `df` once into a temp parquet dir; return a reader
+    * over it. All columns come back nullable (parquet round-trip) —
+    * same as any staged table read, and invisible to value semantics.
+    */
+  def checkpoint(df: DataFrame, tag: String): DataFrame = stageDir(df, tag)._2
 
   /** [[checkpoint]] plus the staged row count read from the parquet
     * FOOTERS on the driver — no `count()` job. Several operators need
@@ -104,10 +122,8 @@ object Staging {
     * would have planned over.
     */
   def checkpointCounted(df: DataFrame, tag: String): (DataFrame, Long) = {
-    val dir = mkStageDir(tag)
-    tracked.add(dir)
-    df.write.mode("overwrite").parquet(dir.toString)
-    (df.sparkSession.read.parquet(dir.toString), parquetRowCount(dir))
+    val (dir, staged) = stageDir(df, tag)
+    (staged, parquetRowCount(dir))
   }
 
   /** Sum of footer record counts across a staged dir's parquet files. */
@@ -143,18 +159,9 @@ object Staging {
     * registry's text/dedup family); a cheap plan pays more for the
     * parquet round-trip than the second traversal costs.
     */
-  /** Diag/test escape hatch for [[stagedSort]]: when false it degrades
-    * to the live `orderBy` it replaces, so one JVM can A/B the two
-    * shapes over the same registered queries (tools.ProfileSort — the
-    * per-query keep/revert evidence). Production default is true;
-    * nothing outside diag tooling flips it.
-    */
-  @volatile var sortStagingEnabled: Boolean = true
-
   def stagedSort(df: DataFrame, tag: String)(
       keys: org.apache.spark.sql.Column*): DataFrame =
-    if (sortStagingEnabled) checkpoint(df, tag).orderBy(keys: _*)
-    else df.orderBy(keys: _*)
+    checkpoint(df, tag).orderBy(keys: _*)
 
   /** [[stagedSort]] for callers that KNOW an upper bound on the result
     * rows (r22, guide §2.4): below `smallLimit` the result is globally
@@ -172,8 +179,7 @@ object Staging {
   def boundedSort(df: DataFrame, rowBound: Long, tag: String,
       smallLimit: Long = 1L << 20)(
       keys: org.apache.spark.sql.Column*): DataFrame =
-    if (!sortStagingEnabled) df.orderBy(keys: _*)
-    else if (rowBound <= smallLimit)
+    if (rowBound <= smallLimit)
       df.repartition(1).sortWithinPartitions(keys: _*)
     else stagedSort(df, tag)(keys: _*)
 
@@ -190,19 +196,12 @@ object Staging {
   def scope[A](body: ((DataFrame, String) => DataFrame) => A): A = {
     val dirs = scala.collection.mutable.ListBuffer[java.nio.file.Path]()
     val stager = (df: DataFrame, tag: String) => {
-      val dir = mkStageDir(tag)
-      tracked.add(dir)
+      val (dir, staged) = stageDir(df, tag)
       dirs.synchronized { dirs += dir }
-      df.write.mode("overwrite").parquet(dir.toString)
-      df.sparkSession.read.parquet(dir.toString)
+      staged
     }
     try body(stager)
-    finally dirs.synchronized(dirs.toList).foreach { d =>
-      // same contract as checkpointScoped: untrack only on a
-      // successful delete so the exit hook retries failures
-      try { deleteRecursively(d); tracked.remove(d): Unit }
-      catch { case _: Throwable => }
-    }
+    finally dirs.synchronized(dirs.toList).foreach(release)
   }
 
   /** [[checkpoint]] with a bounded lifetime: the staged dir is deleted
@@ -214,17 +213,7 @@ object Staging {
     * gone afterwards.
     */
   def checkpointScoped[A](df: DataFrame, tag: String)(use: DataFrame => A): A = {
-    val dir = mkStageDir(tag)
-    tracked.add(dir)
-    try {
-      df.write.mode("overwrite").parquet(dir.toString)
-      use(df.sparkSession.read.parquet(dir.toString))
-    } finally {
-      // untrack only after a SUCCESSFUL delete — if the delete throws
-      // (fs hiccup, concurrent reader), the dir stays registered so
-      // the JVM-exit hook retries instead of orphaning the files
-      try { deleteRecursively(dir); tracked.remove(dir): Unit }
-      catch { case _: Throwable => }
-    }
+    val (dir, staged) = stageDir(df, tag)
+    try use(staged) finally release(dir)
   }
 }

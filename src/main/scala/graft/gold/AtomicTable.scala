@@ -2,6 +2,7 @@ package graft.gold
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.NumericType
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
 
@@ -19,7 +20,7 @@ import scala.util.control.NonFatal
   *                                          relative path + optional
   *                                          tagged fields (partition
   *                                          value, per-file min/max
-  *                                          zone-map stats)
+  *                                          zone-map stats; see [[files]])
   * }}}
   *
   * Protocol:
@@ -42,28 +43,9 @@ import scala.util.control.NonFatal
   * manifests + unreferenced files. Local-fs `ATOMIC_MOVE` maps to the
   * same guarantee as an HDFS namenode rename; an object store (no
   * atomic rename) would swap this seam for a conditional-PUT or
-  * metastore CAS — only [[publish]] changes.
+  * metastore CAS — only [[tryPublish]] changes.
   */
 object AtomicTable {
-
-  /** Optional phase-timing sink (name, seconds) — a diag hook in the
-    * [[graft.ext.Dedup.lastMinhashDiag]] mold: profiling tools
-    * (ProfileQ93) set it to attribute merge cost to its internal
-    * phases; `None` (the default) is zero-overhead. Not part of any
-    * query semantics.
-    */
-  @volatile var phaseSink: Option[(String, Double) => Unit] = None
-  /** Package-visible so maintenance drivers (EventQueries.mvMaintain)
-    * report their top-level phases through the same sink without
-    * re-implementing the wrapper. */
-  private[graft] def phase[T](name: String)(body: => T): T = phaseSink match {
-    case None => body
-    case Some(f) =>
-      val t0 = System.nanoTime()
-      val r = body
-      f(name, (System.nanoTime() - t0) / 1e9)
-      r
-  }
 
   private def commitsDir(root: String) = Paths.get(root, "_commits")
 
@@ -102,13 +84,16 @@ object AtomicTable {
   private def manifestPath(root: String, v: Int) =
     commitsDir(root).resolve(f"v$v%05d.manifest")
 
-  /** Manifest entries of a version. An entry is TAB-separated tagged
-    * fields: the relative path, then optionally `p=<urlenc dir value>`
-    * (Hive partition dir suffix, from the partitioned stage) and
-    * `s=<col>\t<urlenc min>\t<urlenc max>` folded as three fields
-    * `sc=…`, `smin=…`, `smax=…` (per-file column stats for data
-    * skipping). URL-encoding keeps arbitrary values unambiguous in a
-    * line/tab format.
+  /** Manifest entries of a version, one line per data file. An entry
+    * is TAB-separated: the path relative to the table root always
+    * comes first, then optional tagged fields —
+    *  - `p=<urlenc dir value>`: the Hive partition dir value, written
+    *    by a partitioned [[stage]];
+    *  - `zs=<urlenc col>,<ord>,<urlenc min>,<urlenc max>`: per-file
+    *    zone-map stats, one field per column, where `<ord>` (`num` or
+    *    `str`) is the ordering min/max were captured under.
+    * URL-encoding escapes tabs and commas, so every split is
+    * unambiguous.
     */
   def files(root: String, v: Int): Seq[String] =
     scala.jdk.CollectionConverters.ListHasAsScala(
@@ -119,41 +104,15 @@ object AtomicTable {
   private def dec(s: String) =
     java.net.URLDecoder.decode(s, "UTF-8")
 
-  // `split("\\|")` tolerance: manifests written by the earlier
-  // `path|partitionValue` format parse losslessly — vacuum/readers of
-  // a pre-upgrade table must never mistake the suffix for the path
-  private def pathOf(e: String): String =
-    e.split("\t")(0).split("\\|")(0)
-
-  private def fieldOf(e: String, tag: String): Option[String] =
-    e.split("\t").find(_.startsWith(tag + "="))
-      .map(f => dec(f.substring(tag.length + 1)))
+  private def pathOf(e: String): String = e.split("\t")(0)
 
   /** Partition dir value (raw Hive dir string) of an entry, if any. */
   private def partOf(e: String): Option[String] =
-    fieldOf(e, "p").orElse { // legacy `path|value` form
-      val head = e.split("\t")(0)
-      if (head.contains("|")) Some(head.split("\\|")(1)) else None
-    }
+    e.split("\t").find(_.startsWith("p=")).map(f => dec(f.substring(2)))
 
-  /** (column, orderTag, min, max) stats of an entry, if recorded.
-    * orderTag is "num" or "str" — the ordering under which min/max
-    * were captured; comparing under any other ordering can mis-prune.
-    */
-  private def statsOf(e: String): Option[(String, String, String, String)] =
-    for {
-      c <- fieldOf(e, "sc")
-      ord <- fieldOf(e, "so")
-      lo <- fieldOf(e, "smin")
-      hi <- fieldOf(e, "smax")
-    } yield (c, ord, lo, hi)
-
-  /** Multi-column zone-map groups written by [[clusterBy]]: one
-    * repeated `zs=` tag per column, payload
-    * `enc(col),ord,enc(min),enc(max)` (URL-encoding escapes commas, so
-    * the 4-way split is unambiguous). Kept separate from the legacy
-    * single-column `sc=` group so pre-clustering readers parse old
-    * manifests unchanged.
+  /** (orderTag, min, max) zone-map stats of `column` for an entry, if
+    * recorded. Comparing under any ordering but the recorded one can
+    * mis-prune (see [[cmpOrd]]).
     */
   private def zstatsOf(e: String, column: String)
       : Option[(String, String, String)] =
@@ -163,13 +122,6 @@ object AtomicTable {
         case Array(c, ord, mn, mx) if dec(c) == column =>
           (ord, dec(mn), dec(mx))
       }
-
-  /** min/max of `column` for an entry under either stats scheme. */
-  private def statsFor(e: String, column: String)
-      : Option[(String, String, String)] =
-    statsOf(e).collect { case (c, ord, mn, mx) if c == column =>
-      (ord, mn, mx)
-    }.orElse(zstatsOf(e, column))
 
   /** Read the latest snapshot (empty schema-less read is an error —
     * callers check [[latestVersion]] for existence-dependent logic).
@@ -213,69 +165,62 @@ object AtomicTable {
     parts.reduceLeft(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** Stage the DataFrame as immutable parquet files, invisible to
-    * readers until committed. Returns manifest entries (paths, plus
-    * per-file min/max stats of `statsCol` when requested — the zone
-    * maps [[scanWhere]] prunes with).
-    */
-  private def stage(df: DataFrame, root: String,
-      statsCol: Option[String] = None): Seq[String] = {
-    val id = java.util.UUID.randomUUID().toString
-    val rel = s"_staged/$id"
-    df.write.parquet(s"$root/$rel")
-    val paths = listDir(Paths.get(root, rel)) { it =>
-      it.map(_.getFileName.toString)
-        .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
-        .map(n => s"$rel/$n").toSeq.sorted
-    }
-    attachStats(df.sparkSession, root, rel, paths, statsCol)
-  }
-
-  /** Append per-file min/max fields for `statsCol` to the staged
-    * entries: ONE aggregation job over the staged directory grouped by
-    * `input_file_name()` covers every file (not a job per file); the
-    * production path would lift the same values from the parquet
-    * footers the write already produced. The ordering tag ("num" for
-    * numeric column types, "str" otherwise) rides along so the scan
+  /** Stage `df` as immutable parquet files, invisible to readers
+    * until committed, and return their manifest entries (see
+    * [[files]]). With `partitionCol` the files land in Hive-style
+    * `<col>=<value>` dirs and each entry carries its `p=` value, parsed
+    * from the dir name; partition values must be non-null and
+    * string-faithful (dates, numbers, sane strings).
+    *
+    * Every column in `statsCols` gets per-file `zs=` min/max zone maps
+    * (what [[scanWhere]] prunes with): ONE aggregation job grouped by
+    * `input_file_name()` covers every file and column (a production
+    * writer would lift the same values from the parquet footers the
+    * write already produced). The ordering tag comes from `df`'s
+    * schema, "num" for numeric types and "str" otherwise, so the scan
     * compares bounds under the SAME ordering the stats were captured
     * with.
     */
-  private def attachStats(spark: SparkSession, root: String, stagedRel: String,
-      entries: Seq[String], statsCol: Option[String]): Seq[String] =
-    statsCol match {
-      case None => entries
-      case Some(c) =>
-        val numeric = Set("ByteType", "ShortType", "IntegerType", "LongType",
-          "FloatType", "DoubleType") // DecimalType handled below
-        val stats = spark.read.parquet(s"$root/$stagedRel")
-          .groupBy(input_file_name().as("__f"))
-          .agg(min(col(c)).cast("string").as("mn"),
-            max(col(c)).cast("string").as("mx"))
-          .collect()
-          .flatMap { r =>
-            if (r.isNullAt(1)) None
-            else {
-              val f = r.getString(0)
-              val i = f.indexOf("_staged/")
-              if (i < 0) None
-              else Some(f.substring(i) -> ((r.getString(1), r.getString(2))))
-            }
-          }.toMap
-        val dt = spark.read.parquet(s"$root/$stagedRel").schema
-          .find(_.name == c).map(_.dataType)
-        val ord =
-          if (dt.exists(t => numeric.contains(t.toString)
-              || t.toString.startsWith("DecimalType"))) "num"
-          else "str"
-        entries.map { e =>
-          val p = pathOf(e)
-          stats.get(p) match {
-            case Some((mn, mx)) =>
-              s"$e\tsc=${enc(c)}\tso=$ord\tsmin=${enc(mn)}\tsmax=${enc(mx)}"
-            case None => e
+  private def stage(df: DataFrame, root: String, partitionCol: Option[String],
+      statsCols: Seq[String]): Seq[String] = {
+    val rel = s"_staged/${java.util.UUID.randomUUID()}"
+    partitionCol.fold(df.write)(pc => df.write.partitionBy(pc))
+      .parquet(s"$root/$rel")
+    def partFiles(dir: java.nio.file.Path): Seq[String] = listDir(dir)(
+      _.map(_.getFileName.toString)
+        .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).toSeq)
+    val entries = (partitionCol match {
+      case None => partFiles(Paths.get(root, rel)).map(n => s"$rel/$n")
+      case Some(pc) =>
+        listDir(Paths.get(root, rel))(_.map(_.getFileName.toString)
+          .filter(_.startsWith(s"$pc=")).toSeq)
+          .flatMap { dn =>
+            val value = enc(dn.substring(pc.length + 1))
+            partFiles(Paths.get(root, rel, dn)).map(n => s"$rel/$dn/$n\tp=$value")
           }
-        }
-    }
+    }).sorted
+    if (statsCols.isEmpty || entries.isEmpty) return entries
+    // the schema is known, so the read-back infers nothing from disk
+    val statsSchema = df.select(statsCols.map(col): _*).schema
+    val aggs = statsCols.flatMap(c =>
+      Seq(min(col(c)).cast("string"), max(col(c)).cast("string")))
+    val zones: Map[String, Seq[String]] =
+      df.sparkSession.read.schema(statsSchema).parquet(s"$root/$rel")
+        .groupBy(input_file_name()).agg(aggs.head, aggs.tail: _*)
+        .collect().flatMap { r =>
+          val f = r.getString(0)
+          val i = f.indexOf("_staged/")
+          if (i < 0) None
+          else Some(f.substring(i) -> statsCols.zip(statsSchema).zipWithIndex
+            .flatMap { case ((c, field), ci) =>
+              val (mn, mx) = (r.getString(1 + 2 * ci), r.getString(2 + 2 * ci))
+              val ord = if (field.dataType.isInstanceOf[NumericType]) "num" else "str"
+              if (mn == null || mx == null) None
+              else Some(s"zs=${enc(c)},$ord,${enc(mn)},${enc(mx)}")
+            })
+        }.toMap
+    entries.map(e => (e +: zones.getOrElse(pathOf(e), Nil)).mkString("\t"))
+  }
 
   /** ONE atomic publish attempt of `files` as version `v`. Returns
     * true iff this writer's manifest landed. The publish is a hard
@@ -309,31 +254,47 @@ object AtomicTable {
     }
   }
 
-  /** Append: new snapshot = previous files + staged files. Optimistic
-    * concurrency, lost-update safe: each attempt re-reads the CURRENT
-    * latest manifest and republishes prior files + its own, so a loser
-    * of the commit race picks up the winner's files before retrying —
-    * no lock, no coordination, every writer's rows survive.
+  /** The optimistic commit loop every retrying writer goes through:
+    * read the head, let `next` compute the new snapshot's entries from
+    * it (`Left(v)`: nothing to commit, return `v`), publish them as
+    * head+1, and on a lost race recompute against the NEW head. A
+    * loser thus picks up the winner's files (or re-derives its
+    * copy-on-write from them) before retrying, so every commit lands
+    * exactly once and none is lost — no lock, no coordination.
+    * [[compact]] and [[clusterBy]] stay single-shot: they must never
+    * retry over a concurrent commit.
+    */
+  @annotation.tailrec
+  private def commit(root: String)(
+      next: Option[Int] => Either[Int, Seq[String]]): Int = {
+    val head = latestVersion(root)
+    next(head) match {
+      case Left(v) => v
+      case Right(entries) =>
+        val v = head.fold(0)(_ + 1)
+        if (tryPublish(root, v, entries)) v else commit(root)(next)
+    }
+  }
+
+  private def headFiles(root: String, head: Option[Int]): Seq[String] =
+    head.fold(Seq.empty[String])(files(root, _))
+
+  /** Append: new snapshot = head files + staged files, through
+    * [[commit]], so concurrent appenders all survive.
     */
   def append(spark: SparkSession, df: DataFrame, root: String,
       statsCol: Option[String] = None): Int = {
-    val staged = stage(df, root, statsCol)
+    val staged = stage(df, root, None, statsCol.toSeq)
     // no rows staged → no commit: an empty first write must not create
     // a row-less table, and on an existing table appending an empty
-    // file (or republishing `prev` alone) would bump the version for a
-    // no-op. Row-level check, not files-level: a plain parquet write
+    // file (or republishing the head alone) would bump the version for
+    // a no-op. Row-level check, not files-level: a plain parquet write
     // of an empty frame still emits one schema-bearing part file, so
     // `staged.isEmpty` alone misses the common empty-append case.
-    if (stagedRowless(spark, root, staged))
-      return latestVersion(root).getOrElse(-1)
-    var committed = -1
-    while (committed < 0) {
-      val base = latestVersion(root)
-      val prev = base.map(files(root, _)).getOrElse(Seq.empty)
-      val v = base.getOrElse(-1) + 1
-      if (tryPublish(root, v, prev ++ staged)) committed = v
-    }
-    committed
+    val rowless = stagedRowless(spark, root, staged)
+    commit(root)(head =>
+      if (rowless) Left(head.getOrElse(-1))
+      else Right(headFiles(root, head) ++ staged))
   }
 
   /** True when the staged write carries no rows — either no files at
@@ -358,67 +319,27 @@ object AtomicTable {
     * [[append]]'s no-empty-first-commit rule uniform.
     */
   def overwrite(spark: SparkSession, df: DataFrame, root: String): Int = {
-    val staged = stage(df, root)
+    val staged = stage(df, root, None, Nil)
     if (staged.isEmpty) return -1 // partitionless writer emitted nothing
-    if (latestVersion(root).isEmpty && stagedRowless(spark, root, staged))
-      return -1
-    var committed = -1
-    while (committed < 0) {
-      val base = latestVersion(root)
-      val v = base.getOrElse(-1) + 1
-      if (tryPublish(root, v, staged)) committed = v
-    }
-    committed
+    lazy val rowless = stagedRowless(spark, root, staged)
+    commit(root)(head =>
+      if (head.isEmpty && rowless) Left(-1) else Right(staged))
   }
 
-  /** Stage with Hive-style partition layout; returns tagged manifest
-    * entries (`path\tp=<urlenc dir value>` + optional stats fields),
-    * one partition value per file, parsed from the directory name.
-    * Partition values must be non-null and string-faithful (dates,
-    * numbers, sane strings).
-    */
-  private def stagePartitioned(df: DataFrame, root: String,
-      partitionCol: String, statsCol: Option[String] = None): Seq[String] = {
-    val id = java.util.UUID.randomUUID().toString
-    val rel = s"_staged/$id"
-    df.write.partitionBy(partitionCol).parquet(s"$root/$rel")
-    val entries = listDir(Paths.get(root, rel)) { dirs =>
-      dirs.flatMap { d =>
-        val dn = d.getFileName.toString
-        if (!dn.startsWith(s"$partitionCol=")) Iterator.empty
-        else {
-          val value = dn.substring(partitionCol.length + 1)
-          listDir(d) { fs =>
-            fs.map(_.getFileName.toString)
-              .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
-              .map(n => s"$rel/$dn/$n\tp=${enc(value)}").toSeq
-          }.iterator
-        }
-      }.toSeq.sorted
-    }
-    attachStats(df.sparkSession, root, rel, entries, statsCol)
-  }
-
-  /** Partitioned append: same optimistic protocol as [[append]], but
-    * files carry their partition value in the manifest, enabling
-    * partition-pruned merges.
+  /** Partitioned append: same protocol as [[append]], but files carry
+    * their partition value in the manifest, enabling partition-pruned
+    * merges.
     */
   def appendPartitioned(spark: SparkSession, df: DataFrame, root: String,
       partitionCol: String, statsCol: Option[String] = None): Int = {
-    val staged = stagePartitioned(df, root, partitionCol, statsCol)
+    val staged = stage(df, root, Some(partitionCol), statsCol.toSeq)
     // nothing staged → no commit: an empty FIRST write must not
     // create a schema-less table (see append), and on an existing
-    // table republishing `prev` alone would bump the version for a
+    // table republishing the head alone would bump the version for a
     // no-op
-    if (staged.isEmpty) return latestVersion(root).getOrElse(-1)
-    var committed = -1
-    while (committed < 0) {
-      val base = latestVersion(root)
-      val prev = base.map(files(root, _)).getOrElse(Seq.empty)
-      val v = base.getOrElse(-1) + 1
-      if (tryPublish(root, v, prev ++ staged)) committed = v
-    }
-    committed
+    commit(root)(head =>
+      if (staged.isEmpty) Left(head.getOrElse(-1))
+      else Right(headFiles(root, head) ++ staged))
   }
 
   /** Materialize version `v` as a plain Hive-layout directory of HARD
@@ -471,6 +392,28 @@ object AtomicTable {
     */
   private val NullPartDir = "__HIVE_DEFAULT_PARTITION__"
 
+  /** True when partition DISCOVERY provably reprints `v` unchanged —
+    * i.e. `v` is a fixed point of parse-then-print, so manifest dir
+    * strings and discovered values can never diverge for it. Three
+    * provably-stable classes cover real partition values: canonical
+    * integers (no leading zeros/signs to normalize), ISO dates
+    * (DateType reprints the same ISO string), and values whose
+    * characters rule out every non-string inference (the two
+    * exceptions that sneak past the charset test, `NaN`/`Infinity`,
+    * parse as doubles but also reprint identically). Anything else —
+    * leading-zero numerics, floats, decimals, timestamps — answers
+    * false and [[mergePartitioned]] keeps the prior-snapshot scan
+    * with its round-trip guard.
+    */
+  private[graft] def discoveryStable(v: String): Boolean = {
+    val canonicalInt = v.matches("0|-?[1-9][0-9]{0,17}")
+    def isoDate = v.matches("[0-9]{4}-[0-9]{2}-[0-9]{2}") &&
+      scala.util.Try(java.time.LocalDate.parse(v)).isSuccess
+    // any char outside numeric/temporal syntax forces StringType
+    def stringOnly = v.nonEmpty && !v.matches("[0-9+\\-.:TeE ]+")
+    canonicalInt || isoDate || stringOnly
+  }
+
   /** Partition-pruned MERGE — the production copy-on-write shape the
     * plain [[merge]] approximates: partitions that appear in the
     * source, PLUS partitions currently holding a matched key (a key
@@ -514,34 +457,11 @@ object AtomicTable {
     * downgrade to the scanning path (correct, one extra job), so the
     * flag is always safe to pass.
     */
-  /** True when partition DISCOVERY provably reprints `v` unchanged —
-    * i.e. `v` is a fixed point of parse-then-print, so manifest dir
-    * strings and discovered values can never diverge for it. Three
-    * provably-stable classes cover real partition values: canonical
-    * integers (no leading zeros/signs to normalize), ISO dates
-    * (DateType reprints the same ISO string), and values whose
-    * characters rule out every non-string inference (the two
-    * exceptions that sneak past the charset test, `NaN`/`Infinity`,
-    * parse as doubles but also reprint identically). Anything else —
-    * leading-zero numerics, floats, decimals, timestamps — answers
-    * false and [[mergePartitioned]] keeps the prior-snapshot scan
-    * with its round-trip guard.
-    */
-  private[graft] def discoveryStable(v: String): Boolean = {
-    val canonicalInt = v.matches("0|-?[1-9][0-9]{0,17}")
-    def isoDate = v.matches("[0-9]{4}-[0-9]{2}-[0-9]{2}") &&
-      scala.util.Try(java.time.LocalDate.parse(v)).isSuccess
-    // any char outside numeric/temporal syntax forces StringType
-    def stringOnly = v.nonEmpty && !v.matches("[0-9+\\-.:TeE ]+")
-    canonicalInt || isoDate || stringOnly
-  }
-
   def mergePartitioned(spark: SparkSession, df: DataFrame, root: String,
       key: String, partitionCol: String, statsCol: Option[String] = None,
       partitionLocalKeys: Boolean = false): Int = {
-    val sourcePartRows = phase("merge.src-parts")(
-      df.select(col(partitionCol)).distinct()
-        .collect()) // bounded: partition cardinality
+    val sourcePartRows = df.select(col(partitionCol)).distinct()
+      .collect() // bounded: partition cardinality
     // empty source ⇔ empty distinct-partition set (a null partition
     // value still yields a row): short-circuit the no-op like
     // [[merge]] does — without this, an idle caller would publish a
@@ -552,104 +472,86 @@ object AtomicTable {
     val sourceHasNull = sourcePartRows.exists(_.isNullAt(0))
     val sourceParts = sourcePartRows.filterNot(_.isNullAt(0))
       .map(r => String.valueOf(r.get(0))).toSet
-    var committed = -1
-    while (committed < 0) {
-      latestVersion(root) match {
-        case None =>
-          val staged = phase("merge.stage-initial")(
-            stagePartitioned(df, root, partitionCol, statsCol))
-          if (staged.isEmpty) return -1 // nothing to commit — never wedge
-          if (tryPublish(root, 0, staged)) committed = 0
-        case Some(v) =>
-          val prior = files(root, v)
-          val partedPrior = prior.filter(partOf(_).isDefined)
-          val priorDirVals: Set[String] = partedPrior.flatMap(partOf)
-            .filterNot(_ == NullPartDir).toSet
-          val priorEntries =
-            if (partedPrior.isEmpty) None
-            else Some(readEntries(spark, root, partedPrior))
-          val priorHasNull = partedPrior.exists(e =>
-            partOf(e).contains(NullPartDir))
-          // cheap structural gates first: when any of them already
-          // forbids pruning (null partitions on either side, unsafe
-          // source dir values), the full rewrite follows and NO scan
-          // of the prior entries is needed at all
-          val structuralSafe = !sourceHasNull && !priorHasNull &&
-            sourceParts.forall(v => DirSafe.matches(v))
-          // ONE column-pruned (key, partition) pass over the prior
-          // partitioned entries serves BOTH pruning inputs: which
-          // partitions hold matched keys (left join marker), and the
-          // full discovered partition-value set for the round-trip
-          // guard below — previously two separate jobs per merge.
-          // partitionLocalKeys skips the scan only when every source
-          // partition value provably survives discovery's
-          // parse-then-print — see the scaladoc's stale-duplicate
-          // scenario for why a reprinting value must keep the scan
-          // (and with it the roundTrips guard)
-          val plkSafe = partitionLocalKeys &&
-            sourceParts.forall(discoveryStable)
-          val partScan: Option[Array[(String, Boolean)]] =
-            if (plkSafe || !structuralSafe || priorEntries.isEmpty)
-              None
-            else Some(phase("merge.part-scan")(priorEntries.get
-              .join(df.select(col(key)).distinct()
-                .withColumn("__m", lit(1)), Seq(key), "left")
-              .groupBy(col(partitionCol)).agg(max(col("__m")).as("__m"))
-              .collect()
-              .filterNot(_.isNullAt(0))
-              .map(r => (String.valueOf(r.get(0)), !r.isNullAt(1)))))
-          val matchedParts: Set[String] =
-            partScan.map(_.collect { case (v, true) => v }.toSet)
-              .getOrElse(Set.empty)
-          val affected = sourceParts ++ matchedParts
-          // round-trip guard: matchedParts comes from partition
-          // DISCOVERY, whose inferred type can reprint a dir value
-          // differently (p=00123 discovers as int 123) — the affected
-          // test below compares against manifest DIR strings, so a
-          // non-round-tripping value would leave the matched entry in
-          // `untouched` and the old row would survive the upsert as a
-          // duplicate key. Pruning is safe only when discovery is the
-          // IDENTITY on this table's dir values: discovery is
-          // parse-then-print (idempotent), so discovered-set ==
-          // dir-set forces every dir value to be a fixed point (set
-          // equality alone rules out both reprints and two dirs
-          // collapsing to one discovered value). Otherwise fall back
-          // to the always-correct full rewrite, which also
-          // re-canonicalizes the offending values. Free here: the
-          // discovered set rides the same partScan pass.
-          val roundTrips = partScan.forall(_.map(_._1).toSet == priorDirVals)
-          val pruneSafe = structuralSafe &&
-            affected.forall(v => DirSafe.matches(v)) && roundTrips
-          val (untouched, toRewrite) =
-            if (!pruneSafe) (Seq.empty[String], prior)
-            else prior.partition(e =>
-              partOf(e).exists(pv => !affected.contains(pv)))
-          val merged =
-            if (toRewrite.isEmpty) df
-            else readEntries(spark, root, toRewrite)
-              .join(df.select(col(key)).distinct(), Seq(key), "left_anti")
-              .unionByName(df, allowMissingColumns = true)
-          val staged = phase("merge.stage-upsert")(
-            stagePartitioned(merged, root, partitionCol, statsCol))
-          if (tryPublish(root, v + 1, untouched ++ staged)) committed = v + 1
-      }
+    commit(root) {
+      case None =>
+        val staged = stage(df, root, Some(partitionCol), statsCol.toSeq)
+        // nothing to commit — never wedge
+        if (staged.isEmpty) Left(-1) else Right(staged)
+      case Some(v) =>
+        val prior = files(root, v)
+        val partedPrior = prior.filter(partOf(_).isDefined)
+        val priorDirVals: Set[String] = partedPrior.flatMap(partOf)
+          .filterNot(_ == NullPartDir).toSet
+        val priorEntries =
+          if (partedPrior.isEmpty) None
+          else Some(readEntries(spark, root, partedPrior))
+        val priorHasNull = partedPrior.exists(e =>
+          partOf(e).contains(NullPartDir))
+        // cheap structural gates first: when any of them already
+        // forbids pruning (null partitions on either side, unsafe
+        // source dir values), the full rewrite follows and NO scan
+        // of the prior entries is needed at all
+        val structuralSafe = !sourceHasNull && !priorHasNull &&
+          sourceParts.forall(v => DirSafe.matches(v))
+        // ONE column-pruned (key, partition) pass over the prior
+        // partitioned entries serves BOTH pruning inputs: which
+        // partitions hold matched keys (left join marker), and the
+        // full discovered partition-value set for the round-trip
+        // guard below — previously two separate jobs per merge.
+        // partitionLocalKeys skips the scan only when every source
+        // partition value provably survives discovery's
+        // parse-then-print — see the scaladoc's stale-duplicate
+        // scenario for why a reprinting value must keep the scan
+        // (and with it the roundTrips guard)
+        val plkSafe = partitionLocalKeys &&
+          sourceParts.forall(discoveryStable)
+        val partScan: Option[Array[(String, Boolean)]] =
+          if (plkSafe || !structuralSafe || priorEntries.isEmpty)
+            None
+          else Some(priorEntries.get
+            .join(df.select(col(key)).distinct()
+              .withColumn("__m", lit(1)), Seq(key), "left")
+            .groupBy(col(partitionCol)).agg(max(col("__m")).as("__m"))
+            .collect()
+            .filterNot(_.isNullAt(0))
+            .map(r => (String.valueOf(r.get(0)), !r.isNullAt(1))))
+        val matchedParts: Set[String] =
+          partScan.map(_.collect { case (v, true) => v }.toSet)
+            .getOrElse(Set.empty)
+        val affected = sourceParts ++ matchedParts
+        // round-trip guard: matchedParts comes from partition
+        // DISCOVERY, whose inferred type can reprint a dir value
+        // differently (p=00123 discovers as int 123) — the affected
+        // test below compares against manifest DIR strings, so a
+        // non-round-tripping value would leave the matched entry in
+        // `untouched` and the old row would survive the upsert as a
+        // duplicate key. Pruning is safe only when discovery is the
+        // IDENTITY on this table's dir values: discovery is
+        // parse-then-print (idempotent), so discovered-set ==
+        // dir-set forces every dir value to be a fixed point (set
+        // equality alone rules out both reprints and two dirs
+        // collapsing to one discovered value). Otherwise fall back
+        // to the always-correct full rewrite, which also
+        // re-canonicalizes the offending values. Free here: the
+        // discovered set rides the same partScan pass.
+        val roundTrips = partScan.forall(_.map(_._1).toSet == priorDirVals)
+        val pruneSafe = structuralSafe &&
+          affected.forall(v => DirSafe.matches(v)) && roundTrips
+        val (untouched, toRewrite) =
+          if (!pruneSafe) (Seq.empty[String], prior)
+          else prior.partition(e =>
+            partOf(e).exists(pv => !affected.contains(pv)))
+        val merged =
+          if (toRewrite.isEmpty) df
+          else readEntries(spark, root, toRewrite)
+            .join(df.select(col(key)).distinct(), Seq(key), "left_anti")
+            .unionByName(df, allowMissingColumns = true)
+        Right(untouched ++ stage(merged, root, Some(partitionCol), statsCol.toSeq))
     }
-    committed
   }
 
-  /** Stats-pruned scan (zone maps / data skipping): the latest
-    * snapshot restricted to files whose recorded [min, max] of
-    * `column` intersects [lo, hi] — provably-outside files are
-    * SKIPPED without being opened, then an exact residual filter
-    * applies on the survivors. Entries without stats for `column`
-    * read conservatively. Bounds compare numerically when both sides
-    * parse as numbers, otherwise as strings (dates/timestamps in ISO
-    * form order correctly). This is the per-file complement of
-    * partition pruning: partitions cut directories, zone maps cut
-    * files within them.
-    */
   /** Bound comparison under the ordering the stats were captured with
-    * (the "so" tag): a numeric-looking STRING column has lexicographic
+    * (the `zs=` ord tag): a numeric-looking STRING column has lexicographic
     * min/max ("100" < "9"), and comparing those numerically would
     * prune files that contain matching rows. ONE definition shared by
     * [[scanWhere]] and [[statsBounds]] so scan and bounds can never
@@ -663,13 +565,24 @@ object AtomicTable {
       }
     else a.compareTo(b)
 
+  /** Stats-pruned scan (zone maps / data skipping): the latest
+    * snapshot restricted to files whose recorded [min, max] of
+    * `column` intersects [lo, hi] — provably-outside files are
+    * SKIPPED without being opened, then an exact residual filter
+    * applies on the survivors. Entries without stats for `column`
+    * read conservatively. Bounds compare under the ordering the stats
+    * were captured with ([[cmpOrd]]; dates/timestamps in ISO form
+    * order correctly as strings). This is the per-file complement of
+    * partition pruning: partitions cut directories, zone maps cut
+    * files within them.
+    */
   def scanWhere(spark: SparkSession, root: String, column: String,
       lo: String, hi: String): DataFrame = {
     val v = latestVersion(root).getOrElse(
       throw new IllegalStateException(s"no committed version under $root"))
     val all = files(root, v)
     val kept = all.filter { e =>
-      statsFor(e, column) match {
+      zstatsOf(e, column) match {
         case Some((ord, mn, mx)) =>
           !(cmpOrd(ord, mx, lo) < 0 || cmpOrd(ord, mn, hi) > 0)
         case None => true
@@ -702,11 +615,7 @@ object AtomicTable {
   def statsBounds(root: String, column: String): Option[(String, String)] = {
     val v = latestVersion(root).getOrElse(return None)
     val all = files(root, v)
-    // statsFor, not statsOf: entries rewritten by clusterBy carry
-    // only zs= zone-map groups — parsing just the legacy sc= tag
-    // would silently degrade every post-clustering high-watermark
-    // lookup from O(manifest) to a full table scan
-    val stats = all.map(e => statsFor(e, column))
+    val stats = all.map(e => zstatsOf(e, column))
     if (all.isEmpty || stats.exists(_.isEmpty)) return None
     val s = stats.flatten
     val ord = s.head._1
@@ -727,14 +636,12 @@ object AtomicTable {
     */
   def rollback(root: String, v: Int): Int = {
     val snapshot = files(root, v) // throws if v was never committed
-    var committed = -1
-    while (committed < 0) {
-      val cur = latestVersion(root).getOrElse(
-        throw new IllegalStateException(s"no committed version under $root"))
-      if (files(root, cur) == snapshot) return cur
-      if (tryPublish(root, cur + 1, snapshot)) committed = cur + 1
+    commit(root) {
+      case None =>
+        throw new IllegalStateException(s"no committed version under $root")
+      case Some(cur) =>
+        if (files(root, cur) == snapshot) Left(cur) else Right(snapshot)
     }
-    committed
   }
 
   // ── Named refs (Iceberg-style tags) ──────────────────────────────
@@ -997,13 +904,9 @@ object AtomicTable {
       math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
     if (prior.length <= targetFiles) return -1 // already compact
     val snapshot = readVersion(spark, root, v)
-    val staged = partitionCol match {
-      case Some(pc) =>
-        stagePartitioned(snapshot.repartition(targetFiles, col(pc)),
-          root, pc, statsCol)
-      case None =>
-        stage(snapshot.repartition(targetFiles), root, statsCol)
-    }
+    val laidOut = partitionCol.fold(snapshot.repartition(targetFiles))(pc =>
+      snapshot.repartition(targetFiles, col(pc)))
+    val staged = stage(laidOut, root, partitionCol, statsCol.toSeq)
     if (tryPublish(root, v + 1, staged)) v + 1 else -1
   }
 
@@ -1107,84 +1010,25 @@ object AtomicTable {
       .repartitionByRange(targetFiles, col("__z"))
       .sortWithinPartitions(col("__z"))
       .drop("__z")
-    val staged = stageWithZStats(rewritten, root, cols)
+    val staged = stage(rewritten, root, None, cols)
     if (tryPublish(root, v + 1, staged)) v + 1 else -1
   }
 
-  /** Stage `df` and attach per-file min/max zone-map groups for EVERY
-    * column in `statsCols` (repeated `zs=` manifest tags, see
-    * [[zstatsOf]]). One aggregation job grouped by `input_file_name()`
-    * covers all files and columns; a production writer would lift the
-    * same values from the parquet footers.
+  /** MERGE-shaped upsert on `key`: [[replaceGroups]] keyed on the
+    * source's own keys — matched target rows are replaced by their
+    * source row, unmatched source rows are inserted (copy-on-write
+    * rewrite). Re-running the same merge is idempotent by content.
+    * Returns the committed version, or -1 when there is nothing to
+    * commit (empty source on a nonexistent table).
     */
-  private def stageWithZStats(df: DataFrame, root: String,
-      statsCols: Seq[String]): Seq[String] = {
-    val id = java.util.UUID.randomUUID().toString
-    val rel = s"_staged/$id"
-    df.write.parquet(s"$root/$rel")
-    val paths = listDir(Paths.get(root, rel)) { it =>
-      it.map(_.getFileName.toString)
-        .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
-        .map(n => s"$rel/$n").toSeq.sorted
-    }
-    if (statsCols.isEmpty) return paths
-    val spark = df.sparkSession
-    val staged = spark.read.parquet(s"$root/$rel")
-    val aggs = statsCols.flatMap(c => Seq(
-      min(col(c)).cast("string").as(s"__mn_$c"),
-      max(col(c)).cast("string").as(s"__mx_$c")))
-    val rows = staged.groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.tail: _*).collect()
-    val byPath: Map[String, Seq[String]] = rows.flatMap { r =>
-      val f = r.getString(0)
-      val i = f.indexOf("_staged/")
-      if (i < 0) None
-      else {
-        val tags = statsCols.zipWithIndex.flatMap { case (c, ci) =>
-          val (mn, mx) = (r.get(1 + ci * 2), r.get(2 + ci * 2))
-          if (mn == null || mx == null) None
-          else Some(
-            s"zs=${enc(c)},num,${enc(String.valueOf(mn))},${enc(String.valueOf(mx))}")
-        }
-        Some(f.substring(i) -> tags)
-      }
-    }.toMap
-    paths.map(p => (p +: byPath.getOrElse(p, Seq.empty)).mkString("\t"))
-  }
-
-  /** MERGE-shaped upsert on `key`: matched target rows are replaced by
-    * their source row, unmatched source rows are inserted (copy-on-
-    * write rewrite). The rewrite is validated against the snapshot it
-    * read: losing the commit race RECOMPUTES the merge from the new
-    * latest version (a stale copy-on-write must not clobber a
-    * concurrent commit). Re-running the same merge is idempotent by
-    * content. Returns the committed version.
-    */
-  def merge(spark: SparkSession, df: DataFrame, root: String, key: String): Int = {
-    var committed = -1
-    while (committed < 0) {
-      latestVersion(root) match {
-        case None =>
-          val staged = stage(df, root)
-          // no rows to commit — never create a row-less table
-          if (stagedRowless(spark, root, staged)) return -1
-          if (tryPublish(root, 0, staged)) committed = 0
-        case Some(v) =>
-          // empty source: the anti-join would keep EVERY target row,
-          // i.e. a full copy-on-write rewrite of the table plus a
-          // content-identical version bump — short-circuit the no-op
-          // (append and Gold.mergeIncremental already do)
-          if (df.isEmpty) return v
-          val target = readVersion(spark, root, v)
-          val kept = target
-            .join(df.select(col(key)).distinct(), Seq(key), "left_anti")
-          val staged = stage(
-            kept.unionByName(df, allowMissingColumns = true), root)
-          if (tryPublish(root, v + 1, staged)) committed = v + 1
-      }
-    }
-    committed
-  }
+  def merge(spark: SparkSession, df: DataFrame, root: String, key: String): Int =
+    // empty source: the anti-join would keep EVERY target row, i.e. a
+    // full copy-on-write rewrite of the table plus a content-identical
+    // version bump — short-circuit the no-op (append and
+    // Gold.mergeIncremental already do). The key set is empty exactly
+    // when df is, so one df.isEmpty covers both halves of the
+    // replaceGroups guard
+    copyOnWrite(spark, df, root, key, df.select(col(key)).distinct())(df.isEmpty)
 
   /** Group-replacement MERGE: delete every target row whose `groupCol`
     * value appears in `groups`, then insert ALL of `df` — the
@@ -1195,35 +1039,39 @@ object AtomicTable {
     * may contain keys with no rows in `df` (a pure delete), and the
     * result may legitimately be EMPTY — that commits as a
     * schema-preserving 0-row snapshot (see [[overwrite]]), not a
-    * schema-less manifest. Same optimistic protocol as [[merge]]:
-    * losing the commit race recomputes against the new latest
-    * snapshot; replaying the same call is idempotent by content.
-    * Returns the committed version, or -1 when there is nothing to
-    * commit (empty source on a nonexistent table).
+    * schema-less manifest. Replaying the same call is idempotent by
+    * content. Returns the committed version, or -1 when there is
+    * nothing to commit (empty source on a nonexistent table).
     */
   def replaceGroups(spark: SparkSession, df: DataFrame, root: String,
       groupCol: String, groups: DataFrame): Int = {
     val g = groups.select(col(groupCol)).distinct()
-    var committed = -1
-    while (committed < 0) {
-      latestVersion(root) match {
-        case None =>
-          val staged = stage(df, root)
-          if (stagedRowless(spark, root, staged)) return -1
-          if (tryPublish(root, 0, staged)) committed = 0
-        case Some(v) =>
-          // nothing to delete AND nothing to insert: the anti-join
-          // would rewrite the whole table into an identical snapshot
-          // — short-circuit. (An empty df with NON-empty groups is a
-          // legitimate pure delete and proceeds.)
-          if (g.isEmpty && df.isEmpty) return v
-          val target = readVersion(spark, root, v)
-          val kept = target.join(g, Seq(groupCol), "left_anti")
-          val staged = stage(
-            kept.unionByName(df, allowMissingColumns = true), root)
-          if (tryPublish(root, v + 1, staged)) committed = v + 1
-      }
-    }
-    committed
+    // nothing to delete AND nothing to insert: the anti-join would
+    // rewrite the whole table into an identical snapshot —
+    // short-circuit. (An empty df with NON-empty groups is a
+    // legitimate pure delete and proceeds.)
+    copyOnWrite(spark, df, root, groupCol, g)(g.isEmpty && df.isEmpty)
   }
+
+  /** The copy-on-write body of [[merge]] and [[replaceGroups]]: new
+    * snapshot = head rows whose `groupCol` value is absent from
+    * `groups` (anti join) ∪ all of `df`. The rewrite is validated
+    * against the head it read: through [[commit]], losing the race
+    * RECOMPUTES it from the new head (a stale copy-on-write must not
+    * clobber a concurrent commit). `noop` is checked per attempt on an
+    * existing table; a first commit stages `df` alone and never
+    * creates a row-less table.
+    */
+  private def copyOnWrite(spark: SparkSession, df: DataFrame, root: String,
+      groupCol: String, groups: DataFrame)(noop: => Boolean): Int =
+    commit(root) {
+      case None =>
+        val staged = stage(df, root, None, Nil)
+        if (stagedRowless(spark, root, staged)) Left(-1) else Right(staged)
+      case Some(v) =>
+        if (noop) Left(v)
+        else Right(stage(readVersion(spark, root, v)
+          .join(groups, Seq(groupCol), "left_anti")
+          .unionByName(df, allowMissingColumns = true), root, None, Nil))
+    }
 }

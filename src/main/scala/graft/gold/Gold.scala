@@ -172,15 +172,6 @@ object Gold {
         None
     }
 
-  /** K5 as a transactional MERGE: watermark-filter + in-batch dedup
-    * (same semantics as [[incrementalRows]]), then publish via
-    * [[AtomicTable.merge]] on `transaction_id` — the `unique_key` the
-    * reference declares but never enforces (`fct_purchases.sql:5-7`)
-    * becomes a real upsert guarantee with an atomic snapshot commit:
-    * re-running a batch (retry, backfill, crash replay) replaces
-    * matched facts instead of duplicating them, and readers only ever
-    * see complete snapshots. Returns the committed version.
-    */
   /** First-writer-wins in-batch dedup on the declared unique key —
     * the ONE definition both incremental paths use: a tiebreak or
     * watermark change applied to append-dedup must not silently
@@ -194,6 +185,16 @@ object Gold {
       .filter(col("rn") === 1).drop("rn")
   }
 
+  /** K5 as a transactional MERGE: watermark-filter + in-batch dedup
+    * (same semantics as [[incrementalRows]]), then publish via
+    * [[AtomicTable.mergePartitioned]] on `transaction_id` — the
+    * `unique_key` the reference declares but never enforces
+    * (`fct_purchases.sql:5-7`) becomes a real upsert guarantee with an
+    * atomic snapshot commit:
+    * re-running a batch (retry, backfill, crash replay) replaces
+    * matched facts instead of duplicating them, and readers only ever
+    * see complete snapshots. Returns the committed version.
+    */
   def mergeIncremental(spark: SparkSession, source: DataFrame,
       tableRoot: String): Int = {
     val exists = AtomicTable.latestVersion(tableRoot).isDefined

@@ -46,13 +46,10 @@ object EventQueries {
     */
   def mvMaintain(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     import graft.gold.AtomicTable
-    // top-level maintenance phases for ProfileQ93's cost attribution,
-    // through the shared AtomicTable sink (None = zero overhead)
-    def ph[T](name: String)(body: => T): T = AtomicTable.phase(name)(body)
     val rootDir = java.nio.file.Files.createTempDirectory("q93-mv")
     // tracked like every other staged artifact: a bench run calls this
-    // twice and ProfileQ93 `repeat` times, each leaving a full
-    // AtomicTable snapshot history behind without the exit sweep
+    // twice, each leaving a full AtomicTable snapshot history behind
+    // without the exit sweep
     graft.Staging.trackForCleanup(rootDir)
     val root = rootDir.toString
     val ev = Tables.load(s, dir, "events")
@@ -78,8 +75,8 @@ object EventQueries {
       def side(delta: Boolean) =
         partials.filter(col("is_delta") === delta).drop("is_delta")
           .repartition(col("event_date"))
-      ph("mv.base-merge")(AtomicTable.mergePartitioned(s, side(delta = false),
-        root, "mv_key", "event_date"))
+      AtomicTable.mergePartitioned(s, side(delta = false),
+        root, "mv_key", "event_date")
       // an all-empty base (0-row corpus) commits nothing by design —
       // serve the combine from an empty current state instead of
       // reading a table that was never created
@@ -106,9 +103,8 @@ object EventQueries {
       // matched partitions are the delta's partitions by construction.
       combined.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try
-        ph("mv.delta-merge")(AtomicTable.mergePartitioned(
-          s, combined, root, "mv_key", "event_date",
-          partitionLocalKeys = true)): Unit
+        AtomicTable.mergePartitioned(s, combined, root, "mv_key", "event_date",
+          partitionLocalKeys = true): Unit
       finally combined.unpersist(): Unit
     } finally partials.unpersist(): Unit
     root

@@ -39,7 +39,7 @@ object StreamingGold {
 
   /** Streaming → Gold as ATOMIC SNAPSHOT COMMITS: each micro-batch
     * publishes through [[Gold.mergeIncremental]] →
-    * [[graft.gold.AtomicTable.merge]] on the unique key. Strictly
+    * [[graft.gold.AtomicTable.mergePartitioned]] on the unique key. Strictly
     * stronger than the append variant under failure:
     *  - a crash mid-batch leaves no torn table — readers only ever
     *    see the last committed manifest, never half a batch;

@@ -50,6 +50,52 @@ class AtomicTableSpec extends SparkSpec {
     assert(got.select("v").distinct().count() === writers)
   }
 
+  // Racing copy-on-write writers: each loser of the publish race must
+  // recompute its rewrite from the winner's snapshot, or a stale
+  // rewrite drops the winner's rows (the stream-vs-backfill rule in
+  // StreamingGold's scaladoc). Disjoint keys, overlapping partitions.
+  Seq[(String, (org.apache.spark.sql.DataFrame, String) => Int)](
+    "mergePartitioned" -> ((df, root) =>
+      AtomicTable.mergePartitioned(spark, df, root, "k", "p")),
+    "replaceGroups" -> ((df, root) =>
+      AtomicTable.replaceGroups(spark, df, root, "k", df.select("k"))),
+    "merge" -> ((df, root) => AtomicTable.merge(spark, df, root, "k"))
+  ).foreach { case (name, write) =>
+    test(s"racing $name writers: every key once, versions without a gap") {
+      val root = tmpDir(s"atomic-race-$name")
+      val writers = 4
+      def part(k: Long) = s"d${k % 2}"
+      val base = (0L until writers).map(k => (k, "base", part(k))).toDF("k", "v", "p")
+      if (name == "mergePartitioned") AtomicTable.appendPartitioned(spark, base, root, "p")
+      else AtomicTable.append(spark, base, root)
+      // writer w updates base key w and inserts three keys of its own
+      val keysOf = (0 until writers).map(w =>
+        w -> (w.toLong +: (0L until 3L).map(i => 100L * (w + 1) + i))).toMap
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(writers)
+      val latch = new java.util.concurrent.CountDownLatch(1)
+      val futures = (0 until writers).map { w =>
+        pool.submit(new java.util.concurrent.Callable[Int] {
+          def call(): Int = {
+            latch.await()
+            write(keysOf(w).map(k => (k, s"w$w", part(k))).toDF("k", "v", "p"), root)
+          }
+        })
+      }
+      latch.countDown()
+      val versions = futures.map(_.get())
+      pool.shutdown()
+      assert(versions.sorted === (1 to writers), versions)
+      assert(AtomicTable.latestVersion(root) === Some(writers))
+      val manifests = new java.io.File(root, "_commits").list()
+        .filter(_.endsWith(".manifest")).toSeq.sorted
+      assert(manifests === (0 to writers).map(v => f"v$v%05d.manifest"))
+      val got = AtomicTable.read(spark, root).select("k", "v").as[(Long, String)].collect()
+      val want = keysOf.toSeq.flatMap { case (w, ks) => ks.map(_ -> s"w$w") }.toMap
+      assert(got.length === want.size, got.toSeq.sorted)
+      assert(got.toMap === want)
+    }
+  }
+
   test("merge: upsert replaces matched keys, inserts new, idempotent re-run") {
     val root = tmpDir("atomic-merge")
     AtomicTable.append(spark,

@@ -59,9 +59,9 @@ class ZOrderSpec extends SparkSpec {
     val root = tmpDir("zorder-bounds")
     AtomicTable.append(spark, corpus(), root)
     AtomicTable.clusterBy(spark, root, Seq("a", "b"), targetFileBytes = 4096)
-    // post-clustering entries carry ONLY zs= groups; a reader parsing
-    // just the legacy sc= tag returns None and the high-watermark
-    // path silently degrades to a full table scan
+    // clusterBy rewrites every entry with fresh zs= groups; losing
+    // them would make statsBounds return None and silently degrade the
+    // high-watermark path to a full table scan
     val bounds = AtomicTable.statsBounds(root, "a")
     assert(bounds.isDefined, "zs= stats must serve manifest bounds")
     val (lo, hi) = bounds.get
