@@ -83,7 +83,10 @@ object Staging {
 
   /** The one staging round trip: make a tracked temp dir, write `df`
     * into it and return the dir with a reader over it. A failed write
-    * releases its dir at once.
+    * releases its dir at once. The reader takes `df`'s schema instead
+    * of inferring it from the footers: inference is a Spark job of its
+    * own per call, and a file source relaxes a given schema to
+    * all-nullable exactly as it does an inferred one.
     */
   private def stageDir(df: DataFrame, tag: String)
       : (java.nio.file.Path, DataFrame) = {
@@ -91,7 +94,7 @@ object Staging {
     tracked.add(dir)
     try {
       df.write.mode("overwrite").parquet(dir.toString)
-      (dir, df.sparkSession.read.parquet(dir.toString))
+      (dir, df.sparkSession.read.schema(df.schema).parquet(dir.toString))
     } catch { case e: Throwable => release(dir); throw e }
   }
 

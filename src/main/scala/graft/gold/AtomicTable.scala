@@ -425,6 +425,20 @@ object AtomicTable {
     * snapshot — cheap next to rewriting it. Merge WRITE cost therefore
     * scales with the update's partition footprint, not table size.
     *
+    * The scan is skipped when it cannot change the plan: every
+    * partitioned prior entry's dir value is already a source
+    * partition. Source partitions are always in the affected set, so
+    * each of those entries rewrites on the pruned branch, and the
+    * fallback branch rewrites everything anyway — the commit is the
+    * same whatever the scan would return, minus its job and the
+    * prior snapshot's schema-merging read. A streaming batch into a
+    * table whose only partition is the batch's own date is this case.
+    *
+    * `df` is evaluated more than once (the partition distinct, the
+    * key distinct, the rewrite): a caller whose source plan is costly
+    * materializes it first — [[Gold.mergeIncremental]] stages its
+    * batch, q93's `mvMaintain` persists its combine.
+    *
     * Safety valves: entries without partition metadata (plain
     * [[append]] writes) always rewrite, and any partition value that
     * would need Hive path-escaping falls back to a full rewrite
@@ -482,9 +496,6 @@ object AtomicTable {
         val partedPrior = prior.filter(partOf(_).isDefined)
         val priorDirVals: Set[String] = partedPrior.flatMap(partOf)
           .filterNot(_ == NullPartDir).toSet
-        val priorEntries =
-          if (partedPrior.isEmpty) None
-          else Some(readEntries(spark, root, partedPrior))
         val priorHasNull = partedPrior.exists(e =>
           partOf(e).contains(NullPartDir))
         // cheap structural gates first: when any of them already
@@ -505,10 +516,14 @@ object AtomicTable {
         // (and with it the roundTrips guard)
         val plkSafe = partitionLocalKeys &&
           sourceParts.forall(discoveryStable)
+        // every partitioned prior entry already sits in a source
+        // partition: all of them rewrite whatever the scan finds (see
+        // the scaladoc), so the scan cannot change the commit
+        val scanMoot = partedPrior.forall(partOf(_).exists(sourceParts))
+        // the prior entries are read (a schema-merging job) only here
         val partScan: Option[Array[(String, Boolean)]] =
-          if (plkSafe || !structuralSafe || priorEntries.isEmpty)
-            None
-          else Some(priorEntries.get
+          if (plkSafe || !structuralSafe || scanMoot) None
+          else Some(readEntries(spark, root, partedPrior)
             .join(df.select(col(key)).distinct()
               .withColumn("__m", lit(1)), Seq(key), "left")
             .groupBy(col(partitionCol)).agg(max(col("__m")).as("__m"))

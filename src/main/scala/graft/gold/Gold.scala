@@ -193,7 +193,9 @@ object Gold {
     * atomic snapshot commit:
     * re-running a batch (retry, backfill, crash replay) replaces
     * matched facts instead of duplicating them, and readers only ever
-    * see complete snapshots. Returns the committed version.
+    * see complete snapshots. The deduped batch is evaluated once,
+    * into a staged parquet dir the merge reads and drops. Returns the
+    * committed version.
     */
   def mergeIncremental(spark: SparkSession, source: DataFrame,
       tableRoot: String): Int = {
@@ -220,20 +222,26 @@ object Gold {
           case None => source
         }
       }
-    val deduped = firstWriterWins(fresh)
-    // empty batch (idle trigger, fully-late data) → no commit:
-    // mergePartitioned's own empty-source guard short-circuits with
-    // latestVersion.getOrElse(-1) — identical semantics to a pre-check
-    // here, without a separate isEmpty job executing the window plan a
-    // second time per micro-batch.
+    // ONE evaluation of the batch: mergePartitioned reads its source
+    // several times (partition distinct, key distinct, rewrite), and
+    // each read of a lazy frame would rerun the source scan, the
+    // watermark filter and the dedup window. Staging writes the
+    // deduped rows once; every later read is of that small parquet
+    // dir, which is deleted when the merge returns.
     //
-    // partition-pruned: an incremental batch touches a handful of
+    // An empty batch (idle trigger, fully-late data) commits nothing:
+    // mergePartitioned's empty-source guard returns
+    // latestVersion.getOrElse(-1).
+    //
+    // Partition-pruned: an incremental batch touches a handful of
     // purchase dates — only those partitions rewrite; the rest of the
     // fact table's files carry over untouched. Stats on the ingestion
     // stamp keep the NEXT run's watermark manifest-served.
-    AtomicTable.mergePartitioned(spark, deduped, tableRoot,
-      "transaction_id", "purchase_date",
-      statsCol = Some("ingestion_timestamp"))
+    graft.Staging.checkpointScoped(firstWriterWins(fresh), "gold-batch") { batch =>
+      AtomicTable.mergePartitioned(spark, batch, tableRoot,
+        "transaction_id", "purchase_date",
+        statsCol = Some("ingestion_timestamp"))
+    }
   }
 
   /** Incremental append with HONEST unique_key semantics. The

@@ -97,10 +97,11 @@ object EventQueries {
       // final write), and this source's lineage joins against the MV
       // table itself. An in-memory persist beats the r5-era parquet
       // checkpoint here: same execute-once guarantee, one fewer write
-      // job (ProfileQ93 put the staging round trip at ~0.3 s of the
-      // q93a floor). partitionLocalKeys: mv_key embeds event_date, so
-      // the prior-snapshot key scan (another ~0.3 s job) is skipped —
-      // matched partitions are the delta's partitions by construction.
+      // job (a `tools/ProfileEntry` q93 profile put the staging round
+      // trip at ~0.3 s of the q93a floor). partitionLocalKeys: mv_key
+      // embeds event_date, so the prior-snapshot key scan (another
+      // ~0.3 s job) is skipped — matched partitions are the delta's
+      // partitions by construction.
       combined.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try
         AtomicTable.mergePartitioned(s, combined, root, "mv_key", "event_date",

@@ -39,8 +39,14 @@ object StreamingGold {
 
   /** Streaming → Gold as ATOMIC SNAPSHOT COMMITS: each micro-batch
     * publishes through [[Gold.mergeIncremental]] →
-    * [[graft.gold.AtomicTable.mergePartitioned]] on the unique key. Strictly
-    * stronger than the append variant under failure:
+    * [[graft.gold.AtomicTable.mergePartitioned]] on the unique key.
+    * The batch's source plan (file scan, JSON parse, watermark filter,
+    * dedup window) runs once: mergeIncremental stages its deduped rows
+    * and the merge reads the staged copy. When the batch's purchase
+    * dates cover every date the table holds (a feed still inside its
+    * first day), the merge also skips the prior-snapshot key scan,
+    * which could not change that commit. Strictly stronger than the
+    * append variant under failure:
     *  - a crash mid-batch leaves no torn table — readers only ever
     *    see the last committed manifest, never half a batch;
     *  - foreachBatch's at-least-once replay CONVERGES: re-merging a

@@ -449,6 +449,85 @@ class AtomicTableSpec extends SparkSpec {
       bounds.get._2 + (if (bounds.get._2.contains(".")) "" else ".0")) === t1)
   }
 
+  test("mergeIncremental evaluates its source batch once") {
+    // every source row bumps the accumulator each time the batch's
+    // plan runs; a merge that re-derives its lazy input per use
+    // (partition distinct, key scan, anti-join, union) counts it
+    // several times over
+    val root = tmpDir("atomic-once")
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
+    val t1 = java.sql.Timestamp.valueOf("2024-01-01 11:00:00")
+    val seen = spark.sparkContext.longAccumulator("mergeIncremental-rows")
+    val bump = udf { (id: String) => seen.add(1L); id }.asNondeterministic()
+    def batch(ts: java.sql.Timestamp, ids: Seq[String]) =
+      ids.map(id => (id, 7L, java.sql.Date.valueOf("2024-01-01"), 9.99, true, ts))
+        .toDF("transaction_id", "product_id", "purchase_date", "final_amount",
+          "is_member", "ingestion_timestamp")
+        .withColumn("transaction_id", bump(col("transaction_id")))
+    Gold.mergeIncremental(spark, batch(t0, Seq("a", "b", "c")), root)
+    seen.reset()
+    val ids = Seq("b", "c", "d", "e")
+    Gold.mergeIncremental(spark, batch(t1, ids), root)
+    assert(seen.value === ids.size.toLong)
+    val got = AtomicTable.read(spark, root).select("transaction_id")
+      .as[String].collect().toSeq
+    assert(got.sorted === Seq("a", "b", "c", "d", "e"))
+  }
+
+  test("partition-pruned merge: prior partitions all in the source skip the key scan, same rows") {
+    // every prior partition is a source partition, so each prior entry
+    // rewrites and the key scan has nothing to decide: an update, a
+    // replayed row, a key moving between two source partitions and an
+    // insert must still land exactly once
+    val root = tmpDir("atomic-moot")
+    val d1 = java.sql.Date.valueOf("2024-01-01")
+    val d2 = java.sql.Date.valueOf("2024-01-02")
+    val d3 = java.sql.Date.valueOf("2024-01-03")
+    def rows(t: (Long, String, java.sql.Date)*) = t.toSeq.toDF("k", "v", "pd")
+    AtomicTable.appendPartitioned(spark,
+      rows((1L, "a", d1), (2L, "b", d1), (3L, "c", d2)), root, "pd")
+    val seen = spark.sparkContext.longAccumulator("mergePartitioned-rows")
+    val bump = udf { (k: Long) => seen.add(1L); k }.asNondeterministic()
+    val source = rows((1L, "A", d1), (3L, "c", d2), (2L, "B", d2), (4L, "d", d3))
+      .withColumn("k", bump(col("k")))
+    val expected = Set((1L, "A", d1), (2L, "B", d2), (3L, "c", d2), (4L, "d", d3))
+    AtomicTable.mergePartitioned(spark, source, root, "k", "pd")
+    // the lazy source runs for the partition distinct, the anti-join
+    // keys and the union; the key scan would have been a fourth run
+    assert(seen.value === 3L * expected.size, seen.value)
+    val got = AtomicTable.read(spark, root)
+      .as[(Long, String, java.sql.Date)].collect().toSeq
+    assert(got.size === expected.size, got.toString)
+    assert(got.toSet === expected)
+    // replaying the batch converges on the same rows
+    AtomicTable.mergePartitioned(spark, source, root, "k", "pd")
+    val again = AtomicTable.read(spark, root)
+      .as[(Long, String, java.sql.Date)].collect().toSeq
+    assert(again.size === expected.size && again.toSet === expected, again.toString)
+  }
+
+  test("partition-pruned merge: leading-zero string partitions keep one row per key") {
+    // the scanning twin of the partitionLocalKeys leading-zero case:
+    // discovery reprints pd=00123 as 123, and merges that skip the key
+    // scan and merges that run it must both leave one row per key
+    val root = tmpDir("atomic-zeros")
+    def rows(t: (String, String, String)*) = t.toSeq.toDF("k", "v", "pd")
+    AtomicTable.appendPartitioned(spark,
+      rows(("00123|x", "a", "00123"), ("00777|x", "b", "00777")), root, "pd")
+    AtomicTable.mergePartitioned(spark, rows(("00123|x", "B", "00123")),
+      root, "k", "pd")
+    AtomicTable.mergePartitioned(spark, rows(("00123|x", "C", "00123")),
+      root, "k", "pd")
+    AtomicTable.mergePartitioned(spark,
+      rows(("00123|x", "D", "00123"), ("00777|x", "E", "00777")), root, "k", "pd")
+    AtomicTable.mergePartitioned(spark, rows(("00777|x", "F", "00777")),
+      root, "k", "pd")
+    val got = AtomicTable.read(spark, root)
+      .select(col("k"), col("v")).as[(String, String)].collect().toSeq
+    assert(got.groupBy(_._1).forall(_._2.size == 1), got.toString)
+    assert(got.toSet === Set(("00123|x", "D"), ("00777|x", "F")), got.toString)
+  }
+
   test("empty overwrite on an existing table = schema-preserving truncate") {
     val root = tmpDir("atomic-trunc")
     AtomicTable.append(spark, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), root)

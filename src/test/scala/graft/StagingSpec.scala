@@ -39,4 +39,24 @@ class StagingSpec extends SparkSpec {
     assert(!p.contains("HashAggregate"), p) // the expensive plan already ran
   }
 
+  test("staged read-back keeps the schema an inferring read would give") {
+    // the staged dir is read back with the source frame's schema, not
+    // inferred from its footers; the file source must still relax it
+    // to the same all-nullable schema inference yields, nested
+    // containers included
+    import spark.implicits._
+    val df = Seq((1L, Seq(1, 2), Map("a" -> 1L)), (2L, Seq(3), Map("b" -> 2L)))
+      .toDF("k", "arr", "m")
+      .withColumn("ts", lit(java.sql.Timestamp.valueOf("2024-01-01 10:00:00")))
+      .withColumn("dec", lit(BigDecimal("12.345")).cast("decimal(12,3)"))
+      .withColumn("st", struct(col("k").as("kk"), lit("x").as("s"),
+        array(lit(1.5)).as("xs")))
+    assert(!df.schema("k").nullable) // non-nullable input to relax
+    val dir = java.nio.file.Files.createTempDirectory("staging-schema").toString
+    df.write.mode("overwrite").parquet(dir)
+    val inferred = spark.read.parquet(dir).schema
+    val staged = Staging.checkpoint(df, "spec-schema")
+    assert(staged.schema === inferred)
+    assert(staged.collect().toSet === spark.read.parquet(dir).collect().toSet)
+  }
 }
