@@ -437,76 +437,9 @@ object Bench {
       } catch { case _: Throwable => -1.0 }
     val loadStart = loadavg1()
 
-    /** Cumulative stop-the-world collection time across all collector
-      * beans (ms). Deltas across a timed run body attribute a slow run
-      * to GC directly from the artifact — the r5–r7 x30 wobble shows
-      * low cpu PSI with high runnable counts, which is in-JVM service
-      * work; this row names (or exonerates) the collector.
-      */
-    def gcMsTotal(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-    }
-    /** Cumulative JIT compilation time (ms) — a first-run-only spike
-      * here is codegen/C2 warmup, the expected non-steady-state cost
-      * min-of-n exists to absorb.
-      */
-    def jitMsTotal(): Long = {
-      val c = java.lang.management.ManagementFactory.getCompilationMXBean
-      if (c != null && c.isCompilationTimeMonitoringSupported)
-        c.getTotalCompilationTime else -1L
-    }
-
-    /** Summed executor task run time (ms) since the listener attached —
-      * deltas across a run body give the per-run `task_sec` diag row.
-      * The listener bus is async, so reads go through
-      * [[settledTaskMs]], which waits for the counter to stop moving.
-      */
-    val taskMsAcc = new java.util.concurrent.atomic.AtomicLong()
-    // task COUNT (r22): per-run deltas land in the diag's task_n rows —
-    // the row the r21 scaling probe lacked (it could not tell "entry
-    // launches 3 tasks" from "entry ignores the core knob")
-    val taskNAcc = new java.util.concurrent.atomic.AtomicLong()
-    // spill (cumulative; per-run delta) and peak per-task execution
-    // memory (max over the run; reset before each) — the r7 verdict's
-    // ask #3 witness pair for x10_q122: its slow runs carried 4.7–11.6 s
-    // GC where x30 (3× the data) carried 0.1–1 s, and these rows say
-    // whether that GC was memory pressure (spill>0 / peak near the
-    // per-task share) or collateral of a host-delivery stall (both ~0)
-    val spillBytesAcc = new java.util.concurrent.atomic.AtomicLong()
-    val peakExecAcc = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (e.taskMetrics != null) {
-            val m = e.taskMetrics
-            taskMsAcc.addAndGet(m.executorRunTime): Unit
-            taskNAcc.incrementAndGet(): Unit
-            spillBytesAcc.addAndGet(
-              m.memoryBytesSpilled + m.diskBytesSpilled): Unit
-            peakExecAcc.getAndAccumulate(m.peakExecutionMemory,
-              (a: Long, b: Long) => math.max(a, b)): Unit
-          }
-      })
-    def settledTaskMs(): Long = {
-      var prev = -1L
-      var v = taskMsAcc.get()
-      var waited = 0
-      while (v != prev && waited < 1000) {
-        prev = v; Thread.sleep(50); waited += 50; v = taskMsAcc.get()
-      }
-      v
-    }
-    /** Generated-class compilations since JVM start (Janino cache
-      * misses). A steady per-run delta on a REPEATED identical query
-      * is codegen-cache thrash — see GraftSession's
-      * spark.sql.codegen.cache.maxEntries note.
-      */
-    def janinoCompiles(): Long =
-      org.apache.spark.metrics.source.CodegenMetrics
-        .METRIC_COMPILATION_TIME.getCount
+    // the run-witness panel (task time/count/spill/peak listener, gc,
+    // jit, janino, code cache, steal): sampled around every run body
+    val witness = RunWitness.attach(spark)
     /** Fixed-work single-thread spin (~40 ms on an unloaded core):
       * measures the host's DELIVERED cpu speed at this instant. The
       * r5–r7 stall class stretches wall clocks 3–12× while every
@@ -545,34 +478,6 @@ object Bench {
       ts.foreach(_.join())
       (System.nanoTime() - t0) / 1e6
     }
-    /** JIT'd-code footprint (MB used across the CodeHeap pools). Near
-      * ReservedCodeCacheSize the sweeper flushes warm methods and
-      * compiled code silently degrades to interpreted — high task cpu
-      * with LOW jit_ms and no console banner. Sampled after each run.
-      */
-    def codeCacheMb(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-        .filter(p => p.getName.startsWith("CodeHeap") ||
-          p.getName == "Code Cache")
-        .map(_.getUsage.getUsed).sum / (1L << 20)
-    }
-    /** Steal fraction (%) of all cpu ticks between two samples — the
-      * only guest-visible counter that records hypervisor descheduling
-      * itself. Sampled across each run body.
-      */
-    def cpuTicks(): (Long, Long) =
-      try {
-        val f = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/stat")), "UTF-8")
-          .linesIterator.next().split("\\s+")
-        val vals = f.drop(1).map(_.toLong)
-        // denominator = user..steal (first 8 fields) only: guest and
-        // guest_nice are already folded into user/nice by the kernel,
-        // so summing them double-counts guest time and underestimates
-        // steal_pct on VM hosts
-        (if (vals.length > 7) vals(7) else 0L, vals.take(8).sum)
-      } catch { case _: Throwable => (0L, 0L) }
     (1 to 5).foreach(_ => canaryMsNow())
     /** Healthy-delivery reference for the all-core canary: the MINIMUM
       * reading observed anywhere this bench run (seeded with three
@@ -722,15 +627,16 @@ object Bench {
       prepare(entry)
       // gc/jit sampled AFTER prepare: prepare's own System.gc() is
       // deliberate hygiene, not part of the run being attributed
-      val gc0 = gcMsTotal(); val jit0 = jitMsTotal()
-      val task0 = settledTaskMs(); val jan0 = janinoCompiles()
+      val gc0 = RunWitness.gcMsTotal(); val jit0 = RunWitness.jitMsTotal()
+      val task0 = witness.settledTaskMs()
+      val jan0 = RunWitness.janinoCompiles()
       // read AFTER settledTaskMs drained the listener bus, so the
       // count is settled at the same instant as the time
-      val taskN0 = taskNAcc.get()
+      val taskN0 = witness.taskN.get()
       // settledTaskMs above already waited for the listener bus to
       // drain, so the spill counter is settled too; peak resets here
-      val spill0 = spillBytesAcc.get(); peakExecAcc.set(0)
-      val (steal0, tick0) = cpuTicks()
+      val spill0 = witness.spillBytes.get(); witness.peakExec.set(0)
+      val (steal0, _, tick0) = RunWitness.cpuTicks()
       // walls are recorded PRE-ROUNDED to the 3 decimals the diag
       // renders (r12 ADVICE): the live storm stamp judges the
       // full-precision wall while DiagAudit recomputes from the
@@ -743,14 +649,15 @@ object Bench {
       // verdicts read the same value. A failed run's -1.0 is a fixed
       // point of the rounding.
       val t = math.rint(body * 1000) / 1000
-      val (steal1, tick1) = cpuTicks()
+      val (steal1, _, tick1) = RunWitness.cpuTicks()
       val e = entryEnv(entry)
-      entryEnv(entry) = e.copy(gcMs = e.gcMs :+ (gcMsTotal() - gc0),
-        jitMs = e.jitMs :+ (if (jit0 < 0) -1L else jitMsTotal() - jit0),
+      entryEnv(entry) = e.copy(gcMs = e.gcMs :+ (RunWitness.gcMsTotal() - gc0),
+        jitMs = e.jitMs :+
+          (if (jit0 < 0) -1L else RunWitness.jitMsTotal() - jit0),
         taskSec = e.taskSec :+
-          math.rint((settledTaskMs() - task0) / 100.0) / 10,
-        taskN = e.taskN :+ (taskNAcc.get() - taskN0),
-        janino = e.janino :+ (janinoCompiles() - jan0),
+          math.rint((witness.settledTaskMs() - task0) / 100.0) / 10,
+        taskN = e.taskN :+ (witness.taskN.get() - taskN0),
+        janino = e.janino :+ (RunWitness.janinoCompiles() - jan0),
         canaryAfterMs = e.canaryAfterMs :+
           math.rint(canaryMsNow() * 10) / 10,
         canaryParMs = e.canaryParMs :+ {
@@ -761,10 +668,10 @@ object Bench {
         stealPct = e.stealPct :+ (if (tick1 > tick0)
           math.rint(10000.0 * (steal1 - steal0) / (tick1 - tick0)) / 100
         else -1.0),
-        codeCacheMb = e.codeCacheMb :+ codeCacheMb(),
+        codeCacheMb = e.codeCacheMb :+ RunWitness.codeCacheMb(),
         spillMb = e.spillMb :+
-          (spillBytesAcc.get() - spill0) / (1L << 20),
-        peakExecMb = e.peakExecMb :+ peakExecAcc.get() / (1L << 20))
+          (witness.spillBytes.get() - spill0) / (1L << 20),
+        peakExecMb = e.peakExecMb :+ witness.peakExec.get() / (1L << 20))
       graft.ext.Dedup.lastMinhashDiag.foreach { d =>
         candSecs(entry) =
           candSecs.getOrElse(entry, Seq.empty) :+

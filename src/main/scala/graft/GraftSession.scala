@@ -46,8 +46,7 @@ object GraftSession {
       // touch, x30_q65 6.1s — the best sf0.1 measurement on record)
       // and the pinned-code footprint peaks at 131 MB of code cache
       // (diag code_cache_mb), far from any flushing regime.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("GRAFT_CODEGEN_CACHE", "1000"))
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       // ObjectHashAggregate (every typed Aggregator: BoundedCollect's
       // LSH bucket collect, KMV/CMS/Bloom sketches) falls back to
       // SORT-based aggregation once a task's hash map passes this many
@@ -60,8 +59,9 @@ object GraftSession {
       // shuffle partitions), and production sizes partitions so tasks
       // hold well under 1M groups; the graft aggregator buffers are
       // all O(cap)/O(sketch)-bounded, so 1M of them is ~100 MB against
-      // the 16 g executor heap. Env-overridable for memory-tight
-      // deployments.
+      // the 16 g executor heap. A memory-tight deployment chains its
+      // own `.config(...)` on this builder; the threshold is also a
+      // runtime SQL conf a session can set.
       // Buffer-size audit (r22, ADVICE item): the only MULTI-GROUP
       // typed aggregation in the repo is BoundedCollect (BoundedBuf,
       // ≤ 8 KB/group at the default cap) — every fat-buffer sketch
@@ -69,11 +69,11 @@ object GraftSession {
       // MisraGries, KMV) is used ONLY as a single-group global
       // aggregate, so the raised threshold exposes at most one such
       // buffer per task. A future high-cardinality groupBy over a
-      // sketch aggregator must either lower GRAFT_OBJ_AGG_FALLBACK or
-      // scope its own threshold; (groups/task)×(buffer bytes) is the
+      // sketch aggregator must either lower this threshold for its
+      // session or scope its own; (groups/task)×(buffer bytes) is the
       // number to budget against the executor heap.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("GRAFT_OBJ_AGG_FALLBACK", "1048576"))
+        "1048576")
       .config("spark.sql.extensions", classOf[graft.functions.GraftExtensions].getName)
       .config("spark.ui.enabled", "false")
 

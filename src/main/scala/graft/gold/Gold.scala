@@ -16,72 +16,40 @@ object Gold {
   def promote(silver: DataFrame): DataFrame =
     silver.withColumn("purchase_date", to_date(col("transaction_time")))
 
-  /** HOW a Gold catalog table commits. [[TableFormat.Atomic]] is the
-    * default: it carries the reference's Iceberg guarantee
-    * (`delta_to_iceberg.py:43-52` — Gold is ALWAYS transactional) to
-    * every create-or-append, not just the MERGE path.
-    * [[TableFormat.CatalogParquet]] is the plain v1 `saveAsTable`
-    * listing table, kept for interop with engines that expect a
-    * vanilla parquet table and accept its non-atomic listing reads.
-    */
-  sealed trait TableFormat
-  object TableFormat {
-    case object Atomic extends TableFormat
-    case object CatalogParquet extends TableFormat
-  }
-
   /** Create-or-append a partitioned catalog table — the
-    * `tableExists`-guarded Iceberg write of `delta_to_iceberg.py:36-52`.
+    * `tableExists`-guarded Iceberg write of `delta_to_iceberg.py:36-52`,
+    * carrying the reference's guarantee (Gold is ALWAYS transactional)
+    * to every create-or-append, not just the MERGE path.
     *
-    * [[TableFormat.Atomic]] (default) re-expresses Iceberg's commit
-    * model on the offline v1 catalog: files stage invisibly and
-    * commit by manifest swap ([[AtomicTable.appendPartitioned]] —
-    * optimistic, racing writers both survive), then the catalog name
-    * is repointed (`CREATE OR REPLACE VIEW`) at a hard-linked
-    * Hive-layout export of the committed snapshot
-    * ([[AtomicTable.exportSnapshot]]). The catalog entry is thus a
-    * METADATA POINTER, exactly Iceberg's table concept: readers
-    * resolve the name to one immutable snapshot directory and never
-    * see partial writes; old exports stay readable (time travel)
-    * until vacuumed. The pointer publish re-checks the manifest head
-    * and republishes until stable, so concurrent writers converge on
-    * the newest version regardless of swap order. Against a real v2
-    * catalog (Iceberg/Delta at deploy time) the same seam swaps to
+    * Iceberg's commit model re-expressed on the offline v1 catalog:
+    * files stage invisibly and commit by manifest swap
+    * ([[AtomicTable.appendPartitioned]] — optimistic, racing writers
+    * both survive), then the catalog name is repointed (`CREATE OR
+    * REPLACE VIEW`) at a hard-linked Hive-layout export of the
+    * committed snapshot ([[AtomicTable.exportSnapshot]]). The catalog
+    * entry is thus a METADATA POINTER, exactly Iceberg's table
+    * concept: readers resolve the name to one immutable snapshot
+    * directory and never see partial writes; old exports stay
+    * readable (time travel) until vacuumed. The pointer publish
+    * re-checks the manifest head and republishes until stable, so
+    * concurrent writers converge on the newest version regardless of
+    * swap order. Against a real v2 catalog (Iceberg/Delta at deploy
+    * time) the same seam swaps to
     * `writeTo(table).partitionedBy(...).create()` / `.append()`.
-    *
-    * The v1 session catalog rejects `DataFrameWriterV2.append()`
-    * ("Cannot write into v1 table"), so [[TableFormat.CatalogParquet]]
-    * goes through the by-name `saveAsTable` path in both branches.
     */
   def writeTable(spark: SparkSession, df: DataFrame, table: String,
-      partitionCol: String,
-      format: TableFormat = TableFormat.Atomic): Unit = {
-    // fail FAST when the catalog name is already bound to the OTHER
-    // format's object: Atomic publishes via CREATE OR REPLACE VIEW
-    // (throws on a real table AFTER the data committed — leaving the
-    // batch committed-but-unpublished in the _graft_atomic root), and
-    // CatalogParquet's saveAsTable throws on a view. One name, one
-    // format, for the table's lifetime.
-    def isView: Boolean = spark.catalog.tableExists(table) &&
-      spark.catalog.getTable(table).tableType == "VIEW"
-    format match {
-      case TableFormat.CatalogParquet =>
-        require(!isView,
-          s"writeTable: '$table' is an Atomic snapshot-pointer view; " +
-            "write it with TableFormat.Atomic")
-        if (spark.catalog.tableExists(table))
-          df.write.mode("append").format("parquet").partitionBy(partitionCol)
-            .saveAsTable(table)
-        else df.write.format("parquet").partitionBy(partitionCol)
-          .saveAsTable(table)
-      case TableFormat.Atomic =>
-        require(!spark.catalog.tableExists(table) || isView,
-          s"writeTable: '$table' is a catalog parquet table; " +
-            "write it with TableFormat.CatalogParquet")
-        val root = atomicRoot(spark, table)
-        val v = AtomicTable.appendPartitioned(spark, df, root, partitionCol)
-        if (v >= 0) publishPointer(spark, table, root)
-    }
+      partitionCol: String): Unit = {
+    // fail FAST when the catalog name is already bound to a real
+    // table: the pointer publish is CREATE OR REPLACE VIEW, which
+    // throws on a table only AFTER the data committed — leaving the
+    // batch committed-but-unpublished in the _graft_atomic root
+    require(!spark.catalog.tableExists(table) ||
+        spark.catalog.getTable(table).tableType == "VIEW",
+      s"writeTable: '$table' is a catalog table, not an atomic " +
+        "snapshot-pointer view; write it under another name")
+    val root = atomicRoot(spark, table)
+    val v = AtomicTable.appendPartitioned(spark, df, root, partitionCol)
+    if (v >= 0) publishPointer(spark, table, root)
   }
 
   /** Filesystem root backing an Atomic catalog table: under the
@@ -150,8 +118,7 @@ object Gold {
       .parquet(path)
 
   /** [[readFact]], or None when the path does not exist yet — the
-    * "no target table on the first run" probe shared by the batch
-    * pipeline's fact step and [[graft.streaming.StreamingGold]].
+    * batch pipeline's "no target table on the first run" probe.
     * Probes by ATTEMPTING the read, not java.nio Files.exists: the nio
     * check consults the driver-local filesystem (always false for an
     * HDFS/S3 path — dedup silently skipped, duplicates appended). The

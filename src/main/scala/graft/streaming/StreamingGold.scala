@@ -1,41 +1,21 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.gold.Gold
 
 /** Streaming → Gold with the honest unique_key semantics: per
   * micro-batch, `foreachBatch` runs the SAME incremental logic the
-  * batch pipeline uses (watermark filter + first-writer-wins dedup +
-  * anti-join against the target) and appends the survivors — i.e. the
+  * batch pipeline uses (watermark filter + first-writer-wins dedup on
+  * the unique key) and commits the survivors atomically — i.e. the
   * reference's dbt incremental model as a continuously-running query,
   * with the dedup its `unique_key` promises but never enforces.
   *
-  * foreachBatch (not a plain parquet sink) because the dedup needs to
-  * read the current target state; each batch is a small batch job with
-  * full access to the existing table. At scale the anti-join shuffles
-  * only the target's key column.
+  * foreachBatch (not a plain parquet sink) because the merge needs the
+  * current target snapshot; each batch is a small batch job with full
+  * access to the committed table.
   */
 object StreamingGold {
-
-  def startIncrementalFact(parsed: DataFrame, factPath: String,
-      checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    Gold.fctPurchases(parsed).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // attempt-the-read probe (see readFactIfExists: why nio
-        // exists-checks and swallowing non-PATH_NOT_FOUND failures
-        // would both append permanent duplicates here)
-        val target = Gold.readFactIfExists(spark, factPath)
-        Gold.incrementalRows(batch, target)
-          .write.mode(SaveMode.Append)
-          .partitionBy("purchase_date").parquet(factPath)
-      }
-      .start()
 
   /** Streaming → Gold as ATOMIC SNAPSHOT COMMITS: each micro-batch
     * publishes through [[Gold.mergeIncremental]] →
@@ -45,8 +25,7 @@ object StreamingGold {
     * and the merge reads the staged copy. When the batch's purchase
     * dates cover every date the table holds (a feed still inside its
     * first day), the merge also skips the prior-snapshot key scan,
-    * which could not change that commit. Strictly stronger than the
-    * append variant under failure:
+    * which could not change that commit. Under failure:
     *  - a crash mid-batch leaves no torn table — readers only ever
     *    see the last committed manifest, never half a batch;
     *  - foreachBatch's at-least-once replay CONVERGES: re-merging a

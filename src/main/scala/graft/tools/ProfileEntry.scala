@@ -1,15 +1,26 @@
 package graft.tools
 
-/** Dev utility: time ONE registered query over an optionally scaled
+import graft.RunWitness
+
+/** Dev utility: time registered queries over an optionally scaled
   * corpus in a fresh JVM — the minimal reproducer for adjudicating a
   * bench-entry number outside the full ~40-entry sequence (run order,
   * accumulated JIT state, and page-cache history all drop out).
   *
-  * Usage: runMain graft.tools.ProfileEntry <query> [sfDir] [copies] [repeat]
+  * Per run it prints the run-witness panel (task time, tasks, stages,
+  * jit, gc, janino compiles, steal%, busy%, code cache, spill, peak
+  * execution memory), then one line per Spark job: its wall and the
+  * DRIVER GAP since the previous job ended (planning, staging-file
+  * round-trips, footer reads and broadcast builds all hide in the
+  * gaps), and the tail after the last job.
+  *
+  * Usage: runMain graft.tools.ProfileEntry <query[,query...]> [sfDir] [copies] [repeat]
+  * copies > 1 runs against the Bench-style scaled corpus (x10, x30).
   */
 object ProfileEntry {
   def main(args: Array[String]): Unit = {
-    val name = args.headOption.getOrElse("q86_curation_pipeline")
+    val names = args.headOption.getOrElse("q86_curation_pipeline")
+      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val copies = if (args.length > 2) args(2).toInt else 1
     val repeat = if (args.length > 3) args(3).toInt else 4
@@ -18,115 +29,51 @@ object ProfileEntry {
     spark.sparkContext.setLogLevel("WARN")
     val corpus =
       if (copies <= 1) dir else graft.Bench.buildScaledCorpus(spark, dir, copies)
-    def jitMs(): Long = {
-      val c = java.lang.management.ManagementFactory.getCompilationMXBean
-      if (c != null && c.isCompilationTimeMonitoringSupported)
-        c.getTotalCompilationTime else -1L
-    }
-    def gcMs(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-    }
-    // wall-vs-work split: if summed executor task time is flat across
-    // runs while wall wobbles, the wobble lives in scheduling/driver
-    // gaps; if task time itself wobbles, the cores ran slower (steal
-    // bursts, frequency, JIT deopt storms)
-    val taskMs = new java.util.concurrent.atomic.AtomicLong()
-    val taskN = new java.util.concurrent.atomic.AtomicLong()
-    val stageN = new java.util.concurrent.atomic.AtomicLong()
-    // memory-pressure split (mirrors Bench's r8 witness rows): spill
-    // across the run's tasks + the max per-task peak execution memory.
-    // A slow run with heavy GC but ~0 spill and a modest peak was not
-    // memory-squeezed — the excess was host delivery
-    val spillBytes = new java.util.concurrent.atomic.AtomicLong()
-    val peakExec = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          if (e.taskMetrics != null) {
-            taskMs.addAndGet(e.taskMetrics.executorRunTime): Unit
-            taskN.incrementAndGet(): Unit
-            spillBytes.addAndGet(e.taskMetrics.memoryBytesSpilled +
-              e.taskMetrics.diskBytesSpilled): Unit
-            peakExec.getAndAccumulate(e.taskMetrics.peakExecutionMemory,
-              (a: Long, b: Long) => math.max(a, b)): Unit
-          }
-        }
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          stageN.incrementAndGet(): Unit
-        }
-      })
-    // Janino compile counter: run 2+ of an identical query should show
-    // ~zero new compilations (the codegen cache is keyed on source
-    // text); a steady per-run count means something in the plan emits
-    // fresh source every execution and every run pays C2 warmup
-    def janinoCompiles(): Long =
-      org.apache.spark.metrics.source.CodegenMetrics
-        .METRIC_COMPILATION_TIME.getCount
-    // sum of the histogram's reservoir — Spark updates it with per-
-    // compile durations already in MILLISECONDS (CodeGenerator's
-    // doCompile), and below ~1028 total compiles the reservoir holds
-    // every sample, so a delta of sums is the compile-time delta
-    def janinoMs(): Double =
-      org.apache.spark.metrics.source.CodegenMetrics
-        .METRIC_COMPILATION_TIME.getSnapshot.getValues.sum.toDouble
-    // steal% across the run body: the direct hypervisor-descheduling
-    // counter — the r7 stall class shows a fast single-thread canary
-    // beside 10-50x inflated task time, which only steal (or a
-    // parallel canary) witnesses
-    // JIT'd-code footprint: used bytes across the CodeHeap pools. Near
-    // ReservedCodeCacheSize the sweeper starts flushing warm methods
-    // and compiled code silently degrades to interpreted
-    def codeCacheMb(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-        .filter(p => p.getName.startsWith("CodeHeap") ||
-          p.getName == "Code Cache")
-        .map(_.getUsage.getUsed).sum / (1L << 20)
-    }
-    // (steal, idle+iowait, total) ticks across all cpus
-    def cpuTicks(): (Long, Long, Long) =
-      try {
-        val f = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/stat")), "UTF-8")
-          .linesIterator.next().split("\\s+")
-        val vals = f.drop(1).map(_.toLong)
-        // denominator = user..steal only: guest/guest_nice are already
-        // inside user/nice, so including them undercounts steal%
-        (if (vals.length > 7) vals(7) else 0L, vals(3) + vals(4),
-          vals.take(8).sum)
-      } catch { case _: Throwable => (0L, 0L, 0L) }
-    (1 to repeat).foreach { i =>
+    val w = RunWitness.attach(spark)
+    for (name <- names; i <- 1 to repeat) {
       spark.catalog.clearCache(); System.gc()
-      taskMs.set(0); taskN.set(0); stageN.set(0)
-      spillBytes.set(0); peakExec.set(0)
-      val c0 = janinoCompiles(); val cm0 = janinoMs()
-      val (s0, i0, k0) = cpuTicks()
-      val j0 = jitMs(); val g0 = gcMs()
+      val task0 = w.settledTaskMs(); val taskN0 = w.taskN.get()
+      val stage0 = w.stageN.get(); val spill0 = w.spillBytes.get()
+      w.peakExec.set(0); w.clearJobs()
+      val c0 = RunWitness.janinoCompiles(); val cm0 = RunWitness.janinoMs()
+      val (s0, i0, k0) = RunWitness.cpuTicks()
+      val j0 = RunWitness.jitMsTotal(); val g0 = RunWitness.gcMsTotal()
+      val t0ms = System.currentTimeMillis()
       val t0 = System.nanoTime()
       graft.SparkEntry.queries(name)(spark, corpus)
         .write.format("noop").mode("overwrite").save()
       val t = (System.nanoTime() - t0) / 1e9
       // listener bus is async — settle before reading the counters
       Thread.sleep(300)
-      val (s1, i1, k1) = cpuTicks()
+      val taskMs = w.settledTaskMs() - task0
+      val (s1, i1, k1) = RunWitness.cpuTicks()
       val stealPct = if (k1 > k0) 100.0 * (s1 - s0) / (k1 - k0) else -1.0
       // busy% of all guest cpus across the run: slow wall + IDLE cpus
       // = tasks BLOCKED (locks, fs waits), not computing slowly
       val busyPct =
         if (k1 > k0) 100.0 * ((k1 - k0) - (i1 - i0)) / (k1 - k0) else -1.0
-      println(f"[$name] run $i: $t%.2f s  task_time=${taskMs.get / 1000.0}%.1f s" +
-        f" over ${taskN.get} tasks / ${stageN.get} stages" +
-        f"  jit=${jitMs() - j0} ms  gc=${gcMs() - g0} ms" +
-        f"  janino_compiles=${janinoCompiles() - c0}" +
-        f" (${janinoMs() - cm0}%.0f ms)" +
+      println(f"[$name] run $i: $t%.2f s  task_time=${taskMs / 1000.0}%.1f s" +
+        f" over ${w.taskN.get - taskN0} tasks / ${w.stageN.get - stage0} stages" +
+        f"  jit=${RunWitness.jitMsTotal() - j0} ms" +
+        f"  gc=${RunWitness.gcMsTotal() - g0} ms" +
+        f"  janino_compiles=${RunWitness.janinoCompiles() - c0}" +
+        f" (${RunWitness.janinoMs() - cm0}%.0f ms)" +
         f"  steal=$stealPct%.1f%%  busy=$busyPct%.1f%%" +
-        f"  code_cache=${codeCacheMb()}mb" +
-        f"  spill=${spillBytes.get / (1L << 20)}mb" +
-        f"  peak_exec=${peakExec.get / (1L << 20)}mb")
+        f"  code_cache=${RunWitness.codeCacheMb()}mb" +
+        f"  spill=${(w.spillBytes.get - spill0) / (1L << 20)}mb" +
+        f"  peak_exec=${w.peakExec.get / (1L << 20)}mb")
+      val jobs = w.jobs()
+      var prevEnd = t0ms
+      jobs.foreach { j =>
+        val gap = (j.start - prevEnd) / 1e3
+        val dur = if (j.end < 0) -1.0 else (j.end - j.start) / 1e3
+        println(f"[jobs]   j${j.id}%-3d gap $gap%6.3f  dur $dur%6.3f  " +
+          f"tasks ${j.tasks.get}%-4d ${j.desc}")
+        if (j.end > 0) prevEnd = j.end
+      }
+      val lastEnd = jobs.filter(_.end > 0).map(_.end).foldLeft(t0ms)(math.max)
+      println(f"[jobs]   ${jobs.size} jobs, tail after last job: " +
+        f"${(t0ms + t * 1000 - lastEnd) / 1e3}%.3f s")
     }
     spark.stop()
   }

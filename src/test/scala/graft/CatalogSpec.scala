@@ -63,53 +63,24 @@ class CatalogSpec extends SparkSpec {
     spark.sql(s"DROP VIEW $table")
   }
 
-  test("writeTable[CatalogParquet]: tableExists-guarded create-partitioned / append interop path") {
-    val ts = Timestamp.valueOf("2025-06-01 10:00:00")
-    val fct = onePurchase(ts, "1")
-    spark.sql("CREATE DATABASE IF NOT EXISTS ecommerce_data_lake")
-    val table = "ecommerce_data_lake.fct_purchases_plain_test"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    assert(!spark.catalog.tableExists(table))
-    Gold.writeTable(spark, fct, table, "purchase_date",
-      Gold.TableFormat.CatalogParquet)
-    assert(spark.catalog.tableExists(table))
-    assert(spark.table(table).count() === 1)
-    Gold.writeTable(spark, fct, table, "purchase_date",
-      Gold.TableFormat.CatalogParquet) // append branch
-    assert(spark.table(table).count() === 2)
-    // partitioned layout survived the create
-    val part = spark.sql(s"DESCRIBE TABLE $table").collect()
-      .map(_.getString(0))
-    assert(part.contains("# Partition Information"))
-    spark.sql(s"DROP TABLE $table")
-  }
-
   test("writeTable: a name bound to the OTHER format fails fast, not split-brain") {
-    // Atomic publishes via CREATE OR REPLACE VIEW (throws on a real
-    // table only AFTER the batch committed to the _graft_atomic root);
-    // CatalogParquet's saveAsTable throws on a view — both misuses
-    // must be caught BEFORE any data moves
+    // the pointer publish is CREATE OR REPLACE VIEW, which throws on a
+    // real table only AFTER the batch committed to the _graft_atomic
+    // root — the misuse must be caught BEFORE any data moves
     val ts = Timestamp.valueOf("2025-06-01 10:00:00")
     val fct = onePurchase(ts, "1")
     spark.sql("CREATE DATABASE IF NOT EXISTS ecommerce_data_lake")
     val plain = "ecommerce_data_lake.fmt_clash_plain"
     spark.sql(s"DROP TABLE IF EXISTS $plain")
-    Gold.writeTable(spark, fct, plain, "purchase_date",
-      Gold.TableFormat.CatalogParquet)
+    fct.write.format("parquet").partitionBy("purchase_date").saveAsTable(plain)
     val e1 = intercept[IllegalArgumentException] {
-      Gold.writeTable(spark, fct, plain, "purchase_date") // Atomic default
+      Gold.writeTable(spark, fct, plain, "purchase_date")
     }
-    assert(e1.getMessage.contains("CatalogParquet"), e1.getMessage)
+    assert(e1.getMessage.contains("not an atomic snapshot-pointer view"),
+      e1.getMessage)
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(Gold.atomicRoot(spark, plain))))
     spark.sql(s"DROP TABLE $plain")
-    val atomic = "ecommerce_data_lake.fmt_clash_atomic"
-    spark.sql(s"DROP VIEW IF EXISTS $atomic")
-    Gold.writeTable(spark, fct, atomic, "purchase_date")
-    val e2 = intercept[IllegalArgumentException] {
-      Gold.writeTable(spark, fct, atomic, "purchase_date",
-        Gold.TableFormat.CatalogParquet)
-    }
-    assert(e2.getMessage.contains("Atomic"), e2.getMessage)
-    spark.sql(s"DROP VIEW $atomic")
   }
 
   test("catalog introspection builtins (debug_catalog.sql:1-3)") {

@@ -317,30 +317,6 @@ class StreamingGoldSpec extends SparkSpec {
   import spark.implicits._
   import graft.streaming.StreamingGold
 
-  test("foreachBatch incremental fact: dedups within and across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val gen = EventGenerator.generate(EventGenerator.defaultProducts, 300)
-    val json = gen.purchases.map(EventGenerator.toJson)
-    val stream = MemoryStream[String]
-    val factPath = tmpDir("stream-fact") + "/fct"
-    val q = StreamingGold.startIncrementalFact(
-      Silver.parsePurchases(stream.toDF(),
-        ingestionTs = col("transaction_time")),
-      factPath, tmpDir("stream-fact-ckpt"), Trigger.AvailableNow())
-    // batch 1: first 200 + 30 duplicated events; batch 2: rest + 50 dups
-    stream.addData(json.take(200) ++ json.slice(100, 130))
-    q.awaitTermination()
-    val q2 = StreamingGold.startIncrementalFact(
-      Silver.parsePurchases(stream.toDF(),
-        ingestionTs = col("transaction_time")),
-      factPath, tmpDir("stream-fact-ckpt2"), Trigger.AvailableNow())
-    stream.addData(json.drop(200) ++ json.take(50))
-    q2.awaitTermination()
-    val fct = spark.read.parquet(factPath)
-    assert(fct.count() === fct.select("transaction_id").distinct().count())
-    assert(fct.count() === 300)
-  }
-
   test("transactional fact: batch replay converges via snapshot MERGE") {
     implicit val sqlCtx = spark.sqlContext
     val gen = EventGenerator.generate(EventGenerator.defaultProducts, 300)
