@@ -103,6 +103,23 @@ object RunWitness {
     val tasks = new AtomicInteger()
   }
 
+  /** Splits the wall `[t0, t1]` (epoch ms) into (time with at least
+    * one job running, driver-only time before and between jobs, the
+    * tail after the latest job end, 0 with no job); the three add up
+    * to the wall. Jobs are `(start, end)` stamps, overlapping or not;
+    * one with no end yet (-1) runs to `t1`. */
+  def wallSplit(t0: Long, t1: Long, jobs: Seq[(Long, Long)]): (Long, Long, Long) = {
+    def clip(ms: Long) = math.min(math.max(ms, t0), t1)
+    var running = 0L
+    var reach = t0 // latest job end so far
+    jobs.map { case (s, e) => (clip(s), clip(if (e < 0) t1 else e)) }
+      .sortBy(_._1).foreach { case (s, e) =>
+        if (e > reach) { running += e - math.max(s, reach); reach = e }
+      }
+    val tail = if (jobs.isEmpty) 0L else t1 - reach
+    (running, t1 - t0 - running - tail, tail)
+  }
+
   def attach(spark: SparkSession): RunWitness = {
     val w = new RunWitness()
     spark.sparkContext.addSparkListener(w)

@@ -10,9 +10,11 @@ import graft.RunWitness
   * Per run it prints the run-witness panel (task time, tasks, stages,
   * jit, gc, janino compiles, steal%, busy%, code cache, spill, peak
   * execution memory), then one line per Spark job: its wall and the
-  * DRIVER GAP since the previous job ended (planning, staging-file
-  * round-trips, footer reads and broadcast builds all hide in the
-  * gaps), and the tail after the last job.
+  * DRIVER GAP since the latest job end before it (planning,
+  * staging-file round-trips, footer reads and broadcast builds all
+  * hide in the gaps), and one line that splits the run's wall into
+  * time with a job running, driver-only time and the tail after the
+  * last job.
   *
   * Usage: runMain graft.tools.ProfileEntry <query[,query...]> [sfDir] [copies] [repeat]
   * copies > 1 runs against the Bench-style scaled corpus (x10, x30).
@@ -63,17 +65,23 @@ object ProfileEntry {
         f"  spill=${(w.spillBytes.get - spill0) / (1L << 20)}mb" +
         f"  peak_exec=${w.peakExec.get / (1L << 20)}mb")
       val jobs = w.jobs()
-      var prevEnd = t0ms
+      // jobs overlap (AQE submits stages asynchronously): a gap is
+      // taken from the latest end seen so far, and is negative when
+      // the job started while an earlier one was still running
+      var lastEnd = t0ms
       jobs.foreach { j =>
-        val gap = (j.start - prevEnd) / 1e3
+        val gap = (j.start - lastEnd) / 1e3
         val dur = if (j.end < 0) -1.0 else (j.end - j.start) / 1e3
         println(f"[jobs]   j${j.id}%-3d gap $gap%6.3f  dur $dur%6.3f  " +
           f"tasks ${j.tasks.get}%-4d ${j.desc}")
-        if (j.end > 0) prevEnd = j.end
+        lastEnd = math.max(lastEnd, j.end)
       }
-      val lastEnd = jobs.filter(_.end > 0).map(_.end).foldLeft(t0ms)(math.max)
-      println(f"[jobs]   ${jobs.size} jobs, tail after last job: " +
-        f"${(t0ms + t * 1000 - lastEnd) / 1e3}%.3f s")
+      val t1ms = t0ms + math.round(t * 1000)
+      val (running, driver, tail) =
+        RunWitness.wallSplit(t0ms, t1ms, jobs.map(j => (j.start, j.end)))
+      println(f"[jobs]   ${jobs.size} jobs, wall ${(t1ms - t0ms) / 1e3}%.3f s" +
+        f" = jobs running ${running / 1e3}%.3f + driver only ${driver / 1e3}%.3f" +
+        f" + tail ${tail / 1e3}%.3f s")
     }
     spark.stop()
   }

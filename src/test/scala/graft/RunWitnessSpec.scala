@@ -53,4 +53,14 @@ class RunWitnessSpec extends SparkSpec {
       spark.sparkContext.removeSparkListener(ref)
     }
   }
+
+  test("wallSplit: overlapping jobs count once, gaps from the latest end, parts add up") {
+    // wall 0-100: j1 10-40, j2 20-30 (inside j1), j3 35-60 (overlaps
+    // j1), j4 70-80; driver-only 0-10 and 60-70, tail 80-100
+    assert(RunWitness.wallSplit(0, 100,
+      Seq((10L, 40L), (20L, 30L), (35L, 60L), (70L, 80L))) === ((60L, 20L, 20L)))
+    // a job still running at the wall end runs to it: no tail
+    assert(RunWitness.wallSplit(0, 100, Seq((10L, 40L), (50L, -1L))) === ((80L, 20L, 0L)))
+    assert(RunWitness.wallSplit(0, 100, Nil) === ((0L, 100L, 0L)))
+  }
 }

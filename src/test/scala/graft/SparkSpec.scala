@@ -27,6 +27,9 @@ object TestSpark {
       // suite run and every suite re-pays Janino + JIT warmup (sizing
       // rationale and the 256-vs-1000 A/B: see GraftSession)
       .config("spark.sql.codegen.cache.maxEntries", "1000")
+      // the library's local I/O: the nio `file:` FileSystem and the
+      // FileSystem-based streaming checkpoint manager (see GraftSession)
+      .config(GraftSession.localIo)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
   }
