@@ -2,7 +2,7 @@ package graft.gold
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.NumericType
+import org.apache.spark.sql.types.{DataType, NumericType, StructType}
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
 
@@ -16,12 +16,25 @@ import scala.util.control.NonFatal
   * {{{
   *   <root>/_staged/<uuid>/part-*.parquet   data files (immutable once
   *                                          referenced by a manifest)
+  *   <root>/_staged/<uuid>/_schema.json     the dir's data schema, as
+  *                                          written (read with it: no
+  *                                          footer inference)
+  *   <root>/_staged/<uuid>/.part-*.parquet.bloom
+  *                                          per-file key Bloom filter
+  *                                          ([[KeyFilter]]; files a
+  *                                          [[mergeBatch]] wrote)
   *   <root>/_commits/v00042.manifest        one entry per data file:
   *                                          relative path + optional
   *                                          tagged fields (partition
   *                                          value, per-file min/max
   *                                          zone-map stats; see [[files]])
   * }}}
+  * (`[<col>=<value>/]` sits between the uuid dir and the part files of
+  * a partitioned write.) The sidecars are immutable, hidden from
+  * directory listings by their `_`/`.` prefix, and die with their data
+  * in [[vacuum]]. A dir or file without them (older writers) still
+  * reads: its schema is inferred, and a file without a filter makes a
+  * batch take the merge path.
   *
   * Protocol:
   *  - WRITE: stage data files (never visible to readers), then publish
@@ -141,28 +154,89 @@ object AtomicTable {
     * `basePath` per staged dir so partition discovery restores the
     * partition column; plain entries read directly.
     *
+    * Each staged dir reads with its recorded data schema
+    * ([[SchemaRecord]]), so no footer-inference job runs; partition
+    * discovery is unchanged (the record holds no partition column). A
+    * dir without a record (older writers) infers with `mergeSchema`.
+    *
     * SCHEMA EVOLUTION (add-column): snapshots may mix commits written
     * with different column sets — the union fills columns missing
     * from older files with NULL (per staged group, each group reads
-    * with its own mergeSchema'd parquet schema). Type changes of an
-    * existing column are NOT supported (same as Iceberg without a
-    * migration rewrite).
+    * with its own recorded or mergeSchema'd parquet schema). Type
+    * changes of an existing column are NOT supported (same as Iceberg
+    * without a migration rewrite).
     */
   private def readEntries(spark: SparkSession, root: String,
       entries: Seq[String]): DataFrame = {
     if (entries.isEmpty) return spark.emptyDataFrame
+    def reader(schema: Option[StructType]) =
+      schema.fold(spark.read.option("mergeSchema", "true"))(spark.read.schema(_))
     val (parted, plain) = entries.partition(partOf(_).isDefined)
     val parts = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    if (plain.nonEmpty)
-      parts += spark.read.option("mergeSchema", "true")
-        .parquet(plain.map(f => s"$root/${pathOf(f)}"): _*)
-    parted.map(pathOf).groupBy(p => p.split("/").take(2).mkString("/"))
+    if (plain.nonEmpty) {
+      // one read over every plain file: with a recorded schema only
+      // when all their dirs recorded the same one
+      val schemas = plain.map(e => stagedDirOf(pathOf(e))).distinct
+        .map(recordedSchema(root, _))
+      val shared = if (schemas.distinct.size == 1) schemas.head else None
+      parts += reader(shared).parquet(plain.map(f => s"$root/${pathOf(f)}"): _*)
+    }
+    parted.map(pathOf).groupBy(stagedDirOf)
       .foreach { case (stagedDir, paths) =>
-        parts += spark.read.option("basePath", s"$root/$stagedDir")
-          .option("mergeSchema", "true")
+        parts += reader(recordedSchema(root, stagedDir))
+          .option("basePath", s"$root/$stagedDir")
           .parquet(paths.map(f => s"$root/$f").toSeq: _*)
       }
     parts.reduceLeft(_.unionByName(_, allowMissingColumns = true))
+  }
+
+  /** `_staged/<uuid>` of an entry path. */
+  private def stagedDirOf(path: String): String = path.split("/").take(2).mkString("/")
+
+  /** Name of the per-staged-dir data schema record: the schema of the
+    * columns the parquet files hold (the frame's, minus a partition
+    * column), written as JSON by [[stage]] before any manifest names
+    * the dir. The `_` prefix hides it from directory listings.
+    */
+  private val SchemaRecord = "_schema.json"
+
+  private def recordedSchema(root: String, stagedDir: String): Option[StructType] = {
+    val p = Paths.get(root, stagedDir, SchemaRecord)
+    if (!Files.isRegularFile(p)) None
+    else scala.util.Try(DataType.fromJson(new String(Files.readAllBytes(p), "UTF-8")))
+      .toOption.collect { case s: StructType => s }
+  }
+
+  /** Run `body` with `what` as the description of the Spark jobs it
+    * starts (the per-job name the UI and [[graft.RunWitness]] show),
+    * then restore the caller's description (a streaming query sets
+    * its own around each micro-batch).
+    */
+  private def described[T](spark: SparkSession, what: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(what)
+    try body finally sc.setJobDescription(prev)
+  }
+
+  /** What [[stage]] wrote: the staged dir (relative to the root), its
+    * manifest entries and, when a key filter was asked for, the key
+    * hashes of every staged file (None when some file got no filter).
+    */
+  private final case class Staged(dir: String, entries: Seq[String],
+      keyHashes: Option[Array[Long]])
+
+  /** Delete a staged dir that no manifest references (a lost commit
+    * attempt's rewrite, an empty write).
+    */
+  private def dropStaged(root: String, s: Staged): Unit = {
+    val dir = Paths.get(root, s.dir)
+    if (Files.exists(dir)) {
+      val walk = Files.walk(dir)
+      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .iterator().forEachRemaining(p => Files.deleteIfExists(p): Unit)
+      finally walk.close()
+    }
   }
 
   /** Stage `df` as immutable parquet files, invisible to readers
@@ -170,22 +244,29 @@ object AtomicTable {
     * [[files]]). With `partitionCol` the files land in Hive-style
     * `<col>=<value>` dirs and each entry carries its `p=` value, parsed
     * from the dir name; partition values must be non-null and
-    * string-faithful (dates, numbers, sane strings).
+    * string-faithful (dates, numbers, sane strings). The dir's data
+    * schema is recorded beside the files ([[SchemaRecord]]). A write
+    * that produced no file leaves no dir behind.
     *
     * Every column in `statsCols` gets per-file `zs=` min/max zone maps
-    * (what [[scanWhere]] prunes with): ONE aggregation job grouped by
-    * `input_file_name()` covers every file and column (a production
-    * writer would lift the same values from the parquet footers the
-    * write already produced). The ordering tag comes from `df`'s
-    * schema, "num" for numeric types and "str" otherwise, so the scan
-    * compares bounds under the SAME ordering the stats were captured
-    * with.
+    * (what [[scanWhere]] prunes with), and `keyFilter` a per-file
+    * [[KeyFilter]] sidecar: ONE aggregation job grouped by
+    * `input_file_name()` covers every file, every stats column and the
+    * key hashes (a production writer would lift the same values from
+    * the parquet footers the write already produced). The ordering tag
+    * comes from `df`'s schema, "num" for numeric types and "str"
+    * otherwise, so the scan compares bounds under the SAME ordering
+    * the stats were captured with. `phase` names the write job.
     */
   private def stage(df: DataFrame, root: String, partitionCol: Option[String],
-      statsCols: Seq[String]): Seq[String] = {
+      statsCols: Seq[String], keyFilter: Option[String] = None,
+      phase: String = "stage"): Staged = {
+    val spark = df.sparkSession
     val rel = s"_staged/${java.util.UUID.randomUUID()}"
-    partitionCol.fold(df.write)(pc => df.write.partitionBy(pc))
-      .parquet(s"$root/$rel")
+    described(spark, s"AtomicTable $phase") {
+      partitionCol.fold(df.write)(pc => df.write.partitionBy(pc))
+        .parquet(s"$root/$rel")
+    }
     def partFiles(dir: java.nio.file.Path): Seq[String] = listDir(dir)(
       _.map(_.getFileName.toString)
         .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).toSeq)
@@ -199,27 +280,55 @@ object AtomicTable {
             partFiles(Paths.get(root, rel, dn)).map(n => s"$rel/$dn/$n\tp=$value")
           }
     }).sorted
-    if (statsCols.isEmpty || entries.isEmpty) return entries
+    if (entries.isEmpty) {
+      val none = Staged(rel, Nil, None)
+      dropStaged(root, none)
+      return none
+    }
+    val dataSchema = partitionCol.fold(df.schema) { pc =>
+      val name = df.select(col(pc)).schema.head.name
+      StructType(df.schema.filterNot(_.name == name))
+    }
+    Files.write(Paths.get(root, rel, SchemaRecord), dataSchema.json.getBytes("UTF-8"))
+    if (statsCols.isEmpty && keyFilter.isEmpty) return Staged(rel, entries, None)
     // the schema is known, so the read-back infers nothing from disk
-    val statsSchema = df.select(statsCols.map(col): _*).schema
+    val readSchema = df.select((statsCols ++ keyFilter).distinct.map(col): _*).schema
     val aggs = statsCols.flatMap(c =>
-      Seq(min(col(c)).cast("string"), max(col(c)).cast("string")))
-    val zones: Map[String, Seq[String]] =
-      df.sparkSession.read.schema(statsSchema).parquet(s"$root/$rel")
-        .groupBy(input_file_name()).agg(aggs.head, aggs.tail: _*)
-        .collect().flatMap { r =>
-          val f = r.getString(0)
-          val i = f.indexOf("_staged/")
-          if (i < 0) None
-          else Some(f.substring(i) -> statsCols.zip(statsSchema).zipWithIndex
-            .flatMap { case ((c, field), ci) =>
-              val (mn, mx) = (r.getString(1 + 2 * ci), r.getString(2 + 2 * ci))
-              val ord = if (field.dataType.isInstanceOf[NumericType]) "num" else "str"
-              if (mn == null || mx == null) None
-              else Some(s"zs=${enc(c)},$ord,${enc(mn)},${enc(mx)}")
-            })
-        }.toMap
-    entries.map(e => (e +: zones.getOrElse(pathOf(e), Nil)).mkString("\t"))
+      Seq(min(col(c)).cast("string"), max(col(c)).cast("string"))) ++
+      // the hashes ship only for a file within the filter's key cap
+      keyFilter.map(k => when(count(lit(1)) <= KeyFilter.MaxKeys,
+        collect_list(xxhash64(col(k)))))
+    val rows = described(spark, "AtomicTable stats + filters") {
+      spark.read.schema(readSchema).parquet(s"$root/$rel")
+        .groupBy(input_file_name()).agg(aggs.head, aggs.tail: _*).collect()
+    }
+    // file → (zone-map fields, key hashes)
+    val perFile: Map[String, (Seq[String], Option[Seq[Long]])] = rows.flatMap { r =>
+      val f = r.getString(0)
+      val i = f.indexOf("_staged/")
+      if (i < 0) None
+      else Some(f.substring(i) -> (statsCols.zip(readSchema).zipWithIndex
+        .flatMap { case ((c, field), ci) =>
+          val (mn, mx) = (r.getString(1 + 2 * ci), r.getString(2 + 2 * ci))
+          val ord = if (field.dataType.isInstanceOf[NumericType]) "num" else "str"
+          if (mn == null || mx == null) None
+          else Some(s"zs=${enc(c)},$ord,${enc(mn)},${enc(mx)}")
+        },
+        keyFilter.flatMap(_ => Option(r.getSeq[Long](1 + 2 * statsCols.size)))))
+    }.toMap
+    // a file the aggregation did not match (a path it renders
+    // differently) gets no filter: an empty one would be a false
+    // negative
+    val hashes = entries.map(e => perFile.get(pathOf(e)).flatMap(_._2))
+    keyFilter.foreach(k => entries.zip(hashes).foreach {
+      case (e, Some(hs)) =>
+        KeyFilter.write(KeyFilter.sidecar(Paths.get(root, pathOf(e))), KeyFilter.build(k, hs))
+      case _ =>
+    })
+    Staged(rel,
+      entries.map(e => (e +: perFile.get(pathOf(e)).fold(Seq.empty[String])(_._1)).mkString("\t")),
+      if (keyFilter.isDefined && hashes.forall(_.isDefined)) Some(hashes.flatten.flatten.toArray)
+      else None)
   }
 
   /** ONE atomic publish attempt of `files` as version `v`. Returns
@@ -284,7 +393,7 @@ object AtomicTable {
     */
   def append(spark: SparkSession, df: DataFrame, root: String,
       statsCol: Option[String] = None): Int = {
-    val staged = stage(df, root, None, statsCol.toSeq)
+    val staged = stage(df, root, None, statsCol.toSeq).entries
     // no rows staged → no commit: an empty first write must not create
     // a row-less table, and on an existing table appending an empty
     // file (or republishing the head alone) would bump the version for
@@ -319,7 +428,7 @@ object AtomicTable {
     * [[append]]'s no-empty-first-commit rule uniform.
     */
   def overwrite(spark: SparkSession, df: DataFrame, root: String): Int = {
-    val staged = stage(df, root, None, Nil)
+    val staged = stage(df, root, None, Nil).entries
     if (staged.isEmpty) return -1 // partitionless writer emitted nothing
     lazy val rowless = stagedRowless(spark, root, staged)
     commit(root)(head =>
@@ -332,7 +441,7 @@ object AtomicTable {
     */
   def appendPartitioned(spark: SparkSession, df: DataFrame, root: String,
       partitionCol: String, statsCol: Option[String] = None): Int = {
-    val staged = stage(df, root, Some(partitionCol), statsCol.toSeq)
+    val staged = stage(df, root, Some(partitionCol), statsCol.toSeq).entries
     // nothing staged → no commit: an empty FIRST write must not
     // create a schema-less table (see append), and on an existing
     // table republishing the head alone would bump the version for a
@@ -435,9 +544,12 @@ object AtomicTable {
     * table whose only partition is the batch's own date is this case.
     *
     * `df` is evaluated more than once (the partition distinct, the
-    * key distinct, the rewrite): a caller whose source plan is costly
-    * materializes it first — [[Gold.mergeIncremental]] stages its
-    * batch, q93's `mvMaintain` persists its combine.
+    * anti-join keys, the rewrite): a caller whose source plan is
+    * costly materializes it first — q93's `mvMaintain` persists its
+    * combine. The anti-join takes the keys as they come: a left-anti
+    * join against repeated keys returns the same rows, and a distinct
+    * would add a shuffle job to every merge. [[mergeBatch]] is the
+    * staged twin that can commit a key-disjoint batch as an append.
     *
     * Safety valves: entries without partition metadata (plain
     * [[append]] writes) always rewrite, and any partition value that
@@ -474,8 +586,9 @@ object AtomicTable {
   def mergePartitioned(spark: SparkSession, df: DataFrame, root: String,
       key: String, partitionCol: String, statsCol: Option[String] = None,
       partitionLocalKeys: Boolean = false): Int = {
-    val sourcePartRows = df.select(col(partitionCol)).distinct()
-      .collect() // bounded: partition cardinality
+    val sourcePartRows = described(spark, "AtomicTable partitions") {
+      df.select(col(partitionCol)).distinct().collect() // bounded: partition cardinality
+    }
     // empty source ⇔ empty distinct-partition set (a null partition
     // value still yields a row): short-circuit the no-op like
     // [[merge]] does — without this, an idle caller would publish a
@@ -486,84 +599,169 @@ object AtomicTable {
     val sourceHasNull = sourcePartRows.exists(_.isNullAt(0))
     val sourceParts = sourcePartRows.filterNot(_.isNullAt(0))
       .map(r => String.valueOf(r.get(0))).toSet
-    commit(root) {
-      case None =>
-        val staged = stage(df, root, Some(partitionCol), statsCol.toSeq)
-        // nothing to commit — never wedge
-        if (staged.isEmpty) Left(-1) else Right(staged)
-      case Some(v) =>
-        val prior = files(root, v)
-        val partedPrior = prior.filter(partOf(_).isDefined)
-        val priorDirVals: Set[String] = partedPrior.flatMap(partOf)
-          .filterNot(_ == NullPartDir).toSet
-        val priorHasNull = partedPrior.exists(e =>
-          partOf(e).contains(NullPartDir))
-        // cheap structural gates first: when any of them already
-        // forbids pruning (null partitions on either side, unsafe
-        // source dir values), the full rewrite follows and NO scan
-        // of the prior entries is needed at all
-        val structuralSafe = !sourceHasNull && !priorHasNull &&
-          sourceParts.forall(v => DirSafe.matches(v))
-        // ONE column-pruned (key, partition) pass over the prior
-        // partitioned entries serves BOTH pruning inputs: which
-        // partitions hold matched keys (left join marker), and the
-        // full discovered partition-value set for the round-trip
-        // guard below — previously two separate jobs per merge.
-        // partitionLocalKeys skips the scan only when every source
-        // partition value provably survives discovery's
-        // parse-then-print — see the scaladoc's stale-duplicate
-        // scenario for why a reprinting value must keep the scan
-        // (and with it the roundTrips guard)
-        val plkSafe = partitionLocalKeys &&
-          sourceParts.forall(discoveryStable)
-        // every partitioned prior entry already sits in a source
-        // partition: all of them rewrite whatever the scan finds (see
-        // the scaladoc), so the scan cannot change the commit
-        val scanMoot = partedPrior.forall(partOf(_).exists(sourceParts))
-        // the prior entries are read (a schema-merging job) only here
-        val partScan: Option[Array[(String, Boolean)]] =
-          if (plkSafe || !structuralSafe || scanMoot) None
-          else Some(readEntries(spark, root, partedPrior)
-            .join(df.select(col(key)).distinct()
-              .withColumn("__m", lit(1)), Seq(key), "left")
-            .groupBy(col(partitionCol)).agg(max(col("__m")).as("__m"))
-            .collect()
-            .filterNot(_.isNullAt(0))
-            .map(r => (String.valueOf(r.get(0)), !r.isNullAt(1))))
-        val matchedParts: Set[String] =
-          partScan.map(_.collect { case (v, true) => v }.toSet)
-            .getOrElse(Set.empty)
-        val affected = sourceParts ++ matchedParts
-        // round-trip guard: matchedParts comes from partition
-        // DISCOVERY, whose inferred type can reprint a dir value
-        // differently (p=00123 discovers as int 123) — the affected
-        // test below compares against manifest DIR strings, so a
-        // non-round-tripping value would leave the matched entry in
-        // `untouched` and the old row would survive the upsert as a
-        // duplicate key. Pruning is safe only when discovery is the
-        // IDENTITY on this table's dir values: discovery is
-        // parse-then-print (idempotent), so discovered-set ==
-        // dir-set forces every dir value to be a fixed point (set
-        // equality alone rules out both reprints and two dirs
-        // collapsing to one discovered value). Otherwise fall back
-        // to the always-correct full rewrite, which also
-        // re-canonicalizes the offending values. Free here: the
-        // discovered set rides the same partScan pass.
-        val roundTrips = partScan.forall(_.map(_._1).toSet == priorDirVals)
-        val pruneSafe = structuralSafe &&
-          affected.forall(v => DirSafe.matches(v)) && roundTrips
-        val (untouched, toRewrite) =
-          if (!pruneSafe) (Seq.empty[String], prior)
-          else prior.partition(e =>
-            partOf(e).exists(pv => !affected.contains(pv)))
-        val merged =
-          if (toRewrite.isEmpty) df
-          else readEntries(spark, root, toRewrite)
-            .join(df.select(col(key)).distinct(), Seq(key), "left_anti")
-            .unionByName(df, allowMissingColumns = true)
-        Right(untouched ++ stage(merged, root, Some(partitionCol), statsCol.toSeq))
+    // a lost attempt's staged files are never referenced: drop them
+    // before the next attempt stages its own
+    var attempt: Option[Staged] = None
+    commit(root) { head =>
+      attempt.foreach(dropStaged(root, _))
+      head match {
+        case None =>
+          val staged = stage(df, root, Some(partitionCol), statsCol.toSeq)
+          attempt = Some(staged)
+          // nothing to commit — never wedge
+          if (staged.entries.isEmpty) Left(-1) else Right(staged.entries)
+        case Some(v) =>
+          val (untouched, toRewrite) = splitAffected(spark, root, files(root, v), df,
+            key, partitionCol, sourceParts, sourceHasNull, partitionLocalKeys)
+          val staged = described(spark, "AtomicTable rewrite") {
+            val merged =
+              if (toRewrite.isEmpty) df
+              else readEntries(spark, root, toRewrite)
+                .join(df.select(col(key)), Seq(key), "left_anti")
+                .unionByName(df, allowMissingColumns = true)
+            stage(merged, root, Some(partitionCol), statsCol.toSeq, phase = "rewrite")
+          }
+          attempt = Some(staged)
+          Right(untouched ++ staged.entries)
+      }
     }
   }
+
+  /** The pruning half of [[mergePartitioned]] and [[mergeBatch]]:
+    * split the `prior` entries into those carried over untouched and
+    * those whose rows must be rewritten without the source's keys.
+    * `sourceParts` are the source's non-null partition values as
+    * strings; `source` is read only for the matched-key scan.
+    */
+  private def splitAffected(spark: SparkSession, root: String, prior: Seq[String],
+      source: DataFrame, key: String, partitionCol: String, sourceParts: Set[String],
+      sourceHasNull: Boolean, partitionLocalKeys: Boolean): (Seq[String], Seq[String]) = {
+    val partedPrior = prior.filter(partOf(_).isDefined)
+    val priorDirVals: Set[String] = partedPrior.flatMap(partOf)
+      .filterNot(_ == NullPartDir).toSet
+    val priorHasNull = partedPrior.exists(e =>
+      partOf(e).contains(NullPartDir))
+    // cheap structural gates first: when any of them already
+    // forbids pruning (null partitions on either side, unsafe
+    // source dir values), the full rewrite follows and NO scan
+    // of the prior entries is needed at all
+    val structuralSafe = !sourceHasNull && !priorHasNull &&
+      sourceParts.forall(v => DirSafe.matches(v))
+    // ONE column-pruned (key, partition) pass over the prior
+    // partitioned entries serves BOTH pruning inputs: which
+    // partitions hold matched keys (left join marker), and the
+    // full discovered partition-value set for the round-trip
+    // guard below — previously two separate jobs per merge.
+    // partitionLocalKeys skips the scan only when every source
+    // partition value provably survives discovery's
+    // parse-then-print — see the scaladoc's stale-duplicate
+    // scenario for why a reprinting value must keep the scan
+    // (and with it the roundTrips guard)
+    val plkSafe = partitionLocalKeys &&
+      sourceParts.forall(discoveryStable)
+    // every partitioned prior entry already sits in a source
+    // partition: all of them rewrite whatever the scan finds (see
+    // the scaladoc), so the scan cannot change the commit
+    val scanMoot = partedPrior.forall(partOf(_).exists(sourceParts))
+    // the prior entries are read only here
+    val partScan: Option[Array[(String, Boolean)]] =
+      if (plkSafe || !structuralSafe || scanMoot) None
+      else Some(described(spark, "AtomicTable key scan") {
+        readEntries(spark, root, partedPrior)
+          .join(source.select(col(key)).distinct()
+            .withColumn("__m", lit(1)), Seq(key), "left")
+          .groupBy(col(partitionCol)).agg(max(col("__m")).as("__m"))
+          .collect()
+      }.filterNot(_.isNullAt(0))
+        .map(r => (String.valueOf(r.get(0)), !r.isNullAt(1))))
+    val matchedParts: Set[String] =
+      partScan.map(_.collect { case (v, true) => v }.toSet)
+        .getOrElse(Set.empty)
+    val affected = sourceParts ++ matchedParts
+    // round-trip guard: matchedParts comes from partition
+    // DISCOVERY, whose inferred type can reprint a dir value
+    // differently (p=00123 discovers as int 123) — the affected
+    // test below compares against manifest DIR strings, so a
+    // non-round-tripping value would leave the matched entry in
+    // `untouched` and the old row would survive the upsert as a
+    // duplicate key. Pruning is safe only when discovery is the
+    // IDENTITY on this table's dir values: discovery is
+    // parse-then-print (idempotent), so discovered-set ==
+    // dir-set forces every dir value to be a fixed point (set
+    // equality alone rules out both reprints and two dirs
+    // collapsing to one discovered value). Otherwise fall back
+    // to the always-correct full rewrite, which also
+    // re-canonicalizes the offending values. Free here: the
+    // discovered set rides the same partScan pass.
+    val roundTrips = partScan.forall(_.map(_._1).toSet == priorDirVals)
+    val pruneSafe = structuralSafe &&
+      affected.forall(v => DirSafe.matches(v)) && roundTrips
+    if (!pruneSafe) (Seq.empty[String], prior)
+    else prior.partition(e => partOf(e).exists(pv => !affected.contains(pv)))
+  }
+
+  /** [[mergePartitioned]] for a batch small enough to stage first
+    * (a streamed Gold micro-batch, [[Gold.mergeIncremental]]): `df`
+    * is written ONCE, as this table's own partitioned staged files
+    * with zone maps on `statsCol` and a [[KeyFilter]] on `key` per
+    * file, all from the one aggregation job [[stage]] runs anyway.
+    * The source partitions are the staged entries' `p=` values, so no
+    * distinct job runs. Then, inside the commit loop, against the
+    * head it is about to replace:
+    *  - APPEND path: every live entry has a filter on `key` and each
+    *    rules out every staged key. No staged key can be in the
+    *    table (a filter has no false negatives), so the anti-join of
+    *    a merge would keep every prior row: the merge's result IS
+    *    head ++ staged. That is published, and no prior file is read
+    *    or rewritten.
+    *  - MERGE path, otherwise (a replayed key, an entry without a
+    *    filter from an older writer or a [[compact]], a false
+    *    positive): [[mergePartitioned]]'s pruning with the staged
+    *    files as the source; the prior entries of the affected
+    *    partitions are rewritten without the staged keys (with
+    *    filters, so the next disjoint batch appends again), and the
+    *    staged files join the snapshot as they are — the same rows as
+    *    rewriting prior ∪ batch, with the batch written once.
+    * A lost commit race re-runs the check against the new head; a
+    * lost attempt's rewrite is deleted, so no staged dir is left that
+    * no manifest names. Returns the committed version, or the head
+    * (-1 if none) for an empty batch.
+    */
+  private[graft] def mergeBatch(spark: SparkSession, df: DataFrame, root: String,
+      key: String, partitionCol: String, statsCol: Option[String]): Int = {
+    val batch = stage(df, root, Some(partitionCol), statsCol.toSeq, keyFilter = Some(key))
+    if (batch.entries.isEmpty) return latestVersion(root).getOrElse(-1)
+    val dirVals = batch.entries.flatMap(partOf).toSet
+    lazy val source = readEntries(spark, root, batch.entries)
+    var rewrite: Option[Staged] = None
+    commit(root) { head =>
+      rewrite.foreach(dropStaged(root, _))
+      rewrite = None
+      val prior = headFiles(root, head)
+      if (batch.keyHashes.exists(keysRuledOut(root, prior, key, _)))
+        Right(prior ++ batch.entries)
+      else {
+        val (untouched, toRewrite) = splitAffected(spark, root, prior, source, key,
+          partitionCol, dirVals - NullPartDir, dirVals(NullPartDir), partitionLocalKeys = false)
+        if (toRewrite.nonEmpty)
+          rewrite = Some(described(spark, "AtomicTable rewrite") {
+            stage(readEntries(spark, root, toRewrite)
+              .join(source.select(col(key)), Seq(key), "left_anti"),
+              root, Some(partitionCol), statsCol.toSeq, Some(key), "rewrite")
+          })
+        Right(untouched ++ rewrite.fold(Seq.empty[String])(_.entries) ++ batch.entries)
+      }
+    }
+  }
+
+  /** True when every entry's [[KeyFilter]] on `key` rules out every
+    * hash; an entry without one (or with a filter on another column)
+    * might hold any key.
+    */
+  private def keysRuledOut(root: String, entries: Seq[String], key: String,
+      hashes: Array[Long]): Boolean =
+    entries.forall(e => KeyFilter.read(KeyFilter.sidecar(Paths.get(root, pathOf(e))))
+      .exists(f => f.column == key && !hashes.exists(f.mightContain)))
 
   /** Bound comparison under the ordering the stats were captured with
     * (the `zs=` ord tag): a numeric-looking STRING column has lexicographic
@@ -785,14 +983,16 @@ object AtomicTable {
           }
         }
       } finally walk.close()
-      // second pass, DEEPEST-FIRST: Hadoop sidecars and emptied dirs.
-      // The part-file pass above leaves .part-*.parquet.crc, _SUCCESS
-      // (+ its .crc), and the emptied _staged/<uuid> dirs behind — one
-      // orphan dir plus sidecars per expired commit, forever, which
-      // defeats vacuum's own purpose of bounding table-root growth. A
-      // .X.crc dies only once X itself is gone (kept data keeps its
-      // checksum); _SUCCESS dies only in a dir with no parquet left;
-      // both behind the same age gate as the data. Empty dirs then
+      // second pass, DEEPEST-FIRST: sidecars and emptied dirs. The
+      // part-file pass above leaves .part-*.parquet.crc and .bloom,
+      // _SUCCESS (+ its .crc), the _schema.json record and the emptied
+      // _staged/<uuid> dirs behind — one orphan dir plus sidecars per
+      // expired commit, forever, which defeats vacuum's own purpose of
+      // bounding table-root growth. A .X.crc or .X.bloom dies only once
+      // X itself is gone (kept data keeps its checksum and filter);
+      // _SUCCESS dies only in a dir with no parquet left, a schema
+      // record only once no parquet is left anywhere under its dir;
+      // all behind the same age gate as the data. Empty dirs then
       // unlink bottom-up (deepest-first ordering makes parents empty
       // by the time they are visited).
       val walk2 = Files.walk(stagedRoot)
@@ -810,12 +1010,19 @@ object AtomicTable {
               }
             } else {
               val aged = Files.getLastModifiedTime(f).toMillis < cutoff
-              val orphanCrc = n.startsWith(".") && n.endsWith(".crc") &&
-                !Files.exists(f.resolveSibling(n.stripPrefix(".").stripSuffix(".crc")))
+              val orphanSidecar = n.startsWith(".") &&
+                Seq(".crc", ".bloom").find(n.endsWith).exists(ext =>
+                  !Files.exists(f.resolveSibling(n.stripPrefix(".").stripSuffix(ext))))
               val orphanSuccess = n == "_SUCCESS" &&
                 listDir(f.getParent)(_.forall(p =>
                   !p.getFileName.toString.endsWith(".parquet")))
-              if (aged && (orphanCrc || orphanSuccess))
+              // a schema record serves every partition dir below it
+              val orphanSchema = n == SchemaRecord && {
+                val below = Files.walk(f.getParent)
+                try below.noneMatch(_.getFileName.toString.endsWith(".parquet"))
+                finally below.close()
+              }
+              if (aged && (orphanSidecar || orphanSuccess || orphanSchema))
                 Files.deleteIfExists(f): Unit
             }
           }
@@ -921,7 +1128,7 @@ object AtomicTable {
     val snapshot = readVersion(spark, root, v)
     val laidOut = partitionCol.fold(snapshot.repartition(targetFiles))(pc =>
       snapshot.repartition(targetFiles, col(pc)))
-    val staged = stage(laidOut, root, partitionCol, statsCol.toSeq)
+    val staged = stage(laidOut, root, partitionCol, statsCol.toSeq).entries
     if (tryPublish(root, v + 1, staged)) v + 1 else -1
   }
 
@@ -1025,7 +1232,7 @@ object AtomicTable {
       .repartitionByRange(targetFiles, col("__z"))
       .sortWithinPartitions(col("__z"))
       .drop("__z")
-    val staged = stage(rewritten, root, None, cols)
+    val staged = stage(rewritten, root, None, cols).entries
     if (tryPublish(root, v + 1, staged)) v + 1 else -1
   }
 
@@ -1081,12 +1288,12 @@ object AtomicTable {
       groupCol: String, groups: DataFrame)(noop: => Boolean): Int =
     commit(root) {
       case None =>
-        val staged = stage(df, root, None, Nil)
+        val staged = stage(df, root, None, Nil).entries
         if (stagedRowless(spark, root, staged)) Left(-1) else Right(staged)
       case Some(v) =>
         if (noop) Left(v)
         else Right(stage(readVersion(spark, root, v)
           .join(groups, Seq(groupCol), "left_anti")
-          .unionByName(df, allowMissingColumns = true), root, None, Nil))
+          .unionByName(df, allowMissingColumns = true), root, None, Nil).entries)
     }
 }

@@ -154,15 +154,22 @@ object Gold {
 
   /** K5 as a transactional MERGE: watermark-filter + in-batch dedup
     * (same semantics as [[incrementalRows]]), then publish via
-    * [[AtomicTable.mergePartitioned]] on `transaction_id` — the
+    * [[AtomicTable.mergeBatch]] on `transaction_id` — the
     * `unique_key` the reference declares but never enforces
     * (`fct_purchases.sql:5-7`) becomes a real upsert guarantee with an
     * atomic snapshot commit:
     * re-running a batch (retry, backfill, crash replay) replaces
     * matched facts instead of duplicating them, and readers only ever
-    * see complete snapshots. The deduped batch is evaluated once,
-    * into a staged parquet dir the merge reads and drops. Returns the
-    * committed version.
+    * see complete snapshots.
+    *
+    * The deduped batch is evaluated once, into the table's own staged
+    * files with a per-file key Bloom filter. When every live file's
+    * filter rules out every batch key (new purchases, the steady
+    * stream), the batch commits as an append and no prior file is
+    * read: with no key in common, the upsert's anti-join would keep
+    * every prior row, so the append IS the merge. Otherwise (a
+    * replay, a file without a filter, a false positive) it takes the
+    * partition-pruned merge. Returns the committed version.
     */
   def mergeIncremental(spark: SparkSession, source: DataFrame,
       tableRoot: String): Int = {
@@ -189,26 +196,16 @@ object Gold {
           case None => source
         }
       }
-    // ONE evaluation of the batch: mergePartitioned reads its source
-    // several times (partition distinct, key distinct, rewrite), and
-    // each read of a lazy frame would rerun the source scan, the
-    // watermark filter and the dedup window. Staging writes the
-    // deduped rows once; every later read is of that small parquet
-    // dir, which is deleted when the merge returns.
-    //
     // An empty batch (idle trigger, fully-late data) commits nothing:
-    // mergePartitioned's empty-source guard returns
-    // latestVersion.getOrElse(-1).
+    // mergeBatch returns latestVersion.getOrElse(-1).
     //
     // Partition-pruned: an incremental batch touches a handful of
-    // purchase dates — only those partitions rewrite; the rest of the
-    // fact table's files carry over untouched. Stats on the ingestion
-    // stamp keep the NEXT run's watermark manifest-served.
-    graft.Staging.checkpointScoped(firstWriterWins(fresh), "gold-batch") { batch =>
-      AtomicTable.mergePartitioned(spark, batch, tableRoot,
-        "transaction_id", "purchase_date",
-        statsCol = Some("ingestion_timestamp"))
-    }
+    // purchase dates — only those partitions rewrite on the merge
+    // path; the rest of the fact table's files carry over untouched.
+    // Stats on the ingestion stamp keep the NEXT run's watermark
+    // manifest-served.
+    AtomicTable.mergeBatch(spark, firstWriterWins(fresh), tableRoot,
+      "transaction_id", "purchase_date", statsCol = Some("ingestion_timestamp"))
   }
 
   /** Incremental append with HONEST unique_key semantics. The

@@ -1,0 +1,120 @@
+package graft.gold
+
+import java.io.{DataInputStream, DataOutputStream}
+import java.nio.file.{Files, Path}
+import scala.util.control.NonFatal
+
+/** Bloom filter over one data file's key values, kept as a sidecar
+  * beside the file (`.<file>.bloom`), never inline in the manifest
+  * that every commit rewrites. [[AtomicTable.mergeBatch]] reads the
+  * live files' filters to decide whether a staged batch can commit as
+  * a plain append: when every filter rules out every batch key, no
+  * batch key can already be in the table.
+  *
+  * Built and probed on the driver only, from the 64-bit `xxhash64`
+  * values of the keys (the stager's aggregation job collects them), so
+  * the filter adds no Spark job. Bit i of a key with hash h is
+  * (h + i·h2) mod m with h2 = fmix64(h) | 1 (Kirsch–Mitzenmacher double
+  * hashing, as in [[graft.functions.BloomSketch]]); m is a power of
+  * two, so the odd h2 keeps the k bits distinct.
+  *
+  * Sizing is fixed, not a setting: 32-64 bits per distinct key (32·n
+  * rounded up to a power of two) and k = 22 give a false-positive
+  * rate of at most about 2·10⁻⁷ per probe, so a batch of 10³ keys
+  * probed against 35 live files falls to the merge path by chance
+  * about once in 140 batches. A false positive only costs that merge;
+  * there are no false negatives.
+  */
+private[graft] final case class KeyFilter(column: String, words: Array[Long]) {
+  private val mask = words.length.toLong * 64 - 1
+
+  def mightContain(hash: Long): Boolean = {
+    val h2 = KeyFilter.second(hash)
+    var i = 0
+    var hit = true
+    while (hit && i < KeyFilter.NumHashes) {
+      val idx = KeyFilter.bit(hash, h2, i, mask)
+      hit = (words((idx >>> 6).toInt) & (1L << (idx & 63))) != 0
+      i += 1
+    }
+    hit
+  }
+}
+
+private[graft] object KeyFilter {
+  val NumHashes = 22
+  private val BitsPerKey = 32
+  /** A file with more keys gets no filter (its sidecar would cost
+    * every later batch a read of up to 512 KB); its batch and every
+    * batch it stays live for take the merge path.
+    */
+  val MaxKeys: Int = 1 << 17
+  private val Magic = 0x474b4631 // "GKF1"
+
+  /** The second hash of the pair: murmur3's 64-bit finalizer of the
+    * first, forced odd.
+    */
+  private def second(h: Long): Long = {
+    var x = h
+    x ^= x >>> 33
+    x *= 0xff51afd7ed558ccdL
+    x ^= x >>> 33
+    x *= 0xc4ceb9fe1a85ec53L
+    (x ^ (x >>> 33)) | 1L
+  }
+
+  /** Bit i of a key: the ONE formula [[build]] sets and
+    * [[KeyFilter.mightContain]] tests, so the two cannot disagree (a
+    * disagreement would be a false negative).
+    */
+  private def bit(h: Long, h2: Long, i: Int, mask: Long): Long = (h + i * h2) & mask
+
+  def build(column: String, hashes: Seq[Long]): KeyFilter = {
+    val distinct = hashes.distinct
+    val want = math.max(64, distinct.size * BitsPerKey)
+    val bits = if (Integer.bitCount(want) == 1) want else Integer.highestOneBit(want) << 1
+    val words = new Array[Long](bits / 64)
+    val mask = bits.toLong - 1
+    distinct.foreach { h =>
+      val h2 = second(h)
+      var i = 0
+      while (i < NumHashes) {
+        val idx = bit(h, h2, i, mask)
+        words((idx >>> 6).toInt) |= 1L << (idx & 63)
+        i += 1
+      }
+    }
+    KeyFilter(column, words)
+  }
+
+  /** The sidecar path of a data file. */
+  def sidecar(data: Path): Path = data.resolveSibling(s".${data.getFileName}.bloom")
+
+  def write(path: Path, f: KeyFilter): Unit = {
+    val out = new DataOutputStream(new java.io.BufferedOutputStream(Files.newOutputStream(path)))
+    try {
+      out.writeInt(Magic)
+      out.writeUTF(f.column)
+      out.writeInt(f.words.length)
+      f.words.foreach(out.writeLong)
+    } finally out.close()
+  }
+
+  /** The filter at `path`; None when it is missing or unreadable, which
+    * the caller treats as "might contain anything".
+    */
+  def read(path: Path): Option[KeyFilter] =
+    if (!Files.isRegularFile(path)) None
+    else try {
+      val in = new DataInputStream(new java.io.BufferedInputStream(Files.newInputStream(path)))
+      try {
+        if (in.readInt() != Magic) None
+        else {
+          val column = in.readUTF()
+          val n = in.readInt()
+          if (n < 1 || Integer.bitCount(n) != 1) None
+          else Some(KeyFilter(column, Array.fill(n)(in.readLong())))
+        }
+      } finally in.close()
+    } catch { case NonFatal(_) => None }
+}

@@ -19,13 +19,17 @@ object StreamingGold {
 
   /** Streaming → Gold as ATOMIC SNAPSHOT COMMITS: each micro-batch
     * publishes through [[Gold.mergeIncremental]] →
-    * [[graft.gold.AtomicTable.mergePartitioned]] on the unique key.
+    * [[graft.gold.AtomicTable.mergeBatch]] on the unique key.
     * The batch's source plan (file scan, JSON parse, watermark filter,
-    * dedup window) runs once: mergeIncremental stages its deduped rows
-    * and the merge reads the staged copy. When the batch's purchase
-    * dates cover every date the table holds (a feed still inside its
-    * first day), the merge also skips the prior-snapshot key scan,
-    * which could not change that commit. Under failure:
+    * dedup window) runs once, into the table's own staged files, each
+    * with a Bloom filter on `transaction_id`. A batch of new purchases
+    * (the steady state) commits as an APPEND: every live file's
+    * filter rules out every batch key, so the upsert could not drop
+    * a prior row, and no prior file is read or rewritten. A batch
+    * that may repeat a key (a replayed file, a restart that re-runs
+    * its last batch, a false positive) takes the partition-pruned
+    * MERGE, whose result the append equals whenever no key repeats.
+    * Under failure:
     *  - a crash mid-batch leaves no torn table — readers only ever
     *    see the last committed manifest, never half a batch;
     *  - foreachBatch's at-least-once replay CONVERGES: re-merging a

@@ -735,4 +735,175 @@ class AtomicTableSpec extends SparkSpec {
     // malformed names refuse
     intercept[IllegalArgumentException](AtomicTable.tag(root, "../escape", 2))
   }
+
+  // ── mergeBatch: append path, merge path, recorded schemas ───────────
+
+  private def batchRows(t: (String, String, String)*) =
+    t.toSeq.map { case (k, v, d) => (k, v, java.sql.Date.valueOf(d)) }.toDF("k", "v", "pd")
+  private def mergeBatch(root: String, df: org.apache.spark.sql.DataFrame) =
+    AtomicTable.mergeBatch(spark, df, root, "k", "pd", None)
+  private def entryPath(root: String, e: String) =
+    java.nio.file.Paths.get(root, e.split("\t")(0))
+  private def keyValues(root: String) =
+    AtomicTable.read(spark, root).select("k", "v").as[(String, String)].collect().toSeq
+  /** v's manifest keeps every entry of v-1: an append */
+  private def appended(root: String, v: Int) =
+    AtomicTable.files(root, v - 1).forall(AtomicTable.files(root, v).contains)
+  private def hasFilter(root: String, e: String) =
+    java.nio.file.Files.exists(graft.gold.KeyFilter.sidecar(entryPath(root, e)))
+  private def walkPaths(root: String, dir: String): Seq[java.nio.file.Path] = {
+    val d = java.nio.file.Paths.get(root, dir)
+    if (!java.nio.file.Files.exists(d)) Nil
+    else {
+      val w = java.nio.file.Files.walk(d)
+      try w.iterator().asScala.toList finally w.close()
+    }
+  }
+
+  test("mergeBatch: a key-disjoint batch commits as an append, prior files untouched") {
+    val root = tmpDir("batch-append")
+    val v0 = mergeBatch(root, batchRows(("a", "1", "2024-01-01"), ("b", "1", "2024-01-02")))
+    val prior = AtomicTable.files(root, v0)
+    assert(prior.forall(hasFilter(root, _)), prior)
+    val bytes = prior.map(e => java.nio.file.Files.readAllBytes(entryPath(root, e)).toSeq)
+    val batch = batchRows(("c", "2", "2024-01-01"), ("d", "2", "2024-01-03"))
+    val v1 = mergeBatch(root, batch)
+    assert(v1 === v0 + 1)
+    assert(appended(root, v1))
+    assert(prior.map(e => java.nio.file.Files.readAllBytes(entryPath(root, e)).toSeq) === bytes)
+    assert(AtomicTable.appendedBetween(spark, root, v0, v1).select("k", "v", "pd")
+      .as[(String, String, java.sql.Date)].collect().toSet ===
+      batch.as[(String, String, java.sql.Date)].collect().toSet)
+    assert(keyValues(root).sorted === Seq("a" -> "1", "b" -> "1", "c" -> "2", "d" -> "2"))
+  }
+
+  test("mergeBatch: an existing key takes the merge path, the new row wins, then appends resume") {
+    val root = tmpDir("batch-merge")
+    mergeBatch(root, batchRows(("a", "1", "2024-01-01"), ("b", "1", "2024-01-02"),
+      ("c", "1", "2024-01-03")))
+    val v1 = mergeBatch(root, batchRows(("d", "2", "2024-01-01")))
+    assert(appended(root, v1))
+    // b is updated in place, a moves from 01-01 to 01-03, e is new
+    val v2 = mergeBatch(root, batchRows(("b", "3", "2024-01-02"), ("a", "3", "2024-01-03"),
+      ("e", "3", "2024-01-02")))
+    val want = Seq("a" -> "3", "b" -> "3", "c" -> "1", "d" -> "2", "e" -> "3")
+    assert(keyValues(root).sorted === want)
+    assert(!appended(root, v2))
+    intercept[IllegalStateException](AtomicTable.appendedBetween(spark, root, v1, v2))
+    // the rewritten files carry filters, so a disjoint batch appends again
+    assert(AtomicTable.files(root, v2).forall(hasFilter(root, _)))
+    val v3 = mergeBatch(root, batchRows(("f", "4", "2024-01-02")))
+    assert(appended(root, v3))
+    assert(keyValues(root).sorted === want :+ ("f" -> "4"))
+  }
+
+  test("mergeBatch: files without filters or schema records take the merge path, same rows") {
+    val root = tmpDir("batch-legacy")
+    AtomicTable.appendPartitioned(spark,
+      batchRows(("a", "1", "2024-01-01"), ("b", "1", "2024-01-02")), root, "pd")
+    walkPaths(root, "_staged").filter(_.getFileName.toString == "_schema.json")
+      .foreach(java.nio.file.Files.delete)
+    val v0 = AtomicTable.latestVersion(root).get
+    assert(!AtomicTable.files(root, v0).exists(hasFilter(root, _)))
+    val v1 = mergeBatch(root, batchRows(("c", "2", "2024-01-01"), ("b", "2", "2024-01-02")))
+    assert(!appended(root, v1))
+    assert(keyValues(root).sorted === Seq("a" -> "1", "b" -> "2", "c" -> "2"))
+    val v2 = mergeBatch(root, batchRows(("d", "3", "2024-01-02")))
+    assert(appended(root, v2))
+    assert(keyValues(root).sorted === Seq("a" -> "1", "b" -> "2", "c" -> "2", "d" -> "3"))
+  }
+
+  test("mergeBatch: a false positive (a filter with every bit set) takes the merge path, same rows") {
+    val root = tmpDir("batch-fp")
+    val v0 = mergeBatch(root, batchRows(("a", "1", "2024-01-01"), ("b", "1", "2024-01-02")))
+    val e = AtomicTable.files(root, v0).find(_.contains("pd=2024-01-02")).get
+    val p = graft.gold.KeyFilter.sidecar(entryPath(root, e))
+    val f = graft.gold.KeyFilter.read(p).get
+    graft.gold.KeyFilter.write(p, f.copy(words = Array.fill(f.words.length)(-1L)))
+    val v1 = mergeBatch(root, batchRows(("c", "2", "2024-01-02"), ("d", "2", "2024-01-01")))
+    assert(!appended(root, v1))
+    assert(keyValues(root).sorted === Seq("a" -> "1", "b" -> "1", "c" -> "2", "d" -> "2"))
+  }
+
+  test("recorded staged-dir schemas read the same as footer inference") {
+    // a non-nullable input (range ids, literals), an add-column commit
+    // in a second dir, and both partitioned and plain entries
+    def check(root: String): Unit = {
+      val records = walkPaths(root, "_staged")
+        .filter(_.getFileName.toString == "_schema.json")
+      assert(records.size === 2)
+      val recorded = AtomicTable.read(spark, root)
+      val (schema, rows) = (recorded.schema, recorded.collect().toSet)
+      records.foreach(java.nio.file.Files.delete)
+      val inferred = AtomicTable.read(spark, root)
+      assert(schema === inferred.schema)
+      assert(rows === inferred.collect().toSet)
+      assert(rows.size === 6)
+    }
+    val base = spark.range(4).select(col("id").as("k"), lit("x").as("v"),
+      (col("id") % 2).cast("string").as("p"))
+    assert(!base.schema("k").nullable)
+    val wider = spark.range(4, 6).select(col("id").as("k"), lit("y").as("v"),
+      lit(1.5).as("extra"), lit("1").as("p"))
+    val parted = tmpDir("schema-parted")
+    AtomicTable.appendPartitioned(spark, base, parted, "p")
+    AtomicTable.appendPartitioned(spark, wider, parted, "p")
+    check(parted)
+    val plain = tmpDir("schema-plain")
+    AtomicTable.append(spark, base, plain)
+    AtomicTable.append(spark, wider, plain)
+    check(plain)
+  }
+
+  test("racing mergeBatch writers: appends and merges interleave, every key once, no stray dir") {
+    val root = tmpDir("batch-race")
+    mergeBatch(root, batchRows(("k0", "base", "2024-01-01"), ("k1", "base", "2024-01-02")))
+    // writers 0 and 1 update a base key (merge path), 2 and 3 only
+    // insert (append path unless they lose to a merge)
+    def keysOf(w: Int) = (if (w < 2) Seq(s"k$w") else Nil) ++ Seq(s"n$w-a", s"n$w-b")
+    val writes = (0 until 4).map(w => batchRows(
+      keysOf(w).map(k => (k, s"w$w", s"2024-01-0${1 + w % 2}")): _*))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    val latch = new java.util.concurrent.CountDownLatch(1)
+    val futures = writes.map(df => pool.submit(new java.util.concurrent.Callable[Int] {
+      def call(): Int = { latch.await(); mergeBatch(root, df) }
+    }))
+    latch.countDown()
+    val versions = futures.map(_.get())
+    pool.shutdown()
+    assert(versions.sorted === (1 to 4), versions)
+    val got = keyValues(root)
+    assert(got.size === 2 + 2 * 4, got)
+    assert(got.toMap === (0 until 4).flatMap(w => keysOf(w).map(_ -> s"w$w")).toMap)
+    // a lost attempt's rewrite is dropped: every staged dir is named
+    // by some manifest
+    val named = (0 to 4).flatMap(AtomicTable.files(root, _))
+      .map(_.split("/").take(2).mkString("/")).toSet
+    val dirs = new java.io.File(root, "_staged").list().map(d => s"_staged/$d").toSet
+    assert(dirs === named)
+  }
+
+  test("vacuum reaps key filters and schema records with their expired dirs; a merge batch leaves no stray dir") {
+    val root = tmpDir("batch-vac")
+    mergeBatch(root, batchRows(("a", "1", "2024-01-01"), ("b", "1", "2024-01-02")))
+    mergeBatch(root, batchRows(("c", "2", "2024-01-02")))
+    val v2 = mergeBatch(root, batchRows(("b", "3", "2024-01-02")))
+    assert(!appended(root, v2))
+    def stagedDirs = new java.io.File(root, "_staged").list().map(d => s"_staged/$d").toSet
+    def dirsOf(v: Int) = AtomicTable.files(root, v).map(_.split("/").take(2).mkString("/")).toSet
+    // the merge path wrote its batch and its rewrite, nothing else
+    assert(stagedDirs === (0 to v2).flatMap(dirsOf).toSet)
+    val before = keyValues(root).sorted
+    AtomicTable.vacuum(root, keepLast = 1, retentionMs = 0L)
+    assert(stagedDirs === dirsOf(v2))
+    val live = AtomicTable.files(root, v2).map(entryPath(root, _)).toSet
+    val left = walkPaths(root, "_staged").filter(java.nio.file.Files.isRegularFile(_))
+    left.map(_.getFileName.toString).filter(_.endsWith(".bloom")).foreach { n =>
+      assert(left.exists(p => live(p) && n == s".${p.getFileName}.bloom"), n)
+    }
+    assert(left.count(_.getFileName.toString == "_schema.json") === dirsOf(v2).size)
+    assert(live.forall(p => java.nio.file.Files.exists(graft.gold.KeyFilter.sidecar(p))))
+    assert(keyValues(root).sorted === before)
+    assert(appended(root, mergeBatch(root, batchRows(("d", "4", "2024-01-03")))))
+  }
 }

@@ -392,6 +392,58 @@ class StreamingGoldSpec extends SparkSpec {
     assert(commits === Seq(0L, 1L, 2L))
     holdsOnce(6)
   }
+
+  test("transactional fact: disjoint files append, a replayed file and a replayed batch merge; every event once") {
+    import graft.gold.AtomicTable
+    val gen = EventGenerator.generate(EventGenerator.defaultProducts, 200)
+    val files = gen.purchases.map(EventGenerator.toJson).grouped(50).toIndexedSeq
+    val base = tmpDir("stream-fact-append")
+    val in = Files.createDirectories(Paths.get(base, "in"))
+    val root = s"$base/fct"
+    val ckpt = s"$base/ckpt"
+    def drop(name: String, i: Int): Unit = {
+      val tmp = in.resolve(s".$name.tmp")
+      Files.write(tmp, files(i).mkString("\n").getBytes("UTF-8"))
+      Files.move(tmp, in.resolve(s"$name.json"), StandardCopyOption.ATOMIC_MOVE): Unit
+    }
+    // every run is a restart on the same checkpoint
+    def run(): Unit = StreamingGold.startTransactionalFact(
+      Silver.parsePurchases(StreamingSilver.Sources.fileJsonLines(spark, in.toString)),
+      root, ckpt, Trigger.AvailableNow()).awaitTermination()
+    def holdsOnce(n: Int): Unit = {
+      val ids = AtomicTable.read(spark, root).select("transaction_id").as[String].collect().toSeq
+      assert(ids.size === ids.distinct.size)
+      assert(ids.toSet === gen.purchases.take(n * 50).map(_.transaction_id).toSet)
+    }
+    // the head keeps every file of the version before it: an append
+    def appended: Boolean = {
+      val v = AtomicTable.latestVersion(root).get
+      AtomicTable.files(root, v - 1).forall(AtomicTable.files(root, v).contains)
+    }
+    drop("f0", 0)
+    run()
+    holdsOnce(1)
+    drop("f1", 1)
+    run()
+    holdsOnce(2)
+    assert(appended)
+    // the same events again under another name
+    drop("dup-f0", 0)
+    run()
+    holdsOnce(2)
+    assert(!appended)
+    drop("f2", 2)
+    run()
+    holdsOnce(3)
+    assert(appended)
+    // a lost commit-log entry: the restart replays that batch first
+    val last = new java.io.File(ckpt, "commits").list().filterNot(_.startsWith("."))
+      .map(_.toLong).max
+    Seq(s"$last", s".$last.crc").foreach(f => new java.io.File(s"$ckpt/commits/$f").delete(): Unit)
+    drop("f3", 3)
+    run()
+    holdsOnce(4)
+  }
 }
 
 class RestockSpec extends SparkSpec {
