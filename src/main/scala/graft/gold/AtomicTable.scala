@@ -1,6 +1,6 @@
 package graft.gold
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, NumericType, StructType}
 import java.nio.file.{Files, Paths}
@@ -724,35 +724,61 @@ object AtomicTable {
     *    rewriting prior ∪ batch, with the batch written once.
     * A lost commit race re-runs the check against the new head; a
     * lost attempt's rewrite is deleted, so no staged dir is left that
-    * no manifest names. Returns the committed version, or the head
-    * (-1 if none) for an empty batch.
+    * no manifest names.
+    *
+    * Returns the committed version (the head, -1 if none, for an
+    * empty batch) and the rows inserted: the staged rows minus the
+    * prior rows the rewrite dropped, so the batch's new keys when it
+    * holds each key once. Both counts are [[Observation]]s on the
+    * stage and rewrite writes; no job runs to count.
     */
   private[graft] def mergeBatch(spark: SparkSession, df: DataFrame, root: String,
-      key: String, partitionCol: String, statsCol: Option[String]): Int = {
-    val batch = stage(df, root, Some(partitionCol), statsCol.toSeq, keyFilter = Some(key))
-    if (batch.entries.isEmpty) return latestVersion(root).getOrElse(-1)
+      key: String, partitionCol: String, statsCol: Option[String]): BatchCommit = {
+    val staged = new Observation()
+    val batch = stage(counted(df, staged), root, Some(partitionCol), statsCol.toSeq,
+      keyFilter = Some(key))
+    if (batch.entries.isEmpty) return BatchCommit(latestVersion(root).getOrElse(-1), 0L)
     val dirVals = batch.entries.flatMap(partOf).toSet
     lazy val source = readEntries(spark, root, batch.entries)
     var rewrite: Option[Staged] = None
-    commit(root) { head =>
+    var dropped = 0L
+    val v = commit(root) { head =>
       rewrite.foreach(dropStaged(root, _))
       rewrite = None
+      dropped = 0L
       val prior = headFiles(root, head)
       if (batch.keyHashes.exists(keysRuledOut(root, prior, key, _)))
         Right(prior ++ batch.entries)
       else {
         val (untouched, toRewrite) = splitAffected(spark, root, prior, source, key,
           partitionCol, dirVals - NullPartDir, dirVals(NullPartDir), partitionLocalKeys = false)
-        if (toRewrite.nonEmpty)
+        if (toRewrite.nonEmpty) {
+          val (read, kept) = (new Observation(), new Observation())
           rewrite = Some(described(spark, "AtomicTable rewrite") {
-            stage(readEntries(spark, root, toRewrite)
-              .join(source.select(col(key)), Seq(key), "left_anti"),
+            stage(counted(counted(readEntries(spark, root, toRewrite), read)
+              .join(source.select(col(key)), Seq(key), "left_anti"), kept),
               root, Some(partitionCol), statsCol.toSeq, Some(key), "rewrite")
           })
+          dropped = rowsOf(read) - rowsOf(kept)
+        }
         Right(untouched ++ rewrite.fold(Seq.empty[String])(_.entries) ++ batch.entries)
       }
     }
+    BatchCommit(v, rowsOf(staged) - dropped)
   }
+
+  /** What [[mergeBatch]] committed: the version and the rows it
+    * inserted rather than replaced. */
+  final case class BatchCommit(version: Int, inserted: Long)
+
+  /** `df` with a row count riding whatever job evaluates it. */
+  private def counted(df: DataFrame, o: Observation): DataFrame =
+    df.observe(o, count(lit(1)).as("rows"))
+
+  /** The count a [[counted]] frame's job saw; a plan that ran no task
+    * (an empty input) reports no metrics, which means zero rows. */
+  private def rowsOf(o: Observation): Long =
+    o.get.getOrElse("rows", 0L).asInstanceOf[Long]
 
   /** True when every entry's [[KeyFilter]] on `key` rules out every
     * hash; an entry without one (or with a filter on another column)

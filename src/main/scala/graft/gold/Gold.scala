@@ -1,20 +1,18 @@
 package graft.gold
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Gold-layer semantics: Silver→Gold promotion
+/** Gold-layer semantics: atomic catalog tables
   * (`pipeline/spark/delta_to_iceberg.py:23-52`) and the fct_purchases
   * incremental fact build
-  * (`pipeline/dbt/.../models/gold/fct_purchases.sql`).
+  * (`pipeline/dbt/.../models/gold/fct_purchases.sql`). The fact table
+  * is one [[AtomicTable]] keyed on `transaction_id`, and
+  * [[mergeIncremental]] is its one writer: the batch pipeline's fact
+  * step and the streaming micro-batch both go through it.
   */
 object Gold {
-
-  /** Silver → Gold promotion: stamp the partition key
-    * (`delta_to_iceberg.py:33`). */
-  def promote(silver: DataFrame): DataFrame =
-    silver.withColumn("purchase_date", to_date(col("transaction_time")))
 
   /** Create-or-append a partitioned catalog table — the
     * `tableExists`-guarded Iceberg write of `delta_to_iceberg.py:36-52`,
@@ -106,43 +104,24 @@ object Gold {
         col("product_id"), col("purchase_date"), col("final_amount"),
         col("is_member"), col("ingestion_timestamp"))
 
-  /** Schema-explicit fact read (layout = [[graft.model.FactPurchase]]
-    * with purchase_date as the partition dir): no footer-inference
-    * I/O, and a legitimately-empty fact table (first run appended
-    * zero rows — only _SUCCESS on disk) reads as an empty frame
-    * instead of UNABLE_TO_INFER_SCHEMA.
+  /** The fact table's latest snapshot in [[graft.model.FactPurchase]]
+    * column order, or an empty frame with that schema when no version
+    * is committed yet (a first run whose batch was empty). A plain
+    * parquet dir at `path` (an older, non-transactional fact write) is
+    * not read: without a manifest the first [[mergeIncremental]]
+    * rebuilds the table from Silver, which holds the full history.
     */
-  def readFact(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .schema(org.apache.spark.sql.Encoders.product[graft.model.FactPurchase].schema)
-      .parquet(path)
+  def readFact(spark: SparkSession, path: String): DataFrame = {
+    val schema = graft.model.Schemas.factPurchase
+    if (AtomicTable.latestVersion(path).isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else AtomicTable.read(spark, path).select(schema.fieldNames.toIndexedSeq.map(col): _*)
+  }
 
-  /** [[readFact]], or None when the path does not exist yet — the
-    * batch pipeline's "no target table on the first run" probe.
-    * Probes by ATTEMPTING the read, not java.nio Files.exists: the nio
-    * check consults the driver-local filesystem (always false for an
-    * HDFS/S3 path — dedup silently skipped, duplicates appended). The
-    * read is schema-explicit, so a dir with zero committed footers (a
-    * crash during the first batch, or a first run that appended zero
-    * rows leaving only _SUCCESS) reads as an EMPTY target, not None;
-    * ONLY "path missing" means "no table yet" — any other failure
-    * (transient storage fault, permissions, corrupt footer) must
-    * propagate and fail the caller, because running with target=None
-    * silently disables the watermark filter and the anti-join dedup
-    * and appends already-committed keys as permanent duplicates.
-    */
-  def readFactIfExists(spark: SparkSession, path: String): Option[DataFrame] =
-    try Some(readFact(spark, path))
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if Option(e.getCondition).exists(_.startsWith("PATH_NOT_FOUND")) =>
-        None
-    }
-
-  /** First-writer-wins in-batch dedup on the declared unique key —
-    * the ONE definition both incremental paths use: a tiebreak or
-    * watermark change applied to append-dedup must not silently
-    * diverge from merge-dedup (they must pick the same winners).
+  /** First-writer-wins dedup WITHIN a batch on the declared unique
+    * key (deterministic tiebreak: earliest ingestion stamp, then
+    * product and amount). Across batches the rule is the upsert's:
+    * the newer batch's row replaces the stored one.
     */
   private def firstWriterWins(df: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("transaction_id"))
@@ -152,15 +131,25 @@ object Gold {
       .filter(col("rn") === 1).drop("rn")
   }
 
-  /** K5 as a transactional MERGE: watermark-filter + in-batch dedup
-    * (same semantics as [[incrementalRows]]), then publish via
-    * [[AtomicTable.mergeBatch]] on `transaction_id` — the
-    * `unique_key` the reference declares but never enforces
-    * (`fct_purchases.sql:5-7`) becomes a real upsert guarantee with an
-    * atomic snapshot commit:
-    * re-running a batch (retry, backfill, crash replay) replaces
-    * matched facts instead of duplicating them, and readers only ever
-    * see complete snapshots.
+  /** K5 as a transactional MERGE, the fact table's one writer (the
+    * batch pipeline's fact step and every streamed micro-batch):
+    *  1. high-watermark filter on the table's max ingestion_timestamp
+    *     (`fct_purchases.sql:24-27`), read from the manifest's zone
+    *     maps. Inclusive (>=): rows sharing the boundary stamp (one
+    *     micro-batch's current_timestamp split across file-source
+    *     triggers) must survive, and the upsert absorbs the boundary
+    *     row already stored;
+    *  2. [[firstWriterWins]] within the batch;
+    *  3. publish via [[AtomicTable.mergeBatch]] on `transaction_id` —
+    *     the `unique_key` the reference declares but never enforces
+    *     (`fct_purchases.sql:5-7`, its ids collide by construction,
+    *     `producer.py:127,146`) becomes a real upsert guarantee with
+    *     an atomic snapshot commit: re-running a batch (retry,
+    *     backfill, crash replay) replaces matched facts instead of
+    *     duplicating them, a newer row for a stored id replaces it,
+    *     and readers only ever see complete snapshots. Files a killed
+    *     attempt staged but never committed are named by no manifest,
+    *     so no reader sees them.
     *
     * The deduped batch is evaluated once, into the table's own staged
     * files with a per-file key Bloom filter. When every live file's
@@ -169,10 +158,12 @@ object Gold {
     * read: with no key in common, the upsert's anti-join would keep
     * every prior row, so the append IS the merge. Otherwise (a
     * replay, a file without a filter, a false positive) it takes the
-    * partition-pruned merge. Returns the committed version.
+    * partition-pruned merge. Returns the committed version (-1 while
+    * nothing is committed) and the number of keys inserted, the
+    * batch's keys that were not in the table.
     */
   def mergeIncremental(spark: SparkSession, source: DataFrame,
-      tableRoot: String): Int = {
+      tableRoot: String): AtomicTable.BatchCommit = {
     val exists = AtomicTable.latestVersion(tableRoot).isDefined
     // high-watermark from manifest zone-map stats when available —
     // O(manifest) instead of scanning the fact table; falls back to
@@ -197,7 +188,7 @@ object Gold {
         }
       }
     // An empty batch (idle trigger, fully-late data) commits nothing:
-    // mergeBatch returns latestVersion.getOrElse(-1).
+    // mergeBatch returns the head (-1 if none) and 0 inserted.
     //
     // Partition-pruned: an incremental batch touches a handful of
     // purchase dates — only those partitions rewrite on the merge
@@ -206,43 +197,5 @@ object Gold {
     // manifest-served.
     AtomicTable.mergeBatch(spark, firstWriterWins(fresh), tableRoot,
       "transaction_id", "purchase_date", statsCol = Some("ingestion_timestamp"))
-  }
-
-  /** Incremental append with HONEST unique_key semantics. The
-    * reference declares `unique_key='transaction_id'` but its append
-    * strategy never enforces it (`fct_purchases.sql:5-7`), and its ids
-    * collide by construction (hash of a second-resolution timestamp,
-    * `producer.py:127,146`). Here:
-    *  1. high-watermark filter on the target's max ingestion_timestamp
-    *     (`fct_purchases.sql:24-27`) — computed as a scalar aggregate,
-    *     the same single-row exchange Catalyst plans for the SQL
-    *     scalar subquery;
-    *  2. first-writer-wins within the batch (row_number over the
-    *     unique key, deterministic tiebreak);
-    *  3. left-anti join against target keys — at scale this shuffles
-    *     only the (narrow) key column of the target.
-    * Returns the rows to append.
-    */
-  def incrementalRows(source: DataFrame, target: Option[DataFrame]): DataFrame = {
-    val fresh = target match {
-      case Some(t) =>
-        val wm = t.agg(max(col("ingestion_timestamp"))).head().getTimestamp(0)
-        // >= not >: rows legitimately SHARING the boundary stamp (one
-        // micro-batch's current_timestamp split across file-source
-        // triggers) must survive the watermark — the anti-join below
-        // removes true duplicates, so inclusive is strictly safe and
-        // strict would lose boundary rows forever (mergeIncremental
-        // uses the same inclusive bound)
-        if (wm == null) source
-        else source.filter(col("ingestion_timestamp") >= lit(wm))
-      case None => source
-    }
-    val deduped = firstWriterWins(fresh)
-    target match {
-      case Some(t) =>
-        deduped.join(t.select(col("transaction_id")), Seq("transaction_id"),
-          "left_anti")
-      case None => deduped
-    }
   }
 }

@@ -20,7 +20,6 @@ object Pipeline {
       lakeDir: String,
       nEvents: Int = 500,
       seed: Long = 42L,
-      factTable: String = "fct_purchases",
       policy: StepPolicy = StepPolicy(),
       /** Extra raw envelopes unioned into the generated feed — the
         * corrupt-producer injection point (tests/chaos): malformed
@@ -99,9 +98,14 @@ object Pipeline {
       anomalies: DataFrame)
 
   /** One full run: generate → parse (batch twin of the stream) →
-    * Silver parquet → fct incremental append → daily + anomaly. Safe
-    * to call repeatedly: the incremental step's watermark + anti-join
-    * make re-runs idempotent (second run appends zero).
+    * Silver parquet → fct incremental merge → daily + anomaly. The fact
+    * step is [[Gold.mergeIncremental]], the streaming path's writer:
+    * one atomic upsert on `transaction_id` into the AtomicTable at
+    * `<lake>/gold/fct_purchases`, so a re-run or a retried step
+    * converges (the second run inserts zero) and `factRowsAppended` is
+    * the number of keys the run inserted. A plain parquet fact dir
+    * from an older writer is not read; the first run rebuilds the
+    * table from Silver.
     */
   def run(spark: SparkSession, cfg: Config): Result = {
     import spark.implicits._
@@ -115,7 +119,7 @@ object Pipeline {
     // count) in a marker; a retrying attempt skips the committed write
     // and returns the recorded count. Residual window: a write that
     // commits but dies before its marker lands still duplicates on
-    // retry — the fact layer's key dedup absorbs Silver dups, DLQ dups
+    // retry — the fact layer's key upsert absorbs Silver dups, DLQ dups
     // are triage-only. Markers are tiny; one pair per run.
     val runId = java.util.UUID.randomUUID().toString
     val hadoopFs = new org.apache.hadoop.fs.Path(cfg.lakeDir)
@@ -198,8 +202,7 @@ object Pipeline {
         // DLQ rows and their count — not a count() pass plus a write
         // pass each re-parsing the feed. A healthy run leaves an EMPTY
         // footerless parquet dir here — consumers read it through the
-        // schema-explicit Silver.readQuarantine, like
-        // readSilver/readFact
+        // schema-explicit Silver.readQuarantine, like readSilver
         val nDlq = writeOnce(
             s"${cfg.lakeDir}/silver/quarantine/_runs/$runId.done") {
           val obsQ = new org.apache.spark.sql.Observation()
@@ -213,24 +216,10 @@ object Pipeline {
     }
     val silver = Silver.readSilver(spark, silverPath)
 
-    // promote → fact (incremental, honest dedup; idempotent ⇒ retryable)
+    // promote → fact: one atomic upsert, idempotent ⇒ retryable (a
+    // killed attempt's staged files are named by no manifest)
     val appended = sparkStep("fact_incremental") {
-      // attempt-the-read probe (see readFactIfExists: nio can't see
-      // object stores, and a dir holding only _SUCCESS — first run
-      // appended zero rows — must read as an EMPTY target, not None)
-      val target = Gold.readFactIfExists(spark, factPath)
-      val fct = Gold.fctPurchases(silver)
-      val toAppend = Gold.incrementalRows(fct, target)
-      // count rides the write job via observe() (the ingest-step
-      // pattern): a separate count() action would execute the whole
-      // incremental plan — silver scan, watermark aggregate, window
-      // dedup, anti-join — twice. Zero-task empty append → empty
-      // metrics → default 0, as in the ingest step.
-      val obsF = new org.apache.spark.sql.Observation()
-      toAppend.observe(obsF, count(lit(1)).as("n_rows"))
-        .write.mode(SaveMode.Append)
-        .partitionBy("purchase_date").parquet(factPath)
-      obsF.get.getOrElse("n_rows", 0L).asInstanceOf[Long]
+      Gold.mergeIncremental(spark, Gold.fctPurchases(silver), factPath).inserted
     }
 
     // analytics (+ CSV result sink, K6 of anomaly_detection.py:56-60)

@@ -4,9 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** CLI entry for the full local pipeline:
   * `runMain graft.pipeline.RunLocal [lakeDir] [nEvents]`.
-  * Generates events, ingests to Silver, builds the incremental fact,
-  * and prints daily sales + anomaly flags — the whole reference DAG in
-  * one process (SURVEY.md §3).
+  * Generates events, ingests to Silver, merges the incremental fact
+  * into its AtomicTable, and prints daily sales + anomaly flags — the
+  * whole reference DAG in one process (SURVEY.md §3). The second run
+  * re-merges the same events and inserts no key.
   */
 object RunLocal {
   def main(args: Array[String]): Unit = {

@@ -110,8 +110,8 @@ object StreamingSilver {
     * watermark horizon are dropped exactly once.
     *
     * `dropDuplicatesWithinWatermark`, not plain `dropDuplicates`: the
-    * key is `transaction_id` ALONE — the batch face
-    * ([[graft.gold.Gold.incrementalRows]]) windows on transaction_id,
+    * key is `transaction_id` ALONE — the fact writer
+    * ([[graft.gold.Gold.mergeIncremental]]) windows on transaction_id,
     * and a producer retry that re-emits an id with a regenerated
     * timestamp must still be a duplicate here. Plain dropDuplicates
     * would need the event-time column inside the key to bound its

@@ -261,12 +261,12 @@ class AtomicTableSpec extends SparkSpec {
     val facts = Seq.empty[(String, Long, Double, java.sql.Date, java.sql.Timestamp)]
       .toDF("transaction_id", "product_id", "final_amount", "purchase_date",
         "ingestion_timestamp")
-    assert(Gold.mergeIncremental(spark, facts, root) === -1)
+    assert(Gold.mergeIncremental(spark, facts, root).version === -1)
     val real = Seq(("t1", 7L, 9.99, java.sql.Date.valueOf("2024-01-01"),
       java.sql.Timestamp.valueOf("2024-01-01 10:00:00")))
       .toDF("transaction_id", "product_id", "final_amount", "purchase_date",
         "ingestion_timestamp")
-    assert(Gold.mergeIncremental(spark, real, root) === 0)
+    assert(Gold.mergeIncremental(spark, real, root).version === 0)
     assert(AtomicTable.read(spark, root).count() === 1)
   }
 
@@ -741,7 +741,7 @@ class AtomicTableSpec extends SparkSpec {
   private def batchRows(t: (String, String, String)*) =
     t.toSeq.map { case (k, v, d) => (k, v, java.sql.Date.valueOf(d)) }.toDF("k", "v", "pd")
   private def mergeBatch(root: String, df: org.apache.spark.sql.DataFrame) =
-    AtomicTable.mergeBatch(spark, df, root, "k", "pd", None)
+    AtomicTable.mergeBatch(spark, df, root, "k", "pd", None).version
   private def entryPath(root: String, e: String) =
     java.nio.file.Paths.get(root, e.split("\t")(0))
   private def keyValues(root: String) =

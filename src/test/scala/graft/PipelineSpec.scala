@@ -148,46 +148,71 @@ class GoldSpec extends SparkSpec {
     assert(row.getAs[java.sql.Date]("purchase_date").toString === "2025-06-01")
     assert(row.getAs[String]("transaction_id") === "1")
   }
+  /** transaction_id → product_id of the fact table's snapshot */
+  private def facts(root: String): Map[String, String] =
+    Gold.readFact(spark, root).select("transaction_id", "product_id")
+      .as[(String, String)].collect().toMap
+
   test("incremental: second run with identical source appends zero rows") {
+    val root = tmpDir("gold-rerun")
     val fct = Gold.fctPurchases(purchaseDf(
       Purchase(ts, "1", "CS01", 4.99, 1, false, 0.0, false, 0.0),
       Purchase(new Timestamp(ts.getTime + 1000), "2", "CS02", 5.99, 1, false, 0.0, false, 0.0)))
-    val first = Gold.incrementalRows(fct, None)
-    assert(first.count() === 2)
-    val second = Gold.incrementalRows(fct, Some(first))
-    assert(second.count() === 0)
+    assert(Gold.mergeIncremental(spark, fct, root).inserted === 2)
+    assert(Gold.readFact(spark, root).count() === 2)
+    assert(Gold.mergeIncremental(spark, fct, root).inserted === 0)
+    assert(Gold.readFact(spark, root).count() === 2)
   }
   test("unique_key honesty: same-second id collision → first writer wins") {
     // transaction_id collides by construction in the reference
     // (abs(hash(second-resolution str)), producer.py:127,146)
+    val root = tmpDir("gold-collide")
     val fct = Gold.fctPurchases(purchaseDf(
       Purchase(ts, "DUP", "CS01", 4.99, 1, false, 0.0, false, 0.0),
       Purchase(ts, "DUP", "CS02", 5.99, 2, false, 0.0, false, 0.0)))
-    val rows = Gold.incrementalRows(fct, None).collect()
-    assert(rows.length === 1)
-    assert(rows.head.getAs[String]("product_id") === "CS01") // deterministic tiebreak
+    assert(Gold.mergeIncremental(spark, fct, root).inserted === 1)
+    assert(facts(root) === Map("DUP" -> "CS01")) // deterministic tiebreak
   }
   test("watermark filter only admits rows newer than target max ingestion_timestamp") {
+    val root = tmpDir("gold-watermark")
     val older = Gold.fctPurchases(purchaseDf(
       Purchase(ts, "1", "CS01", 4.99, 1, false, 0.0, false, 0.0)))
+    // "0" predates the stored watermark: filtered out, never stored
     val newer = Gold.fctPurchases(purchaseDf(
+      Purchase(new Timestamp(ts.getTime - 5000), "0", "CS04", 7.99, 1, false, 0.0, false, 0.0),
       Purchase(ts, "1", "CS01", 4.99, 1, false, 0.0, false, 0.0),
       Purchase(new Timestamp(ts.getTime + 5000), "9", "CS03", 6.99, 1, false, 0.0, false, 0.0)))
-    val appended = Gold.incrementalRows(newer, Some(older)).collect()
-    assert(appended.map(_.getAs[String]("transaction_id")).toSeq === Seq("9"))
+    Gold.mergeIncremental(spark, older, root)
+    assert(Gold.mergeIncremental(spark, newer, root).inserted === 1)
+    assert(facts(root).keySet -- Set("1") === Set("9"))
   }
   test("watermark is inclusive: a NEW id sharing the boundary stamp is admitted, not lost") {
     // one micro-batch stamps all rows with the same current_timestamp;
     // a file source can deliver them across two triggers — the second
     // trigger's rows tie the watermark exactly and must still land
-    // (the anti-join, not the watermark, removes true duplicates)
+    // (the upsert, not the watermark, absorbs the stored boundary row)
+    val root = tmpDir("gold-boundary")
     val older = Gold.fctPurchases(purchaseDf(
       Purchase(ts, "1", "CS01", 4.99, 1, false, 0.0, false, 0.0)))
     val straggler = Gold.fctPurchases(purchaseDf(
       Purchase(ts, "1", "CS01", 4.99, 1, false, 0.0, false, 0.0),
       Purchase(ts, "2", "CS02", 5.99, 1, false, 0.0, false, 0.0)))
-    val appended = Gold.incrementalRows(straggler, Some(older)).collect()
-    assert(appended.map(_.getAs[String]("transaction_id")).toSeq === Seq("2"))
+    Gold.mergeIncremental(spark, older, root)
+    assert(Gold.mergeIncremental(spark, straggler, root).inserted === 1)
+    assert(facts(root).keySet -- Set("1") === Set("2"))
+  }
+  test("across runs the newer row for a stored id replaces it (upsert), inserting no key") {
+    val root = tmpDir("gold-upsert")
+    Gold.mergeIncremental(spark, Gold.fctPurchases(purchaseDf(
+      Purchase(ts, "1", "CS01", 4.99, 1, false, 0.0, false, 0.0))), root)
+    val later = Gold.fctPurchases(purchaseDf(
+      Purchase(new Timestamp(ts.getTime + 1000), "1", "CS02", 5.99, 3, false, 0.0, false, 0.0)))
+    assert(Gold.mergeIncremental(spark, later, root).inserted === 0)
+    val rows = Gold.readFact(spark, root).collect()
+    assert(rows.length === 1)
+    assert(rows.head.getAs[String]("transaction_id") === "1")
+    assert(rows.head.getAs[String]("product_id") === "CS02")
+    assert(rows.head.getAs[Double]("final_amount") === 5.99 * 3)
   }
 }
 
