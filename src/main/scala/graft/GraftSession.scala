@@ -75,6 +75,12 @@ object GraftSession {
       // touch, x30_q65 6.1s — the best sf0.1 measurement on record)
       // and the pinned-code footprint peaks at 131 MB of code cache
       // (diag code_cache_mb), far from any flushing regime.
+      // The cache key is (class loader, code text): the driver and the
+      // executor threads load through different class loaders, so in
+      // local mode every new body compiles twice, and a literal that
+      // changes per batch (a micro-batch timestamp, a watermark) makes
+      // every batch's bodies new — graft binds such values by
+      // reference (graft.functions.BoundValue) instead.
       .config("spark.sql.codegen.cache.maxEntries", "1000")
       // ObjectHashAggregate (every typed Aggregator: BoundedCollect's
       // LSH bucket collect, KMV/CMS/Bloom sketches) falls back to

@@ -262,7 +262,12 @@ object GraftFunctions {
         require(es.length == 2,
           s"graft_gram_hashes requires exactly 2 arguments, got ${es.length}")
         GramHashes(es(0), foldableInt(es(1), "graft_gram_hashes n"))
-      }))
+      }),
+    (FunctionIdentifier("graft_bind"),
+      info(classOf[BoundValue], "graft_bind",
+        "graft_bind(value) - the literal value, bound by reference: " +
+          "generated code does not change with it"),
+      BoundValue.build _))
 
   /** Resolve a foldable int argument (the k/n shape parameters) at
     * function-build time — they size per-instance constant arrays, so
@@ -278,10 +283,14 @@ object GraftFunctions {
     }
   }
 
-  def register(spark: SparkSession): Unit =
+  /** Register the functions and install the batch-timestamp binding
+    * ([[BoundValue.install]]) on `spark`. */
+  def register(spark: SparkSession): Unit = {
     functions.foreach { case (id, inf, builder) =>
       spark.sessionState.functionRegistry.registerFunction(id, inf, builder)
     }
+    BoundValue.install(spark)
+  }
 }
 
 /** `spark.sql.extensions`-style injector. */

@@ -250,8 +250,8 @@ object AtomicTable {
     *
     * Every column in `statsCols` gets per-file `zs=` min/max zone maps
     * (what [[scanWhere]] prunes with), and `keyFilter` a per-file
-    * [[KeyFilter]] sidecar: ONE aggregation job grouped by
-    * `input_file_name()` covers every file, every stats column and the
+    * [[KeyFilter]] sidecar: ONE shuffle-free read-back job
+    * ([[FileStats]]) covers every file, every stats column and the
     * key hashes (a production writer would lift the same values from
     * the parquet footers the write already produced). The ordering tag
     * comes from `df`'s schema, "num" for numeric types and "str"
@@ -293,40 +293,28 @@ object AtomicTable {
     if (statsCols.isEmpty && keyFilter.isEmpty) return Staged(rel, entries, None)
     // the schema is known, so the read-back infers nothing from disk
     val readSchema = df.select((statsCols ++ keyFilter).distinct.map(col): _*).schema
-    val aggs = statsCols.flatMap(c =>
-      Seq(min(col(c)).cast("string"), max(col(c)).cast("string"))) ++
-      // the hashes ship only for a file within the filter's key cap
-      keyFilter.map(k => when(count(lit(1)) <= KeyFilter.MaxKeys,
-        collect_list(xxhash64(col(k)))))
-    val rows = described(spark, "AtomicTable stats + filters") {
-      spark.read.schema(readSchema).parquet(s"$root/$rel")
-        .groupBy(input_file_name()).agg(aggs.head, aggs.tail: _*).collect()
-    }
-    // file → (zone-map fields, key hashes)
-    val perFile: Map[String, (Seq[String], Option[Seq[Long]])] = rows.flatMap { r =>
-      val f = r.getString(0)
+    val perFile: Map[String, FileStats.Stats] = described(spark, "AtomicTable stats + filters") {
+      FileStats.collect(spark.read.schema(readSchema).parquet(s"$root/$rel"), statsCols, keyFilter)
+    }.flatMap { case (f, stats) =>
       val i = f.indexOf("_staged/")
-      if (i < 0) None
-      else Some(f.substring(i) -> (statsCols.zip(readSchema).zipWithIndex
-        .flatMap { case ((c, field), ci) =>
-          val (mn, mx) = (r.getString(1 + 2 * ci), r.getString(2 + 2 * ci))
-          val ord = if (field.dataType.isInstanceOf[NumericType]) "num" else "str"
-          if (mn == null || mx == null) None
-          else Some(s"zs=${enc(c)},$ord,${enc(mn)},${enc(mx)}")
-        },
-        keyFilter.flatMap(_ => Option(r.getSeq[Long](1 + 2 * statsCols.size)))))
-    }.toMap
-    // a file the aggregation did not match (a path it renders
+      if (i < 0) None else Some(f.substring(i) -> stats)
+    }
+    def zoneMaps(stats: FileStats.Stats): Seq[String] =
+      statsCols.zip(readSchema).zip(stats.bounds).flatMap { case ((c, field), b) =>
+        val ord = if (field.dataType.isInstanceOf[NumericType]) "num" else "str"
+        b.map { case (mn, mx) => s"zs=${enc(c)},$ord,${enc(mn)},${enc(mx)}" }
+      }
+    // a file the read-back did not match (a path it renders
     // differently) gets no filter: an empty one would be a false
     // negative
-    val hashes = entries.map(e => perFile.get(pathOf(e)).flatMap(_._2))
+    val hashes = entries.map(e => perFile.get(pathOf(e)).flatMap(_.keyHashes))
     keyFilter.foreach(k => entries.zip(hashes).foreach {
       case (e, Some(hs)) =>
         KeyFilter.write(KeyFilter.sidecar(Paths.get(root, pathOf(e))), KeyFilter.build(k, hs))
       case _ =>
     })
     Staged(rel,
-      entries.map(e => (e +: perFile.get(pathOf(e)).fold(Seq.empty[String])(_._1)).mkString("\t")),
+      entries.map(e => (e +: perFile.get(pathOf(e)).fold(Seq.empty[String])(zoneMaps)).mkString("\t")),
       if (keyFilter.isDefined && hashes.forall(_.isDefined)) Some(hashes.flatten.flatten.toArray)
       else None)
   }
@@ -704,7 +692,7 @@ object AtomicTable {
     * (a streamed Gold micro-batch, [[Gold.mergeIncremental]]): `df`
     * is written ONCE, as this table's own partitioned staged files
     * with zone maps on `statsCol` and a [[KeyFilter]] on `key` per
-    * file, all from the one aggregation job [[stage]] runs anyway.
+    * file, all from the one read-back job [[stage]] runs anyway.
     * The source partitions are the staged entries' `p=` values, so no
     * distinct job runs. Then, inside the commit loop, against the
     * head it is about to replace:

@@ -2,7 +2,11 @@ package graft.gold
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.TimestampType
+import graft.functions.{BoundValue, GraftFunctions}
 
 /** Gold-layer semantics: atomic catalog tables
   * (`pipeline/spark/delta_to_iceberg.py:23-52`) and the fct_purchases
@@ -167,23 +171,29 @@ object Gold {
     val exists = AtomicTable.latestVersion(tableRoot).isDefined
     // high-watermark from manifest zone-map stats when available —
     // O(manifest) instead of scanning the fact table; falls back to
-    // the aggregate scan on stats-less tables
+    // the aggregate scan on stats-less tables. Bound by reference
+    // (BoundValue): a literal would make every batch's generated code
+    // new, a Janino compile per batch on the driver and the executors
     val fresh =
       if (!exists) source
       else {
         // the manifest stat string is rendered in the SESSION timezone
-        // (UTC) — parse it back with to_timestamp, which also uses the
-        // session timezone. java.sql.Timestamp.valueOf would parse in
-        // the JVM-default zone and shift the watermark by the offset
-        // on a non-UTC host (silently dropping fresh rows).
+        // — parse it back in that zone, on the driver, as to_timestamp
+        // would. java.sql.Timestamp.valueOf would parse in the
+        // JVM-default zone and shift the watermark by the offset when
+        // the two differ (silently dropping fresh rows).
+        val tz = spark.conf.get("spark.sql.session.timeZone")
         val wmCol: Option[org.apache.spark.sql.Column] =
           AtomicTable.statsBounds(tableRoot, "ingestion_timestamp")
-            .map(b => to_timestamp(lit(b._2)))
+            .map(b => lit(DateTimeUtils.microsToInstant(
+              Cast(Literal(b._2), TimestampType, Some(tz)).eval().asInstanceOf[Long])))
             .orElse(Option(AtomicTable.read(spark, tableRoot)
               .agg(max(col("ingestion_timestamp"))).head().getTimestamp(0))
               .map(lit(_)))
         wmCol match {
-          case Some(w) => source.filter(col("ingestion_timestamp") >= w)
+          case Some(w) =>
+            GraftFunctions.register(spark)
+            source.filter(col("ingestion_timestamp") >= BoundValue.of(w))
           case None => source
         }
       }

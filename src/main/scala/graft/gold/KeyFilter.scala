@@ -12,7 +12,7 @@ import scala.util.control.NonFatal
   * batch key can already be in the table.
   *
   * Built and probed on the driver only, from the 64-bit `xxhash64`
-  * values of the keys (the stager's aggregation job collects them), so
+  * values of the keys (the stager's read-back job collects them), so
   * the filter adds no Spark job. Bit i of a key with hash h is
   * (h + i·h2) mod m with h2 = fmix64(h) | 1 (Kirsch–Mitzenmacher double
   * hashing, as in [[graft.functions.BloomSketch]]); m is a power of

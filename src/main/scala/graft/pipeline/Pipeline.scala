@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.analytics.Anomaly
+import graft.functions.{BoundValue, GraftFunctions}
 import graft.generator.EventGenerator
 import graft.gold.Gold
 import graft.ingest.Silver
@@ -122,6 +123,13 @@ object Pipeline {
     // retry — the fact layer's key upsert absorbs Silver dups, DLQ dups
     // are triage-only. Markers are tiny; one pair per run.
     val runId = java.util.UUID.randomUUID().toString
+    // per-RUN wall-clock stamp, the fallback ingestion stamp of a row
+    // with no event time: like runId, the Silver and DLQ writes share
+    // it and a retry reuses it. Bound by reference (BoundValue) — a
+    // current_timestamp() would inline a fresh literal into each
+    // write's generated code, two new compiles per write per run
+    GraftFunctions.register(spark)
+    val runStamp = BoundValue.of(lit(java.time.Instant.now()))
     val hadoopFs = new org.apache.hadoop.fs.Path(cfg.lakeDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def writeOnce(markerPath: String)(body: => Long): Long = {
@@ -180,11 +188,10 @@ object Pipeline {
         "silver-raw") { rawStaged =>
         // stamp = event time for valid rows (deterministic re-runs),
         // but a fully-unparseable payload HAS no event time — fall
-        // back to wall clock so the DLQ's quarantined_at is never null
-        // (it is the triage/retention key)
+        // back to the run's wall-clock stamp so the DLQ's
+        // quarantined_at is never null (it is the triage/retention key)
         val (valid, quarantine) = Silver.parseWithQuarantine(
-          rawStaged, ingestionTs =
-            coalesce(col("data.transaction_time"), current_timestamp()))
+          rawStaged, ingestionTs = coalesce(col("data.transaction_time"), runStamp))
         // a side that collapsed to a zero-task plan (e.g. every
         // envelope quarantined → empty valid write) finishes with an
         // EMPTY metrics map — no tasks ran the observe operator, which

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.functions.GraftFunctions
 import graft.gold.Gold
 
 /** Streaming → Gold with the honest unique_key semantics: per
@@ -38,10 +39,15 @@ object StreamingGold {
     *    checkpoint alone;
     *  - a concurrent batch writer (backfill job) and the stream
     *    cannot lose each other's commits (optimistic retry).
+    * The batch's `current_timestamp()` and the Gold watermark are bound
+    * by reference ([[graft.functions.BoundValue]]), so a steady batch
+    * compiles no new code.
     */
   def startTransactionalFact(parsed: DataFrame, tableRoot: String,
       checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
+      trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery = {
+    // before start(): the query runs on a clone of the session
+    GraftFunctions.register(parsed.sparkSession)
     Gold.fctPurchases(parsed).writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -50,4 +56,5 @@ object StreamingGold {
         Gold.mergeIncremental(batch.sparkSession, batch, tableRoot): Unit
       }
       .start()
+  }
 }

@@ -906,4 +906,114 @@ class AtomicTableSpec extends SparkSpec {
     assert(keyValues(root).sorted === before)
     assert(appended(root, mergeBatch(root, batchRows(("d", "4", "2024-01-03")))))
   }
+
+  // ── stats + filters read-back ───────────────────────────────────────
+
+  /** The read-back as one aggregation grouped by `input_file_name()`
+    * (the stager's former implementation): per file of `dir`, its
+    * `zs=` field of `stats` and its key hashes, None past the cap.
+    */
+  private def aggregatedReadBack(root: String, dir: String, df: org.apache.spark.sql.DataFrame,
+      stats: String, key: String): Map[String, (Seq[String], Option[Seq[Long]])] = {
+    val readSchema = df.select(Seq(stats, key).distinct.map(col): _*).schema
+    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+    spark.read.schema(readSchema).parquet(s"$root/$dir")
+      .groupBy(input_file_name())
+      .agg(min(col(stats)).cast("string"), max(col(stats)).cast("string"),
+        when(count(lit(1)) <= graft.gold.KeyFilter.MaxKeys, collect_list(xxhash64(col(key)))))
+      .collect().map { r =>
+        val f = r.getString(0)
+        val ord = if (readSchema(stats).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
+          "num" else "str"
+        val zs = if (r.isNullAt(1)) Nil
+          else Seq(s"zs=${enc(stats)},$ord,${enc(r.getString(1))},${enc(r.getString(2))}")
+        f.substring(f.indexOf("_staged/")) -> (zs, Option(r.getSeq[Long](3)))
+      }.toMap
+  }
+
+  /** mergeBatch `df` (key `k`, partitions `pd`) into a fresh table with
+    * zone maps on `stats`; check every staged file's `zs=` field and
+    * filter bits against [[aggregatedReadBack]], and that the
+    * read-back ran as one job. Returns the table root, its entries and
+    * the read-back job's task count.
+    */
+  private def readBackMatches(df: org.apache.spark.sql.DataFrame, stats: String)
+      : (String, Seq[String], Int) = {
+    val root = tmpDir(s"readback-$stats")
+    val w = RunWitness.attach(spark)
+    val entries = try {
+      AtomicTable.mergeBatch(spark, df, root, "k", "pd", Some(stats))
+      def readBacks = w.jobs().filter(_.desc == "AtomicTable stats + filters")
+      var waited = 0
+      while ((readBacks.isEmpty || readBacks.exists(_.end < 0)) && waited < 5000) {
+        Thread.sleep(50); waited += 50
+      }
+      assert(readBacks.size === 1, w.jobs().map(_.desc))
+      AtomicTable.files(root, AtomicTable.latestVersion(root).get)
+    } finally spark.sparkContext.removeSparkListener(w)
+    val tasks = w.jobs().filter(_.desc == "AtomicTable stats + filters").map(_.tasks.get).sum
+    val dir = entries.head.split("/").take(2).mkString("/")
+    val want = aggregatedReadBack(root, dir, df, stats, "k")
+    assert(entries.map(_.split("\t")(0)).toSet === want.keySet)
+    entries.foreach { e =>
+      val (zs, hashes) = want(e.split("\t")(0))
+      assert(e.split("\t").filter(_.startsWith("zs=")).toSeq === zs, e)
+      val got = graft.gold.KeyFilter.read(graft.gold.KeyFilter.sidecar(entryPath(root, e)))
+      assert(got.map(f => (f.column, f.words.toSeq)) ===
+        hashes.map(hs => ("k", graft.gold.KeyFilter.build("k", hs).words.toSeq)), e)
+    }
+    (root, entries, tasks)
+  }
+
+  test("stats + filters read-back: one job, the same zs= fields and filter bits as the aggregation") {
+    // timestamp, decimal, string and date stats (nulls among them), an
+    // all-null column; several files per partition; a non-UTC zone,
+    // in which bounds render
+    val rows = (0 until 240).map { i =>
+      (s"k$i", java.sql.Date.valueOf(s"2024-01-0${1 + i % 3}"),
+        if (i % 7 == 0) null else new java.sql.Timestamp(1704067200000L + i * 3600000L),
+        if (i % 5 == 0) null else BigDecimal(i * 37 % 1000) / 8,
+        if (i % 11 == 0) null else s"s${(i * 13) % 97}",
+        if (i % 4 == 0) null else java.sql.Date.valueOf(s"2023-12-${10 + i % 19}"),
+        null: java.sql.Timestamp)
+    }
+    val df = rows.toDF("k", "pd", "ts", "amt", "s", "d", "nul")
+      .withColumn("amt", col("amt").cast("decimal(12,3)")).repartition(3)
+    withConfs("spark.sql.session.timeZone" -> "America/Los_Angeles") {
+      Seq("ts", "amt", "s", "d", "nul").foreach { c =>
+        val (_, entries, _) = readBackMatches(df, c)
+        assert(entries.size > 3, entries)
+        if (c == "nul") assert(!entries.exists(_.contains("zs=")))
+        else assert(entries.forall(_.contains("zs=")))
+      }
+    }
+  }
+
+  test("stats + filters read-back: a file split across tasks merges to the same fields and bits") {
+    val df = spark.range(0, 20000, 1, 1)
+      .select(concat(lit("k"), col("id")).as("k"), lit(java.sql.Date.valueOf("2024-01-01")).as("pd"),
+        timestamp_seconds(lit(1704067200L) + (col("id") * 7919) % 100000).as("ts"))
+    // small row groups, and scan partitions smaller than one of them
+    val (root, entries, tasks) = withConfs("parquet.block.size" -> "16384",
+        "spark.sql.files.maxPartitionBytes" -> "16384") {
+      readBackMatches(df, "ts")
+    }
+    assert(entries.size === 1)
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+      spark.sparkContext.hadoopConfiguration,
+      new org.apache.hadoop.fs.Path(entryPath(root, entries.head).toString))
+    assert(footer.getBlocks.size > 1)
+    assert(tasks > 1, s"the file was read by $tasks task(s)")
+  }
+
+  test("stats + filters read-back: a file over the key cap gets zone maps and no filter") {
+    val n = graft.gold.KeyFilter.MaxKeys + 1L
+    val df = spark.range(0, n, 1, 1)
+      .select(concat(lit("k"), col("id")).as("k"), lit(java.sql.Date.valueOf("2024-01-01")).as("pd"),
+        col("id").as("n"))
+    val (root, entries, _) = readBackMatches(df, "n")
+    assert(entries.size === 1)
+    assert(entries.head.contains(s"zs=n,num,0,${n - 1}"))
+    assert(!hasFilter(root, entries.head))
+  }
 }

@@ -173,33 +173,43 @@ class GoldSpec extends SparkSpec {
     assert(Gold.mergeIncremental(spark, fct, root).inserted === 1)
     assert(facts(root) === Map("DUP" -> "CS01")) // deterministic tiebreak
   }
-  test("watermark filter only admits rows newer than target max ingestion_timestamp") {
-    val root = tmpDir("gold-watermark")
-    val older = Gold.fctPurchases(purchaseDf(
-      Purchase(ts, "1", "CS01", 4.99, 1, false, 0.0, false, 0.0)))
-    // "0" predates the stored watermark: filtered out, never stored
-    val newer = Gold.fctPurchases(purchaseDf(
-      Purchase(new Timestamp(ts.getTime - 5000), "0", "CS04", 7.99, 1, false, 0.0, false, 0.0),
-      Purchase(ts, "1", "CS01", 4.99, 1, false, 0.0, false, 0.0),
-      Purchase(new Timestamp(ts.getTime + 5000), "9", "CS03", 6.99, 1, false, 0.0, false, 0.0)))
-    Gold.mergeIncremental(spark, older, root)
-    assert(Gold.mergeIncremental(spark, newer, root).inserted === 1)
-    assert(facts(root).keySet -- Set("1") === Set("9"))
-  }
-  test("watermark is inclusive: a NEW id sharing the boundary stamp is admitted, not lost") {
-    // one micro-batch stamps all rows with the same current_timestamp;
-    // a file source can deliver them across two triggers — the second
-    // trigger's rows tie the watermark exactly and must still land
-    // (the upsert, not the watermark, absorbs the stored boundary row)
-    val root = tmpDir("gold-boundary")
-    val older = Gold.fctPurchases(purchaseDf(
-      Purchase(ts, "1", "CS01", 4.99, 1, false, 0.0, false, 0.0)))
-    val straggler = Gold.fctPurchases(purchaseDf(
-      Purchase(ts, "1", "CS01", 4.99, 1, false, 0.0, false, 0.0),
-      Purchase(ts, "2", "CS02", 5.99, 1, false, 0.0, false, 0.0)))
-    Gold.mergeIncremental(spark, older, root)
-    assert(Gold.mergeIncremental(spark, straggler, root).inserted === 1)
-    assert(facts(root).keySet -- Set("1") === Set("2"))
+  // the watermark round-trips through the manifest's stats, rendered
+  // and parsed in the session zone: a parse in any other zone shifts
+  // it by the offset
+  for ((zone, suffix) <- Seq("UTC" -> "",
+      "America/Los_Angeles" -> " (session zone America/Los_Angeles)")) {
+    test("watermark filter only admits rows newer than target max ingestion_timestamp" + suffix) {
+      withConfs("spark.sql.session.timeZone" -> zone) {
+        val root = tmpDir("gold-watermark")
+        val older = Gold.fctPurchases(purchaseDf(
+          Purchase(ts, "1", "CS01", 4.99, 1, false, 0.0, false, 0.0)))
+        // "0" predates the stored watermark: filtered out, never stored
+        val newer = Gold.fctPurchases(purchaseDf(
+          Purchase(new Timestamp(ts.getTime - 5000), "0", "CS04", 7.99, 1, false, 0.0, false, 0.0),
+          Purchase(ts, "1", "CS01", 4.99, 1, false, 0.0, false, 0.0),
+          Purchase(new Timestamp(ts.getTime + 5000), "9", "CS03", 6.99, 1, false, 0.0, false, 0.0)))
+        Gold.mergeIncremental(spark, older, root)
+        assert(Gold.mergeIncremental(spark, newer, root).inserted === 1)
+        assert(facts(root).keySet -- Set("1") === Set("9"))
+      }
+    }
+    test("watermark is inclusive: a NEW id sharing the boundary stamp is admitted, not lost" + suffix) {
+      withConfs("spark.sql.session.timeZone" -> zone) {
+        // one micro-batch stamps all rows with the same current_timestamp;
+        // a file source can deliver them across two triggers — the second
+        // trigger's rows tie the watermark exactly and must still land
+        // (the upsert, not the watermark, absorbs the stored boundary row)
+        val root = tmpDir("gold-boundary")
+        val older = Gold.fctPurchases(purchaseDf(
+          Purchase(ts, "1", "CS01", 4.99, 1, false, 0.0, false, 0.0)))
+        val straggler = Gold.fctPurchases(purchaseDf(
+          Purchase(ts, "1", "CS01", 4.99, 1, false, 0.0, false, 0.0),
+          Purchase(ts, "2", "CS02", 5.99, 1, false, 0.0, false, 0.0)))
+        Gold.mergeIncremental(spark, older, root)
+        assert(Gold.mergeIncremental(spark, straggler, root).inserted === 1)
+        assert(facts(root).keySet -- Set("1") === Set("2"))
+      }
+    }
   }
   test("across runs the newer row for a stored id replaces it (upsert), inserting no key") {
     val root = tmpDir("gold-upsert")

@@ -444,6 +444,36 @@ class StreamingGoldSpec extends SparkSpec {
     run()
     holdsOnce(4)
   }
+
+  test("transactional fact: steady file batches compile no new code after the second") {
+    // the batch's current_timestamp() and the Gold watermark change on
+    // every batch; bound by reference, they leave the generated code
+    // the same, so the codegen cache serves every batch after the
+    // first with a watermark
+    val gen = EventGenerator.generate(EventGenerator.defaultProducts, 300)
+    val files = gen.purchases.map(EventGenerator.toJson).grouped(50).toIndexedSeq
+    val base = tmpDir("stream-fact-codegen")
+    val in = Files.createDirectories(Paths.get(base, "in"))
+    val root = s"$base/fct"
+    val q = StreamingGold.startTransactionalFact(
+      Silver.parsePurchases(StreamingSilver.Sources.fileJsonLines(spark, in.toString)),
+      root, s"$base/ckpt", Trigger.ProcessingTime(0L))
+    val compiles = try files.indices.map { i =>
+      val tmp = in.resolve(s".f$i.tmp")
+      Files.write(tmp, files(i).mkString("\n").getBytes("UTF-8"))
+      Files.move(tmp, in.resolve(s"f$i.json"), StandardCopyOption.ATOMIC_MOVE)
+      q.processAllAvailable()
+      RunWitness.janinoCompiles()
+    } finally q.stop()
+    assert(q.recentProgress.count(_.numInputRows > 0) === files.size)
+    // compiles per batch, from the third on
+    val steady = compiles.sliding(2).map(p => p(1) - p(0)).toSeq.drop(1)
+    assert(steady.size >= 4)
+    assert(steady.forall(_ == 0), s"Janino compiles per batch: $steady")
+    val ids = graft.gold.AtomicTable.read(spark, root).select("transaction_id").as[String].collect()
+    assert(ids.length === ids.distinct.length)
+    assert(ids.toSet === gen.purchases.map(_.transaction_id).toSet)
+  }
 }
 
 class RestockSpec extends SparkSpec {
