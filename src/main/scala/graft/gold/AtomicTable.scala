@@ -1,9 +1,16 @@
 package graft.gold
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, NumericType, StructType}
+import org.apache.spark.sql.types.{DataType, NumericType, StringType, StructField, StructType}
 import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.BasicFileAttributes
 import scala.util.control.NonFatal
 
 /** Minimal ACID table format: snapshot isolation via versioned
@@ -16,9 +23,10 @@ import scala.util.control.NonFatal
   * {{{
   *   <root>/_staged/<uuid>/part-*.parquet   data files (immutable once
   *                                          referenced by a manifest)
-  *   <root>/_staged/<uuid>/_schema.json     the dir's data schema, as
-  *                                          written (read with it: no
-  *                                          footer inference)
+  *   <root>/_staged/<uuid>/_schema.json     the staged frame's schema,
+  *                                          its partition field included
+  *                                          (read with it: no footer
+  *                                          inference, no discovery)
   *   <root>/_staged/<uuid>/.part-*.parquet.bloom
   *                                          per-file key Bloom filter
   *                                          ([[KeyFilter]]; files a
@@ -44,8 +52,11 @@ import scala.util.control.NonFatal
   *    retries one higher, so every commit lands exactly once and no
   *    files are lost (optimistic concurrency, no locks).
   *  - READ: resolve the highest committed manifest, read exactly the
-  *    files it lists. Readers never see a half-written commit because
-  *    the manifest appears atomically AFTER its data files are closed.
+  *    files it lists as ONE scan ([[ManifestIndex]]), partition values
+  *    taken from the entries and typed by the schema records; no
+  *    directory is listed and no partition is discovered. Readers
+  *    never see a half-written commit because the manifest appears
+  *    atomically AFTER its data files are closed.
   *  - MERGE (upsert): copy-on-write — new snapshot = target rows whose
   *    key is absent from the source (anti join) ∪ source rows; on a
   *    partitioned production table the rewrite would touch only the
@@ -149,54 +160,84 @@ object AtomicTable {
   def readVersion(spark: SparkSession, root: String, v: Int): DataFrame =
     readEntries(spark, root, files(root, v))
 
-  /** Read a set of manifest entries. Entries with a `p=` field live
-    * under Hive-style `<col>=<value>` dirs — those read with
-    * `basePath` per staged dir so partition discovery restores the
-    * partition column; plain entries read directly.
+  /** Read a set of manifest entries as ONE scan: a [[HadoopFsRelation]]
+    * over a [[ManifestIndex]] that lists exactly these files, so the
+    * plan has one leaf however many staged dirs the entries span, and
+    * no directory is listed or parsed for partition values.
     *
-    * Each staged dir reads with its recorded data schema
-    * ([[SchemaRecord]]), so no footer-inference job runs; partition
-    * discovery is unchanged (the record holds no partition column). A
-    * dir without a record (older writers) infers with `mergeSchema`.
+    * The frame's schema is the union of the staged dirs' records
+    * ([[SchemaRecord]]), fields in first-seen order over the dirs'
+    * paths; a dir without a record (older writers) contributes its
+    * files' footer schemas, merged in one inference. The partition
+    * column (the `<col>=` dir of entries with a `p=` field) is typed
+    * as a record holding it says, as a string when none does, and each
+    * entry's value is its `p=` field, Hive-unescaped ([[NullPartDir]]
+    * is null) and cast to that type. A value thus reads back as it was
+    * written: the string "00123" stays "00123".
     *
     * SCHEMA EVOLUTION (add-column): snapshots may mix commits written
-    * with different column sets — the union fills columns missing
-    * from older files with NULL (per staged group, each group reads
-    * with its own recorded or mergeSchema'd parquet schema). Type
-    * changes of an existing column are NOT supported (same as Iceberg
-    * without a migration rewrite).
+    * with different column sets; the parquet reader returns NULL for a
+    * column a file lacks. Type changes of an existing column are NOT
+    * supported (same as Iceberg without a migration rewrite), and
+    * neither is a plain file holding a column other entries are
+    * partitioned on. `schemaOf` names further entries whose columns
+    * the frame carries without reading their files (a pruned scan
+    * keeps the snapshot's schema).
     */
-  private def readEntries(spark: SparkSession, root: String,
-      entries: Seq[String]): DataFrame = {
-    if (entries.isEmpty) return spark.emptyDataFrame
-    def reader(schema: Option[StructType]) =
-      schema.fold(spark.read.option("mergeSchema", "true"))(spark.read.schema(_))
-    val (parted, plain) = entries.partition(partOf(_).isDefined)
-    val parts = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    if (plain.nonEmpty) {
-      // one read over every plain file: with a recorded schema only
-      // when all their dirs recorded the same one
-      val schemas = plain.map(e => stagedDirOf(pathOf(e))).distinct
-        .map(recordedSchema(root, _))
-      val shared = if (schemas.distinct.size == 1) schemas.head else None
-      parts += reader(shared).parquet(plain.map(f => s"$root/${pathOf(f)}"): _*)
+  private def readEntries(spark: SparkSession, root: String, entries: Seq[String],
+      schemaOf: Seq[String] = Nil): DataFrame = {
+    val all = (entries ++ schemaOf).distinct
+    if (all.isEmpty) return spark.emptyDataFrame
+    def status(e: String): FileStatus = {
+      val p = Paths.get(root, pathOf(e)).toAbsolutePath
+      val a = Files.readAttributes(p, classOf[BasicFileAttributes])
+      new FileStatus(a.size, false, 1, 32L << 20 /* the local FS block */,
+        a.lastModifiedTime.toMillis, new Path("file", null, p.toString))
     }
-    parted.map(pathOf).groupBy(stagedDirOf)
-      .foreach { case (stagedDir, paths) =>
-        parts += reader(recordedSchema(root, stagedDir))
-          .option("basePath", s"$root/$stagedDir")
-          .parquet(paths.map(f => s"$root/$f").toSeq: _*)
+    // dirs in path order, the order footer inference merges files in,
+    // so a dir reads the same with its record and without
+    val dirs = all.map(e => stagedDirOf(pathOf(e))).distinct.sorted
+    val records = dirs.map(d => d -> recordedSchema(root, d)).toMap
+    lazy val inferred = new ParquetFileFormat().inferSchema(spark, Map("mergeSchema" -> "true"),
+      all.filter(e => records(stagedDirOf(pathOf(e))).isEmpty).map(status)).getOrElse(new StructType())
+    def dirSchema(d: String) = records(d).getOrElse(inferred)
+    val fields = dirs.flatMap(dirSchema(_).fields).distinctBy(_.name)
+    val partCols = all.flatMap(partColOf).distinct
+    require(!all.filter(partOf(_).isEmpty).exists(e =>
+      dirSchema(stagedDirOf(pathOf(e))).fieldNames.exists(partCols.contains)),
+      s"$root: a plain file holds a partition column (${partCols.mkString(", ")})")
+    val partitionSchema = StructType(partCols.map(c =>
+      fields.find(_.name == c).getOrElse(StructField(c, StringType))))
+    val tz = spark.conf.get("spark.sql.session.timeZone")
+    val listed = entries.map { e =>
+      val values = partitionSchema.map { f =>
+        partOf(e).filter(v => v != NullPartDir && partColOf(e).contains(f.name)).map(v =>
+          Cast(Literal(ExternalCatalogUtils.unescapePathName(v)), f.dataType, Some(tz)).eval()).orNull
       }
-    parts.reduceLeft(_.unionByName(_, allowMissingColumns = true))
+      PartitionDirectory(InternalRow.fromSeq(values), Array(status(e)))
+    }
+    val index = new ManifestIndex(new Path("file", null, Paths.get(root).toAbsolutePath.toString),
+      listed, partitionSchema)
+    // every column nullable: one that some files lack reads as NULL
+    def nullable(fs: Seq[StructField]) = StructType(fs.map(_.copy(nullable = true)))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, nullable(partitionSchema),
+      nullable(fields.filterNot(f => partCols.contains(f.name))), None,
+      new ParquetFileFormat(), Map.empty)(spark))
   }
 
   /** `_staged/<uuid>` of an entry path. */
   private def stagedDirOf(path: String): String = path.split("/").take(2).mkString("/")
 
-  /** Name of the per-staged-dir data schema record: the schema of the
-    * columns the parquet files hold (the frame's, minus a partition
-    * column), written as JSON by [[stage]] before any manifest names
-    * the dir. The `_` prefix hides it from directory listings.
+  /** The partition column of an entry with a `p=` field: the column
+    * name of its `<col>=<value>` dir.
+    */
+  private def partColOf(e: String): Option[String] = partOf(e).map(_ =>
+    ExternalCatalogUtils.unescapePathName(pathOf(e).split("/")(2).takeWhile(_ != '=')))
+
+  /** Name of the per-staged-dir schema record: the schema of the frame
+    * [[stage]] wrote (its partition column included), as JSON, written
+    * before any manifest names the dir. The `_` prefix hides it from
+    * directory listings.
     */
   private val SchemaRecord = "_schema.json"
 
@@ -242,11 +283,11 @@ object AtomicTable {
   /** Stage `df` as immutable parquet files, invisible to readers
     * until committed, and return their manifest entries (see
     * [[files]]). With `partitionCol` the files land in Hive-style
-    * `<col>=<value>` dirs and each entry carries its `p=` value, parsed
-    * from the dir name; partition values must be non-null and
-    * string-faithful (dates, numbers, sane strings). The dir's data
-    * schema is recorded beside the files ([[SchemaRecord]]). A write
-    * that produced no file leaves no dir behind.
+    * `<col>=<value>` dirs and each entry carries its `p=` value, the
+    * dir name (Spark writes an empty string as [[NullPartDir]], so it
+    * reads back as null). `df`'s schema is recorded beside the files
+    * ([[SchemaRecord]]). A write that produced no file leaves no dir
+    * behind.
     *
     * Every column in `statsCols` gets per-file `zs=` min/max zone maps
     * (what [[scanWhere]] prunes with), and `keyFilter` a per-file
@@ -256,16 +297,17 @@ object AtomicTable {
     * the parquet footers the write already produced). The ordering tag
     * comes from `df`'s schema, "num" for numeric types and "str"
     * otherwise, so the scan compares bounds under the SAME ordering
-    * the stats were captured with. `phase` names the write job.
+    * the stats were captured with. `phase` names the write job, and
+    * `maxRows` > 0 caps the rows of a file.
     */
   private def stage(df: DataFrame, root: String, partitionCol: Option[String],
       statsCols: Seq[String], keyFilter: Option[String] = None,
-      phase: String = "stage"): Staged = {
+      phase: String = "stage", maxRows: Long = 0L): Staged = {
     val spark = df.sparkSession
     val rel = s"_staged/${java.util.UUID.randomUUID()}"
     described(spark, s"AtomicTable $phase") {
-      partitionCol.fold(df.write)(pc => df.write.partitionBy(pc))
-        .parquet(s"$root/$rel")
+      val w = if (maxRows > 0) df.write.option("maxRecordsPerFile", maxRows) else df.write
+      partitionCol.fold(w)(w.partitionBy(_)).parquet(s"$root/$rel")
     }
     def partFiles(dir: java.nio.file.Path): Seq[String] = listDir(dir)(
       _.map(_.getFileName.toString)
@@ -285,16 +327,11 @@ object AtomicTable {
       dropStaged(root, none)
       return none
     }
-    val dataSchema = partitionCol.fold(df.schema) { pc =>
-      val name = df.select(col(pc)).schema.head.name
-      StructType(df.schema.filterNot(_.name == name))
-    }
-    Files.write(Paths.get(root, rel, SchemaRecord), dataSchema.json.getBytes("UTF-8"))
+    Files.write(Paths.get(root, rel, SchemaRecord), df.schema.json.getBytes("UTF-8"))
     if (statsCols.isEmpty && keyFilter.isEmpty) return Staged(rel, entries, None)
-    // the schema is known, so the read-back infers nothing from disk
     val readSchema = df.select((statsCols ++ keyFilter).distinct.map(col): _*).schema
     val perFile: Map[String, FileStats.Stats] = described(spark, "AtomicTable stats + filters") {
-      FileStats.collect(spark.read.schema(readSchema).parquet(s"$root/$rel"), statsCols, keyFilter)
+      FileStats.collect(readEntries(spark, root, entries), statsCols, keyFilter)
     }.flatMap { case (f, stats) =>
       val i = f.indexOf("_staged/")
       if (i < 0) None else Some(f.substring(i) -> stats)
@@ -401,8 +438,7 @@ object AtomicTable {
     */
   private def stagedRowless(spark: SparkSession, root: String,
       staged: Seq[String]): Boolean =
-    staged.isEmpty ||
-      spark.read.parquet(staged.map(e => s"$root/${pathOf(e)}"): _*).isEmpty
+    staged.isEmpty || readEntries(spark, root, staged).isEmpty
 
   /** Overwrite: new snapshot = staged files only. An empty overwrite
     * of an EXISTING table is a SCHEMA-PRESERVING TRUNCATE: the commit
@@ -472,44 +508,26 @@ object AtomicTable {
     dir.toString
   }
 
-  /** Partition values that round-trip to Hive dir names verbatim; any
-    * value outside this set (needs escaping) disables pruning for the
-    * whole merge — correctness over cleverness.
+  /** Hive's directory name for a NULL partition value (and for an
+    * empty string, which Spark writes the same way).
     */
-  private val DirSafe = "^[A-Za-z0-9._\\-]+$".r
+  private val NullPartDir = ExternalCatalogUtils.DEFAULT_PARTITION_NAME
 
-  /** Hive's directory name for a NULL partition value. A null renders
-    * as "null" through String.valueOf but as this marker on disk, so
-    * the affected-set computed from row values can never match the
-    * manifest's dir value — pruning with nulls in play would carry
-    * matched keys forward. Any null on either side disables pruning.
-    * (A literal string equal to the marker is indistinguishable in
-    * dir form; it is treated the same way — correctness over
-    * cleverness, like [[DirSafe]].)
+  /** The Hive dir string Spark's partitioned write gives a value that
+    * renders as `s` (a cast to string, in the session time zone): the
+    * form of a manifest `p=` field, so values compare with entries as
+    * dir strings and are never re-typed on the way.
     */
-  private val NullPartDir = "__HIVE_DEFAULT_PARTITION__"
+  private def dirString(s: String): String =
+    if (s == null || s.isEmpty) NullPartDir else ExternalCatalogUtils.escapePathName(s)
 
-  /** True when partition DISCOVERY provably reprints `v` unchanged —
-    * i.e. `v` is a fixed point of parse-then-print, so manifest dir
-    * strings and discovered values can never diverge for it. Three
-    * provably-stable classes cover real partition values: canonical
-    * integers (no leading zeros/signs to normalize), ISO dates
-    * (DateType reprints the same ISO string), and values whose
-    * characters rule out every non-string inference (the two
-    * exceptions that sneak past the charset test, `NaN`/`Infinity`,
-    * parse as doubles but also reprint identically). Anything else —
-    * leading-zero numerics, floats, decimals, timestamps — answers
-    * false and [[mergePartitioned]] keeps the prior-snapshot scan
-    * with its round-trip guard.
+  /** The distinct partitions of `df` as dir strings. The cast follows
+    * the distinct, so a partitioning of `df` on the column still serves
+    * it (no extra shuffle). Bounded: partition cardinality.
     */
-  private[graft] def discoveryStable(v: String): Boolean = {
-    val canonicalInt = v.matches("0|-?[1-9][0-9]{0,17}")
-    def isoDate = v.matches("[0-9]{4}-[0-9]{2}-[0-9]{2}") &&
-      scala.util.Try(java.time.LocalDate.parse(v)).isSuccess
-    // any char outside numeric/temporal syntax forces StringType
-    def stringOnly = v.nonEmpty && !v.matches("[0-9+\\-.:TeE ]+")
-    canonicalInt || isoDate || stringOnly
-  }
+  private def dirStringsOf(df: DataFrame, partitionCol: String): Set[String] =
+    df.select(col(partitionCol)).distinct().select(col(partitionCol).cast("string"))
+      .collect().map(r => dirString(r.getString(0))).toSet
 
   /** Partition-pruned MERGE — the production copy-on-write shape the
     * plain [[merge]] approximates: partitions that appear in the
@@ -525,10 +543,8 @@ object AtomicTable {
     * The scan is skipped when it cannot change the plan: every
     * partitioned prior entry's dir value is already a source
     * partition. Source partitions are always in the affected set, so
-    * each of those entries rewrites on the pruned branch, and the
-    * fallback branch rewrites everything anyway — the commit is the
-    * same whatever the scan would return, minus its job and the
-    * prior snapshot's schema-merging read. A streaming batch into a
+    * each of those entries rewrites whatever the scan would return —
+    * the commit is the same, minus its job. A streaming batch into a
     * table whose only partition is the batch's own date is this case.
     *
     * `df` is evaluated more than once (the partition distinct, the
@@ -539,11 +555,10 @@ object AtomicTable {
     * would add a shuffle job to every merge. [[mergeBatch]] is the
     * staged twin that can commit a key-disjoint batch as an append.
     *
-    * Safety valves: entries without partition metadata (plain
-    * [[append]] writes) always rewrite, and any partition value that
-    * would need Hive path-escaping falls back to a full rewrite
-    * (manifest values are dir strings; comparing escaped to unescaped
-    * would silently mis-prune). Same optimistic validation as
+    * Entries without partition metadata (plain [[append]] writes)
+    * always rewrite. Source and matched partitions compare with the
+    * manifest as Hive dir strings ([[dirString]]), nulls and values
+    * that need escaping included. Same optimistic validation as
     * [[merge]]: losing the race recomputes against the new snapshot.
     * Returns -1 when there is nothing to commit (empty source on a
     * nonexistent table).
@@ -560,33 +575,18 @@ object AtomicTable {
     * declaration is the caller's contract; a key that silently moved
     * partitions would leave its old row behind, exactly as a wrong
     * partition predicate would in any partition-scoped MERGE.
-    *
-    * The declaration is honored only for source partition values that
-    * are provably FIXED POINTS of partition discovery's
-    * parse-then-print ([[discoveryStable]]): skipping the scan also
-    * skips the `roundTrips` guard below, and a value discovery
-    * reprints differently (`00123` → int `123`) could otherwise leave
-    * a rewritten partition's old dir out of `affected` on the NEXT
-    * merge — a stale duplicate key. Non-stable values silently
-    * downgrade to the scanning path (correct, one extra job), so the
-    * flag is always safe to pass.
     */
   def mergePartitioned(spark: SparkSession, df: DataFrame, root: String,
       key: String, partitionCol: String, statsCol: Option[String] = None,
       partitionLocalKeys: Boolean = false): Int = {
-    val sourcePartRows = described(spark, "AtomicTable partitions") {
-      df.select(col(partitionCol)).distinct().collect() // bounded: partition cardinality
-    }
+    val sourceParts = described(spark, "AtomicTable partitions")(dirStringsOf(df, partitionCol))
     // empty source ⇔ empty distinct-partition set (a null partition
     // value still yields a row): short-circuit the no-op like
     // [[merge]] does — without this, an idle caller would publish a
     // content-identical new version per call (untouched = everything,
     // staged = nothing), growing the history unboundedly
-    if (sourcePartRows.isEmpty)
+    if (sourceParts.isEmpty)
       return latestVersion(root).getOrElse(-1)
-    val sourceHasNull = sourcePartRows.exists(_.isNullAt(0))
-    val sourceParts = sourcePartRows.filterNot(_.isNullAt(0))
-      .map(r => String.valueOf(r.get(0))).toSet
     // a lost attempt's staged files are never referenced: drop them
     // before the next attempt stages its own
     var attempt: Option[Staged] = None
@@ -600,7 +600,7 @@ object AtomicTable {
           if (staged.entries.isEmpty) Left(-1) else Right(staged.entries)
         case Some(v) =>
           val (untouched, toRewrite) = splitAffected(spark, root, files(root, v), df,
-            key, partitionCol, sourceParts, sourceHasNull, partitionLocalKeys)
+            key, partitionCol, sourceParts, partitionLocalKeys)
           val staged = described(spark, "AtomicTable rewrite") {
             val merged =
               if (toRewrite.isEmpty) df
@@ -618,74 +618,28 @@ object AtomicTable {
   /** The pruning half of [[mergePartitioned]] and [[mergeBatch]]:
     * split the `prior` entries into those carried over untouched and
     * those whose rows must be rewritten without the source's keys.
-    * `sourceParts` are the source's non-null partition values as
-    * strings; `source` is read only for the matched-key scan.
+    * `sourceParts` are the source's partitions as dir strings;
+    * `source` is read only for the matched-key scan, whose partition
+    * values render back to dir strings exactly: each reads as the type
+    * it was written with.
     */
   private def splitAffected(spark: SparkSession, root: String, prior: Seq[String],
       source: DataFrame, key: String, partitionCol: String, sourceParts: Set[String],
-      sourceHasNull: Boolean, partitionLocalKeys: Boolean): (Seq[String], Seq[String]) = {
+      partitionLocalKeys: Boolean): (Seq[String], Seq[String]) = {
     val partedPrior = prior.filter(partOf(_).isDefined)
-    val priorDirVals: Set[String] = partedPrior.flatMap(partOf)
-      .filterNot(_ == NullPartDir).toSet
-    val priorHasNull = partedPrior.exists(e =>
-      partOf(e).contains(NullPartDir))
-    // cheap structural gates first: when any of them already
-    // forbids pruning (null partitions on either side, unsafe
-    // source dir values), the full rewrite follows and NO scan
-    // of the prior entries is needed at all
-    val structuralSafe = !sourceHasNull && !priorHasNull &&
-      sourceParts.forall(v => DirSafe.matches(v))
-    // ONE column-pruned (key, partition) pass over the prior
-    // partitioned entries serves BOTH pruning inputs: which
-    // partitions hold matched keys (left join marker), and the
-    // full discovered partition-value set for the round-trip
-    // guard below — previously two separate jobs per merge.
-    // partitionLocalKeys skips the scan only when every source
-    // partition value provably survives discovery's
-    // parse-then-print — see the scaladoc's stale-duplicate
-    // scenario for why a reprinting value must keep the scan
-    // (and with it the roundTrips guard)
-    val plkSafe = partitionLocalKeys &&
-      sourceParts.forall(discoveryStable)
-    // every partitioned prior entry already sits in a source
-    // partition: all of them rewrite whatever the scan finds (see
-    // the scaladoc), so the scan cannot change the commit
-    val scanMoot = partedPrior.forall(partOf(_).exists(sourceParts))
-    // the prior entries are read only here
-    val partScan: Option[Array[(String, Boolean)]] =
-      if (plkSafe || !structuralSafe || scanMoot) None
-      else Some(described(spark, "AtomicTable key scan") {
-        readEntries(spark, root, partedPrior)
-          .join(source.select(col(key)).distinct()
-            .withColumn("__m", lit(1)), Seq(key), "left")
-          .groupBy(col(partitionCol)).agg(max(col("__m")).as("__m"))
-          .collect()
-      }.filterNot(_.isNullAt(0))
-        .map(r => (String.valueOf(r.get(0)), !r.isNullAt(1))))
+    // declared partition-local keys, or every partitioned prior entry
+    // already in a source partition: all the entries the scan could
+    // find rewrite anyway (see the scaladoc), so it cannot change the
+    // commit
+    val scanMoot = partitionLocalKeys || partedPrior.forall(partOf(_).exists(sourceParts))
     val matchedParts: Set[String] =
-      partScan.map(_.collect { case (v, true) => v }.toSet)
-        .getOrElse(Set.empty)
+      if (scanMoot) Set.empty
+      else described(spark, "AtomicTable key scan") {
+        dirStringsOf(readEntries(spark, root, partedPrior)
+          .join(source.select(col(key)), Seq(key), "left_semi"), partitionCol)
+      }
     val affected = sourceParts ++ matchedParts
-    // round-trip guard: matchedParts comes from partition
-    // DISCOVERY, whose inferred type can reprint a dir value
-    // differently (p=00123 discovers as int 123) — the affected
-    // test below compares against manifest DIR strings, so a
-    // non-round-tripping value would leave the matched entry in
-    // `untouched` and the old row would survive the upsert as a
-    // duplicate key. Pruning is safe only when discovery is the
-    // IDENTITY on this table's dir values: discovery is
-    // parse-then-print (idempotent), so discovered-set ==
-    // dir-set forces every dir value to be a fixed point (set
-    // equality alone rules out both reprints and two dirs
-    // collapsing to one discovered value). Otherwise fall back
-    // to the always-correct full rewrite, which also
-    // re-canonicalizes the offending values. Free here: the
-    // discovered set rides the same partScan pass.
-    val roundTrips = partScan.forall(_.map(_._1).toSet == priorDirVals)
-    val pruneSafe = structuralSafe &&
-      affected.forall(v => DirSafe.matches(v)) && roundTrips
-    if (!pruneSafe) (Seq.empty[String], prior)
-    else prior.partition(e => partOf(e).exists(pv => !affected.contains(pv)))
+    prior.partition(e => partOf(e).exists(pv => !affected.contains(pv)))
   }
 
   /** [[mergePartitioned]] for a batch small enough to stage first
@@ -703,9 +657,9 @@ object AtomicTable {
     *    head ++ staged. That is published, and no prior file is read
     *    or rewritten.
     *  - MERGE path, otherwise (a replayed key, an entry without a
-    *    filter from an older writer or a [[compact]], a false
-    *    positive): [[mergePartitioned]]'s pruning with the staged
-    *    files as the source; the prior entries of the affected
+    *    filter from an older writer, a false positive):
+    *    [[mergePartitioned]]'s pruning with the staged files as the
+    *    source; the prior entries of the affected
     *    partitions are rewritten without the staged keys (with
     *    filters, so the next disjoint batch appends again), and the
     *    staged files join the snapshot as they are — the same rows as
@@ -739,7 +693,7 @@ object AtomicTable {
         Right(prior ++ batch.entries)
       else {
         val (untouched, toRewrite) = splitAffected(spark, root, prior, source, key,
-          partitionCol, dirVals - NullPartDir, dirVals(NullPartDir), partitionLocalKeys = false)
+          partitionCol, dirVals, partitionLocalKeys = false)
         if (toRewrite.nonEmpty) {
           val (read, kept) = (new Observation(), new Observation())
           rewrite = Some(described(spark, "AtomicTable rewrite") {
@@ -801,7 +755,9 @@ object AtomicTable {
     * were captured with ([[cmpOrd]]; dates/timestamps in ISO form
     * order correctly as strings). This is the per-file complement of
     * partition pruning: partitions cut directories, zone maps cut
-    * files within them.
+    * files within them. The kept files read with the whole snapshot's
+    * schema, so a total prune, or kept files that all predate
+    * `column`, still yields a typed (empty) frame.
     */
   def scanWhere(spark: SparkSession, root: String, column: String,
       lo: String, hi: String): DataFrame = {
@@ -815,18 +771,7 @@ object AtomicTable {
         case None => true
       }
     }
-    // schema survives a total prune: resolve columns from the full
-    // file set, emit zero rows — callers can still .select/.as
-    val pruned0 =
-      if (kept.isEmpty) readEntries(spark, root, all).filter(lit(false))
-      else readEntries(spark, root, kept)
-    // with add-column evolution the surviving files may all PREDATE
-    // the queried column (its only carriers pruned away): their rows
-    // hold NULL for it, NULL never satisfies a range — correct result
-    // is empty, resolved against the full-snapshot schema
-    val pruned =
-      if (pruned0.columns.contains(column)) pruned0
-      else readEntries(spark, root, all).filter(lit(false))
+    val pruned = readEntries(spark, root, kept, schemaOf = all)
     val dt = pruned.schema(column).dataType
     pruned.filter(col(column) >= lit(lo).cast(dt)
       && col(column) <= lit(hi).cast(dt))
@@ -1127,8 +1072,9 @@ object AtomicTable {
     *
     * With `partitionCol`, rows hash-repartition ON the partition
     * column so each Hive dir gets exactly one writer → one file per
-    * partition; layout and (optional) zone-map stats are regenerated
-    * with the same knobs the writers use.
+    * partition (more past [[KeyFilter.MaxKeys]] rows when the table
+    * keeps key filters); layout, (optional) zone-map stats and key
+    * filters are regenerated with the same knobs the writers use.
     */
   def compact(spark: SparkSession, root: String,
       partitionCol: Option[String] = None, statsCol: Option[String] = None,
@@ -1142,7 +1088,13 @@ object AtomicTable {
     val snapshot = readVersion(spark, root, v)
     val laidOut = partitionCol.fold(snapshot.repartition(targetFiles))(pc =>
       snapshot.repartition(targetFiles, col(pc)))
-    val staged = stage(laidOut, root, partitionCol, statsCol.toSeq).entries
+    // files that carried key filters keep them (on the same column, at
+    // most MaxKeys rows a file, so every file gets one): a key-disjoint
+    // batch still appends after the compaction
+    val key = prior.iterator
+      .flatMap(e => KeyFilter.read(KeyFilter.sidecar(Paths.get(root, pathOf(e))))).nextOption().map(_.column)
+    val staged = stage(laidOut, root, partitionCol, statsCol.toSeq, key,
+      maxRows = if (key.isDefined) KeyFilter.MaxKeys.toLong else 0L).entries
     if (tryPublish(root, v + 1, staged)) v + 1 else -1
   }
 
@@ -1175,10 +1127,8 @@ object AtomicTable {
     val base: Set[String] =
       if (fromV < 0) Set.empty else files(root, fromV).map(pathOf).toSet
     val head = files(root, toV)
-    val added = head.filterNot(e => base.contains(pathOf(e)))
-    if (added.isEmpty) // schema survives an empty delta
-      readEntries(spark, root, head).filter(lit(false))
-    else readEntries(spark, root, added)
+    // the head's schema survives an empty delta
+    readEntries(spark, root, head.filterNot(e => base.contains(pathOf(e))), schemaOf = head)
   }
 
   /** Z-ORDER clustering rewrite (the Delta `OPTIMIZE ZORDER BY` /

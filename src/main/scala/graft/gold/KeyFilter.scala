@@ -14,26 +14,28 @@ import scala.util.control.NonFatal
   * Built and probed on the driver only, from the 64-bit `xxhash64`
   * values of the keys (the stager's read-back job collects them), so
   * the filter adds no Spark job. Bit i of a key with hash h is
-  * (h + i·h2) mod m with h2 = fmix64(h) | 1 (Kirsch–Mitzenmacher double
-  * hashing, as in [[graft.functions.BloomSketch]]); m is a power of
-  * two, so the odd h2 keeps the k bits distinct.
+  * fmix64(h + i·φ) mod m (φ the 64-bit golden ratio, fmix64 murmur3's
+  * finalizer, m a power of two): each probe remixes the hash, so the
+  * k bits of a key are independent draws. Double hashing, h + i·h2,
+  * allows only about m²/2 bit patterns, a false-positive floor near
+  * 2n/m².
   *
   * Sizing is fixed, not a setting: 32-64 bits per distinct key (32·n
   * rounded up to a power of two) and k = 22 give a false-positive
-  * rate of at most about 2·10⁻⁷ per probe, so a batch of 10³ keys
-  * probed against 35 live files falls to the merge path by chance
-  * about once in 140 batches. A false positive only costs that merge;
-  * there are no false negatives.
+  * rate of (1 − e^(−kn/m))^k, at most about 2·10⁻⁷ per probe
+  * (`KeyFilterSpec` measures it), so a batch of 10³ keys probed
+  * against 35 live files falls to the merge path by chance about once
+  * in 140 batches. A false positive only costs that merge; there are
+  * no false negatives.
   */
 private[graft] final case class KeyFilter(column: String, words: Array[Long]) {
   private val mask = words.length.toLong * 64 - 1
 
   def mightContain(hash: Long): Boolean = {
-    val h2 = KeyFilter.second(hash)
     var i = 0
     var hit = true
     while (hit && i < KeyFilter.NumHashes) {
-      val idx = KeyFilter.bit(hash, h2, i, mask)
+      val idx = KeyFilter.bit(hash, i, mask)
       hit = (words((idx >>> 6).toInt) & (1L << (idx & 63))) != 0
       i += 1
     }
@@ -49,25 +51,24 @@ private[graft] object KeyFilter {
     * batch it stays live for take the merge path.
     */
   val MaxKeys: Int = 1 << 17
-  private val Magic = 0x474b4631 // "GKF1"
-
-  /** The second hash of the pair: murmur3's 64-bit finalizer of the
-    * first, forced odd.
+  /** "GKF2"; a sidecar of the double-hashing layout ("GKF1") reads as
+    * no filter, so its file takes the merge path and is rewritten with
+    * a new one.
     */
-  private def second(h: Long): Long = {
-    var x = h
-    x ^= x >>> 33
-    x *= 0xff51afd7ed558ccdL
-    x ^= x >>> 33
-    x *= 0xc4ceb9fe1a85ec53L
-    (x ^ (x >>> 33)) | 1L
-  }
+  private val Magic = 0x474b4632
 
   /** Bit i of a key: the ONE formula [[build]] sets and
     * [[KeyFilter.mightContain]] tests, so the two cannot disagree (a
     * disagreement would be a false negative).
     */
-  private def bit(h: Long, h2: Long, i: Int, mask: Long): Long = (h + i * h2) & mask
+  private def bit(h: Long, i: Int, mask: Long): Long = {
+    var x = h + i * 0x9e3779b97f4a7c15L
+    x ^= x >>> 33
+    x *= 0xff51afd7ed558ccdL
+    x ^= x >>> 33
+    x *= 0xc4ceb9fe1a85ec53L
+    (x ^ (x >>> 33)) & mask
+  }
 
   def build(column: String, hashes: Seq[Long]): KeyFilter = {
     val distinct = hashes.distinct
@@ -76,10 +77,9 @@ private[graft] object KeyFilter {
     val words = new Array[Long](bits / 64)
     val mask = bits.toLong - 1
     distinct.foreach { h =>
-      val h2 = second(h)
       var i = 0
       while (i < NumHashes) {
-        val idx = bit(h, h2, i, mask)
+        val idx = bit(h, i, mask)
         words((idx >>> 6).toInt) |= 1L << (idx & 63)
         i += 1
       }

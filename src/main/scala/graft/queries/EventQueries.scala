@@ -52,8 +52,9 @@ object EventQueries {
     // without the exit sweep
     graft.Staging.trackForCleanup(rootDir)
     val root = rootDir.toString
+    // a date, the type the MV's readers get back from the table
     val ev = Tables.load(s, dir, "events")
-      .withColumn("event_date", date_format(col("ts"), "yyyy-MM-dd"))
+      .withColumn("event_date", to_date(col("ts")))
     val cutoff = lit("2024-01-20 12:00:00").cast("timestamp")
     // ONE events scan produces both sides' partials (split by the
     // delta flag inside the aggregate key); the result is MV-scale
@@ -69,7 +70,7 @@ object EventQueries {
         (col("ts") >= cutoff).as("is_delta"))
       .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
       .withColumn("mv_key",
-        concat_ws("|", col("event_date"), col("event_type")))
+        concat_ws("|", col("event_date").cast("string"), col("event_type")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       def side(delta: Boolean) =
@@ -93,7 +94,7 @@ object EventQueries {
         .repartition(col("event_date"))
       // materialize the combine ONCE (MV-scale, like partials — the
       // cache is released before return): mergePartitioned evaluates
-      // its source several times (partition discovery, key distinct,
+      // its source several times (partition distinct, key distinct,
       // final write), and this source's lineage joins against the MV
       // table itself. An in-memory persist beats the r5-era parquet
       // checkpoint here: same execute-once guarantee, one fewer write

@@ -198,20 +198,6 @@ class AtomicTableSpec extends SparkSpec {
   }
 
   test("partitionLocalKeys downgrades to the scan for discovery-unstable values") {
-    // discoveryStable classification: the values the fast path may
-    // plan from manifest strings alone
-    import graft.gold.AtomicTable.discoveryStable
-    assert(discoveryStable("0") && discoveryStable("123")
-      && discoveryStable("-45"))
-    assert(discoveryStable("2024-01-20"))
-    assert(discoveryStable("electronics") && discoveryStable("a|b"))
-    // reprinting values must keep the scanning path's roundTrips guard
-    assert(!discoveryStable("00123")) // int reprint "123"
-    assert(!discoveryStable("1.50"))  // double reprint "1.5"
-    assert(!discoveryStable("1e5"))   // double reprint "100000.0"
-    assert(!discoveryStable("+5"))    // int reprint "5"
-    assert(!discoveryStable(""))
-
     // end-to-end: leading-zero string partitions with pLK declared.
     // A prior partial rewrite re-types pd=00123 via discovery and
     // restages it as pd=123; without the downgrade, the next pLK
@@ -823,6 +809,22 @@ class AtomicTableSpec extends SparkSpec {
     val v1 = mergeBatch(root, batchRows(("c", "2", "2024-01-02"), ("d", "2", "2024-01-01")))
     assert(!appended(root, v1))
     assert(keyValues(root).sorted === Seq("a" -> "1", "b" -> "1", "c" -> "2", "d" -> "2"))
+  }
+
+  test("mergeBatch: after a compact of filtered appends, a key-disjoint batch still appends") {
+    val root = tmpDir("batch-compact")
+    (1 to 4).foreach(i => mergeBatch(root, batchRows(
+      (s"a$i", "1", "2024-01-01"), (s"b$i", "1", "2024-01-02"))))
+    val head = AtomicTable.latestVersion(root).get
+    assert((1 to head).forall(appended(root, _)))
+    val v = AtomicTable.compact(spark, root, partitionCol = Some("pd"))
+    assert(v === head + 1)
+    assert(AtomicTable.files(root, v).size === 2)
+    assert(AtomicTable.files(root, v).forall(hasFilter(root, _)))
+    val after = mergeBatch(root, batchRows(("c", "2", "2024-01-01"), ("d", "2", "2024-01-02")))
+    assert(appended(root, after))
+    assert(keyValues(root).sorted ===
+      ((1 to 4).flatMap(i => Seq(s"a$i" -> "1", s"b$i" -> "1")) ++ Seq("c" -> "2", "d" -> "2")).sorted)
   }
 
   test("recorded staged-dir schemas read the same as footer inference") {
