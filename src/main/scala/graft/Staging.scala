@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Disk-staged materialization for intra-query reuse.
   *
@@ -129,20 +130,33 @@ object Staging {
     (staged, parquetRowCount(dir))
   }
 
+  /** `df` with a row count riding whatever job evaluates it, such as
+    * the eager write of a stager; read it with [[rowsOf]].
+    */
+  private[graft] def counted(df: DataFrame, o: Observation): DataFrame =
+    df.observe(o, count(lit(1)).as("rows"))
+
+  /** The count a [[counted]] frame's job saw; a plan that ran no task
+    * (an empty input) reports no metrics, which means zero rows.
+    */
+  private[graft] def rowsOf(o: Observation): Long =
+    o.get.getOrElse("rows", 0L).asInstanceOf[Long]
+
   /** Sum of footer record counts across a staged dir's parquet files. */
   private def parquetRowCount(dir: java.nio.file.Path): Long = {
     import scala.jdk.CollectionConverters._
-    val conf = new org.apache.hadoop.conf.Configuration()
     val s = java.nio.file.Files.list(dir)
     try s.iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .map { p =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(p.toUri), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum
+      .filter(_.getFileName.toString.endsWith(".parquet")).map(footerRows).sum
     finally s.close()
+  }
+
+  /** A parquet file's record count, from its footer: no Spark job. */
+  private[graft] def footerRows(p: java.nio.file.Path): Long = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(p.toUri), new org.apache.hadoop.conf.Configuration())
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try r.getRecordCount finally r.close()
   }
 
   /** Global sort of an output-scale result whose PLAN is expensive.

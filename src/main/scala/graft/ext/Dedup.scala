@@ -684,7 +684,8 @@ object Dedup {
     // then fetches that many old texts. The cap shuffles only the
     // touched subset, never the whole index. Disk-staged + counted
     // like minhashDupPairs: the count guards the verify-side
-    // broadcast, and no cache entry survives the call.
+    // broadcast, and no cache entry survives the call. The count rides
+    // the stager's eager write as an Observation; no job runs for it.
     val touched = index
       .join(broadcast(newBands.select(col("band_id"), col("band_hash"))
         .distinct()), Seq("band_id", "band_hash"))
@@ -694,10 +695,11 @@ object Dedup {
       .filter(col("__bn") <= maxBucket)
       .drop("__bn")
     val tCand0 = System.nanoTime()
-    val candidates = stager(
+    val staged = new org.apache.spark.sql.Observation()
+    val candidates = stager(graft.Staging.counted(
       capped.join(broadcast(newBands), Seq("band_id", "band_hash"))
-        .select(col("new_id"), col("old_id")).distinct(), "inc-cands")
-    val nPairs = candidates.count()
+        .select(col("new_id"), col("old_id")).distinct(), staged), "inc-cands")
+    val nPairs = graft.Staging.rowsOf(staged)
     lastMinhashDiag = Some(MinhashDiag(nPairs,
       if (nPairs <= broadcastPairLimit) "broadcast" else "shuffle",
       (System.nanoTime() - tCand0) / 1e9))

@@ -1,7 +1,7 @@
 package graft.gold
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
@@ -12,6 +12,7 @@ import org.apache.spark.sql.types.{DataType, NumericType, StringType, StructFiel
 import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.BasicFileAttributes
 import scala.util.control.NonFatal
+import graft.Staging.{counted, footerRows, rowsOf}
 
 /** Minimal ACID table format: snapshot isolation via versioned
   * manifests and an atomic-rename commit, the mechanism the
@@ -30,7 +31,7 @@ import scala.util.control.NonFatal
   *   <root>/_staged/<uuid>/.part-*.parquet.bloom
   *                                          per-file key Bloom filter
   *                                          ([[KeyFilter]]; files a
-  *                                          [[mergeBatch]] wrote)
+  *                                          keyed write wrote)
   *   <root>/_commits/v00042.manifest        one entry per data file:
   *                                          relative path + optional
   *                                          tagged fields (partition
@@ -41,8 +42,8 @@ import scala.util.control.NonFatal
   * a partitioned write.) The sidecars are immutable, hidden from
   * directory listings by their `_`/`.` prefix, and die with their data
   * in [[vacuum]]. A dir or file without them (older writers) still
-  * reads: its schema is inferred, and a file without a filter makes a
-  * batch take the merge path.
+  * reads: its schema is inferred, and a keyed write scans a file
+  * without a filter for the keys it deletes.
   *
   * Protocol:
   *  - WRITE: stage data files (never visible to readers), then publish
@@ -57,11 +58,14 @@ import scala.util.control.NonFatal
   *    directory is listed and no partition is discovered. Readers
   *    never see a half-written commit because the manifest appears
   *    atomically AFTER its data files are closed.
-  *  - MERGE (upsert): copy-on-write — new snapshot = target rows whose
-  *    key is absent from the source (anti join) ∪ source rows; on a
-  *    partitioned production table the rewrite would touch only the
-  *    partitions holding matched keys, the commit protocol is
-  *    unchanged.
+  *  - MERGE (upsert): new snapshot = target rows whose key is absent
+  *    from the delete set (anti join) ∪ source rows, written by ONE
+  *    staged, file-granular writer ([[upsert]]): the source is staged
+  *    once with a key filter per file, and a commit rewrites only the
+  *    live files that may hold a deleted key (their filter claims
+  *    one, or a key scan finds one in a file without a filter); every
+  *    other file carries over by path. A commit costs the files it
+  *    touches, not the table.
   *
   * Old versions stay readable (time travel) until a vacuum removes
   * manifests + unreferenced files. Local-fs `ATOMIC_MOVE` maps to the
@@ -261,10 +265,11 @@ object AtomicTable {
   }
 
   /** What [[stage]] wrote: the staged dir (relative to the root), its
-    * manifest entries and, when a key filter was asked for, the key
-    * hashes of every staged file (None when some file got no filter).
+    * manifest entries, its row count and, when a key filter was asked
+    * for, the key hashes of every staged file (None when some file got
+    * no filter).
     */
-  private final case class Staged(dir: String, entries: Seq[String],
+  private final case class Staged(dir: String, entries: Seq[String], rows: Long,
       keyHashes: Option[Array[Long]])
 
   /** Delete a staged dir that no manifest references (a lost commit
@@ -287,7 +292,7 @@ object AtomicTable {
     * dir name (Spark writes an empty string as [[NullPartDir]], so it
     * reads back as null). `df`'s schema is recorded beside the files
     * ([[SchemaRecord]]). A write that produced no file leaves no dir
-    * behind.
+    * behind. The row count rides the write as an [[Observation]].
     *
     * Every column in `statsCols` gets per-file `zs=` min/max zone maps
     * (what [[scanWhere]] prunes with), and `keyFilter` a per-file
@@ -297,18 +302,23 @@ object AtomicTable {
     * the parquet footers the write already produced). The ordering tag
     * comes from `df`'s schema, "num" for numeric types and "str"
     * otherwise, so the scan compares bounds under the SAME ordering
-    * the stats were captured with. `phase` names the write job, and
-    * `maxRows` > 0 caps the rows of a file.
+    * the stats were captured with. A rowless write reads nothing back:
+    * its files hold no key, so each gets a filter that rules out every
+    * key. `phase` names the write job, and `maxRows` > 0 caps the rows
+    * of a file.
     */
   private def stage(df: DataFrame, root: String, partitionCol: Option[String],
       statsCols: Seq[String], keyFilter: Option[String] = None,
       phase: String = "stage", maxRows: Long = 0L): Staged = {
     val spark = df.sparkSession
     val rel = s"_staged/${java.util.UUID.randomUUID()}"
+    val counter = new Observation()
     described(spark, s"AtomicTable $phase") {
-      val w = if (maxRows > 0) df.write.option("maxRecordsPerFile", maxRows) else df.write
-      partitionCol.fold(w)(w.partitionBy(_)).parquet(s"$root/$rel")
+      val w = counted(df, counter).write
+      val capped = if (maxRows > 0) w.option("maxRecordsPerFile", maxRows) else w
+      partitionCol.fold(capped)(capped.partitionBy(_)).parquet(s"$root/$rel")
     }
+    val rows = rowsOf(counter)
     def partFiles(dir: java.nio.file.Path): Seq[String] = listDir(dir)(
       _.map(_.getFileName.toString)
         .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).toSeq)
@@ -323,37 +333,56 @@ object AtomicTable {
           }
     }).sorted
     if (entries.isEmpty) {
-      val none = Staged(rel, Nil, None)
+      val none = Staged(rel, Nil, 0L, keyFilter.map(_ => Array.empty[Long]))
       dropStaged(root, none)
       return none
     }
     Files.write(Paths.get(root, rel, SchemaRecord), df.schema.json.getBytes("UTF-8"))
-    if (statsCols.isEmpty && keyFilter.isEmpty) return Staged(rel, entries, None)
+    if (rows == 0) {
+      keyFilter.foreach(k => entries.foreach(e =>
+        KeyFilter.write(KeyFilter.sidecar(Paths.get(root, pathOf(e))), KeyFilter.build(k, Nil))))
+      return Staged(rel, entries, 0L, keyFilter.map(_ => Array.empty[Long]))
+    }
+    if (statsCols.isEmpty && keyFilter.isEmpty) return Staged(rel, entries, rows, None)
     val readSchema = df.select((statsCols ++ keyFilter).distinct.map(col): _*).schema
     val perFile: Map[String, FileStats.Stats] = described(spark, "AtomicTable stats + filters") {
       FileStats.collect(readEntries(spark, root, entries), statsCols, keyFilter)
-    }.flatMap { case (f, stats) =>
-      val i = f.indexOf("_staged/")
-      if (i < 0) None else Some(f.substring(i) -> stats)
-    }
+    }.flatMap { case (f, stats) => entryPathOf(f).map(_ -> stats) }
+    // a plain write's first task writes its file even without a row;
+    // beside files with rows it serves no reader, and kept it would be
+    // a filterless entry every later keyed write scans: it is left out
+    val (live, empty) = entries.partition(e => perFile.contains(pathOf(e)) ||
+      footerRows(Paths.get(root, pathOf(e))) > 0)
+    empty.foreach(e => Files.delete(Paths.get(root, pathOf(e))))
     def zoneMaps(stats: FileStats.Stats): Seq[String] =
       statsCols.zip(readSchema).zip(stats.bounds).flatMap { case ((c, field), b) =>
         val ord = if (field.dataType.isInstanceOf[NumericType]) "num" else "str"
         b.map { case (mn, mx) => s"zs=${enc(c)},$ord,${enc(mn)},${enc(mx)}" }
       }
-    // a file the read-back did not match (a path it renders
-    // differently) gets no filter: an empty one would be a false
-    // negative
-    val hashes = entries.map(e => perFile.get(pathOf(e)).flatMap(_.keyHashes))
-    keyFilter.foreach(k => entries.zip(hashes).foreach {
+    // a file the read-back did not match gets no filter: an empty one
+    // would be a false negative
+    val hashes = live.map(e => perFile.get(pathOf(e)).flatMap(_.keyHashes))
+    keyFilter.foreach(k => live.zip(hashes).foreach {
       case (e, Some(hs)) =>
         KeyFilter.write(KeyFilter.sidecar(Paths.get(root, pathOf(e))), KeyFilter.build(k, hs))
       case _ =>
     })
     Staged(rel,
-      entries.map(e => (e +: perFile.get(pathOf(e)).fold(Seq.empty[String])(zoneMaps)).mkString("\t")),
+      live.map(e => (e +: perFile.get(pathOf(e)).fold(Seq.empty[String])(zoneMaps)).mkString("\t")),
+      rows,
       if (keyFilter.isDefined && hashes.forall(_.isDefined)) Some(hashes.flatten.flatten.toArray)
       else None)
+  }
+
+  /** The entry path (`_staged/...`) of a file an `input_file_name()`
+    * names. That name is a URI, so the path is decoded first: a
+    * partition dir whose Hive escaping holds a `%` then matches its
+    * entry.
+    */
+  private def entryPathOf(file: String): Option[String] = {
+    val p = scala.util.Try(new java.net.URI(file).getPath).getOrElse(file)
+    val i = p.indexOf("_staged/")
+    if (i < 0) None else Some(p.substring(i))
   }
 
   /** ONE atomic publish attempt of `files` as version `v`. Returns
@@ -393,7 +422,7 @@ object AtomicTable {
     * it (`Left(v)`: nothing to commit, return `v`), publish them as
     * head+1, and on a lost race recompute against the NEW head. A
     * loser thus picks up the winner's files (or re-derives its
-    * copy-on-write from them) before retrying, so every commit lands
+    * rewrite from them) before retrying, so every commit lands
     * exactly once and none is lost — no lock, no coordination.
     * [[compact]] and [[clusterBy]] stay single-shot: they must never
     * retry over a concurrent commit.
@@ -418,27 +447,18 @@ object AtomicTable {
     */
   def append(spark: SparkSession, df: DataFrame, root: String,
       statsCol: Option[String] = None): Int = {
-    val staged = stage(df, root, None, statsCol.toSeq).entries
+    val staged = stage(df, root, None, statsCol.toSeq)
     // no rows staged → no commit: an empty first write must not create
     // a row-less table, and on an existing table appending an empty
     // file (or republishing the head alone) would bump the version for
     // a no-op. Row-level check, not files-level: a plain parquet write
     // of an empty frame still emits one schema-bearing part file, so
-    // `staged.isEmpty` alone misses the common empty-append case.
-    val rowless = stagedRowless(spark, root, staged)
+    // an empty entry list alone misses the common empty-append case.
+    if (staged.rows == 0) dropStaged(root, staged)
     commit(root)(head =>
-      if (rowless) Left(head.getOrElse(-1))
-      else Right(headFiles(root, head) ++ staged))
+      if (staged.rows == 0) Left(head.getOrElse(-1))
+      else Right(headFiles(root, head) ++ staged.entries))
   }
-
-  /** True when the staged write carries no rows — either no files at
-    * all (partitionBy of an empty frame emits none) or only the
-    * schema-bearing empty part file a plain parquet write of an empty
-    * frame produces. One cheap scan over the (tiny) staged files.
-    */
-  private def stagedRowless(spark: SparkSession, root: String,
-      staged: Seq[String]): Boolean =
-    staged.isEmpty || readEntries(spark, root, staged).isEmpty
 
   /** Overwrite: new snapshot = staged files only. An empty overwrite
     * of an EXISTING table is a SCHEMA-PRESERVING TRUNCATE: the commit
@@ -452,16 +472,15 @@ object AtomicTable {
     * [[append]]'s no-empty-first-commit rule uniform.
     */
   def overwrite(spark: SparkSession, df: DataFrame, root: String): Int = {
-    val staged = stage(df, root, None, Nil).entries
-    if (staged.isEmpty) return -1 // partitionless writer emitted nothing
-    lazy val rowless = stagedRowless(spark, root, staged)
+    val staged = stage(df, root, None, Nil)
+    if (staged.entries.isEmpty) return -1 // partitionless writer emitted nothing
     commit(root)(head =>
-      if (head.isEmpty && rowless) Left(-1) else Right(staged))
+      if (head.isEmpty && staged.rows == 0) Left(-1) else Right(staged.entries))
   }
 
   /** Partitioned append: same protocol as [[append]], but files carry
-    * their partition value in the manifest, enabling partition-pruned
-    * merges.
+    * their partition value in the manifest, so a partition predicate
+    * prunes them in the scan ([[ManifestIndex]]).
     */
   def appendPartitioned(spark: SparkSession, df: DataFrame, root: String,
       partitionCol: String, statsCol: Option[String] = None): Int = {
@@ -513,223 +532,157 @@ object AtomicTable {
     */
   private val NullPartDir = ExternalCatalogUtils.DEFAULT_PARTITION_NAME
 
-  /** The Hive dir string Spark's partitioned write gives a value that
-    * renders as `s` (a cast to string, in the session time zone): the
-    * form of a manifest `p=` field, so values compare with entries as
-    * dir strings and are never re-typed on the way.
+  /** MERGE-shaped upsert on `key`: matched target rows are replaced by
+    * their source row, unmatched source rows are inserted ([[upsert]],
+    * the source's keys the delete set). Re-running the same merge is
+    * idempotent by content. Returns the committed version, or -1 when
+    * there is nothing to commit (empty source on a nonexistent table);
+    * an empty source commits nothing.
     */
-  private def dirString(s: String): String =
-    if (s == null || s.isEmpty) NullPartDir else ExternalCatalogUtils.escapePathName(s)
+  def merge(spark: SparkSession, df: DataFrame, root: String, key: String): Int =
+    upsert(df, root, key, None, None, None).version
 
-  /** The distinct partitions of `df` as dir strings. The cast follows
-    * the distinct, so a partitioning of `df` on the column still serves
-    * it (no extra shuffle). Bounded: partition cardinality.
+  /** Group-replacement MERGE: delete every target row whose `groupCol`
+    * value appears in `groups`, then insert ALL of `df` — the
+    * "replace this document's whole chunk set" semantics a row-keyed
+    * upsert cannot express: a re-ingested doc with FEWER rows leaves
+    * its stale higher-keyed rows behind under [[merge]], and a doc
+    * that flipped from keep to drop leaves every old row. `groups`
+    * may contain keys with no rows in `df` (a pure delete), and the
+    * result may legitimately be EMPTY — that commits as a
+    * schema-preserving 0-row snapshot (see [[overwrite]]), not a
+    * schema-less manifest. Key filters are on `groupCol` and the
+    * delete set is `groups` ([[upsert]]). Replaying the same call is
+    * idempotent by content. Returns the committed version, or -1 when
+    * there is nothing to commit (empty source on a nonexistent table).
     */
-  private def dirStringsOf(df: DataFrame, partitionCol: String): Set[String] =
-    df.select(col(partitionCol)).distinct().select(col(partitionCol).cast("string"))
-      .collect().map(r => dirString(r.getString(0))).toSet
+  def replaceGroups(spark: SparkSession, df: DataFrame, root: String,
+      groupCol: String, groups: DataFrame): Int =
+    upsert(df, root, groupCol, None, None, Some(groups)).version
 
-  /** Partition-pruned MERGE — the production copy-on-write shape the
-    * plain [[merge]] approximates: partitions that appear in the
-    * source, PLUS partitions currently holding a matched key (a key
-    * may move partitions between batches — both homes must rewrite or
-    * the old row would survive the upsert), are read and rewritten;
-    * every other partition's files are carried into the new manifest
-    * UNTOUCHED (same paths, zero I/O). Finding matched-key partitions
-    * costs one column-pruned (key, partition) scan of the prior
-    * snapshot — cheap next to rewriting it. Merge WRITE cost therefore
-    * scales with the update's partition footprint, not table size.
-    *
-    * The scan is skipped when it cannot change the plan: every
-    * partitioned prior entry's dir value is already a source
-    * partition. Source partitions are always in the affected set, so
-    * each of those entries rewrites whatever the scan would return —
-    * the commit is the same, minus its job. A streaming batch into a
-    * table whose only partition is the batch's own date is this case.
-    *
-    * `df` is evaluated more than once (the partition distinct, the
-    * anti-join keys, the rewrite): a caller whose source plan is
-    * costly materializes it first — q93's `mvMaintain` persists its
-    * combine. The anti-join takes the keys as they come: a left-anti
-    * join against repeated keys returns the same rows, and a distinct
-    * would add a shuffle job to every merge. [[mergeBatch]] is the
-    * staged twin that can commit a key-disjoint batch as an append.
-    *
-    * Entries without partition metadata (plain [[append]] writes)
-    * always rewrite. Source and matched partitions compare with the
-    * manifest as Hive dir strings ([[dirString]]), nulls and values
-    * that need escaping included. Same optimistic validation as
-    * [[merge]]: losing the race recomputes against the new snapshot.
-    * Returns -1 when there is nothing to commit (empty source on a
-    * nonexistent table).
-    *
-    * `partitionLocalKeys = true` DECLARES that a key value can only
-    * ever live in the partition its source row carries (true whenever
-    * the key embeds the partition value — q93's `mv_key` =
-    * `date|type` under `event_date` — or the key is otherwise
-    * functionally bound to it). Matched-key partitions are then a
-    * subset of source partitions BY CONSTRUCTION, so the prior-
-    * snapshot key scan is skipped entirely: one fewer Spark job per
-    * merge, and the merge plans from manifest strings alone — the
-    * partition-scoped MERGE shape of the production formats. The
-    * declaration is the caller's contract; a key that silently moved
-    * partitions would leave its old row behind, exactly as a wrong
-    * partition predicate would in any partition-scoped MERGE.
+  /** [[merge]] into a table partitioned on `partitionCol`: the source
+    * stages into Hive-style `<col>=<value>` dirs, each entry carrying
+    * its `p=` value (so a partition predicate prunes it in the scan),
+    * with zone maps on `statsCol`. Which prior files rewrite is decided
+    * per file ([[upsert]]), never by partition value, so a key that
+    * moves partitions between batches leaves no old row behind.
     */
   def mergePartitioned(spark: SparkSession, df: DataFrame, root: String,
-      key: String, partitionCol: String, statsCol: Option[String] = None,
-      partitionLocalKeys: Boolean = false): Int = {
-    val sourceParts = described(spark, "AtomicTable partitions")(dirStringsOf(df, partitionCol))
-    // empty source ⇔ empty distinct-partition set (a null partition
-    // value still yields a row): short-circuit the no-op like
-    // [[merge]] does — without this, an idle caller would publish a
-    // content-identical new version per call (untouched = everything,
-    // staged = nothing), growing the history unboundedly
-    if (sourceParts.isEmpty)
-      return latestVersion(root).getOrElse(-1)
-    // a lost attempt's staged files are never referenced: drop them
-    // before the next attempt stages its own
-    var attempt: Option[Staged] = None
-    commit(root) { head =>
-      attempt.foreach(dropStaged(root, _))
-      head match {
-        case None =>
-          val staged = stage(df, root, Some(partitionCol), statsCol.toSeq)
-          attempt = Some(staged)
-          // nothing to commit — never wedge
-          if (staged.entries.isEmpty) Left(-1) else Right(staged.entries)
-        case Some(v) =>
-          val (untouched, toRewrite) = splitAffected(spark, root, files(root, v), df,
-            key, partitionCol, sourceParts, partitionLocalKeys)
-          val staged = described(spark, "AtomicTable rewrite") {
-            val merged =
-              if (toRewrite.isEmpty) df
-              else readEntries(spark, root, toRewrite)
-                .join(df.select(col(key)), Seq(key), "left_anti")
-                .unionByName(df, allowMissingColumns = true)
-            stage(merged, root, Some(partitionCol), statsCol.toSeq, phase = "rewrite")
-          }
-          attempt = Some(staged)
-          Right(untouched ++ staged.entries)
-      }
-    }
-  }
+      key: String, partitionCol: String, statsCol: Option[String] = None): Int =
+    upsert(df, root, key, Some(partitionCol), statsCol, None).version
 
-  /** The pruning half of [[mergePartitioned]] and [[mergeBatch]]:
-    * split the `prior` entries into those carried over untouched and
-    * those whose rows must be rewritten without the source's keys.
-    * `sourceParts` are the source's partitions as dir strings;
-    * `source` is read only for the matched-key scan, whose partition
-    * values render back to dir strings exactly: each reads as the type
-    * it was written with.
-    */
-  private def splitAffected(spark: SparkSession, root: String, prior: Seq[String],
-      source: DataFrame, key: String, partitionCol: String, sourceParts: Set[String],
-      partitionLocalKeys: Boolean): (Seq[String], Seq[String]) = {
-    val partedPrior = prior.filter(partOf(_).isDefined)
-    // declared partition-local keys, or every partitioned prior entry
-    // already in a source partition: all the entries the scan could
-    // find rewrite anyway (see the scaladoc), so it cannot change the
-    // commit
-    val scanMoot = partitionLocalKeys || partedPrior.forall(partOf(_).exists(sourceParts))
-    val matchedParts: Set[String] =
-      if (scanMoot) Set.empty
-      else described(spark, "AtomicTable key scan") {
-        dirStringsOf(readEntries(spark, root, partedPrior)
-          .join(source.select(col(key)), Seq(key), "left_semi"), partitionCol)
-      }
-    val affected = sourceParts ++ matchedParts
-    prior.partition(e => partOf(e).exists(pv => !affected.contains(pv)))
-  }
-
-  /** [[mergePartitioned]] for a batch small enough to stage first
-    * (a streamed Gold micro-batch, [[Gold.mergeIncremental]]): `df`
-    * is written ONCE, as this table's own partitioned staged files
-    * with zone maps on `statsCol` and a [[KeyFilter]] on `key` per
-    * file, all from the one read-back job [[stage]] runs anyway.
-    * The source partitions are the staged entries' `p=` values, so no
-    * distinct job runs. Then, inside the commit loop, against the
-    * head it is about to replace:
-    *  - APPEND path: every live entry has a filter on `key` and each
-    *    rules out every staged key. No staged key can be in the
-    *    table (a filter has no false negatives), so the anti-join of
-    *    a merge would keep every prior row: the merge's result IS
-    *    head ++ staged. That is published, and no prior file is read
-    *    or rewritten.
-    *  - MERGE path, otherwise (a replayed key, an entry without a
-    *    filter from an older writer, a false positive):
-    *    [[mergePartitioned]]'s pruning with the staged files as the
-    *    source; the prior entries of the affected
-    *    partitions are rewritten without the staged keys (with
-    *    filters, so the next disjoint batch appends again), and the
-    *    staged files join the snapshot as they are — the same rows as
-    *    rewriting prior ∪ batch, with the batch written once.
-    * A lost commit race re-runs the check against the new head; a
-    * lost attempt's rewrite is deleted, so no staged dir is left that
-    * no manifest names.
-    *
-    * Returns the committed version (the head, -1 if none, for an
-    * empty batch) and the rows inserted: the staged rows minus the
-    * prior rows the rewrite dropped, so the batch's new keys when it
-    * holds each key once. Both counts are [[Observation]]s on the
-    * stage and rewrite writes; no job runs to count.
+  /** [[mergePartitioned]] that also reports the rows it inserted (a
+    * streamed Gold micro-batch, [[Gold.mergeIncremental]]).
     */
   private[graft] def mergeBatch(spark: SparkSession, df: DataFrame, root: String,
-      key: String, partitionCol: String, statsCol: Option[String]): BatchCommit = {
-    val staged = new Observation()
-    val batch = stage(counted(df, staged), root, Some(partitionCol), statsCol.toSeq,
-      keyFilter = Some(key))
-    if (batch.entries.isEmpty) return BatchCommit(latestVersion(root).getOrElse(-1), 0L)
-    val dirVals = batch.entries.flatMap(partOf).toSet
-    lazy val source = readEntries(spark, root, batch.entries)
+      key: String, partitionCol: String, statsCol: Option[String]): BatchCommit =
+    upsert(df, root, key, Some(partitionCol), statsCol, None)
+
+  /** The one keyed writer, behind [[merge]], [[replaceGroups]],
+    * [[mergePartitioned]] and [[mergeBatch]]. `df` is staged ONCE as
+    * this table's own files, each with a [[KeyFilter]] on `key`. The
+    * delete set is the staged keys, or `groups` when given (one driver
+    * collect of its keys and their `xxhash64`, the hash the filters
+    * hold). Inside the commit loop, against the head it is about to
+    * replace, the prior files that may hold a deleted key are picked
+    * PER FILE ([[holdingDeletes]]). None picked: no deleted key is in
+    * the table (a filter has no false negatives), so the commit is
+    * head ++ staged, an append that reads no prior file. Otherwise
+    * only the picked files are rewritten, without the deleted keys and
+    * with new filters (at most [[KeyFilter.MaxKeys]] rows a file);
+    * every other file carries over by path. A lost race re-picks
+    * against the new head, and its rewrite is deleted.
+    *
+    * An empty source with an empty delete set commits nothing (the
+    * head, -1 on a nonexistent table). Rowless staged files join the
+    * snapshot only when nothing else is left, as a schema-preserving
+    * 0-row snapshot; otherwise their dir is deleted. Returns the
+    * version and the rows inserted: the staged rows minus the prior
+    * rows the rewrite dropped, both counted by [[Observation]]s on the
+    * writes.
+    */
+  private def upsert(df: DataFrame, root: String, key: String, partitionCol: Option[String],
+      statsCol: Option[String], groups: Option[DataFrame]): BatchCommit = {
+    val spark = df.sparkSession
+    val batch = stage(df, root, partitionCol, statsCol.toSeq, Some(key))
+    val deletes = groups.map { g =>
+      // typed as the table's key, so the hashes are the ones its filters hold
+      val keyCol = col(key).cast(df.schema(key).dataType).as(key)
+      val got = g.select(keyCol, xxhash64(keyCol)).collect().distinct
+      (got.map(_.getLong(1)), spark.createDataFrame(
+        java.util.Arrays.asList(got.map(r => Row(r.get(0))): _*), g.select(keyCol).schema))
+    }
+    val hashes = deletes.fold(batch.keyHashes)(d => Some(d._1))
+    lazy val keys = deletes.fold(readEntries(spark, root, batch.entries).select(col(key)))(_._2)
+    if (batch.rows == 0 && hashes.exists(_.isEmpty)) {
+      dropStaged(root, batch)
+      return BatchCommit(latestVersion(root).getOrElse(-1), 0L)
+    }
     var rewrite: Option[Staged] = None
     var dropped = 0L
+    var published = Seq.empty[String]
     val v = commit(root) { head =>
       rewrite.foreach(dropStaged(root, _))
       rewrite = None
       dropped = 0L
       val prior = headFiles(root, head)
-      if (batch.keyHashes.exists(keysRuledOut(root, prior, key, _)))
-        Right(prior ++ batch.entries)
-      else {
-        val (untouched, toRewrite) = splitAffected(spark, root, prior, source, key,
-          partitionCol, dirVals, partitionLocalKeys = false)
-        if (toRewrite.nonEmpty) {
-          val (read, kept) = (new Observation(), new Observation())
-          rewrite = Some(described(spark, "AtomicTable rewrite") {
-            stage(counted(counted(readEntries(spark, root, toRewrite), read)
-              .join(source.select(col(key)), Seq(key), "left_anti"), kept),
-              root, Some(partitionCol), statsCol.toSeq, Some(key), "rewrite")
-          })
-          dropped = rowsOf(read) - rowsOf(kept)
+      val picked = holdingDeletes(spark, root, prior, key, hashes, keys).toSet
+      if (picked.nonEmpty) {
+        val read = new Observation()
+        val r = described(spark, "AtomicTable rewrite") {
+          stage(counted(readEntries(spark, root, prior.filter(picked)), read)
+            .join(keys, Seq(key), "left_anti"), root, partitionCol, statsCol.toSeq, Some(key),
+            "rewrite", KeyFilter.MaxKeys.toLong)
         }
-        Right(untouched ++ rewrite.fold(Seq.empty[String])(_.entries) ++ batch.entries)
+        rewrite = Some(r)
+        dropped = rowsOf(read) - r.rows
       }
+      val live = prior.filterNot(picked) ++ (rewrite ++ Some(batch)).filter(_.rows > 0).flatMap(_.entries)
+      published = if (live.nonEmpty) live else batch.entries
+      if (picked.isEmpty && batch.rows == 0) Left(head.getOrElse(-1)) else Right(published)
     }
-    BatchCommit(v, rowsOf(staged) - dropped)
+    (rewrite ++ Some(batch)).filterNot(_.entries.exists(published.contains))
+      .foreach(dropStaged(root, _))
+    BatchCommit(v, batch.rows - dropped)
   }
 
-  /** What [[mergeBatch]] committed: the version and the rows it
-    * inserted rather than replaced. */
+  /** What [[upsert]] committed: the version and the rows it inserted
+    * rather than replaced.
+    */
   final case class BatchCommit(version: Int, inserted: Long)
 
-  /** `df` with a row count riding whatever job evaluates it. */
-  private def counted(df: DataFrame, o: Observation): DataFrame =
-    df.observe(o, count(lit(1)).as("rows"))
-
-  /** The count a [[counted]] frame's job saw; a plan that ran no task
-    * (an empty input) reports no metrics, which means zero rows. */
-  private def rowsOf(o: Observation): Long =
-    o.get.getOrElse("rows", 0L).asInstanceOf[Long]
-
-  /** True when every entry's [[KeyFilter]] on `key` rules out every
-    * hash; an entry without one (or with a filter on another column)
-    * might hold any key.
+  /** The `prior` entries that may hold a key of the delete set: each
+    * whose [[KeyFilter]] on `key` claims one of `hashes`, and each
+    * without such a filter (an older writer, a file over the key cap)
+    * that a file-granular key scan finds holding one of `keys`: the
+    * `input_file_name()` of a semi-join against them. The scan runs
+    * only when such entries exist. A filterless file found holding a
+    * key takes the filterless files of its dir with it, so an older
+    * writer's dir moves into the filtered layout in one rewrite
+    * instead of costing a scan on every later commit. With `hashes`
+    * None (a staged file over the key cap) no filter is probed and
+    * every entry is scanned; a found file that matches no scanned
+    * entry picks them all.
     */
-  private def keysRuledOut(root: String, entries: Seq[String], key: String,
-      hashes: Array[Long]): Boolean =
-    entries.forall(e => KeyFilter.read(KeyFilter.sidecar(Paths.get(root, pathOf(e))))
-      .exists(f => f.column == key && !hashes.exists(f.mightContain)))
+  private def holdingDeletes(spark: SparkSession, root: String, prior: Seq[String],
+      key: String, hashes: Option[Array[Long]], keys: DataFrame): Seq[String] = {
+    val filterOf = prior.map(e => e -> hashes.flatMap(_ =>
+      KeyFilter.read(KeyFilter.sidecar(Paths.get(root, pathOf(e)))).filter(_.column == key))).toMap
+    val scanned = prior.filter(filterOf(_).isEmpty)
+    val found: Set[String] =
+      if (scanned.isEmpty) Set.empty
+      else described(spark, "AtomicTable key scan") {
+        readEntries(spark, root, scanned)
+          .select(col(key), input_file_name().as("__file"))
+          .join(keys, Seq(key), "left_semi").select("__file")
+          .queryExecution.toRdd.mapPartitions(_.map(_.getUTF8String(0).toString).toSet.iterator)
+          .collect().map(f => entryPathOf(f).getOrElse(f)).toSet
+      }
+    def dirOf(path: String) = path.substring(0, path.lastIndexOf('/'))
+    val paths = scanned.map(pathOf).toSet
+    val hitDirs = (if (found.subsetOf(paths)) found else paths).map(dirOf)
+    prior.filter(e => filterOf(e).fold(hitDirs(dirOf(pathOf(e))))(f => hashes.get.exists(f.mightContain)))
+  }
 
   /** Bound comparison under the ordering the stats were captured with
     * (the `zs=` ord tag): a numeric-looking STRING column has lexicographic
@@ -1200,64 +1153,4 @@ object AtomicTable {
     if (tryPublish(root, v + 1, staged)) v + 1 else -1
   }
 
-  /** MERGE-shaped upsert on `key`: [[replaceGroups]] keyed on the
-    * source's own keys — matched target rows are replaced by their
-    * source row, unmatched source rows are inserted (copy-on-write
-    * rewrite). Re-running the same merge is idempotent by content.
-    * Returns the committed version, or -1 when there is nothing to
-    * commit (empty source on a nonexistent table).
-    */
-  def merge(spark: SparkSession, df: DataFrame, root: String, key: String): Int =
-    // empty source: the anti-join would keep EVERY target row, i.e. a
-    // full copy-on-write rewrite of the table plus a content-identical
-    // version bump — short-circuit the no-op (append and
-    // Gold.mergeIncremental already do). The key set is empty exactly
-    // when df is, so one df.isEmpty covers both halves of the
-    // replaceGroups guard
-    copyOnWrite(spark, df, root, key, df.select(col(key)).distinct())(df.isEmpty)
-
-  /** Group-replacement MERGE: delete every target row whose `groupCol`
-    * value appears in `groups`, then insert ALL of `df` — the
-    * "replace this document's whole chunk set" semantics a row-keyed
-    * upsert cannot express: a re-ingested doc with FEWER rows leaves
-    * its stale higher-keyed rows behind under [[merge]], and a doc
-    * that flipped from keep to drop leaves every old row. `groups`
-    * may contain keys with no rows in `df` (a pure delete), and the
-    * result may legitimately be EMPTY — that commits as a
-    * schema-preserving 0-row snapshot (see [[overwrite]]), not a
-    * schema-less manifest. Replaying the same call is idempotent by
-    * content. Returns the committed version, or -1 when there is
-    * nothing to commit (empty source on a nonexistent table).
-    */
-  def replaceGroups(spark: SparkSession, df: DataFrame, root: String,
-      groupCol: String, groups: DataFrame): Int = {
-    val g = groups.select(col(groupCol)).distinct()
-    // nothing to delete AND nothing to insert: the anti-join would
-    // rewrite the whole table into an identical snapshot —
-    // short-circuit. (An empty df with NON-empty groups is a
-    // legitimate pure delete and proceeds.)
-    copyOnWrite(spark, df, root, groupCol, g)(g.isEmpty && df.isEmpty)
-  }
-
-  /** The copy-on-write body of [[merge]] and [[replaceGroups]]: new
-    * snapshot = head rows whose `groupCol` value is absent from
-    * `groups` (anti join) ∪ all of `df`. The rewrite is validated
-    * against the head it read: through [[commit]], losing the race
-    * RECOMPUTES it from the new head (a stale copy-on-write must not
-    * clobber a concurrent commit). `noop` is checked per attempt on an
-    * existing table; a first commit stages `df` alone and never
-    * creates a row-less table.
-    */
-  private def copyOnWrite(spark: SparkSession, df: DataFrame, root: String,
-      groupCol: String, groups: DataFrame)(noop: => Boolean): Int =
-    commit(root) {
-      case None =>
-        val staged = stage(df, root, None, Nil).entries
-        if (stagedRowless(spark, root, staged)) Left(-1) else Right(staged)
-      case Some(v) =>
-        if (noop) Left(v)
-        else Right(stage(readVersion(spark, root, v)
-          .join(groups, Seq(groupCol), "left_anti")
-          .unionByName(df, allowMissingColumns = true), root, None, Nil).entries)
-    }
 }

@@ -161,10 +161,11 @@ object Gold {
     * stream), the batch commits as an append and no prior file is
     * read: with no key in common, the upsert's anti-join would keep
     * every prior row, so the append IS the merge. Otherwise (a
-    * replay, a file without a filter, a false positive) it takes the
-    * partition-pruned merge. Returns the committed version (-1 while
-    * nothing is committed) and the number of keys inserted, the
-    * batch's keys that were not in the table.
+    * replay, a false positive) only the files whose filters claim a
+    * batch key are rewritten, and a file without a filter is rewritten
+    * if a key scan finds a batch key in it. Returns the committed
+    * version (-1 while nothing is committed) and the number of keys
+    * inserted, the batch's keys that were not in the table.
     */
   def mergeIncremental(spark: SparkSession, source: DataFrame,
       tableRoot: String): AtomicTable.BatchCommit = {
@@ -200,11 +201,11 @@ object Gold {
     // An empty batch (idle trigger, fully-late data) commits nothing:
     // mergeBatch returns the head (-1 if none) and 0 inserted.
     //
-    // Partition-pruned: an incremental batch touches a handful of
-    // purchase dates — only those partitions rewrite on the merge
-    // path; the rest of the fact table's files carry over untouched.
-    // Stats on the ingestion stamp keep the NEXT run's watermark
-    // manifest-served.
+    // File-granular: a batch that repeats a stored key rewrites only
+    // the files holding it; the rest of the fact table's files carry
+    // over untouched. Partitioned on purchase_date so date predicates
+    // prune, and stats on the ingestion stamp keep the NEXT run's
+    // watermark manifest-served.
     AtomicTable.mergeBatch(spark, firstWriterWins(fresh), tableRoot,
       "transaction_id", "purchase_date", statsCol = Some("ingestion_timestamp"))
   }

@@ -6,10 +6,12 @@ import scala.util.control.NonFatal
 
 /** Bloom filter over one data file's key values, kept as a sidecar
   * beside the file (`.<file>.bloom`), never inline in the manifest
-  * that every commit rewrites. [[AtomicTable.mergeBatch]] reads the
-  * live files' filters to decide whether a staged batch can commit as
-  * a plain append: when every filter rules out every batch key, no
-  * batch key can already be in the table.
+  * that every commit rewrites. Every keyed write of [[AtomicTable]]
+  * reads the live files' filters to pick, per file, the files it must
+  * rewrite: a file whose filter rules out every deleted key holds
+  * none of them and carries over by path, and when every filter rules
+  * them all out, the commit is a plain append. A rowless file's
+  * filter rules out every key.
   *
   * Built and probed on the driver only, from the 64-bit `xxhash64`
   * values of the keys (the stager's read-back job collects them), so
@@ -24,9 +26,9 @@ import scala.util.control.NonFatal
   * rounded up to a power of two) and k = 22 give a false-positive
   * rate of (1 − e^(−kn/m))^k, at most about 2·10⁻⁷ per probe
   * (`KeyFilterSpec` measures it), so a batch of 10³ keys probed
-  * against 35 live files falls to the merge path by chance about once
-  * in 140 batches. A false positive only costs that merge; there are
-  * no false negatives.
+  * against 35 live files rewrites a file by chance about once in 140
+  * batches. A false positive only costs that file's rewrite; there
+  * are no false negatives.
   */
 private[graft] final case class KeyFilter(column: String, words: Array[Long]) {
   private val mask = words.length.toLong * 64 - 1
@@ -47,13 +49,14 @@ private[graft] object KeyFilter {
   val NumHashes = 22
   private val BitsPerKey = 32
   /** A file with more keys gets no filter (its sidecar would cost
-    * every later batch a read of up to 512 KB); its batch and every
-    * batch it stays live for take the merge path.
+    * every later batch a read of up to 512 KB); every keyed write it
+    * stays live for scans it for the deleted keys. Rewrites and
+    * compactions cap their files at this many rows, so each gets one.
     */
   val MaxKeys: Int = 1 << 17
   /** "GKF2"; a sidecar of the double-hashing layout ("GKF1") reads as
-    * no filter, so its file takes the merge path and is rewritten with
-    * a new one.
+    * no filter, so its file is scanned for the deleted keys, and
+    * rewritten with a new one when it holds one.
     */
   private val Magic = 0x474b4632
 

@@ -32,16 +32,16 @@ object EventQueries {
     * mergeable partials: new = old + delta, and only keys PRESENT IN
     * THE DELTA are read back and rewritten (left join from the delta
     * side), so a 100 TB history costs nothing — maintenance work
-    * scales with the DELTA's key/partition footprint, and
-    * AtomicTable.mergePartitioned rewrites only affected event_date
-    * partitions under an atomic commit. The cutoff splits a day
-    * mid-stream so the oracle (full recompute) hash-checks BOTH merge
-    * paths: combine (day 20 spans base and delta) and insert (days
-    * 21+ are delta-only).
+    * scales with the DELTA's key footprint, and
+    * AtomicTable.mergePartitioned rewrites only the MV files whose key
+    * filters claim a delta key, under an atomic commit. The cutoff
+    * splits a day mid-stream so the oracle (full recompute)
+    * hash-checks BOTH merge paths: combine (day 20 spans base and
+    * delta) and insert (days 21+ are delta-only).
     *
     * Split from [[mvRead]] so the bench can attribute cost honestly:
-    * maintenance (staged partition writes + pruned merges — scales
-    * with delta size) vs serving the MV (a pruned scan of a tiny
+    * maintenance (staged partition writes + file-granular merges —
+    * scales with delta size) vs serving the MV (a pruned scan of a tiny
     * aggregate table — scales with MV size). Returns the table root.
     */
   def mvMaintain(s: org.apache.spark.sql.SparkSession, dir: String): String = {
@@ -92,22 +92,12 @@ object EventQueries {
           (col("n_events") + coalesce(col("old_n"), lit(0L))).as("n_events"),
           (col("sum_value") + coalesce(col("old_sum"), lit(0.0))).as("sum_value"))
         .repartition(col("event_date"))
-      // materialize the combine ONCE (MV-scale, like partials — the
-      // cache is released before return): mergePartitioned evaluates
-      // its source several times (partition distinct, key distinct,
-      // final write), and this source's lineage joins against the MV
-      // table itself. An in-memory persist beats the r5-era parquet
-      // checkpoint here: same execute-once guarantee, one fewer write
-      // job (a `tools/ProfileEntry` q93 profile put the staging round
-      // trip at ~0.3 s of the q93a floor). partitionLocalKeys: mv_key
-      // embeds event_date, so the prior-snapshot key scan (another
-      // ~0.3 s job) is skipped — matched partitions are the delta's
-      // partitions by construction.
-      combined.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try
-        AtomicTable.mergePartitioned(s, combined, root, "mv_key", "event_date",
-          partitionLocalKeys = true): Unit
-      finally combined.unpersist(): Unit
+      // mergePartitioned evaluates its source once, into its staged
+      // files, so the combine (whose lineage joins against the MV
+      // table itself) needs no persist; every MV file carries a key
+      // filter, so the merge rewrites only the files holding a combined
+      // day-20 key and runs no key scan
+      AtomicTable.mergePartitioned(s, combined, root, "mv_key", "event_date"): Unit
     } finally partials.unpersist(): Unit
     root
   }

@@ -26,10 +26,9 @@ import graft.gold.AtomicTable
   *
   * Scale note: the gate and the chunker are both map-side column
   * expressions, so per-batch cost is one pass over the batch plus the
-  * merge's copy-on-write. As with [[StreamingDedup]], a production
-  * deployment partitions the chunk store (ingest date) and merges with
-  * [[AtomicTable.mergePartitioned]] so a batch rewrites only its own
-  * partitions.
+  * group replacement, which rewrites only the store files whose
+  * doc_id filters claim a batch doc (as in [[StreamingDedup]]): a
+  * batch of new docs commits as an append.
   */
 object StreamingCuration {
 

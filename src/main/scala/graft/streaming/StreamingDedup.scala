@@ -24,12 +24,11 @@ import graft.gold.AtomicTable
   * anti-join on the batch's own ids — the pair report is identical on
   * first run and on replay.
   *
-  * Scale note: [[AtomicTable.merge]] is a whole-table copy-on-write,
-  * the right semantics but not the right COST for an ever-growing
-  * corpus — a production deployment partitions the corpus/index tables
-  * on ingest date and uses [[AtomicTable.mergePartitioned]], so each
-  * batch rewrites only its own (current-date) partitions while the
-  * commit protocol and this gate's logic stay unchanged.
+  * Scale note: [[AtomicTable.merge]] stages each batch once as the
+  * table's own files with a per-file key filter, and rewrites only the
+  * prior files whose filters claim a batch key (a re-ingested doc's
+  * old file): a batch of new docs commits as an append, so the cost
+  * per batch follows the batch, not the ever-growing corpus.
   */
 object StreamingDedup {
 

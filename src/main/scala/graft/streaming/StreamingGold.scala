@@ -28,8 +28,8 @@ object StreamingGold {
     * filter rules out every batch key, so the upsert could not drop
     * a prior row, and no prior file is read or rewritten. A batch
     * that may repeat a key (a replayed file, a restart that re-runs
-    * its last batch, a false positive) takes the partition-pruned
-    * MERGE, whose result the append equals whenever no key repeats.
+    * its last batch, a false positive) rewrites the files whose
+    * filters claim one of its keys, and only those.
     * Under failure:
     *  - a crash mid-batch leaves no torn table — readers only ever
     *    see the last committed manifest, never half a batch;

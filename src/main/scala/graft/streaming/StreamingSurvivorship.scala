@@ -24,9 +24,9 @@ import graft.gold.AtomicTable
   *
   * Scale: the merge only touches fingerprints PRESENT IN THE BATCH
   * (semi-join fetch of current keepers, batch-sized), never the full
-  * keeper table; at 100 TB the keeper table partitions on a
-  * fingerprint prefix and the same logic rides
-  * [[AtomicTable.mergePartitioned]].
+  * keeper table, and [[AtomicTable.merge]] rewrites only the keeper
+  * files whose key filters claim a displaced fingerprint: a batch
+  * costs the files it touches, not the table.
   */
 object StreamingSurvivorship {
 
@@ -48,20 +48,12 @@ object StreamingSurvivorship {
         .join(batchBest.select(col("fp")).distinct(), Seq("fp"), "left_semi")
       val merged = bestPerFp(current.unionByName(batchBest))
       // version-stable absorption: only DISPLACED keepers write — a
-      // batch of all-worse copies (or a pure replay) commits nothing.
-      // Staged ONCE so the emptiness gate and the merge observe the
-      // SAME materialization: un-staged, the two evaluations would
-      // each re-read the keeper table, and a commit landing between
-      // them could make the gate and the merged rows disagree.
-      // SCOPED staging: this runs once per micro-batch for the
-      // stream's lifetime, so the dir is reclaimed at batch end, not
-      // at JVM exit
-      graft.Staging.checkpointScoped(
-        merged.select(current.columns.map(col).toSeq: _*)
-          .exceptAll(current), "survivor-delta") { changed =>
-        if (!changed.isEmpty)
-          AtomicTable.merge(spark, changed, keeperRoot, "fp"): Unit
-      }
+      // batch of all-worse copies (or a pure replay) stages no row,
+      // and the merge commits nothing for a rowless source. The merge
+      // stages the delta once, so what it tests for rows is what it
+      // commits
+      AtomicTable.merge(spark, merged.select(current.columns.map(col).toSeq: _*)
+        .exceptAll(current), keeperRoot, "fp"): Unit
     } else AtomicTable.merge(spark, batchBest, keeperRoot, "fp"): Unit
   }
 

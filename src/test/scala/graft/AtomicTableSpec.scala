@@ -186,8 +186,7 @@ class AtomicTableSpec extends SparkSpec {
         ("2024-01-02|y", "c", d2)), root, "pd")
     val v0Files = AtomicTable.files(root, 0)
     val v1 = AtomicTable.mergePartitioned(spark,
-      rows(("2024-01-02|x", "B", d2)), root, "k", "pd",
-      partitionLocalKeys = true)
+      rows(("2024-01-02|x", "B", d2)), root, "k", "pd")
     val v1Files = AtomicTable.files(root, v1)
     assert(v0Files.filter(_.contains("pd=2024-01-01")).toSet ===
       v1Files.filter(_.contains("pd=2024-01-01")).toSet)
@@ -211,9 +210,9 @@ class AtomicTableSpec extends SparkSpec {
     // must route both through the correct path regardless of how an
     // intermediate rewrite canonicalized the dir value
     AtomicTable.mergePartitioned(spark, rows(("00123|x", "B", "00123")),
-      root, "k", "pd", partitionLocalKeys = true)
+      root, "k", "pd")
     AtomicTable.mergePartitioned(spark, rows(("00123|x", "C", "00123")),
-      root, "k", "pd", partitionLocalKeys = true)
+      root, "k", "pd")
     val got = AtomicTable.read(spark, root)
       .select(col("k"), col("v")).as[(String, String)].collect().toSeq
     // exactly one row per key — no stale duplicate from a mispruned dir
@@ -480,7 +479,7 @@ class AtomicTableSpec extends SparkSpec {
     AtomicTable.mergePartitioned(spark, source, root, "k", "pd")
     // the lazy source runs for the partition distinct, the anti-join
     // keys and the union; the key scan would have been a fourth run
-    assert(seen.value === 3L * expected.size, seen.value)
+    assert(seen.value === expected.size.toLong, seen.value)
     val got = AtomicTable.read(spark, root)
       .as[(Long, String, java.sql.Date)].collect().toSeq
     assert(got.size === expected.size, got.toString)
@@ -825,6 +824,66 @@ class AtomicTableSpec extends SparkSpec {
     assert(appended(root, after))
     assert(keyValues(root).sorted ===
       ((1 to 4).flatMap(i => Seq(s"a$i" -> "1", s"b$i" -> "1")) ++ Seq("c" -> "2", "d" -> "2")).sorted)
+  }
+
+  test("mergeBatch: a replayed key rewrites only the one file whose filter claims it") {
+    val root = tmpDir("batch-one-file")
+    (0 until 20).foreach(i => mergeBatch(root, batchRows((s"k$i", "1", "2024-01-01"))))
+    val head = AtomicTable.latestVersion(root).get
+    val prior = AtomicTable.files(root, head)
+    assert(prior.size === 20 && prior.forall(hasFilter(root, _)), prior)
+    val v = mergeBatch(root, batchRows(("k7", "2", "2024-01-01"), ("n", "2", "2024-01-01")))
+    val now = AtomicTable.files(root, v)
+    val gone = prior.filterNot(now.contains)
+    assert(gone.size === 1, gone)
+    assert(gone.head === prior.find(e =>
+      spark.read.parquet(entryPath(root, e).toString).select("k").as[String].collect().toSeq == Seq("k7")).get)
+    assert(keyValues(root).sorted ===
+      ((0 until 20).map(i => s"k$i" -> (if (i == 7) "2" else "1")) :+ ("n" -> "2")).sorted)
+  }
+
+  test("keyed writes into partition dirs Hive escapes get filters; a key-disjoint merge appends") {
+    val root = tmpDir("escaped-parts")
+    def rows(t: (Long, String, String)*) = t.toSeq.toDF("k", "v", "p")
+    AtomicTable.mergePartitioned(spark, rows((1L, "a", "x:y"), (2L, "b", "50%"), (3L, "c", "plain")),
+      root, "k", "p")
+    val v0 = AtomicTable.latestVersion(root).get
+    assert(AtomicTable.files(root, v0).forall(hasFilter(root, _)), AtomicTable.files(root, v0))
+    assert(appended(root, AtomicTable.mergePartitioned(spark, rows((4L, "d", "x:y")), root, "k", "p")))
+    AtomicTable.mergePartitioned(spark, rows((2L, "B", "x:y")), root, "k", "p")
+    assert(AtomicTable.read(spark, root).select("k", "v", "p").as[(Long, String, String)]
+      .collect().toSet === Set((1L, "a", "x:y"), (2L, "B", "x:y"), (3L, "c", "plain"), (4L, "d", "x:y")))
+  }
+
+  test("a pure delete leaves no filterless entry: the next key-disjoint merge appends, no key scan") {
+    val root = tmpDir("pure-delete")
+    def rows(ks: Long*) = ks.map(k => (k, s"v$k")).toDF("k", "v")
+    def pureDelete(ks: Long*) = AtomicTable.replaceGroups(spark,
+      Seq.empty[(Long, String)].toDF("k", "v"), root, "k", ks.toDF("k"))
+    def got = AtomicTable.read(spark, root).as[(Long, String)].collect().toSet
+    def mergeAppendsWithoutScan(k: Long): Unit = {
+      val w = RunWitness.attach(spark)
+      val v = try {
+        val v = AtomicTable.merge(spark, rows(k), root, "k")
+        var waited = 0
+        while (w.jobs().exists(_.end < 0) && waited < 5000) { Thread.sleep(50); waited += 50 }
+        v
+      } finally spark.sparkContext.removeSparkListener(w)
+      assert(appended(root, v))
+      assert(!w.jobs().exists(_.desc == "AtomicTable key scan"), w.jobs().map(_.desc))
+    }
+    AtomicTable.merge(spark, rows(1L, 2L, 3L), root, "k")
+    pureDelete(2L)
+    assert(got === Set(1L -> "v1", 3L -> "v3"))
+    mergeAppendsWithoutScan(4L)
+    // deleting every group leaves a 0-row snapshot that keeps its schema
+    pureDelete(1L, 3L, 4L)
+    val emptied = AtomicTable.latestVersion(root).get
+    assert(AtomicTable.read(spark, root).count() === 0)
+    assert(AtomicTable.read(spark, root).schema.fieldNames.toSeq === Seq("k", "v"))
+    assert(AtomicTable.files(root, emptied).forall(hasFilter(root, _)))
+    mergeAppendsWithoutScan(5L)
+    assert(got === Set(5L -> "v5"))
   }
 
   test("recorded staged-dir schemas read the same as footer inference") {
