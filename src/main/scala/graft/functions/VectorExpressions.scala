@@ -293,9 +293,13 @@ object GraftFunctions {
   }
 }
 
-/** `spark.sql.extensions`-style injector. */
+/** `spark.sql.extensions`-style injector: the graft functions and the
+  * [[SinglePartitionSort]] query-stage rule.
+  */
 class GraftExtensions
     extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
+  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftFunctions.functions.foreach(ext.injectFunction)
+    ext.injectQueryStagePrepRule(_ => SinglePartitionSort)
+  }
 }

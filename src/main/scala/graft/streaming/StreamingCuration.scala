@@ -52,8 +52,13 @@ object StreamingCuration {
       // replace-by-doc over the batch's FULL doc set on BOTH stores:
       // the delete side must cover docs with no new rows in that store
       // (a keep→drop flip deletes chunks; drop→keep deletes the old
-      // drop-log row), which is exactly what a row-keyed merge can't do
-      val batchDocs = gated.select(col("doc_id"))
+      // drop-log row), which is exactly what a row-keyed merge can't do.
+      // Collected once into a local frame: both calls take it as their
+      // delete set, and each call's collect of it runs no job
+      val batchDocs = {
+        val ids = gated.select(col("doc_id"))
+        spark.createDataFrame(java.util.Arrays.asList(ids.collect(): _*), ids.schema)
+      }
       val drops = gated.filter(col("gate") =!= "keep")
         .select(col("doc_id"), col("gate").as("drop_reason"))
       AtomicTable.replaceGroups(spark, drops, dropsRoot,

@@ -14,7 +14,8 @@ import graft.RunWitness
   * staging-file round-trips, footer reads and broadcast builds all
   * hide in the gaps), and one line that splits the run's wall into
   * time with a job running, driver-only time and the tail after the
-  * last job.
+  * last job. Each run's jobs are described with the query's name
+  * unless a library call names its own (AtomicTable's steps).
   *
   * Usage: runMain graft.tools.ProfileEntry <query[,query...]> [sfDir] [copies] [repeat]
   * copies > 1 runs against the Bench-style scaled corpus (x10, x30).
@@ -42,8 +43,12 @@ object ProfileEntry {
       val j0 = RunWitness.jitMsTotal(); val g0 = RunWitness.gcMsTotal()
       val t0ms = System.currentTimeMillis()
       val t0 = System.nanoTime()
-      graft.SparkEntry.queries(name)(spark, corpus)
+      val sc = spark.sparkContext
+      val prevDesc = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(name)
+      try graft.SparkEntry.queries(name)(spark, corpus)
         .write.format("noop").mode("overwrite").save()
+      finally sc.setJobDescription(prevDesc)
       val t = (System.nanoTime() - t0) / 1e9
       // listener bus is async — settle before reading the counters
       Thread.sleep(300)

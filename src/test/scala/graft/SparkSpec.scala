@@ -30,6 +30,8 @@ object TestSpark {
       // the library's local I/O: the nio `file:` FileSystem and the
       // FileSystem-based streaming checkpoint manager (see GraftSession)
       .config(GraftSession.localIo)
+      // mirrors GraftSession: the graft functions and query-stage rule
+      .config("spark.sql.extensions", classOf[graft.functions.GraftExtensions].getName)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
   }
@@ -39,6 +41,25 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+  /** `body`'s result and the number of Spark jobs it started, counted
+    * by a [[RunWitness]]. A marker job after `body` flushes the
+    * listener bus, which delivers events in order.
+    */
+  def jobsOf[T](body: => T): (T, Int) = {
+    val w = RunWitness.attach(spark)
+    try {
+      val out = body
+      val sc = spark.sparkContext
+      val prev = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription("jobsOf marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(prev)
+      var waited = 0
+      while (!w.jobs().exists(j => j.desc == "jobsOf marker" && j.end >= 0) && waited < 10000) {
+        Thread.sleep(20); waited += 20
+      }
+      (out, w.jobs().count(_.desc != "jobsOf marker"))
+    } finally spark.sparkContext.removeSparkListener(w)
+  }
   /** `body` with the session confs `kv` set, the prior values restored after. */
   def withConfs[T](kv: (String, String)*)(body: => T): T = {
     val prior = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
