@@ -52,9 +52,9 @@ object Staging {
     import java.nio.file.Files
     if (Files.isDirectory(p)) {
       // Files.list holds an open directory stream until close() — in
-      // the per-micro-batch checkpointScoped path an unclosed stream
-      // leaks one fd per directory per batch until the process hits
-      // ulimit (the exit-hook path never noticed, it dies anyway)
+      // the per-micro-batch scope path an unclosed stream leaks one fd
+      // per directory per batch until the process hits ulimit (the
+      // exit-hook path never noticed, it dies anyway)
       val s = Files.list(p)
       try s.forEach(deleteRecursively) finally s.close()
     }
@@ -152,7 +152,7 @@ object Staging {
   }
 
   /** A parquet file's record count, from its footer: no Spark job. */
-  private[graft] def footerRows(p: java.nio.file.Path): Long = {
+  private def footerRows(p: java.nio.file.Path): Long = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(p.toUri), new org.apache.hadoop.conf.Configuration())
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
@@ -201,14 +201,14 @@ object Staging {
     else stagedSort(df, tag)(keys: _*)
 
   /** Run `body` with a checkpoint-compatible stager whose EVERY staged
-    * dir is deleted when `body` returns — the multi-stage sibling of
-    * [[checkpointScoped]] for call paths that stage internally (e.g.
-    * [[graft.ext.Dedup.incrementalDupPairs]] staging its candidate
-    * pairs) but are fully consumed inside a per-micro-batch block. A
-    * streaming sink calling such a path through the plain
+    * dir is deleted when `body` returns, for call paths that stage
+    * (directly, or internally as [[graft.ext.Dedup.incrementalDupPairs]]
+    * stages its candidate pairs) but are fully consumed inside a
+    * per-micro-batch block. A streaming sink staging through the plain
     * [[checkpoint]] would leak one temp dir per batch for the process
-    * lifetime; through `scope` the batch reclaims them all. Frames
-    * read from scope-staged dirs must not escape `body`.
+    * lifetime (the exit hook reaps them only at JVM exit); through
+    * `scope` the batch reclaims them all. Frames read from scope-staged
+    * dirs must not escape `body`.
     */
   def scope[A](body: ((DataFrame, String) => DataFrame) => A): A = {
     val dirs = scala.collection.mutable.ListBuffer[java.nio.file.Path]()
@@ -219,18 +219,5 @@ object Staging {
     }
     try body(stager)
     finally dirs.synchronized(dirs.toList).foreach(release)
-  }
-
-  /** [[checkpoint]] with a bounded lifetime: the staged dir is deleted
-    * as soon as `use` returns, not at JVM exit. For REPEATED staging
-    * in a long-lived process (a per-micro-batch delta in a streaming
-    * sink) the exit-hook variant accumulates one dir per call for the
-    * process lifetime; this one holds exactly one at a time. The
-    * staged frame must be fully consumed inside `use` — the files are
-    * gone afterwards.
-    */
-  def checkpointScoped[A](df: DataFrame, tag: String)(use: DataFrame => A): A = {
-    val (dir, staged) = stageDir(df, tag)
-    try use(staged) finally release(dir)
   }
 }

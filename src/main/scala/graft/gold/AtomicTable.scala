@@ -1,18 +1,24 @@
 package graft.gold
 
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.internal.io.FileCommitProtocol
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.classic.ClassicConversions
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.{BasicWriteJobStatsTracker, FileFormatWriter,
+  HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, NumericType, StringType, StructField, StructType}
+import org.apache.spark.util.SerializableConfiguration
 import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.BasicFileAttributes
 import scala.util.control.NonFatal
-import graft.Staging.{counted, footerRows, rowsOf}
+import graft.Staging.{counted, rowsOf}
 
 /** Minimal ACID table format: snapshot isolation via versioned
   * manifests and an atomic-rename commit, the mechanism the
@@ -47,7 +53,10 @@ import graft.Staging.{counted, footerRows, rowsOf}
   *
   * Protocol:
   *  - WRITE: stage data files (never visible to readers), then publish
-  *    a manifest for version latest+1 with an ATOMIC file move. Two
+  *    a manifest for version latest+1 with an ATOMIC file move. The
+  *    stage is one Spark write job whose tasks also gather each file's
+  *    row count, zone maps and key hashes ([[FileStats]]), so no job
+  *    reads the files back before the commit. Two
   *    concurrent writers race on the same version name — the loser's
   *    move fails (target exists), it re-reads the latest version and
   *    retries one higher, so every commit lands exactly once and no
@@ -61,10 +70,11 @@ import graft.Staging.{counted, footerRows, rowsOf}
   *  - MERGE (upsert): new snapshot = target rows whose key is absent
   *    from the delete set (anti join) ∪ source rows, written by ONE
   *    staged, file-granular writer ([[upsert]]): the source is staged
-  *    once with a key filter per file, and a commit rewrites only the
-  *    live files that may hold a deleted key (their filter claims
-  *    one, or a key scan finds one in a file without a filter); every
-  *    other file carries over by path. A commit costs the files it
+  *    once with a key filter per file (deduplicated on the key when
+  *    the caller asks and a key hash repeats), and a commit rewrites
+  *    only the live files that may hold a deleted key (their filter
+  *    claims one, or a key scan finds one in a file without a filter);
+  *    every other file carries over by path. A commit costs the files it
   *    touches, not the table.
   *
   * Old versions stay readable (time travel) until a vacuum removes
@@ -292,33 +302,47 @@ object AtomicTable {
     * dir name (Spark writes an empty string as [[NullPartDir]], so it
     * reads back as null). `df`'s schema is recorded beside the files
     * ([[SchemaRecord]]). A write that produced no file leaves no dir
-    * behind. The row count rides the write as an [[Observation]].
+    * behind.
     *
-    * Every column in `statsCols` gets per-file `zs=` min/max zone maps
-    * (what [[scanWhere]] prunes with), and `keyFilter` a per-file
-    * [[KeyFilter]] sidecar: ONE shuffle-free read-back job
-    * ([[FileStats]]) covers every file, every stats column and the
-    * key hashes (a production writer would lift the same values from
-    * the parquet footers the write already produced). The ordering tag
-    * comes from `df`'s schema, "num" for numeric types and "str"
-    * otherwise, so the scan compares bounds under the SAME ordering
-    * the stats were captured with. A rowless write reads nothing back:
-    * its files hold no key, so each gets a filter that rules out every
-    * key. `phase` names the write job, and `maxRows` > 0 caps the rows
-    * of a file.
+    * ONE Spark job (more only when `df`'s own plan shuffles): `df`'s
+    * plan goes straight to Spark's file writer with a [[FileStats]]
+    * tracker beside the basic one, so the tasks that write the files
+    * also count each file's rows, take its `zs=` min/max on every
+    * column of `statsCols` (what [[scanWhere]] prunes with) and, with
+    * `keyFilter`, hash its keys for a [[KeyFilter]] sidecar; nothing is
+    * read back. The ordering tag comes from `df`'s schema, "num" for
+    * numeric types and "str" otherwise, so the scan compares bounds
+    * under the SAME ordering the stats were captured with. A rowless
+    * file's filter rules out every key. `phase` names the write job,
+    * and `maxRows` > 0 caps the rows of a file.
     */
   private def stage(df: DataFrame, root: String, partitionCol: Option[String],
       statsCols: Seq[String], keyFilter: Option[String] = None,
       phase: String = "stage", maxRows: Long = 0L): Staged = {
-    val spark = df.sparkSession
+    val spark = ClassicConversions.castToImpl(df.sparkSession)
     val rel = s"_staged/${java.util.UUID.randomUUID()}"
-    val counter = new Observation()
+    val out = Paths.get(root, rel).toAbsolutePath.toString
+    val qe = df.queryExecution
+    val plan = qe.executedPlan
+    val resolver = spark.sessionState.conf.resolver
+    def attr(c: String) = plan.output.find(a => resolver(a.name, c)).getOrElse(
+      throw new IllegalArgumentException(s"no column $c among ${plan.output.map(_.name).mkString(", ")}"))
+    val partCols = partitionCol.map(attr).toSeq
+    val statAttrs = statsCols.map(attr)
+    val stats = new FileStats(plan.output.filterNot(partCols.contains), partCols, statAttrs,
+      keyFilter.map(attr), spark.sessionState.conf.sessionLocalTimeZone)
+    val options = if (maxRows > 0) Map("maxRecordsPerFile" -> maxRows.toString) else Map.empty[String, String]
+    val conf = spark.sessionState.newHadoopConfWithOptions(options)
+    val committer = FileCommitProtocol.instantiate(spark.sessionState.conf.fileCommitProtocolClass,
+      java.util.UUID.randomUUID().toString, out)
     described(spark, s"AtomicTable $phase") {
-      val w = counted(df, counter).write
-      val capped = if (maxRows > 0) w.option("maxRecordsPerFile", maxRows) else w
-      partitionCol.fold(capped)(capped.partitionBy(_)).parquet(s"$root/$rel")
+      SQLExecution.withNewExecutionId(qe, Some(s"AtomicTable $phase")) {
+        FileFormatWriter.write(spark, plan, new ParquetFileFormat(), committer,
+          FileFormatWriter.OutputSpec(out, Map.empty, plan.output), conf, partCols, None,
+          Seq(new BasicWriteJobStatsTracker(new SerializableConfiguration(conf),
+            BasicWriteJobStatsTracker.metrics), stats), options)
+      }
     }
-    val rows = rowsOf(counter)
     def partFiles(dir: java.nio.file.Path): Seq[String] = listDir(dir)(
       _.map(_.getFileName.toString)
         .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).toSeq)
@@ -338,38 +362,28 @@ object AtomicTable {
       return none
     }
     Files.write(Paths.get(root, rel, SchemaRecord), df.schema.json.getBytes("UTF-8"))
-    if (rows == 0) {
-      keyFilter.foreach(k => entries.foreach(e =>
-        KeyFilter.write(KeyFilter.sidecar(Paths.get(root, pathOf(e))), KeyFilter.build(k, Nil))))
-      return Staged(rel, entries, 0L, keyFilter.map(_ => Array.empty[Long]))
-    }
-    if (statsCols.isEmpty && keyFilter.isEmpty) return Staged(rel, entries, rows, None)
-    val readSchema = df.select((statsCols ++ keyFilter).distinct.map(col): _*).schema
-    val perFile: Map[String, FileStats.Stats] = described(spark, "AtomicTable stats + filters") {
-      FileStats.collect(readEntries(spark, root, entries), statsCols, keyFilter)
-    }.flatMap { case (f, stats) => entryPathOf(f).map(_ -> stats) }
+    val perFile = entries.map(e => e -> stats.files.getOrElse(pathOf(e).stripPrefix(s"$rel/"),
+      throw new IllegalStateException(s"the write reported no stats for ${pathOf(e)}"))).toMap
+    val rows = perFile.values.map(_.rows).sum
     // a plain write's first task writes its file even without a row;
     // beside files with rows it serves no reader, and kept it would be
     // a filterless entry every later keyed write scans: it is left out
-    val (live, empty) = entries.partition(e => perFile.contains(pathOf(e)) ||
-      footerRows(Paths.get(root, pathOf(e))) > 0)
+    val (live, empty) = entries.partition(e => rows == 0 || perFile(e).rows > 0)
     empty.foreach(e => Files.delete(Paths.get(root, pathOf(e))))
-    def zoneMaps(stats: FileStats.Stats): Seq[String] =
-      statsCols.zip(readSchema).zip(stats.bounds).flatMap { case ((c, field), b) =>
-        val ord = if (field.dataType.isInstanceOf[NumericType]) "num" else "str"
+    def zoneMaps(s: FileStats.Stats): Seq[String] =
+      statsCols.zip(statAttrs).zip(s.bounds).flatMap { case ((c, a), b) =>
+        val ord = if (a.dataType.isInstanceOf[NumericType]) "num" else "str"
         b.map { case (mn, mx) => s"zs=${enc(c)},$ord,${enc(mn)},${enc(mx)}" }
       }
-    // a file the read-back did not match gets no filter: an empty one
-    // would be a false negative
-    val hashes = live.map(e => perFile.get(pathOf(e)).flatMap(_.keyHashes))
+    // a file over the key cap gets no filter: an empty one would be a
+    // false negative
+    val hashes = live.map(perFile(_).keyHashes)
     keyFilter.foreach(k => live.zip(hashes).foreach {
       case (e, Some(hs)) =>
         KeyFilter.write(KeyFilter.sidecar(Paths.get(root, pathOf(e))), KeyFilter.build(k, hs))
       case _ =>
     })
-    Staged(rel,
-      live.map(e => (e +: perFile.get(pathOf(e)).fold(Seq.empty[String])(zoneMaps)).mkString("\t")),
-      rows,
+    Staged(rel, live.map(e => (e +: zoneMaps(perFile(e))).mkString("\t")), rows,
       if (keyFilter.isDefined && hashes.forall(_.isDefined)) Some(hashes.flatten.flatten.toArray)
       else None)
   }
@@ -572,11 +586,14 @@ object AtomicTable {
     upsert(df, root, key, Some(partitionCol), statsCol, None).version
 
   /** [[mergePartitioned]] that also reports the rows it inserted (a
-    * streamed Gold micro-batch, [[Gold.mergeIncremental]]).
+    * streamed Gold micro-batch, [[Gold.mergeIncremental]]). With a
+    * `firstWriter` ordering, a key that repeats within `df` keeps only
+    * its first row under that ordering ([[upsert]]).
     */
   private[graft] def mergeBatch(spark: SparkSession, df: DataFrame, root: String,
-      key: String, partitionCol: String, statsCol: Option[String]): BatchCommit =
-    upsert(df, root, key, Some(partitionCol), statsCol, None)
+      key: String, partitionCol: String, statsCol: Option[String],
+      firstWriter: Seq[Column] = Nil): BatchCommit =
+    upsert(df, root, key, Some(partitionCol), statsCol, None, firstWriter)
 
   /** The one keyed writer, behind [[merge]], [[replaceGroups]],
     * [[mergePartitioned]] and [[mergeBatch]]. `df` is staged ONCE as
@@ -593,18 +610,41 @@ object AtomicTable {
     * every other file carries over by path. A lost race re-picks
     * against the new head, and its rewrite is deleted.
     *
+    * With a `firstWriter` ordering the source is deduplicated on
+    * `key`: each key keeps its first row under the ordering. The
+    * source is staged as it is, in files of at most
+    * [[KeyFilter.MaxKeys]] rows, so every file has its key hashes, and
+    * only when some hash repeats (a repeated key, or two null keys) is
+    * the window run, over the staged files, into a second staged dir
+    * that replaces the first. Equal keys hash alike, so distinct hashes
+    * mean distinct keys, every row of which the window would keep: a
+    * batch of distinct keys costs no shuffle.
+    *
     * An empty source with an empty delete set commits nothing (the
     * head, -1 on a nonexistent table). Rowless staged files join the
     * snapshot only when nothing else is left, as a schema-preserving
     * 0-row snapshot; otherwise their dir is deleted. Returns the
-    * version and the rows inserted: the staged rows minus the prior
-    * rows the rewrite dropped, both counted by [[Observation]]s on the
-    * writes.
+    * version and the rows inserted: the staged rows, as the write
+    * counted them ([[FileStats]]), minus the prior rows the rewrite
+    * dropped, counted by an [[Observation]] on its read.
     */
   private def upsert(df: DataFrame, root: String, key: String, partitionCol: Option[String],
-      statsCol: Option[String], groups: Option[DataFrame]): BatchCommit = {
+      statsCol: Option[String], groups: Option[DataFrame],
+      firstWriter: Seq[Column] = Nil): BatchCommit = {
     val spark = df.sparkSession
-    val batch = stage(df, root, partitionCol, statsCol.toSeq, Some(key))
+    val cap = if (firstWriter.isEmpty) 0L else KeyFilter.MaxKeys.toLong
+    val staged = stage(df, root, partitionCol, statsCol.toSeq, Some(key), maxRows = cap)
+    val batch =
+      if (firstWriter.isEmpty || staged.keyHashes.exists(allDistinct)) staged
+      else {
+        val rn = "__graft_first_writer"
+        val first = readEntries(spark, root, staged.entries)
+          .withColumn(rn, row_number().over(Window.partitionBy(col(key)).orderBy(firstWriter: _*)))
+          .filter(col(rn) === 1).drop(rn)
+        val deduped = stage(first, root, partitionCol, statsCol.toSeq, Some(key), "dedup", cap)
+        dropStaged(root, staged)
+        deduped
+      }
     val deletes = groups.map { g =>
       // typed as the table's key, so the hashes are the ones its filters hold
       val keyCol = col(key).cast(df.schema(key).dataType).as(key)
@@ -650,6 +690,13 @@ object AtomicTable {
     * rather than replaced.
     */
   final case class BatchCommit(version: Int, inserted: Long)
+
+  /** True iff no hash repeats in `hashes`. */
+  private def allDistinct(hashes: Array[Long]): Boolean = {
+    val sorted = hashes.clone()
+    java.util.Arrays.sort(sorted)
+    (1 until sorted.length).forall(i => sorted(i) != sorted(i - 1))
+  }
 
   /** The `prior` entries that may hold a key of the delete set: each
     * whose [[KeyFilter]] on `key` claims one of `hashes`, and each

@@ -1,7 +1,6 @@
 package graft.gold
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
@@ -122,18 +121,14 @@ object Gold {
     else AtomicTable.read(spark, path).select(schema.fieldNames.toIndexedSeq.map(col): _*)
   }
 
-  /** First-writer-wins dedup WITHIN a batch on the declared unique
-    * key (deterministic tiebreak: earliest ingestion stamp, then
-    * product and amount). Across batches the rule is the upsert's:
-    * the newer batch's row replaces the stored one.
+  /** First-writer-wins WITHIN a batch on the declared unique key: the
+    * ordering whose first row a repeated `transaction_id` keeps
+    * (deterministic tiebreak: earliest ingestion stamp, then product
+    * and amount). Across batches the rule is the upsert's: the newer
+    * batch's row replaces the stored one.
     */
-  private def firstWriterWins(df: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("transaction_id"))
-      .orderBy(col("ingestion_timestamp"), col("product_id"),
-        col("final_amount"))
-    df.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).drop("rn")
-  }
+  private val firstWriter =
+    Seq(col("ingestion_timestamp"), col("product_id"), col("final_amount"))
 
   /** K5 as a transactional MERGE, the fact table's one writer (the
     * batch pipeline's fact step and every streamed micro-batch):
@@ -143,29 +138,35 @@ object Gold {
     *     micro-batch's current_timestamp split across file-source
     *     triggers) must survive, and the upsert absorbs the boundary
     *     row already stored;
-    *  2. [[firstWriterWins]] within the batch;
-    *  3. publish via [[AtomicTable.mergeBatch]] on `transaction_id` —
-    *     the `unique_key` the reference declares but never enforces
-    *     (`fct_purchases.sql:5-7`, its ids collide by construction,
-    *     `producer.py:127,146`) becomes a real upsert guarantee with
-    *     an atomic snapshot commit: re-running a batch (retry,
-    *     backfill, crash replay) replaces matched facts instead of
-    *     duplicating them, a newer row for a stored id replaces it,
-    *     and readers only ever see complete snapshots. Files a killed
-    *     attempt staged but never committed are named by no manifest,
-    *     so no reader sees them.
+    *  2. stage the filtered batch as the table's own files, with no
+    *     window: the writing tasks hash each file's keys
+    *     ([[AtomicTable.mergeBatch]]);
+    *  3. [[firstWriter]]-wins within the batch, only when a key hash
+    *     repeats (a repeated id, or two null ids): the window re-stages
+    *     the staged files. Distinct hashes mean distinct ids, which the
+    *     window would all keep;
+    *  4. publish on `transaction_id` — the `unique_key` the reference
+    *     declares but never enforces (`fct_purchases.sql:5-7`, its ids
+    *     collide by construction, `producer.py:127,146`) becomes a real
+    *     upsert guarantee with an atomic snapshot commit: re-running a
+    *     batch (retry, backfill, crash replay) replaces matched facts
+    *     instead of duplicating them, a newer row for a stored id
+    *     replaces it, and readers only ever see complete snapshots.
+    *     Files a killed attempt staged but never committed are named by
+    *     no manifest, so no reader sees them.
     *
-    * The deduped batch is evaluated once, into the table's own staged
-    * files with a per-file key Bloom filter. When every live file's
-    * filter rules out every batch key (new purchases, the steady
-    * stream), the batch commits as an append and no prior file is
-    * read: with no key in common, the upsert's anti-join would keep
-    * every prior row, so the append IS the merge. Otherwise (a
-    * replay, a false positive) only the files whose filters claim a
-    * batch key are rewritten, and a file without a filter is rewritten
-    * if a key scan finds a batch key in it. Returns the committed
-    * version (-1 while nothing is committed) and the number of keys
-    * inserted, the batch's keys that were not in the table.
+    * The batch is evaluated once, into the staged files, each with a
+    * key Bloom filter. When every live file's filter rules out every
+    * batch key (new purchases, the steady stream), the batch commits as
+    * an append and no prior file is read: with no key in common, the
+    * upsert's anti-join would keep every prior row, so the append IS
+    * the merge. Such a batch is ONE Spark job, the stage write.
+    * Otherwise (a replay, a false positive) only the files whose
+    * filters claim a batch key are rewritten, and a file without a
+    * filter is rewritten if a key scan finds a batch key in it. Returns
+    * the committed version (-1 while nothing is committed) and the
+    * number of keys inserted, the batch's keys that were not in the
+    * table.
     */
   def mergeIncremental(spark: SparkSession, source: DataFrame,
       tableRoot: String): AtomicTable.BatchCommit = {
@@ -206,7 +207,7 @@ object Gold {
     // over untouched. Partitioned on purchase_date so date predicates
     // prune, and stats on the ingestion stamp keep the NEXT run's
     // watermark manifest-served.
-    AtomicTable.mergeBatch(spark, firstWriterWins(fresh), tableRoot,
-      "transaction_id", "purchase_date", statsCol = Some("ingestion_timestamp"))
+    AtomicTable.mergeBatch(spark, fresh, tableRoot, "transaction_id", "purchase_date",
+      statsCol = Some("ingestion_timestamp"), firstWriter = firstWriter)
   }
 }

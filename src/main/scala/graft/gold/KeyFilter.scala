@@ -14,11 +14,11 @@ import scala.util.control.NonFatal
   * filter rules out every key.
   *
   * Built and probed on the driver only, from the 64-bit `xxhash64`
-  * values of the keys (the stager's read-back job collects them), so
-  * the filter adds no Spark job. Bit i of a key with hash h is
-  * fmix64(h + i·φ) mod m (φ the 64-bit golden ratio, fmix64 murmur3's
-  * finalizer, m a power of two): each probe remixes the hash, so the
-  * k bits of a key are independent draws. Double hashing, h + i·h2,
+  * values of the keys (the tasks that write the file hash them,
+  * [[FileStats]]), so the filter adds no Spark job. Bit i of a key
+  * with hash h is fmix64(h + i·φ) mod m (φ the 64-bit golden ratio,
+  * fmix64 murmur3's finalizer, m a power of two): each probe remixes
+  * the hash, so the k bits of a key are independent draws. Double hashing, h + i·h2,
   * allows only about m²/2 bit patterns, a false-positive floor near
   * 2n/m².
   *

@@ -46,9 +46,10 @@ object Silver {
     * an unstable source (a Kafka batch read with endingOffsets=latest)
     * the two actions can even resolve different offset ranges, making
     * the valid/DLQ split inconsistent. Callers needing one consistent
-    * snapshot stage the RAW feed first (the Pipeline does —
-    * `graft.Staging.checkpoint` before the split) or consume both
-    * sides inside one foreachBatch (the streaming gate does).
+    * snapshot stage the RAW feed first (`graft.Staging.checkpoint`
+    * before the split), consume both sides inside one foreachBatch
+    * (the streaming gate does), or build the feed on the driver (the
+    * Pipeline's generated envelopes are one snapshot already).
     * Returns (valid typed rows, quarantine rows).
     */
   def parseWithQuarantine(raw: DataFrame,

@@ -177,49 +177,46 @@ object Pipeline {
       // step on any unparsed row) punished the whole pipeline for one
       // corrupt producer message.
       //
-      // stage the raw feed ONCE (SCOPED — reclaimed at step end, so a
-      // scheduler loop calling run() repeatedly doesn't accumulate one
-      // raw copy per run until JVM exit): the valid and DLQ writes are
-      // two separate actions, and without the stage each would re-scan
-      // (and over a Kafka batch source, possibly re-RESOLVE) the feed
-      // — the split must be computed over one consistent snapshot
-      graft.Staging.checkpointScoped(
+      // the raw feed is built on the driver (the generator's envelopes
+      // plus rawExtra), so the valid and DLQ writes, two separate
+      // actions, split one consistent snapshot without staging it (a
+      // feed read from an unstable source would need a stage first,
+      // see Silver.parseWithQuarantine)
+      //
+      // stamp = event time for valid rows (deterministic re-runs), but
+      // a fully-unparseable payload HAS no event time — fall back to
+      // the run's wall-clock stamp so the DLQ's quarantined_at is never
+      // null (it is the triage/retention key)
+      val (valid, quarantine) = Silver.parseWithQuarantine(
         raw.select(col("value").cast("string").as("value")),
-        "silver-raw") { rawStaged =>
-        // stamp = event time for valid rows (deterministic re-runs),
-        // but a fully-unparseable payload HAS no event time — fall
-        // back to the run's wall-clock stamp so the DLQ's
-        // quarantined_at is never null (it is the triage/retention key)
-        val (valid, quarantine) = Silver.parseWithQuarantine(
-          rawStaged, ingestionTs = coalesce(col("data.transaction_time"), runStamp))
-        // a side that collapsed to a zero-task plan (e.g. every
-        // envelope quarantined → empty valid write) finishes with an
-        // EMPTY metrics map — no tasks ran the observe operator, which
-        // can only mean zero rows, so default the count rather than
-        // throw
-        def rows(o: org.apache.spark.sql.Observation): Long =
-          o.get.getOrElse("n_rows", 0L).asInstanceOf[Long]
-        val nSilver = writeOnce(s"$silverPath/_runs/$runId.done") {
-          val obs = new org.apache.spark.sql.Observation()
-          Silver.writeSilver(
-            valid.observe(obs, count(lit(1)).as("n_rows")), silverPath)
-          rows(obs)
-        }
-        // unconditional write + Observation: one job yields both the
-        // DLQ rows and their count — not a count() pass plus a write
-        // pass each re-parsing the feed. A healthy run leaves an EMPTY
-        // footerless parquet dir here — consumers read it through the
-        // schema-explicit Silver.readQuarantine, like readSilver
-        val nDlq = writeOnce(
-            s"${cfg.lakeDir}/silver/quarantine/_runs/$runId.done") {
-          val obsQ = new org.apache.spark.sql.Observation()
-          quarantine.observe(obsQ, count(lit(1)).as("n_rows"))
-            .write.mode(SaveMode.Append)
-            .parquet(s"${cfg.lakeDir}/silver/quarantine")
-          rows(obsQ)
-        }
-        (nSilver, nDlq)
+        ingestionTs = coalesce(col("data.transaction_time"), runStamp))
+      // a side that collapsed to a zero-task plan (e.g. every
+      // envelope quarantined → empty valid write) finishes with an
+      // EMPTY metrics map — no tasks ran the observe operator, which
+      // can only mean zero rows, so default the count rather than
+      // throw
+      def rows(o: org.apache.spark.sql.Observation): Long =
+        o.get.getOrElse("n_rows", 0L).asInstanceOf[Long]
+      val nSilver = writeOnce(s"$silverPath/_runs/$runId.done") {
+        val obs = new org.apache.spark.sql.Observation()
+        Silver.writeSilver(
+          valid.observe(obs, count(lit(1)).as("n_rows")), silverPath)
+        rows(obs)
       }
+      // unconditional write + Observation: one job yields both the
+      // DLQ rows and their count — not a count() pass plus a write
+      // pass each re-parsing the feed. A healthy run leaves an EMPTY
+      // footerless parquet dir here — consumers read it through the
+      // schema-explicit Silver.readQuarantine, like readSilver
+      val nDlq = writeOnce(
+          s"${cfg.lakeDir}/silver/quarantine/_runs/$runId.done") {
+        val obsQ = new org.apache.spark.sql.Observation()
+        quarantine.observe(obsQ, count(lit(1)).as("n_rows"))
+          .write.mode(SaveMode.Append)
+          .parquet(s"${cfg.lakeDir}/silver/quarantine")
+        rows(obsQ)
+      }
+      (nSilver, nDlq)
     }
     val silver = Silver.readSilver(spark, silverPath)
 

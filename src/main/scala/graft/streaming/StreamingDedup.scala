@@ -52,7 +52,7 @@ object StreamingDedup {
   def processBatch(batch: DataFrame, corpusRoot: String, indexRoot: String,
       pairsRoot: String, threshold: Double = 0.5): Unit = {
     val spark = batch.sparkSession
-    // SCOPED staging (the checkpointScoped rationale): the batch, its
+    // SCOPED staging (Staging.scope): the batch, its
     // band index, and the pair search's internal candidate frame are
     // staged per micro-batch for the stream's lifetime — through the
     // default JVM-exit stager they would leak one temp dir per batch.

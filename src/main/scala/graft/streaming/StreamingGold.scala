@@ -8,7 +8,8 @@ import graft.gold.Gold
 /** Streaming → Gold with the honest unique_key semantics: per
   * micro-batch, `foreachBatch` runs the SAME incremental logic the
   * batch pipeline uses (watermark filter + first-writer-wins dedup on
-  * the unique key) and commits the survivors atomically — i.e. the
+  * the unique key when an id repeats) and commits the survivors
+  * atomically — i.e. the
   * reference's dbt incremental model as a continuously-running query,
   * with the dedup its `unique_key` promises but never enforces.
   *
@@ -21,15 +22,18 @@ object StreamingGold {
   /** Streaming → Gold as ATOMIC SNAPSHOT COMMITS: each micro-batch
     * publishes through [[Gold.mergeIncremental]] →
     * [[graft.gold.AtomicTable.mergeBatch]] on the unique key.
-    * The batch's source plan (file scan, JSON parse, watermark filter,
-    * dedup window) runs once, into the table's own staged files, each
-    * with a Bloom filter on `transaction_id`. A batch of new purchases
-    * (the steady state) commits as an APPEND: every live file's
-    * filter rules out every batch key, so the upsert could not drop
-    * a prior row, and no prior file is read or rewritten. A batch
-    * that may repeat a key (a replayed file, a restart that re-runs
-    * its last batch, a false positive) rewrites the files whose
-    * filters claim one of its keys, and only those.
+    * The batch's source plan (file scan, JSON parse, watermark filter)
+    * runs once, into the table's own staged files, in ONE Spark job
+    * whose tasks also hash each file's keys for its Bloom filter on
+    * `transaction_id` and take its zone maps. Only a batch in which an
+    * id repeats runs the first-writer-wins window, over its staged
+    * files. A batch of new purchases (the steady state) commits as an
+    * APPEND: every live file's filter rules out every batch key, so
+    * the upsert could not drop a prior row, and no prior file is read
+    * or rewritten; it costs that one job. A batch that may repeat a
+    * stored key (a replayed file, a restart that re-runs its last
+    * batch, a false positive) rewrites the files whose filters claim
+    * one of its keys, and only those.
     * Under failure:
     *  - a crash mid-batch leaves no torn table — readers only ever
     *    see the last committed manifest, never half a batch;

@@ -111,8 +111,9 @@ object StreamingSilver {
     *
     * `dropDuplicatesWithinWatermark`, not plain `dropDuplicates`: the
     * key is `transaction_id` ALONE — the fact writer
-    * ([[graft.gold.Gold.mergeIncremental]]) windows on transaction_id,
-    * and a producer retry that re-emits an id with a regenerated
+    * ([[graft.gold.Gold.mergeIncremental]]) keeps one row per
+    * transaction_id (first writer wins when an id repeats in a batch,
+    * the newer batch across batches), and a producer retry that re-emits an id with a regenerated
     * timestamp must still be a duplicate here. Plain dropDuplicates
     * would need the event-time column inside the key to bound its
     * state, silently widening the key to (id, time).

@@ -994,39 +994,50 @@ class AtomicTableSpec extends SparkSpec {
 
   /** mergeBatch `df` (key `k`, partitions `pd`) into a fresh table with
     * zone maps on `stats`; check every staged file's `zs=` field and
-    * filter bits against [[aggregatedReadBack]], and that the
-    * read-back ran as one job. Returns the table root, its entries and
-    * the read-back job's task count.
+    * filter bits against [[aggregatedReadBack]], and that no read-back
+    * job ran (the writing tasks gather the stats). Returns the table
+    * root and its entries.
     */
   private def readBackMatches(df: org.apache.spark.sql.DataFrame, stats: String)
-      : (String, Seq[String], Int) = {
+      : (String, Seq[String]) = {
     val root = tmpDir(s"readback-$stats")
     val w = RunWitness.attach(spark)
     val entries = try {
       AtomicTable.mergeBatch(spark, df, root, "k", "pd", Some(stats))
-      def readBacks = w.jobs().filter(_.desc == "AtomicTable stats + filters")
+      // a marker job flushes the listener bus, which delivers in order
+      val sc = spark.sparkContext
+      sc.setJobDescription("read-back marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
       var waited = 0
-      while ((readBacks.isEmpty || readBacks.exists(_.end < 0)) && waited < 5000) {
+      while (!w.jobs().exists(j => j.desc == "read-back marker" && j.end >= 0) && waited < 5000) {
         Thread.sleep(50); waited += 50
       }
-      assert(readBacks.size === 1, w.jobs().map(_.desc))
+      val readBacks = w.jobs().filter(_.desc == "AtomicTable stats + filters")
+      assert(readBacks.size === 0, w.jobs().map(_.desc))
       AtomicTable.files(root, AtomicTable.latestVersion(root).get)
     } finally spark.sparkContext.removeSparkListener(w)
-    val tasks = w.jobs().filter(_.desc == "AtomicTable stats + filters").map(_.tasks.get).sum
+    assertAggregated(root, entries, df, stats, "k")
+    (root, entries)
+  }
+
+  /** `entries`, all of one staged dir, hold the `zs=` fields of `stats`
+    * and the filter bits on `key` that [[aggregatedReadBack]] gives.
+    */
+  private def assertAggregated(root: String, entries: Seq[String],
+      df: org.apache.spark.sql.DataFrame, stats: String, key: String): Unit = {
     val dir = entries.head.split("/").take(2).mkString("/")
-    val want = aggregatedReadBack(root, dir, df, stats, "k")
+    val want = aggregatedReadBack(root, dir, df, stats, key)
     assert(entries.map(_.split("\t")(0)).toSet === want.keySet)
     entries.foreach { e =>
       val (zs, hashes) = want(e.split("\t")(0))
       assert(e.split("\t").filter(_.startsWith("zs=")).toSeq === zs, e)
       val got = graft.gold.KeyFilter.read(graft.gold.KeyFilter.sidecar(entryPath(root, e)))
       assert(got.map(f => (f.column, f.words.toSeq)) ===
-        hashes.map(hs => ("k", graft.gold.KeyFilter.build("k", hs).words.toSeq)), e)
+        hashes.map(hs => (key, graft.gold.KeyFilter.build(key, hs).words.toSeq)), e)
     }
-    (root, entries, tasks)
   }
 
-  test("stats + filters read-back: one job, the same zs= fields and filter bits as the aggregation") {
+  test("stats + filters read-back: no read-back job, the same zs= fields and filter bits as the aggregation") {
     // timestamp, decimal, string and date stats (nulls among them), an
     // all-null column; several files per partition; a non-UTC zone,
     // in which bounds render
@@ -1042,7 +1053,7 @@ class AtomicTableSpec extends SparkSpec {
       .withColumn("amt", col("amt").cast("decimal(12,3)")).repartition(3)
     withConfs("spark.sql.session.timeZone" -> "America/Los_Angeles") {
       Seq("ts", "amt", "s", "d", "nul").foreach { c =>
-        val (_, entries, _) = readBackMatches(df, c)
+        val (_, entries) = readBackMatches(df, c)
         assert(entries.size > 3, entries)
         if (c == "nul") assert(!entries.exists(_.contains("zs=")))
         else assert(entries.forall(_.contains("zs=")))
@@ -1050,13 +1061,12 @@ class AtomicTableSpec extends SparkSpec {
     }
   }
 
-  test("stats + filters read-back: a file split across tasks merges to the same fields and bits") {
+  test("stats + filters read-back: a file of several row groups gets the same fields and bits") {
     val df = spark.range(0, 20000, 1, 1)
       .select(concat(lit("k"), col("id")).as("k"), lit(java.sql.Date.valueOf("2024-01-01")).as("pd"),
         timestamp_seconds(lit(1704067200L) + (col("id") * 7919) % 100000).as("ts"))
-    // small row groups, and scan partitions smaller than one of them
-    val (root, entries, tasks) = withConfs("parquet.block.size" -> "16384",
-        "spark.sql.files.maxPartitionBytes" -> "16384") {
+    // small row groups
+    val (root, entries) = withConfs("parquet.block.size" -> "16384") {
       readBackMatches(df, "ts")
     }
     assert(entries.size === 1)
@@ -1064,7 +1074,6 @@ class AtomicTableSpec extends SparkSpec {
       spark.sparkContext.hadoopConfiguration,
       new org.apache.hadoop.fs.Path(entryPath(root, entries.head).toString))
     assert(footer.getBlocks.size > 1)
-    assert(tasks > 1, s"the file was read by $tasks task(s)")
   }
 
   test("stats + filters read-back: a file over the key cap gets zone maps and no filter") {
@@ -1072,9 +1081,82 @@ class AtomicTableSpec extends SparkSpec {
     val df = spark.range(0, n, 1, 1)
       .select(concat(lit("k"), col("id")).as("k"), lit(java.sql.Date.valueOf("2024-01-01")).as("pd"),
         col("id").as("n"))
-    val (root, entries, _) = readBackMatches(df, "n")
+    val (root, entries) = readBackMatches(df, "n")
     assert(entries.size === 1)
     assert(entries.head.contains(s"zs=n,num,0,${n - 1}"))
     assert(!hasFilter(root, entries.head))
+  }
+
+  // ── a streamed Gold batch: one job, dedup only when keys repeat ─────
+
+  private def facts(t: java.sql.Timestamp, rows: (String, Long)*) =
+    rows.zipWithIndex.map { case ((id, product), i) =>
+      (id, product, java.sql.Date.valueOf(s"2024-01-0${1 + i % 3}"), 1.5 * i, i % 2 == 0,
+        new java.sql.Timestamp(t.getTime + i * 1000L))
+    }.toDF("transaction_id", "product_id", "purchase_date", "final_amount", "is_member",
+      "ingestion_timestamp")
+
+  /** The staged dirs under `root` that no manifest names. */
+  private def strayDirs(root: String): Set[String] = {
+    val named = (0 to AtomicTable.latestVersion(root).get).flatMap(AtomicTable.files(root, _))
+      .map(_.split("/").take(2).mkString("/")).toSet
+    new java.io.File(root, "_staged").list().map(d => s"_staged/$d").toSet -- named
+  }
+
+  test("mergeIncremental: a steady batch of new keys is one job, its entries equal the aggregation") {
+    val root = tmpDir("gold-steady")
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
+    val t1 = java.sql.Timestamp.valueOf("2024-01-01 11:00:00")
+    Gold.mergeIncremental(spark, facts(t0, (0 until 20).map(i => s"a$i" -> i.toLong): _*), root)
+    val batch = facts(t1, (0 until 30).map(i => s"b$i" -> i.toLong): _*)
+    val (commit, jobs) = jobsOf(Gold.mergeIncremental(spark, batch, root))
+    assert(jobs === 1)
+    assert(commit.inserted === 30)
+    assert(appended(root, commit.version))
+    val added = AtomicTable.files(root, commit.version)
+      .filterNot(AtomicTable.files(root, commit.version - 1).contains)
+    assert(added.size >= 3, added)
+    assertAggregated(root, added, batch, "ingestion_timestamp", "transaction_id")
+    assert(strayDirs(root).isEmpty)
+  }
+
+  test("mergeIncremental: a repeated id or two null ids keep one first-writer row per key") {
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
+    def stored(root: String) = AtomicTable.read(spark, root)
+      .select("transaction_id", "product_id").as[(String, Long)].collect().toSeq.sortBy(_._2)
+    // rows i stamp t0 + i s: the earlier row of a repeated id is its first writer
+    val repeated = tmpDir("gold-repeat")
+    val c1 = Gold.mergeIncremental(spark, facts(t0, "x" -> 1L, "y" -> 2L, "x" -> 3L, "z" -> 4L), repeated)
+    assert(c1.inserted === 3)
+    assert(stored(repeated) === Seq("x" -> 1L, "y" -> 2L, "z" -> 4L))
+    assert(strayDirs(repeated).isEmpty)
+    val nulls = tmpDir("gold-nulls")
+    val c2 = Gold.mergeIncremental(spark, facts(t0, (null: String) -> 5L, "w" -> 6L,
+      (null: String) -> 7L), nulls)
+    assert(c2.inserted === 2)
+    assert(stored(nulls) === Seq((null: String) -> 5L, "w" -> 6L))
+    assert(strayDirs(nulls).isEmpty)
+    // a lone null id is no repeat: staged as it is, one job
+    val lone = tmpDir("gold-lone-null")
+    val (c3, jobs) = jobsOf(Gold.mergeIncremental(spark,
+      facts(t0, (null: String) -> 8L, "v" -> 9L), lone))
+    assert(c3.inserted === 2 && jobs === 1)
+    assert(stored(lone) === Seq((null: String) -> 8L, "v" -> 9L))
+  }
+
+  test("a deduplicating write caps its files at the key cap: every file gets a filter and correct stats") {
+    val root = tmpDir("gold-cap")
+    val n = graft.gold.KeyFilter.MaxKeys + 1L
+    val df = spark.range(0, n, 1, 1)
+      .select(concat(lit("k"), col("id")).as("k"), lit(java.sql.Date.valueOf("2024-01-01")).as("pd"),
+        col("id").as("n"))
+    val (commit, jobs) = jobsOf(AtomicTable.mergeBatch(spark, df, root, "k", "pd", Some("n"),
+      firstWriter = Seq(col("n"))))
+    assert(jobs === 1 && commit.inserted === n)
+    val entries = AtomicTable.files(root, commit.version)
+    assert(entries.size === 2, entries)
+    assert(entries.forall(hasFilter(root, _)))
+    assertAggregated(root, entries, df, "n", "k")
+    assert(AtomicTable.statsBounds(root, "n") === Some(("0", (n - 1).toString)))
   }
 }
