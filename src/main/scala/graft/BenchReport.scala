@@ -49,26 +49,20 @@ object BenchReport {
         !r._1.startsWith("q93b"))
       .map(_._2).filter(v => v >= 0 && java.lang.Double.isFinite(v)).sum
 
-  /** The driver contract line: {"metric","value","unit","queries","sf"}
-    * plus the round-7 adjudication stamps — `run_id` (links this line
-    * to the matching `bench_diag/run_<id>.json` evidence file, closing
-    * the r6 gap where a rerun overwrote BENCH_DIAG.json and the
-    * official run's raw-run record was lost) and `load1` (host 1-min
-    * loadavg at bench start/end: an entry stalled by machine
-    * contention — the r5 x30_q65 / r6 x30_q122 class — shows a loaded
-    * host right in the committed BENCH_r{N}.json) — and the round-9
-    * `discounted` list: the entries whose recorded number the repo's
-    * own adjudicator would count as needing environment discount
-    * (verdicts degraded / min-run-degraded / suspect-uniform), so the
-    * JSON a judge reads is self-describing without running the script
-    * (r8 verdict ask #5). Keys are code literals (no user text), so
-    * the escape surfaces are `sfDir` and the discounted names, which
-    * are JSON-string-escaped. Budget: the line must stay under ~1900
+  /** The driver contract line, the LAST stdout line: `metric`,
+    * `value` (the [[totalOf]] headline), `unit`, `queries` (every
+    * entry's recorded number), `sf`, `run_id` (names the
+    * `bench_diag/run_<id>.json` evidence file, also spelled out as
+    * `diag`), `load1` (1-min loadavg at bench start and end),
+    * `discounted` / `discounted_n` (the [[discountedEntries]] of this
+    * run, judged from its own evidence) and `cpus` (the
+    * SPARK_GRAFT_CPUS the run executed under). Keys are code literals,
+    * so the escape surfaces are `sfDir` and the discounted names, both
+    * JSON-string-escaped. Budget: the line must stay under ~1900
     * chars (2000-char driver tail minus sbt's trailing `[success]`
-    * line) — pinned by BenchReportSpec over the real entry roster; the
-    * discounted list is capped at 8 names (a clean run ships `[]`, a
-    * roster-wide storm must not blow the tail capture — the overflow
-    * count is still exact in `discounted_n`).
+    * line), pinned by BenchReportSpec over the real entry roster; the
+    * discounted list is capped at 8 names while `discounted_n` stays
+    * exact.
     */
   def contractLine(results: Seq[(String, Double)], sfDir: String,
                    runId: Long = 0L,
@@ -78,110 +72,37 @@ object BenchReport {
     val qs = results.map { case (k, v) => "\"" + k + "\":" + num3(v) }
       .mkString("{", ",", "}")
     val disc = discounted.take(8).map(jstr).mkString("[", ",", "]")
-    // "diag": the repo-relative path of this run's evidence file,
-    // spelled out so a judge reading BENCH_r{N}.json alone knows which
-    // one file holds the raw runs / host_env / task_floor rows and how
-    // to adjudicate it (r7's rerun evidence lived in an unreferenced
-    // side file; this closes that gap going forward)
-    // "cpus" (r22, addition-only — existing keys bit-stable): the
-    // SPARK_GRAFT_CPUS value the run executed under, echoed so the
-    // driver's low-core scaling probe can attribute its two runs from
-    // the contract lines alone (the r21 PERF scaling block read ≈1
-    // everywhere and had to flag suspect_cpus_ignored because nothing
-    // in the artifact proved which core count each run used; per-entry
-    // task counts live in the diag's host_env.task_n rows)
     s"""{"metric":"total","value":${num3(totalOf(results))},"unit":"sec","queries":$qs,"sf":${jstr(sfDir)},"run_id":$runId,"diag":${jstr(s"bench_diag/run_$runId.json")},"load1":[${num3(loadStart)},${num3(loadEnd)}],"discounted":$disc,"discounted_n":${discounted.size},"cpus":$cpus}"""
   }
 
-  /** Best usable summed-task-time row of one entry (≥ 1 s — below
-    * that the diag's 0.1 s rounding aliases ratios), the statistic
-    * every adjudication reference reads. None when no run did a
-    * second of task work.
-    */
-  def bestUsableTask(e: EntryEnv): Option[Double] = {
-    val usable = e.taskSec.filter(_ >= 1.0)
-    if (usable.nonEmpty) Some(usable.min) else None
-  }
-
-  /** Scala mirror of `scripts/adjudicate_bench.py`'s per-entry
-    * discount decision (true ⇔ the script's verdict would be
-    * degraded, min-run-degraded, or suspect-uniform), so the contract
-    * line can carry the adjudicator's count without shelling out:
-    *   - per-run health: a usable task row ≥ 2× the entry's best
-    *     usable row, or ≥ 3× the historical floor, is degraded; a run
-    *     with only a sub-1 s aliased row is judged by its post-run
-    *     all-core canary (≥ 2× nominal);
-    *   - all runs degraded ⇒ degraded; the min-time run degraded ⇒
-    *     min-run-degraded; best usable row ≥ 3× floor ⇒ at least
-    *     min-run-degraded (the floor-force rule — an external
-    *     reference condemning the entry's BEST run condemns the
-    *     entry no matter which run owned the min);
-    *   - otherwise, every post-run canary ≥ 2× nominal ⇒
-    *     suspect-uniform (a uniformly stretched entry the per-run
-    *     ratios cannot see).
-    * Cross-scale flags are layered on in [[discountedEntries]] — they
-    * need the sibling probe's rows, not this entry's.
-    */
-  /** The wall-floor witness's ratio gate and floor-quality minimum
-    * (shared constants with `scripts/adjudicate_bench.py`). Round-10
-    * addition for the r9 blind spot: a run whose WORK is healthy but
-    * whose DELIVERY is stalled reads task-clean at 2× honest wall
-    * (the r9 official x30_q65: 10.6 task-sec delivered over 12.48 s
-    * wall on a 32-core box ≈ 0.85 effective cores, beside a 6.06 s
-    * honest wall). Work-based witnesses cannot see it; the run's wall
-    * against the entry's HISTORY wall floor can. Calibration over the
-    * 45-file sf0.1 diag history: 1.5× condemns exactly the storm run
-    * run_1786821204845's stalled entries (x30_q65 at 1.84×, x10_q86
-    * at 1.57× — so the gate must sit ≤ 1.57) and flags NOTHING in the
-    * clean rehearsal run_1786816951295; floors under 0.2 s are too
-    * noisy to ratio against (a 0.15 s entry at 0.25 s is scheduler
-    * jitter, not a stall) and read as absent.
-    */
-  val WallRatio = 1.5
-  val MinWallFloor = 0.2
-
-  /** Per-run degraded flags, the adjudicator's rule exactly: where a
-    * run's OWN task row is usable (≥ 1 s) it is the authoritative
-    * signal — degraded means ≥ 2× the entry's best usable row or ≥ 3×
-    * the historical floor; a run whose task row aliases under the
-    * 0.1 s rounding falls back to its post-run all-core canary (≥ 2×
-    * nominal). The canary is a point sample — an episode can start
-    * after the body finishes and stamp a high reading on a run that
-    * did honest work — so it never overrides a usable task row.
-    * Independently of the work witnesses, a run whose WALL sits ≥
-    * [[WallRatio]]× the entry's history wall floor is degraded — the
-    * delivery-collapse witness (see the constant's scaladoc), OR'd on
-    * top because it sees precisely the stalls the task row exonerates.
+  /** Per-run degraded flags, judged from the run's own evidence:
+    * where a run's task row is usable (≥ 1 s — below that the diag's
+    * 0.1 s rounding aliases ratios) it decides — degraded means ≥ 2×
+    * the entry's best usable row; a run whose task row aliases falls
+    * back to its post-run all-core canary (≥ 2× the run's
+    * self-sampled nominal). The canary is a point sample — an episode
+    * can start after the body finishes and stamp a high reading on a
+    * run that did honest work — so it never overrides a usable task
+    * row.
     */
   def degradedRuns(runs: Seq[Double], e: EntryEnv,
                    nominalParMs: Double): Seq[Boolean] = {
-    val bestTask = bestUsableTask(e)
-    val floor = Option(e.taskFloor).filter(_ > 0)
-    val wallFloor = Option(e.wallFloor).filter(_ >= MinWallFloor)
+    val usable = e.taskSec.filter(_ >= 1.0)
     runs.indices.map { i =>
-      val t = e.taskSec.lift(i)
-      val work =
-        if (bestTask.isDefined && t.exists(_ >= 1.0))
-          t.exists(x => x >= 2 * bestTask.get ||
-            floor.exists(f => x >= 3 * f))
-        else if (nominalParMs > 0 && e.canaryParMs.isDefinedAt(i))
-          e.canaryParMs(i) >= 2 * nominalParMs
-        else false
-      work || wallFloor.exists(wf =>
-        runs(i) >= 0 && runs(i) >= WallRatio * wf)
+      e.taskSec.lift(i).filter(_ >= 1.0) match {
+        case Some(t) => t >= 2 * usable.min
+        case None => nominalParMs > 0 &&
+          e.canaryParMs.lift(i).exists(_ >= 2 * nominalParMs)
+      }
     }
   }
 
-  /** Index of the run that owns an entry's recorded number — ONE rule
-    * shared by the bench's min-selection ([[Bench]].minSelect
-    * delegates here) and the discount mirror, so selection and
-    * judging can never diverge (the r9 artifact carried
-    * `discounted_n: 2` beside a self-adjudication saying 1):
-    * a failed run poisons the entry to its max (failures stay
-    * visible); otherwise the min over runs neither degraded
-    * ([[degradedRuns]]) nor janino-warmup-contaminated (> 5
-    * compiles), falling back to the min over all runs when every run
-    * is condemned.
+  /** Index of the run that owns an entry's recorded number — one rule
+    * for the bench's min-selection and for [[needsDiscount]]: a failed
+    * run poisons the entry to its max (failures stay visible);
+    * otherwise the min over runs neither degraded ([[degradedRuns]])
+    * nor janino-warmup-contaminated (> 5 compiles), falling back to
+    * the min over all runs when every run is condemned.
     */
   def selectedIndex(runs: Seq[Double], e: EntryEnv,
                     nominalParMs: Double): Int = {
@@ -195,101 +116,39 @@ object BenchReport {
     }
   }
 
-  /** Whether an entry's RECORDED number needs environment discount —
-    * the Scala mirror of `scripts/adjudicate_bench.py`'s verdict
-    * classes (degraded / min-run-degraded / suspect-uniform), pinned
-    * to the script by AdjudicationParitySpec over the committed
-    * artifacts. Round-10 semantics (r9 ADVICE): the judged run is the
-    * one that OWNS the recorded number — located by value match
-    * against `recorded` (both sides render at 3 decimals), falling
-    * back to [[selectedIndex]] — not the raw argmin, so a number the
-    * selection rule already steered away from a degraded run is no
-    * longer condemned for that run's sins. Discount when: every run
-    * degraded; the owning run degraded; the entry's best usable task
-    * ≥ 3× its history floor (external reference condemns the entry no
-    * matter which run owned the min); the recorded WALL ≥
-    * [[WallRatio]]× the history wall floor (the delivery-collapse
-    * witness); or every post-run all-core canary ≥ 2× nominal
-    * (suspect-uniform).
+  /** Whether an entry's recorded number needs environment discount:
+    * the selected run ([[selectedIndex]]) is degraded — which every
+    * run being degraded implies — or every post-run all-core canary
+    * reads ≥ 2× nominal (suspect-uniform: a uniformly stretched entry
+    * the per-run ratios cannot see).
     */
   def needsDiscount(runs: Seq[Double], e: EntryEnv,
-                    nominalParMs: Double,
-                    recorded: Double = Double.NaN): Boolean = {
+                    nominalParMs: Double): Boolean = {
     val n = runs.size
     if (n == 0) return false
-    val bestTask = bestUsableTask(e)
-    val floor = Option(e.taskFloor).filter(_ > 0)
-    val wallFloor = Option(e.wallFloor).filter(_ >= MinWallFloor)
-    val flags = degradedRuns(runs, e, nominalParMs)
-    val selI = runs.indices
-      .find(i => java.lang.Double.isFinite(recorded) &&
-        math.abs(runs(i) - recorded) < 5e-4)
-      .getOrElse(selectedIndex(runs, e, nominalParMs))
-    val floorBreach =
-      floor.exists(f => bestTask.exists(_ >= 3 * f))
-    val wallBreach = wallFloor.exists(wf =>
-      runs(selI) >= 0 && runs(selI) >= WallRatio * wf)
     val suspectUniform = nominalParMs > 0 && e.canaryParMs.size >= n &&
       (0 until n).forall(i => e.canaryParMs(i) >= 2 * nominalParMs)
-    flags.forall(identity) || flags(selI) || floorBreach || wallBreach ||
-      suspectUniform
+    val sel = selectedIndex(runs, e, nominalParMs)
+    degradedRuns(runs, e, nominalParMs)(sel) || suspectUniform
   }
 
-  /** Cross-scale impossible-work flags, mirroring the script's
-    * `cross_scale_flags`: the x10/x30 probes run the same query over
-    * ~3× the data, so an x10 best task exceeding 1.25× its x30
-    * sibling's flags the x10 entry (physically impossible, no history
-    * needed); an x30 best exceeding 8× the x10 flags the x30 — but
-    * only when the x30 also breaches its own history floor (3×
-    * taskFloor), or when no floor exists. Calibration: honest q65
-    * ratios span 2.0–6.2× and the lsh_auto probe's honest-honest
-    * ratio reaches 9.2× (r9 run_1786805199594: x10 best 1.3 s in an
-    * exceptionally clean revisit window vs x30's 12.0 s, both better
-    * than their committed r8 values) while stalled-beside-stalled
-    * reads 10.8× — ratio alone cannot separate them, the floor can
-    * (honest x30 8–22 s vs its 14.5 s floor; stalls 60–140 s ≥ 3×).
-    */
-  def crossScaleDiscounts(
-      env: collection.Map[String, EntryEnv]): Set[String] =
-    env.keysIterator.filter(_.startsWith("x10_")).flatMap { x10 =>
-      val sib = "x30_" + x10.stripPrefix("x10_")
-      for {
-        e30 <- env.get(sib)
-        t10 <- bestUsableTask(env(x10))
-        t30 <- bestUsableTask(e30)
-        flagged <- if (t10 > 1.25 * t30) Some(x10)
-                   else if (t30 > 8 * t10 &&
-                       (e30.taskFloor <= 0 || t30 >= 3 * e30.taskFloor))
-                     Some(sib)
-                   else None
-      } yield flagged
-    }.toSet
-
-  /** The contract line's `discounted` list: every reported entry the
-    * adjudicator would count toward "needs environment discount",
-    * in roster order. The q93 split components are evidence-less
-    * derivations of the q93 entry (the script says component-of-q93)
-    * and entries with no evidence rows are unadjudicable — both are
-    * skipped, exactly as the script skips them.
+  /** The contract line's `discounted` list: every reported entry whose
+    * recorded number [[needsDiscount]], in roster order. The q93 split
+    * components are evidence-less derivations of the q93 entry and
+    * entries with no evidence rows cannot be judged — both are
+    * skipped.
     */
   def discountedEntries(results: Seq[(String, Double)],
                         rawRuns: collection.Map[String, Seq[Double]],
                         env: collection.Map[String, EntryEnv],
-                        nominalParMs: Double): Seq[String] = {
-    val xscale = crossScaleDiscounts(env)
+                        nominalParMs: Double): Seq[String] =
     results.collect {
-      // evidence-gating mirrors the script exactly: an entry with no
-      // runs or no host_env rows is unadjudicable ("no-evidence")
-      // even when a cross-scale flag names it
-      case (name, recorded) if !name.startsWith("q93a") &&
+      case (name, _) if !name.startsWith("q93a") &&
         !name.startsWith("q93b") &&
         rawRuns.get(name).exists(_.nonEmpty) && env.contains(name) &&
-        (xscale(name) ||
-          needsDiscount(rawRuns(name), env(name), nominalParMs,
-            recorded)) =>
+        needsDiscount(rawRuns(name), env(name), nominalParMs) =>
         name
     }
-  }
 
   /** Per-run host-environment snapshot for one entry, arrays aligned
     * index-for-index with that entry's `runs` array: 1-min loadavg,
@@ -314,26 +173,10 @@ object BenchReport {
                             stealPct: Seq[Double] = Nil,
                             codeCacheMb: Seq[Long] = Nil,
                             spillMb: Seq[Long] = Nil,
-                            peakExecMb: Seq[Long] = Nil,
-                            taskFloor: Double = -1.0,
-                            wallFloor: Double = -1.0)
+                            peakExecMb: Seq[Long] = Nil)
 
   private def lArr(ts: Seq[Long]): String =
     ts.mkString("[", ",", "]")
-
-  /** Evidence row for one bounded quiet-window wait (the round-11
-    * roster-start gate and the x10/x30 group cool-downs): seconds
-    * actually waited, the reference the staleness gate read against,
-    * and EVERY all-core canary reading taken — first = the reading
-    * that decided whether to wait, last = the reading the bench
-    * proceeded under, so a judge sees the boundary was nominal on
-    * both sides (or that the budget expired and the run proceeded
-    * self-describing).
-    */
-  def gateJson(waitedSec: Int, refParMs: Double,
-               canaryParMs: Seq[Double]): String =
-    s"""{"waited_s":$waitedSec,"ref_par_ms":${num(refParMs)},""" +
-      s""""canary_par_ms":${dArr(canaryParMs)}}"""
 
   private def dArr(ts: Seq[Double]): String =
     "[" + ts.map(t =>
@@ -342,10 +185,11 @@ object BenchReport {
       else "-1.0").mkString(",") + "]"
 
   /** Diag document: run identity (`run_id` matches the contract
-    * line's; `started_at` UTC ISO), raw per-run times, pre-entry heap,
-    * per-run host-load evidence, minhash verify decisions, LSH bucket
-    * histograms, corpus build costs. The minhash/lsh values arrive
-    * pre-rendered as JSON objects.
+    * line's; `started_at` UTC ISO; `commit` the checkout's git commit,
+    * "unknown" where git could not say), raw per-run times, pre-entry
+    * heap, per-run host-load evidence, minhash verify decisions, LSH
+    * bucket histograms, corpus build costs. The minhash/lsh values
+    * arrive pre-rendered as JSON objects.
     */
   def diagJson(rawRuns: collection.Map[String, Seq[Double]],
                heapMb: collection.Map[String, Long],
@@ -357,10 +201,7 @@ object BenchReport {
                  collection.Map.empty[String, EntryEnv],
                nominalParMs: Double = -1.0,
                sfDir: String = "",
-               stormed: Boolean = false,
-               startGate: String = "",
-               cooldowns: collection.Map[String, String] =
-                 collection.Map.empty[String, String],
+               commit: String = "unknown",
                cpus: Int = -1,
                defaultParallelism: Int = -1): String = {
     // Locale.ROOT (in dArr): the default-locale f"" interpolator
@@ -429,46 +270,20 @@ object BenchReport {
         // heavy GC but ~0 spill and a modest peak was NOT squeezed for
         // memory, so the excess was host delivery, not the plan
         ",\"spill_mb\":" + lArr(e.spillMb) +
-        ",\"peak_exec_mb\":" + lArr(e.peakExecMb) +
-        // the historical task_sec reference best() retried against
-        // (median of per-file bests across bench_diag/; -1 = <3 files
-        // of history) — makes "no entry ships >Nx its floor" checkable
-        // from this one file
-        ",\"task_floor\":" + num(e.taskFloor) +
-        // and its wall twin (median of per-file best walls): the
-        // delivery-collapse witness reference — see WallRatio's
-        // scaladoc for the r9 x30_q65 case this closes
-        ",\"wall_floor\":" + num(e.wallFloor) + "}"
+        ",\"peak_exec_mb\":" + lArr(e.peakExecMb) + "}"
     }.mkString("{", ",", "}")
     val mhJson = minhashDiag.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val lshJson = lshDiag.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // nominal_par_ms: the healthy-delivery reference every
-    // canary_par_ms row reads against (min observed this run)
-    // "sf": which corpus this run measured — taskFloors filters the
-    // history on it so a local sf0.01 iteration run can never poison
-    // the sf0.1 floors (absent before round 8)
-    val cdJson = cooldowns.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // "stormed" (round 11): the run's own ≥2-discounts self-stamp —
-    // diagFloors / history_floors exclude stamped files from the floor
-    // basis so storm evidence can't drift the medians upward.
-    // "start_gate" / "cooldowns": the quiet-window waits' evidence
-    // (see gateJson) — empty start gate renders as waited 0 / no rows.
-    // "cpus"/"default_parallelism" (r22): the run's actual core
-    // budget, on record beside the per-entry task_n rows so the
-    // driver's low-core scaling probe can verify from the artifact
-    // that the knob was honored (the r21 suspect_cpus_ignored flag
-    // was unfalsifiable from the JSON alone)
+    // canary_par_ms row reads against (min observed this run).
+    // "cpus"/"default_parallelism": the run's actual core budget, on
+    // record beside the per-entry task_n rows
     s"""{"run_id":$runId,"started_at":${jstr(startedAt)},""" +
-      s""""sf":${jstr(sfDir)},""" +
+      s""""commit":${jstr(commit)},"sf":${jstr(sfDir)},""" +
       s""""cpus":$cpus,"default_parallelism":$defaultParallelism,""" +
-      s""""stormed":$stormed,""" +
       s""""nominal_par_ms":${num(nominalParMs)},""" +
-      s""""start_gate":${if (startGate.isEmpty) gateJson(0, -1.0, Nil)
-        else startGate},""" +
-      s""""cooldowns":$cdJson,""" +
       s""""runs":$runsJson,"heap_mb_before":$heapJson,"host_env":$envJson,""" +
       s""""minhash":$mhJson,"lsh":$lshJson,"corpus_build_sec":""" +
       s"""{"x10":${num(corpusBuild10)},"x30":${num(corpusBuild30)}}}"""

@@ -41,8 +41,8 @@ class BenchReportSpec extends AnyFunSuite {
     // round-8: the evidence file named right in the contract, so a
     // judge holding only BENCH_r{N}.json knows where the diag lives
     assert(j.get("diag").asText() === "bench_diag/run_1755192000123.json")
-    // round-9: the adjudicator's discount verdict is self-described —
-    // a clean run ships an empty list
+    // round-9: the run's discount verdict is self-described — a clean
+    // run ships an empty list
     assert(j.get("discounted").isArray && j.get("discounted").size() === 0)
     assert(j.get("discounted_n").asInt() === 0)
     // round-22: the core budget echoed so the driver's low-core
@@ -112,190 +112,25 @@ class BenchReportSpec extends AnyFunSuite {
     parse(line): Unit
   }
 
-  test("contaminatedRun: four independent witnesses, absent reads clean") {
-    def run(par: Double = 50.0, jan: Long = 0L, task: Double = 10.0,
-            floor: Option[Double] = Some(10.0),
-            wall: Option[Double] = None,
-            wallFloor: Option[Double] = None) =
-      Bench.contaminatedRun(Some(par), nominalParMs = 50.0, Some(jan),
-        Some(task), floor, wall, wallFloor)
-    assert(!run()) // healthy: par at nominal, no compiles, task at floor
+  test("contaminatedRun: two independent witnesses, absent reads clean") {
+    def run(par: Double = 50.0, jan: Long = 0L) =
+      Bench.contaminatedRun(Some(par), nominalParMs = 50.0, Some(jan))
+    assert(!run()) // healthy: par at nominal, no compiles
     assert(run(par = 100.0))      // all-core canary at 2x nominal
     assert(!run(par = 99.9))      // just under the gate
     assert(run(jan = 6L))         // paid codegen+C2 warmup
     assert(!run(jan = 5L))        // a few fragments is path-literal churn
-    assert(run(task = 30.0))      // 3x the historical floor
-    assert(!run(task = 29.9))
-    // sub-1s task rows alias under the 0.1s rounding — never condemn
-    assert(!Bench.contaminatedRun(Some(50.0), 50.0, Some(0L), Some(0.9),
-      Some(0.2)))
-    // round-10 wall witness: the delivery-collapse class (r9 x30_q65 —
-    // honest work delivered at 2x the honest wall) condemns the run
-    // against the EXTERNAL history wall floor at 1.5x
-    assert(run(wall = Some(12.48), wallFloor = Some(6.77)))
-    assert(!run(wall = Some(10.1), wallFloor = Some(6.77))) // under 1.5x
-    // a sub-0.2s wall floor is scheduler-jitter noise — reads absent
-    assert(!run(wall = Some(0.4), wallFloor = Some(0.15)))
-    // absent witnesses read clean: no floor, no rows
-    assert(!run(task = 1e9, floor = None))
-    assert(!run(wall = Some(1e9), wallFloor = None))
-    assert(!Bench.contaminatedRun(None, 50.0, None, None, Some(10.0)))
-  }
-
-  test("taskFloors: median of per-file bests, usable threshold, ≥3 files") {
-    val dir = java.nio.file.Files.createTempDirectory("floors")
-    def write(id: Long, taskByEntry: Map[String, Seq[Double]],
-              sf: String = ""): Unit = {
-      val env = taskByEntry.map { case (e, ts) =>
-        s""""$e":{"task_sec":[${ts.mkString(",")}]}"""
-      }.mkString("{", ",", "}")
-      val sfField = if (sf.isEmpty) "" else s""""sf":"$sf","""
-      java.nio.file.Files.write(dir.resolve(s"run_$id.json"),
-        s"""{"run_id":$id,$sfField"host_env":$env}""".getBytes("UTF-8")): Unit
-    }
-    // five files for qA: per-file bests 3.7 (experiment-fast build),
-    // 28.6, 35.6, 94.0, 1057.1 (stalled) → median 35.6. A min would
-    // import the experiment build; a mean the stall — the exact r7
-    // x10_q122 history shape.
-    write(1L, Map("qA" -> Seq(3.9, 3.7, 3.8), "qB" -> Seq(5.0, 4.0)))
-    write(2L, Map("qA" -> Seq(28.6, 215.5), "qB" -> Seq(4.5, 6.0)))
-    write(3L, Map("qA" -> Seq(129.9, 85.3, 35.6)))
-    write(4L, Map("qA" -> Seq(203.1, 94.0)))
-    // sub-second rows alias under the 0.1s rounding — not usable, so
-    // this file contributes nothing for qC and 1057.1 for qA
-    write(5L, Map("qA" -> Seq(1057.1, 1844.4), "qC" -> Seq(0.5, 0.3)))
-    // a malformed file must be skipped, not kill the bench
-    java.nio.file.Files.write(dir.resolve("run_6.json"),
-      "{not json".getBytes("UTF-8")): Unit
-    // an sf-stamped file from ANOTHER scale must be excluded when the
-    // caller names its scale (local sf0.01 iteration runs write diag
-    // files too — their ~10x-lower task costs would poison the floor)
-    write(7L, Map("qA" -> Seq(1.1, 1.2)), sf = "/root/testdata/sf0.01")
-    write(8L, Map("qA" -> Seq(1.3, 1.2)), sf = "/root/testdata/sf0.01")
-    val floors = Bench.taskFloors(dir, Some("/root/testdata/sf0.1"))
-    assert(floors("qA") === 35.6)
-    // qB has only 2 usable files, qC none — below the 3-file minimum
-    assert(!floors.contains("qB") && !floors.contains("qC"))
-    // round-10 wall floors ride the same pass: per-file best
-    // NON-NEGATIVE wall from the diag's runs arrays (failures never
-    // become a best), median across ≥3 files
-    def writeWalls(id: Long, walls: Seq[Double]): Unit =
-      java.nio.file.Files.write(dir.resolve(s"run_$id.json"),
-        s"""{"run_id":$id,"runs":{"qW":[${walls.mkString(",")}]},"host_env":{}}"""
-          .getBytes("UTF-8")): Unit
-    writeWalls(11L, Seq(0.9, 1.8, -1.0))
-    writeWalls(12L, Seq(5.2, 4.1))
-    writeWalls(13L, Seq(9.9, 60.0))
-    val (_, walls) = Bench.diagFloors(dir, Some("/root/testdata/sf0.1"))
-    assert(walls("qW") === 4.1) // median of per-file bests 0.9/4.1/9.9
-    // excludeRunId mirrors the adjudicator's history-minus-the-run
-    // rule: dropping file 12 leaves bests 0.9/9.9 — under the 3-file
-    // minimum, so no floor
-    assert(!Bench.diagFloors(dir, Some("/root/testdata/sf0.1"),
-      excludeRunId = Some(12L))._2.contains("qW"))
-    // a storm-stamped file (round 11: the bench self-stamps a run
-    // whose own discount mirror found ≥2 discounted entries) must be
-    // excluded from the floor basis — its inflated bests would drift
-    // the medians upward and loosen the degradation gates. With the
-    // stamp honored, qA's floors are unchanged by this absurd file.
-    write(9L, Map("qA" -> Seq(9999.0, 8888.0)))
-    val stampedTxt = new String(java.nio.file.Files.readAllBytes(
-      dir.resolve("run_9.json")), "UTF-8")
-    java.nio.file.Files.write(dir.resolve("run_9.json"),
-      ("{\"stormed\":true," + stampedTxt.tail).getBytes("UTF-8")): Unit
-    assert(Bench.taskFloors(dir, Some("/root/testdata/sf0.1"))("qA")
-      === 35.6)
-    // with no sf filter the stray files shift the median down a slot
-    assert(Bench.taskFloors(dir)("qA") === 28.6)
-    // at a NEW scale, unstamped (pre-r8) files are excluded — they
-    // default to the official legacy scale, and floors from another
-    // scale would be systematically wrong, not a median-absorbable
-    // stray (a 3x cost mismatch would otherwise fire the retry's
-    // task-floor witness on every run of every entry)
-    assert(Bench.taskFloors(dir, Some("/root/testdata/sf1.0")).isEmpty)
-    // absent dir → empty map (fresh repo: retries simply never fire)
-    assert(Bench.taskFloors(dir.resolve("nope")).isEmpty)
-  }
-
-  test("awaitQuietWindow: canary-gated bounded wait, injectable clock") {
-    var slept = List.empty[Int]
-    val sleep = (s: Int) => slept = slept :+ s
-    def probes(vals: Double*): () => Double = {
-      val it = vals.iterator
-      () => it.next()
-    }
-    // round 12 (r11 verdict ask #4): the gate leaves only on TWO
-    // consecutive quiet readings — a quiet launch still spends one
-    // confirm step, so every gate record shows ≥2 trailing quiet
-    // readings (the r11 x30 cool-down proceeded on a single 52 ms dip
-    // inside an oscillating storm and the storm returned mid-entry)
-    assert(Bench.awaitQuietWindow(probes(60.0, 55.0), refMs = 50.0,
-      budgetSec = 300, sleep = sleep) === (15, Seq(60.0, 55.0)))
-    assert(slept === List(15))
-    // stale (≥2× ref) waits in steps until two consecutive probes read
-    // quiet; every reading is returned (first decided the gate's
-    // starting state, last two are proceeded under)
-    slept = Nil
-    assert(Bench.awaitQuietWindow(probes(140.0, 120.0, 61.0, 58.0), 50.0,
-      budgetSec = 300, sleep = sleep)
-      === (45, Seq(140.0, 120.0, 61.0, 58.0)))
-    assert(slept === List(15, 15, 15))
-    // a single quiet dip inside an oscillation does NOT open the
-    // window — the exact r11 failure shape (229.8 -> 171.8 -> 52.4,
-    // proceeded, storm returned); now the dip must hold for a step
-    slept = Nil
-    assert(Bench.awaitQuietWindow(
-      probes(229.8, 171.8, 52.4, 180.0, 60.0, 51.0), 50.0,
-      budgetSec = 300, sleep = sleep)._1 === 75)
-    // budget exhausts mid-storm: proceed regardless, waited == budget
-    slept = Nil
-    val (w, reads) = Bench.awaitQuietWindow(probes(200.0, 200.0, 200.0),
-      50.0, budgetSec = 20, sleep = sleep)
-    assert(w === 20 && reads.size === 3) // 15s step then 5s remainder
-    assert(slept === List(15, 5))
-    // exactly the 2× gate is stale; just under is quiet
-    assert(Bench.awaitQuietWindow(probes(100.0, 40.0, 41.0), 50.0, 300,
-      sleep = sleep)._1 === 30)
-    assert(Bench.awaitQuietWindow(probes(99.9, 99.8), 50.0, 300,
-      sleep = sleep)._1 === 15)
-    // a non-positive reference (fresh repo, no history) never waits
-    // and takes a single reading
-    assert(Bench.awaitQuietWindow(probes(9999.0), -1.0, 300,
-      sleep = sleep) === (0, Seq(9999.0)))
-    // round 13 (r12 verdict ask #3): the roster-START gate's stricter
-    // 1.5x predicate — the r12 official run opened on 95/99 ms against
-    // a 101 ms 2x threshold inside an oscillating storm and
-    // self-discounted 9 entries; at 1.5x those marginal readings keep
-    // the gate waiting until genuinely nominal readings hold
-    slept = Nil
-    assert(Bench.awaitQuietWindow(probes(95.0, 99.0, 70.0, 71.0), 50.6,
-      budgetSec = 900, quietRatio = Bench.StartGateRatio, sleep = sleep)
-      === (45, Seq(95.0, 99.0, 70.0, 71.0)))
-    assert(slept === List(15, 15, 15))
-    // exactly 1.5x ref is stale; just under is quiet
-    assert(Bench.awaitQuietWindow(probes(75.0, 74.9, 74.8), 50.0, 900,
-      quietRatio = 1.5, sleep = sleep)._1 === 30)
-    assert(Bench.awaitQuietWindow(probes(74.9, 74.8), 50.0, 900,
-      quietRatio = 1.5, sleep = sleep)._1 === 15)
-    // the start-gate tuning itself (r12 verdict asks #2/#3): a
-    // minutes-scale budget — the credit-refill storms it waits out
-    // take tens of minutes, and the r12 5-min budget exhausted inside
-    // one — capped at 15 min so a never-quiet host can't stall the
-    // round; predicate 1.5x at the start gate ONLY (cool-downs keep
-    // the shared 2x default)
-    assert(Bench.StartGateBudgetSec === 900)
-    assert(Bench.StartGateRatio === 1.5)
+    // absent witnesses read clean: no rows yet
+    assert(!Bench.contaminatedRun(None, 50.0, None))
   }
 
   test("pre-rounded walls round-trip bit-identically through the diag") {
-    // round 13 (r12 ADVICE): the live storm stamp judges walls the
-    // bench recorded while DiagAudit recomputes from the 3-decimal
-    // rendered diag — so the bench now records walls PRE-ROUNDED with
-    // rint(t*1000)/1000 (instrumentedRun). This pins the mechanism:
-    // n/1000.0 is correctly-rounded division, so the stored double,
-    // its %.3f render, and the parse of that render are the SAME
-    // double — a run sitting exactly on the 1.5x wall gate can never
-    // flip one discount between live and recompute.
+    // the bench records walls PRE-ROUNDED with rint(t*1000)/1000
+    // (instrumentedRun). This pins the mechanism: n/1000.0 is
+    // correctly-rounded division, so the stored double, its %.3f
+    // render, and the parse of that render are the SAME double — a
+    // judgement replayed from the 3-decimal diag reads the value the
+    // bench judged.
     val rnd = new scala.util.Random(7)
     (1 to 1000).foreach { _ =>
       val rounded = math.rint(rnd.nextDouble() * 100 * 1000) / 1000
@@ -306,49 +141,6 @@ class BenchReportSpec extends AnyFunSuite {
     }
     // the -1.0 failure marker is a fixed point of the rounding
     assert(math.rint(-1.0 * 1000) / 1000 === -1.0)
-  }
-
-  test("historicalNominalParMs: median across non-stormed diag files") {
-    val dir = java.nio.file.Files.createTempDirectory("nominals")
-    def write(id: Long, nominal: Double, stormed: Boolean = false): Unit =
-      java.nio.file.Files.write(dir.resolve(s"run_$id.json"),
-        (s"""{"run_id":$id,"stormed":$stormed,""" +
-          s""""nominal_par_ms":$nominal}""").getBytes("UTF-8")): Unit
-    // fewer than 3 usable files -> no reference (gate falls back to
-    // the self-nominal)
-    write(1L, 49.5)
-    write(2L, 52.9)
-    assert(Bench.historicalNominalParMs(dir).isEmpty)
-    write(3L, 48.4)
-    assert(Bench.historicalNominalParMs(dir) === Some(49.5))
-    // a stormed file's nominal is excluded; a malformed file skipped
-    write(4L, 1.0, stormed = true)
-    java.nio.file.Files.write(dir.resolve("run_5.json"),
-      "{not json".getBytes("UTF-8")): Unit
-    assert(Bench.historicalNominalParMs(dir) === Some(49.5))
-    // recency window (r11 ADVICE): only the NominalRecencyWindow
-    // newest non-stormed files count, so stale readings from an old
-    // host configuration cannot dominate the gate reference. 12 old
-    // fast-host files + 8 new slow-host files: an unbounded median
-    // would read 10.0 (the stale regime); the windowed median reads
-    // the current host's 50.0. The storm filter runs BEFORE the cut —
-    // stormed files never displace admissible history out the window.
-    val dir2 = java.nio.file.Files.createTempDirectory("nominals2")
-    def write2(id: Long, nominal: Double, stormed: Boolean = false): Unit =
-      java.nio.file.Files.write(dir2.resolve(s"run_$id.json"),
-        (s"""{"run_id":$id,"stormed":$stormed,""" +
-          s""""nominal_par_ms":$nominal}""").getBytes("UTF-8")): Unit
-    (1L to 12L).foreach(write2(_, 10.0))
-    (13L to 20L).foreach(write2(_, 50.0))
-    assert(Bench.NominalRecencyWindow === 15)
-    // newest 15 = ids 6..20 -> seven 10.0 + eight 50.0 -> median 50.0
-    assert(Bench.historicalNominalParMs(dir2) === Some(50.0))
-    // stormed files between the regimes are skipped, not counted
-    // against the window
-    (21L to 30L).foreach(write2(_, 999.0, stormed = true))
-    assert(Bench.historicalNominalParMs(dir2) === Some(50.0))
-    // absent dir -> None
-    assert(Bench.historicalNominalParMs(dir.resolve("nope")).isEmpty)
   }
 
   test("diag json parses with all sections, run identity, and host env") {
@@ -363,11 +155,7 @@ class BenchReportSpec extends AnyFunSuite {
       corpusBuild10 = 2.15, corpusBuild30 = Double.NaN,
       runId = 1755192000123L, startedAt = "2026-08-14T17:20:00.123Z",
       nominalParMs = 54.2, sfDir = "/root/testdata/sf0.1",
-      stormed = true,
-      startGate = BenchReport.gateJson(45, 50.1, Seq(130.0, 120.0, 52.0)),
-      cooldowns = scala.collection.mutable.LinkedHashMap(
-        "x10" -> BenchReport.gateJson(0, 54.2, Seq(55.0)),
-        "x30" -> BenchReport.gateJson(15, 54.2, Seq(140.0, 53.0))),
+      commit = "0123456789abcdef0123456789abcdef01234567",
       cpus = 32, defaultParallelism = 32,
       env = scala.collection.mutable.LinkedHashMap(
         "q01" -> BenchReport.EntryEnv(
@@ -378,38 +166,33 @@ class BenchReportSpec extends AnyFunSuite {
           canaryMs = Seq(41.2, 388.0), canaryAfterMs = Seq(40.9, 42.0),
           canaryParMs = Seq(55.0, 2140.5), stealPct = Seq(0.3, 71.25),
           codeCacheMb = Seq(88L, 237L), spillMb = Seq(0L, 1536L),
-          peakExecMb = Seq(210L, 980L), taskFloor = 36.7,
-          wallFloor = 4.25)))
+          peakExecMb = Seq(210L, 980L))))
     val j = parse(diag)
     assert(j.get("run_id").asLong() === 1755192000123L)
     assert(j.get("started_at").asText() === "2026-08-14T17:20:00.123Z")
+    // the checkout's commit names the code the run measured
+    assert(j.get("commit").asText() ===
+      "0123456789abcdef0123456789abcdef01234567")
     // r22 scaling evidence: the run's core budget is self-described,
     // and absent values read -1 (see `bare` below)
     assert(j.get("cpus").asInt() === 32)
     assert(j.get("default_parallelism").asInt() === 32)
     assert(j.get("nominal_par_ms").asDouble() === 54.2)
-    // round-8 scale stamp: taskFloors keys its history filter on this
     assert(j.get("sf").asText() === "/root/testdata/sf0.1")
-    // round-11: the ≥2-discounts self-stamp the floor basis excludes on
-    assert(j.get("stormed").asBoolean() === true)
-    // round-11 quiet-window evidence: the roster-start gate and the
-    // per-group cool-downs, each waited_s + reference + every reading
-    val sg = j.get("start_gate")
-    assert(sg.get("waited_s").asInt() === 45)
-    assert(sg.get("ref_par_ms").asDouble() === 50.1)
-    assert(sg.get("canary_par_ms").get(2).asDouble() === 52.0)
-    assert(j.get("cooldowns").get("x10").get("waited_s").asInt() === 0)
-    assert(j.get("cooldowns").get("x30").get("canary_par_ms").get(0)
-      .asDouble() === 140.0)
-    // defaults (a run with no gate evidence) still parse
+    // the diag carries this run's evidence only: exactly these
+    // sections, so no start-gate, cool-down or storm-stamp key
+    import scala.jdk.CollectionConverters._
+    assert(j.fieldNames().asScala.toSeq === Seq("run_id", "started_at",
+      "commit", "sf", "cpus", "default_parallelism", "nominal_par_ms",
+      "runs", "heap_mb_before", "host_env", "minhash", "lsh",
+      "corpus_build_sec"))
+    // defaults still parse; a run git could not name reads "unknown"
     val bare = parse(BenchReport.diagJson(
       collection.Map.empty[String, Seq[Double]],
       collection.Map.empty[String, Long],
       collection.Map.empty[String, String],
       collection.Map.empty[String, String], -1.0, -1.0))
-    assert(bare.get("stormed").asBoolean() === false)
-    assert(bare.get("start_gate").get("waited_s").asInt() === 0)
-    assert(bare.get("cooldowns").size() === 0)
+    assert(bare.get("commit").asText() === "unknown")
     assert(j.get("runs").get("x10_q65").get(2).asDouble() === -1.0)
     assert(j.get("heap_mb_before").get("q01").asLong() === 127L)
     // host-load rows align index-for-index with the entry's runs array
@@ -434,56 +217,45 @@ class BenchReportSpec extends AnyFunSuite {
     assert(e.get("canary_par_ms").get(1).asDouble() === 2140.5)
     assert(e.get("steal_pct").get(1).asDouble() === 71.25)
     assert(e.get("code_cache_mb").get(1).asLong() === 237L)
-    // round-8 memory-pressure witnesses + the retry's historical floor
+    // round-8 memory-pressure witnesses
     assert(e.get("spill_mb").get(1).asLong() === 1536L)
     assert(e.get("peak_exec_mb").get(1).asLong() === 980L)
-    assert(e.get("task_floor").asDouble() === 36.7)
-    // round-10: the wall floor the delivery-collapse witness read
-    assert(e.get("wall_floor").asDouble() === 4.25)
+    // per-run rows only: no history floor
+    assert(e.fieldNames().asScala.toSeq === Seq("loadavg1", "psi_cpu",
+      "psi_io", "t_offset_sec", "gc_ms", "jit_ms", "task_sec", "task_n",
+      "janino_compiles", "canary_ms", "canary_after_ms", "canary_par_ms",
+      "steal_pct", "code_cache_mb", "spill_mb", "peak_exec_mb"))
     assert(j.get("minhash").get("q65").get("n_pairs").asLong() === 265L)
     assert(j.get("lsh").get("q72").get("max_bucket").asLong() === 23L)
     assert(j.get("corpus_build_sec").get("x30").asDouble() === -1.0)
   }
 
-  // ── the in-process mirror of scripts/adjudicate_bench.py's discount
-  // decision (round-9): same fixtures as scripts/test_adjudicate.py so
-  // the two implementations are pinned to the same behavior ──────────
+  // ── the per-run judgement: every flag below reads the entry's own
+  // evidence, never another run's diag ─────────────────────────────
   private def envOf(task: Seq[Double], pars: Seq[Double],
-                    floor: Double = -1.0, wallFloor: Double = -1.0,
                     janino: Seq[Long] = Nil) =
     BenchReport.EntryEnv(Nil, Nil, Nil, Nil, taskSec = task,
-      canaryParMs = pars, taskFloor = floor, wallFloor = wallFloor,
-      janino = janino)
+      canaryParMs = pars, janino = janino)
 
   test("degradedRuns: task row decides where usable, canary only where aliased") {
     val nominal = 48.5
     // the live x30_q122 case from run_1786814537694: run 3 did honest
-    // task work (126.6s, the entry's best, far under the 343s floor
-    // gate) but its post-run point-sampled canary read exactly the 2x
-    // gate — the usable task row must win, so run 3 is NOT degraded
-    // and min-selection may record its 4.637s
+    // task work (126.6s, the entry's best) but its post-run
+    // point-sampled canary read exactly the 2x gate — the usable task
+    // row must win, so run 3 is NOT degraded and min-selection may
+    // record its 4.637s
     assert(BenchReport.degradedRuns(Seq(6.856, 7.831, 4.637),
-      envOf(Seq(193.6, 219.8, 126.6), Seq(53.1, 64.1, 97.0),
-        floor = 114.3), nominal) === Seq(false, false, false))
+      envOf(Seq(193.6, 219.8, 126.6), Seq(53.1, 64.1, 97.0)),
+      nominal) === Seq(false, false, false))
     // a run whose own task row aliases IS judged by its canary, even
     // beside siblings with usable rows
     assert(BenchReport.degradedRuns(Seq(1.2, 5.0),
       envOf(Seq(0.8, 2.5), Seq(400.0, 52.0)), 50.0) ===
       Seq(true, false))
-    // task-ratio and floor gates on usable rows
+    // task-ratio gate on usable rows
     assert(BenchReport.degradedRuns(Seq(2.0, 1.0),
       envOf(Seq(10.0, 5.0), Seq(52.0, 55.0)), 50.0) ===
       Seq(true, false))
-    // round-10 wall witness, OR'd on top of the work witnesses: the
-    // r9 x30_q65 recorded run did honest work (task-clean) at 2x its
-    // honest wall — only the history wall floor sees it
-    assert(BenchReport.degradedRuns(Seq(12.48, 6.1),
-      envOf(Seq(10.6, 11.0), Seq(60.4, 73.4), wallFloor = 6.767),
-      50.0) === Seq(true, false))
-    // a sub-0.2s wall floor is noise and reads as absent
-    assert(BenchReport.degradedRuns(Seq(0.3, 0.25),
-      envOf(Seq(0.1, 0.1), Seq(52.0, 55.0), wallFloor = 0.15),
-      50.0) === Seq(false, false))
   }
 
   test("selectedIndex: one selection rule for recording and judging") {
@@ -501,10 +273,6 @@ class BenchReportSpec extends AnyFunSuite {
     // a failed run poisons the entry to its max (failures stay visible)
     assert(BenchReport.selectedIndex(Seq(1.0, -1.0, 3.0),
       envOf(Seq(5.0, 5.0, 5.0), Seq(52.0, 52.0, 52.0)), nominal) === 2)
-    // the wall witness steers selection off a delivery-collapsed run
-    assert(BenchReport.selectedIndex(Seq(6.1, 12.48),
-      envOf(Seq(11.0, 10.6), Seq(73.4, 60.4), wallFloor = 6.767),
-      nominal) === 0)
   }
 
   test("needsDiscount mirrors the adjudicator's verdict classes") {
@@ -512,140 +280,50 @@ class BenchReportSpec extends AnyFunSuite {
     // clean: healthy canaries, flat task ratios
     assert(!BenchReport.needsDiscount(Seq(1.0, 0.9),
       envOf(Seq(5.0, 5.1), Seq(52.0, 55.0)), nominal))
-    // min-run-degraded: the run that OWNS the recorded number (value-
-    // matched) is the task-inflated one — a legacy artifact whose
-    // selection recorded the degraded raw min
-    assert(BenchReport.needsDiscount(Seq(2.0, 1.5),
-      envOf(Seq(5.0, 12.0), Seq(52.0, 55.0)), nominal, recorded = 1.5))
-    // ...but a number the selection rule steered to the CLEAN run is
-    // no longer condemned for the degraded run's sins (r9 ADVICE):
-    // both with the recorded value named and via the selection-rule
-    // fallback
-    assert(!BenchReport.needsDiscount(Seq(2.0, 1.5),
-      envOf(Seq(5.0, 12.0), Seq(52.0, 55.0)), nominal, recorded = 2.0))
+    // the selection rule steers the number to the CLEAN run, so the
+    // degraded raw-min run does not condemn the entry
     assert(!BenchReport.needsDiscount(Seq(2.0, 1.5),
       envOf(Seq(5.0, 12.0), Seq(52.0, 55.0)), nominal))
-    // warmup-absorbed shape (non-recorded run degraded): NOT discounted
+    // warmup-absorbed shape (non-selected run degraded): NOT discounted
     assert(!BenchReport.needsDiscount(Seq(2.0, 0.9),
-      envOf(Seq(10.0, 5.0), Seq(52.0, 55.0)), nominal, recorded = 0.9))
+      envOf(Seq(10.0, 5.0), Seq(52.0, 55.0)), nominal))
+    // the selected run degraded: the clean sibling paid janino warmup,
+    // so selection falls back to the degraded min
+    assert(BenchReport.needsDiscount(Seq(1.0, 2.0),
+      envOf(Seq(12.0, 5.0), Seq(52.0, 55.0), janino = Seq(0L, 30L)),
+      nominal))
     // degraded via canary fallback: no usable task rows, both canaries hot
     assert(BenchReport.needsDiscount(Seq(1.0, 1.1),
       envOf(Seq(0.2, 0.2), Seq(150.0, 140.0)), nominal))
-    // degraded via history floor: ratios ~1x but every run >=3x the
-    // floor (the r7 x10_q122 blind spot)
-    assert(BenchReport.needsDiscount(Seq(89.0, 67.0, 50.0),
-      envOf(Seq(1057.0, 1844.0, 1298.0), Seq(92.0, 64.0, 92.0),
-        floor = 36.7), nominal))
-    // best under 3x floor: stands
+    // the best run's clean selection stands beside a task-inflated one
     assert(!BenchReport.needsDiscount(Seq(2.9, 9.8, 3.0),
-      envOf(Seq(40.1, 220.9, 44.7), Seq(65.0, 68.0, 58.0),
-        floor = 37.8), nominal))
+      envOf(Seq(40.1, 220.9, 44.7), Seq(65.0, 68.0, 58.0)), nominal))
     // suspect-uniform: flat ratios, every post-run canary >=2x nominal
     assert(BenchReport.needsDiscount(Seq(1.0, 1.0),
       envOf(Seq(5.0, 5.1), Seq(120.0, 130.0)), nominal))
-    // floor-force: the recorded run has only a sub-1s aliased row
-    // judged by a clean canary, but the best usable run did 3x its
-    // floor — the external reference condemns the entry regardless
-    assert(BenchReport.needsDiscount(Seq(1.2, 5.0),
-      envOf(Seq(0.9, 120.0), Seq(52.0, 55.0), floor = 36.7), nominal,
-      recorded = 1.2))
-    // round-10 wall breach: the r9 x30_q65 delivery-collapse shape —
-    // every work witness clean, recorded wall 12.48s vs a 6.767s
-    // history wall floor (1.84x >= the 1.5x gate)
-    assert(BenchReport.needsDiscount(Seq(12.48, 23.0),
-      envOf(Seq(10.6, 11.0), Seq(60.4, 73.4), wallFloor = 6.767),
-      nominal, recorded = 12.48))
-    // under the gate the number stands; and a clean run recorded
-    // beside a wall-stalled sibling stands too
-    assert(!BenchReport.needsDiscount(Seq(9.0, 23.0),
-      envOf(Seq(10.6, 11.0), Seq(60.4, 73.4), wallFloor = 6.767),
-      nominal, recorded = 9.0))
-    assert(!BenchReport.needsDiscount(Seq(12.48, 6.1),
-      envOf(Seq(10.6, 11.0), Seq(60.4, 73.4), wallFloor = 6.767),
-      nominal, recorded = 6.1))
     // empty evidence: nothing to condemn
     assert(!BenchReport.needsDiscount(Nil, envOf(Nil, Nil), nominal))
   }
 
-  test("needsRevisit: all-contaminated or floor-breached entries, never failures") {
-    // every run condemned by the witnesses -> revisit
-    assert(Bench.needsRevisit(Seq(1.0, 1.1, 1.2), Seq(true, true, true),
-      Some(2.0), Some(2.0)))
-    // one clean run -> the roster result stands
-    assert(!Bench.needsRevisit(Seq(1.0, 1.1, 1.2), Seq(true, false, true),
-      Some(2.0), Some(2.0)))
-    // clean flags but best usable task still >1.5x the history floor
-    // (uniformly stretched entry, per-run ratios all ~1x) -> revisit
-    assert(Bench.needsRevisit(Seq(1.0, 1.1), Seq(false, false),
-      Some(31.0), Some(20.0)))
-    assert(!Bench.needsRevisit(Seq(1.0, 1.1), Seq(false, false),
-      Some(30.0), Some(20.0))) // exactly 1.5x: not a breach
-    // no floor (fresh repo) and clean flags -> nothing to check against
-    assert(!Bench.needsRevisit(Seq(1.0), Seq(false), Some(31.0), None))
-    // round-10 wall criterion: work witnesses all clean but the best
-    // WALL still sits >1.5x the history wall floor (the r9 x30_q65
-    // delivery-collapse class) -> revisit
-    assert(Bench.needsRevisit(Seq(12.48, 23.0), Seq(false, false),
-      Some(10.6), None, wallFloor = Some(6.767)))
-    assert(!Bench.needsRevisit(Seq(9.0, 23.0), Seq(false, false),
-      Some(10.6), None, wallFloor = Some(6.767))) // best under 1.5x
-    assert(!Bench.needsRevisit(Seq(0.4, 0.5), Seq(false, false),
-      Some(10.6), None, wallFloor = Some(0.15))) // sub-0.2s floor: noise
-    // round 13 (r12 verdict ask #5): the wall criterion judges the
-    // wall the entry would RECORD (clean-preferred selection), not
-    // runs.min — a min run condemned by the work witnesses can sit
-    // under the gate while the recorded number breaches it, and such
-    // an entry would otherwise ship straight into a wall-floor
-    // discount without its one extra chance
-    assert(Bench.needsRevisit(Seq(6.0, 12.48), Seq(false, false),
-      Some(10.6), None, wallFloor = Some(6.767),
-      recordedWall = Some(12.48)))
-    assert(!Bench.needsRevisit(Seq(6.0, 12.48), Seq(false, false),
-      Some(10.6), None, wallFloor = Some(6.767),
-      recordedWall = Some(6.0)))
-    // >= not > — matching BenchReport.degradedRuns' wall witness, so
-    // revisit fires exactly when the discount would
-    assert(Bench.needsRevisit(Seq(10.5, 23.0), Seq(false, false),
-      Some(10.6), None, wallFloor = Some(7.0),
-      recordedWall = Some(10.5)))
-    // a failed run must stay visible as a failure, not get extra chances
-    assert(!Bench.needsRevisit(Seq(1.0, -1.0), Seq(true, true),
-      Some(99.0), Some(1.0)))
-    assert(!Bench.needsRevisit(Nil, Nil, None, Some(1.0)))
-  }
-
-  test("crossScaleDiscounts: impossible work ratios vs the sibling probe") {
-    val env = scala.collection.mutable.LinkedHashMap(
-      "x10_qA" -> envOf(Seq(40.0), Nil), "x30_qA" -> envOf(Seq(10.0), Nil),
-      "x10_qB" -> envOf(Seq(8.3), Nil), "x30_qB" -> envOf(Seq(8.1), Nil),
-      "x10_qC" -> envOf(Seq(10.0), Nil), "x30_qC" -> envOf(Seq(90.0), Nil),
-      "x10_qD" -> envOf(Seq(10.0), Nil), "x30_qD" -> envOf(Seq(62.0), Nil))
-    assert(BenchReport.crossScaleDiscounts(env) === Set("x10_qA", "x30_qC"))
-    // the large-side flag defers to the x30's own history floor: an
-    // honest-honest 9x ratio must not condemn an x30 inside its honest
-    // range (the r9 lsh_auto false positive), while a stalled x30
-    // breaches its floor and stays flagged; the small-side physically-
-    // impossible flag never needs a floor
-    val withFloors = env.clone()
-    withFloors("x30_qC") = envOf(Seq(90.0), Nil, floor = 40.0) // 90 < 3x40
-    withFloors("x30_qA") = envOf(Seq(10.0), Nil, floor = 100.0)
-    assert(BenchReport.crossScaleDiscounts(withFloors) === Set("x10_qA"))
-    withFloors("x30_qC") = envOf(Seq(90.0), Nil, floor = 20.0) // 90 >= 3x20
-    assert(BenchReport.crossScaleDiscounts(withFloors) ===
-      Set("x10_qA", "x30_qC"))
-  }
-
   test("discountedEntries: roster order, q93 components and no-evidence skipped") {
     val nominal = 50.0
-    val res = Seq("q1" -> 1.0, "q93a_mv_maintain" -> 2.0,
-      "x10_qA" -> 3.0, "x30_qA" -> 9.0, "q_noev" -> 1.0)
+    val res = Seq("q1" -> 1.0, "q93a_mv_maintain" -> 2.0, "qBad" -> 1.0,
+      "qOk" -> 1.0, "x10_qA" -> 3.0, "x30_qA" -> 9.0, "q_noev" -> 1.0)
     val runs = scala.collection.mutable.LinkedHashMap(
-      "q1" -> Seq(1.0, 1.0), "x10_qA" -> Seq(3.0), "x30_qA" -> Seq(9.0))
+      "q1" -> Seq(1.0, 1.0), "qBad" -> Seq(1.0, 1.2), "qOk" -> Seq(1.0, 1.2),
+      "x10_qA" -> Seq(3.0), "x30_qA" -> Seq(9.0))
     val env = scala.collection.mutable.LinkedHashMap(
       "q1" -> envOf(Seq(5.0, 5.1), Seq(120.0, 130.0)), // suspect-uniform
-      "x10_qA" -> envOf(Seq(40.0), Seq(52.0)),          // cross-scale hit
+      // every run condemned: run 0 degraded (aliased task row, canary
+      // 3x nominal), run 1 paid janino warmup — the min over all is
+      // the degraded run
+      "qBad" -> envOf(Seq(0.3, 0.3), Seq(150.0, 52.0),
+        janino = Seq(0L, 30L)),
+      // the min run is clean; its degraded sibling cannot condemn it
+      "qOk" -> envOf(Seq(0.3, 0.3), Seq(52.0, 150.0)),
+      "x10_qA" -> envOf(Seq(0.4), Seq(152.0)),          // hot aliased run
       "x30_qA" -> envOf(Seq(10.0), Seq(52.0)))
     assert(BenchReport.discountedEntries(res, runs, env, nominal) ===
-      Seq("q1", "x10_qA"))
+      Seq("q1", "qBad", "x10_qA"))
   }
 }
